@@ -196,7 +196,7 @@ def main(argv=None):
         params = params_for(args.workload, args.scale)
         inputs, ops = gen.make_plan(args.workload, args.seed, work, params)
         plan = {"workload": args.workload, "seed": args.seed, "seconds": args.seconds,
-                "trace": args.trace, "cores": os.cpu_count() or 1, "work": work,
+                "trace": args.trace, "cores": len(os.sched_getaffinity(0)), "work": work,
                 "params": params, "inputs": inputs, "ops": ops}
         plan_path = os.path.join(work, "plan.json")
         with open(plan_path, "w") as f:

@@ -99,16 +99,24 @@ final class Ctx(val plan: JsonNode) {
     try f finally phases.put(name, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Set-up repetitions, each timed; returns the per-repetition results. */
+  /** Set-up repetitions, each timed in wall time and in CPU time (the
+    * client thread plus the Spark tasks it launched, as for ops); returns
+    * the per-repetition results. */
   def setup[A](repeats: Int)(f: Int => A): Seq[A] = phase("setup") {
     val arr = result.putArray("setup_s")
     (0 until repeats).map { r =>
+      val id = s"setup-$r"
+      spark.sparkContext.setLocalProperty(TaskCpu.OpProperty, id)
+      val cpu0 = threadMx.getCurrentThreadCpuTime
       val t0 = System.nanoTime()
       val a = f(r)
       arr.add((System.nanoTime() - t0) / 1e9)
+      setupThreadCpuNs += id -> (threadMx.getCurrentThreadCpuTime - cpu0)
+      spark.sparkContext.setLocalProperty(TaskCpu.OpProperty, null)
       a
     }
   }
+  private val setupThreadCpuNs = scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
   /** Whether op number `i` of a client is traced: in the traced run every
     * second op is, so the untraced ones in between give the tracing
@@ -206,6 +214,10 @@ final class Ctx(val plan: JsonNode) {
   def finish(): Unit = {
     import scala.jdk.CollectionConverters._
     org.apache.spark.LakebenchBus.drain(spark.sparkContext)
+    val setupCpu = result.putArray("setup_cpu_s")
+    setupThreadCpuNs.foreach { case (id, ns) =>
+      setupCpu.add(ns / 1e9 + taskCpu.taskCpuMs(id) / 1e3)
+    }
     val ops = result.putArray("ops")
     opRecords.asScala.toSeq.sortBy(_.get("t_ms").asDouble()).foreach { rec =>
       // the op's CPU cost: its client thread plus the tasks it launched

@@ -102,14 +102,16 @@ class Metrics(unittest.TestCase):
         ops.append({"kind": "read", "ms": 99.0, "cpu_ms": 1.0, "ok": False, "traced": False,
                     "client": 0, "i": 3, "id": "read-0-3"})
         return {"ops": ops, "measure_s": 2.0, "setup_s": [3.0, 1.0, 2.0],
+                "setup_cpu_s": [1.5, 0.5, 1.0],
                 "live_heap_mb": 100.0,
                 "checks": {"op_failed": 1, "op_checks": 3, "run_checks": 0,
                            "run_failed": 0, "failures": []}}
 
     def test_end_to_end_uses_successful_ops_and_the_setup_median(self):
-        # op_cpu_ms: median CPU time of the successful reads
+        # setup_s: median set-up CPU time; op_cpu_ms: median CPU time of
+        # the successful reads
         m = report.end_to_end("point_reads", self.result())
-        self.assertEqual(m["setup_s"], (2.0, "s"))
+        self.assertEqual(m["setup_s"], (1.0, "s"))
         self.assertEqual(m["op_cpu_ms"], (10.0, "ms"))
         self.assertEqual(set(m), {"setup_s", "op_cpu_ms", "live_heap_mb"})
         self.assertEqual(report.median_op_ms("point_reads", self.result()), 20.0)
@@ -119,7 +121,7 @@ class Metrics(unittest.TestCase):
                 "pass": p, "client": 0, "i": 0, "id": f"{q}-{p}"}
                for p, times in enumerate([(10.0, 100.0), (12.0, 300.0), (11.0, 110.0)])
                for q, ms in zip(("q_a", "q_b"), times)]
-        res = {"ops": ops, "setup_s": [1.0], "live_heap_mb": 1.0}
+        res = {"ops": ops, "setup_s": [1.0], "setup_cpu_s": [0.5], "live_heap_mb": 1.0}
         m = report.end_to_end("dedup_pipeline", res)
         self.assertEqual(m["op_cpu_ms"], (2 * (11.0 + 110.0), "ms"))
         self.assertEqual(report.median_op_ms("dedup_pipeline", res), 11.0 + 110.0)
