@@ -219,14 +219,25 @@ def median_op_ms(workload, res, key="ms"):
     return sum(statistics.median(v) for v in stages.values())
 
 
+def op_cpu_ms(workload, res):
+    """The gated op cost in CPU ms. For ingest_mix, the CPU of every op of
+    the three clients (conflict retries and failed ops included) over the
+    ops completed, so the writers' commits count beside the reads; for the
+    other workloads, the median CPU time of the measured op."""
+    if workload == "ingest_mix":
+        ops = res["ops"]
+        return sum(o["cpu_ms"] for o in ops) / max(1, sum(1 for o in ops if o["ok"]))
+    return median_op_ms(workload, res, "cpu_ms")
+
+
 def end_to_end(workload, res):
-    """The gated metrics. Set-up and the op are gated as CPU time (the
-    client thread plus the Spark tasks it launched): on a shared host the
-    wall time of whole runs moves with the CPU the host takes away, which
-    CPU time does not count. Wall times are printed by name."""
+    """The gated metrics. Set-up and ops are gated as CPU time (the client
+    thread plus the Spark tasks it launched): on a shared host the wall
+    time of whole runs moves with the CPU the host takes away, which CPU
+    time does not count. Wall times are printed by name."""
     return {
         "setup_s": (statistics.median(res["setup_cpu_s"]), "s"),
-        "op_cpu_ms": (median_op_ms(workload, res, "cpu_ms"), "ms"),
+        "op_cpu_ms": (op_cpu_ms(workload, res), "ms"),
         "live_heap_mb": (res["live_heap_mb"], "MiB"),
     }
 

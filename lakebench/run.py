@@ -49,7 +49,7 @@ WORKLOADS = {
     },
     "ingest_mix": {
         "rows": 150000, "initial_files": 8, "append_rows": 500,
-        "append_batches": 64, "write_interval_s": 5.0, "writer_b_offset_s": 1.0, "merge_updates": 150,
+        "append_batches": 256, "merge_updates": 150,
         "merge_inserts": 50, "merge_batches": 32, "delete_width": 100,
         "optimize_every": 4, "writer_b_ops": 64, "reads": 4000, "retries": 20,
         "optimize_target_bytes": 1 << 20, "checkpoint_interval": 4,
@@ -177,7 +177,6 @@ def main(argv=None):
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
     ap.add_argument("--scale", type=float, default=1.0,
                     help="row-count scale (1.0 = sf0.1); smaller for smoke runs")
-    ap.add_argument("--keep", action="store_true", help="keep the work directory")
     args = ap.parse_args(argv)
     deadline = time.time() + RUN_LIMIT_S.get(args.workload, DEFAULT_RUN_LIMIT_S)
     for sig in (signal.SIGTERM, signal.SIGINT):
@@ -253,8 +252,7 @@ def main(argv=None):
         print(f"lakebench: {e}", file=sys.stderr)
         return 3
     finally:
-        if not args.keep:
-            shutil.rmtree(work, ignore_errors=True)
+        shutil.rmtree(work, ignore_errors=True)
 
 
 LAYER_UNITS = {"trace.overhead_ratio": "ratio", "replay.cache_hit_ratio": "ratio",

@@ -15,19 +15,18 @@ import graft.delta.DeltaTable
 import graft.delta.log.{CommitWriter, LogSegment}
 
 /** `ingest_mix`: three closed-loop clients on one `orders` table.
-  *  - writer A: blind appends (`CommitWriter.append`) on a fixed trigger
-  *    interval, the cadence of a micro-batch ingest job;
+  *  - writer A: blind appends (`CommitWriter.append`);
   *  - writer B: `MergeCommand.upsert` by key and `DmlCommands.delete` on a
-  *    key range in turn, with `OPTIMIZE` every Nth op, on the same
-  *    interval but offset from writer A, as a scheduled maintenance job;
+  *    key range in turn, with `OPTIMIZE` every Nth op;
   *  - a reader doing latest-version point reads.
-  * The writers keep schedules because graft's MERGE conflicts with any
-  * concurrent add: back to back, the appends starve the merges until they
-  * exhaust their retries, and how long that takes dominates the run.
+  * Each client sends its next op as soon as the previous one returned.
   * Both writers retry a concurrent-modification exception up to a fixed
-  * count. Appended keys, merged keys and deleted ranges are chosen so
-  * that every op's effect is known from the generated inputs alone; the
-  * resulting ledger checks every read and the final table. */
+  * count, as an ETL job would; graft's MERGE and DELETE on this
+  * unpartitioned table conflict with every concurrent append, so writer
+  * B's ops retry often, and the retries are part of the op. Appended
+  * keys, merged keys and deleted ranges are chosen so that every op's
+  * effect is known from the generated inputs alone; the resulting ledger
+  * checks every read and the final table. */
 object IngestWorkload {
   val Columns = Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
     "o_orderdate", "o_orderpriority")
@@ -37,17 +36,6 @@ object IngestWorkload {
       tipBefore: Long, version: Long, payload: JsonNode)
   private final case class Read(opId: String, key: Long, version: Long,
       got: (Long, Long))
-
-  /** Sleeps until op `i`'s start tick (`offset + i * interval` into the
-    * measurement; an op whose tick has passed starts at once). False, and
-    * no sleep, when the tick falls after the end of the measurement. */
-  private def waitForTick(ctx: Ctx, i: Int, interval: Long, offset: Long): Boolean = {
-    val tick = offset + i * interval
-    if (tick >= (ctx.seconds * 1e9).toLong || ctx.deadlineReached) return false
-    val wait = tick - ctx.elapsedNs
-    if (wait > 0) Thread.sleep(wait / 1000000L)
-    true
-  }
 
   /** Runs `f`, retrying a concurrent-modification exception; returns the
     * result and the number of attempts. */
@@ -121,15 +109,13 @@ object IngestWorkload {
 
     val writes = new ConcurrentLinkedQueue[Write]()
     val reads = new ConcurrentLinkedQueue[Read]()
-    val interval = (p.get("write_interval_s").asDouble() * 1e9).toLong
-    val offset = (p.get("writer_b_offset_s").asDouble() * 1e9).toLong
     val v0 = LogSegment.forTable(spark, new Path(path)).version
     def tip(): Long = LogSegment.forTable(spark, new Path(path)).version
 
     val clientA = () => {
       val seq = ctx.arr(ops.get("writer_a"))
       var i = 0
-      while (i < seq.size && waitForTick(ctx, i, interval, 0L)) {
+      while (i < seq.size && !ctx.deadlineReached) {
         val b = seq(i).asInt()
         ctx.op("append", 1, i) { (tr, _) =>
           val (v, attempts) = withRetries(retries) {
@@ -146,7 +132,7 @@ object IngestWorkload {
       val seq = ctx.arr(ops.get("writer_b"))
       val perKind = mutable.HashMap.empty[String, Int].withDefaultValue(0)
       var i = 0
-      while (i < seq.size && waitForTick(ctx, i, interval, offset)) {
+      while (i < seq.size && !ctx.deadlineReached) {
         val o = seq(i)
         val kind = o.get("op").asText()
         val before = tip()

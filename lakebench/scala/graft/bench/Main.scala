@@ -48,6 +48,14 @@ final class Ctx(val plan: JsonNode) {
     "spark.sql.shuffle.partitions" -> cores.toString,
     "spark.default.parallelism" -> cores.toString,
     "spark.ui.enabled" -> "false",
+    // Spark keeps a history of finished jobs, stages, tasks and SQL
+    // executions for its UI even when the UI is off; it grows with the
+    // number of ops a run happens to complete, so it is kept short and
+    // live_heap_mb counts the state the program retains
+    "spark.ui.retainedJobs" -> "20",
+    "spark.ui.retainedStages" -> "20",
+    "spark.ui.retainedTasks" -> "1000",
+    "spark.sql.ui.retainedExecutions" -> "20",
     "spark.sql.session.timeZone" -> "UTC",
     "spark.local.dir" -> s"$work/spark-local",
     "spark.sql.warehouse.dir" -> s"$work/warehouse") ++
@@ -63,12 +71,11 @@ final class Ctx(val plan: JsonNode) {
   }
   spark.sparkContext.setLogLevel("ERROR")
 
-  private val taskCpu = new TaskCpu
-  spark.sparkContext.addSparkListener(taskCpu)
+  private val collector = new SparkCollector
+  spark.sparkContext.addSparkListener(collector)
   private val threadMx = java.lang.management.ManagementFactory.getThreadMXBean
 
   if (traced) {
-    spark.sparkContext.addSparkListener(new SparkCollector)
     val fs = graft.delta.log.LogSegment.fs(spark, new org.apache.hadoop.fs.Path(work))
     require(fs.isInstanceOf[CountingFileSystem],
       s"traced run expects the counting filesystem, got ${fs.getClass.getName}")
@@ -106,13 +113,13 @@ final class Ctx(val plan: JsonNode) {
     val arr = result.putArray("setup_s")
     (0 until repeats).map { r =>
       val id = s"setup-$r"
-      spark.sparkContext.setLocalProperty(TaskCpu.OpProperty, id)
+      spark.sparkContext.setLocalProperty(Trace.OpProperty, id)
       val cpu0 = threadMx.getCurrentThreadCpuTime
       val t0 = System.nanoTime()
       val a = f(r)
       arr.add((System.nanoTime() - t0) / 1e9)
       setupThreadCpuNs += id -> (threadMx.getCurrentThreadCpuTime - cpu0)
-      spark.sparkContext.setLocalProperty(TaskCpu.OpProperty, null)
+      spark.sparkContext.setLocalProperty(Trace.OpProperty, null)
       a
     }
   }
@@ -154,15 +161,15 @@ final class Ctx(val plan: JsonNode) {
     val tr = tracedOp(if (traceKey >= 0) traceKey else i)
     val opId = s"$kind-$client-$i"
     val sc = spark.sparkContext
-    sc.setLocalProperty(TaskCpu.OpProperty, opId)
+    sc.setLocalProperty(Trace.OpProperty, opId)
     val cpu0 = threadMx.getCurrentThreadCpuTime
     val start = System.nanoTime()
     val out = scala.util.Try {
-      if (tr) Trace.op(spark, opId, kind)(body(tr, opId)) else body(tr, opId)
+      if (tr) Trace.op(opId, kind)(body(tr, opId)) else body(tr, opId)
     }
     val end = System.nanoTime()
     val threadCpuNs = threadMx.getCurrentThreadCpuTime - cpu0
-    sc.setLocalProperty(TaskCpu.OpProperty, null)
+    sc.setLocalProperty(Trace.OpProperty, null)
     val rec = mapper.createObjectNode()
     rec.put("kind", kind).put("client", client).put("i", i).put("id", opId)
     rec.put("t_ms", (start - measureStartNs) / 1e6)
@@ -216,13 +223,13 @@ final class Ctx(val plan: JsonNode) {
     org.apache.spark.LakebenchBus.drain(spark.sparkContext)
     val setupCpu = result.putArray("setup_cpu_s")
     setupThreadCpuNs.foreach { case (id, ns) =>
-      setupCpu.add(ns / 1e9 + taskCpu.taskCpuMs(id) / 1e3)
+      setupCpu.add(ns / 1e9 + collector.taskCpuMs(id) / 1e3)
     }
     val ops = result.putArray("ops")
     opRecords.asScala.toSeq.sortBy(_.get("t_ms").asDouble()).foreach { rec =>
       // the op's CPU cost: its client thread plus the tasks it launched
       rec.put("cpu_ms", rec.get("thread_cpu_ms").asDouble() +
-        taskCpu.taskCpuMs(rec.get("id").asText()))
+        collector.taskCpuMs(rec.get("id").asText()))
       ops.add(rec)
     }
     val checks = result.putObject("checks")

@@ -11,10 +11,11 @@ import org.apache.spark.TaskContext
   * Spans are recorded by the benchmark around its calls into graft's
   * public functions, never from inside graft. Every span carries the op
   * id of the client operation it belongs to; work done in Spark tasks is
-  * attributed through the `lakebench.op` local property, which Spark
-  * copies from the submitting thread onto every job and task. Times are
-  * epoch nanoseconds so that they line up with the millisecond stamps
-  * Spark reports for jobs and Catalyst phases. */
+  * attributed through the `lakebench.op` local property, which `Ctx.op`
+  * sets for every op and Spark copies from the submitting thread onto
+  * every job and task. Times are epoch nanoseconds so that they line up
+  * with the millisecond stamps Spark reports for jobs and Catalyst
+  * phases. */
 object Trace {
   @volatile var enabled = false
 
@@ -24,6 +25,7 @@ object Trace {
   val OpProperty = "lakebench.op"
 
   private val ids = new AtomicLong(1)
+  private val tracedOps = ConcurrentHashMap.newKeySet[String]()
   val spans = new ConcurrentLinkedQueue[Span]()
   private val current = new ThreadLocal[(String, Long)]
 
@@ -31,26 +33,29 @@ object Trace {
   private val offsetNs = System.currentTimeMillis() * 1000000L - System.nanoTime()
   def nowNs(): Long = System.nanoTime() + offsetNs
 
-  /** Op id of the calling thread: the client thread's own op, or inside a
-    * Spark task, the op whose job launched the task. */
+  /** Whether `op` is an op of the traced run that runs under [[op]]. */
+  def isTraced(op: String): Boolean = enabled && op != null && tracedOps.contains(op)
+
+  /** Traced op of the calling thread: the client thread's own op, or inside
+    * a Spark task, the op whose job launched the task; null outside a
+    * traced op. */
   def currentOp: String = {
     val c = current.get()
     if (c != null) c._1
     else {
       val tc = TaskContext.get()
-      if (tc == null) null else tc.getLocalProperty(OpProperty)
+      val op = if (tc == null) null else tc.getLocalProperty(OpProperty)
+      if (isTraced(op)) op else null
     }
   }
 
   def onDriver: Boolean = TaskContext.get() == null
 
-  /** Run `f` as the root span of op `op`; everything it calls is
-    * attributed to the op. */
-  def op[A](spark: org.apache.spark.sql.SparkSession, opId: String,
-      kind: String)(f: => A): A = {
-    val sc = spark.sparkContext
-    val prevProp = sc.getLocalProperty(OpProperty)
-    sc.setLocalProperty(OpProperty, opId)
+  /** Run `f` as the root span of op `opId`, whose id the calling thread
+    * has already set as its `lakebench.op` local property; everything it
+    * calls is attributed to the op. */
+  def op[A](opId: String, kind: String)(f: => A): A = {
+    tracedOps.add(opId)
     val id = ids.getAndIncrement()
     current.set((opId, id))
     val start = nowNs()
@@ -58,7 +63,6 @@ object Trace {
     finally {
       spans.add(Span(id, 0L, opId, s"op.$kind", start, nowNs()))
       current.remove()
-      sc.setLocalProperty(OpProperty, prevProp)
     }
   }
 

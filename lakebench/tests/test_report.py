@@ -126,6 +126,17 @@ class Metrics(unittest.TestCase):
         self.assertEqual(m["op_cpu_ms"], (2 * (11.0 + 110.0), "ms"))
         self.assertEqual(report.median_op_ms("dedup_pipeline", res), 11.0 + 110.0)
 
+    def test_ingest_op_cpu_pools_every_client_over_completed_ops(self):
+        # a merge that retried (60 CPU ms) and a failed append count in the
+        # CPU total; only the completed ops count in the denominator
+        ops = [{"kind": k, "ms": 1.0, "cpu_ms": c, "ok": ok, "client": cl}
+               for k, c, ok, cl in (("read", 10.0, True, 3), ("read", 20.0, True, 3),
+                                    ("append", 30.0, True, 1), ("append", 5.0, False, 1),
+                                    ("merge", 60.0, True, 2))]
+        res = {"ops": ops, "setup_cpu_s": [1.0], "live_heap_mb": 1.0}
+        m = report.end_to_end("ingest_mix", res)
+        self.assertEqual(m["op_cpu_ms"], (125.0 / 4, "ms"))
+
     def test_failed_share_counts_raised_ops_and_failed_checks(self):
         named = report.named_metrics("point_reads", self.result(), {})
         self.assertEqual(named["failed_share"], (0.5, "ratio"))
