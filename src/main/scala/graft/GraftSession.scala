@@ -608,8 +608,6 @@ final class GraftSession(val spark: SparkSession) {
   // with the extension parser's re-rendering) are the implementation
   private def quoteIdent(name: String): String =
     GraftSession.quoteIdentStatic(name)
-  private def quoteLiteral(s: String): String =
-    GraftSession.quoteLiteralStatic(s)
 
   private def alterMetrics(what: String, version: Long): DataFrame = {
     val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()

@@ -109,12 +109,8 @@ object LocalCatalog {
   def getShare(name: String): Option[ShareDef] = Option(shares.get(name))
   def listShares(): Seq[ShareDef] =
     shares.values.asScala.toSeq.sortBy(_.name)
-  def getLocation(name: String): Option[LocationDef] =
-    Option(locations.get(name))
   def listLocations(): Seq[LocationDef] =
     locations.values.asScala.toSeq.sortBy(_.name)
-  def getConnection(name: String): Option[ConnectionDef] =
-    Option(connections.get(name))
   def listConnections(): Seq[ConnectionDef] =
     connections.values.asScala.toSeq.sortBy(_.name)
 

@@ -3,7 +3,8 @@ package graft.delta
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
-import graft.delta.log.CommitWriter
+import org.apache.hadoop.fs.Path
+import graft.delta.log.{CommitWriter, LogSegment}
 
 /** Delta-backed storage for the ANN/PQ index family.
   *
@@ -40,10 +41,11 @@ import graft.delta.log.CommitWriter
   *
   * Readers go through the Delta scan path ([[Snapshot.readWhere]]):
   * partition pruning on (rel, pcid) happens on the file inventory
-  * before any parquet opens. Plain-parquet directories (the ephemeral
-  * rehearsal layout `tools/` probes build) are still accepted by the
-  * read helpers via an explicit fallback, so shape-parametrized
-  * searches serve both.
+  * before any parquet opens. The read helpers also accept plain-parquet
+  * relations: a `(cid, cv)` centroid dir beside the index path (the
+  * `_centroids` layout the oracle exports and the specs build), a
+  * plain codebook dir, or a cid-partitioned data dir. Those have no
+  * log, so [[versionOf]] answers None for them.
   */
 object IndexStore {
 
@@ -69,16 +71,15 @@ object IndexStore {
     * streaming maintenance loops re-resolve THIS every trigger and
     * re-read a relation only when a commit actually moved the table
     * (see SimilarityQueries.SnapshotGatedIndex). None for the
-    * plain-parquet rehearsal layouts (those have no version — callers
-    * fall back to re-reading every time, the pre-r16 behavior). */
+    * plain-parquet layouts (those have no version — callers fall back
+    * to re-reading every time, the pre-r16 behavior), and None while
+    * `_delta_log` exists but holds no commit or checkpoint yet (the
+    * mid-create race). Any other log failure — a version gap, an
+    * unreadable listing — propagates. */
   def versionOf(s: SparkSession, path: String): Option[Long] =
     if (!isDeltaTable(path)) None
-    // an existing-but-empty _delta_log (mid-create race) makes
-    // forTable throw — degrade to None so gated readers fall back to
-    // the per-trigger re-read path instead of crashing the stream
-    // (ADVICE r16)
-    else scala.util.Try(graft.delta.log.LogSegment.forTable(s,
-      new org.apache.hadoop.fs.Path(path)).version).toOption
+    else try Some(LogSegment.forTable(s, new Path(path)).version)
+    catch { case _: LogSegment.EmptyLogException => None }
 
   /** Tag one relation's rows with (rel, pcid). Data rows partition by
     * their own cid; metadata rels land in the shared MetaPcid bucket. */
@@ -160,9 +161,9 @@ object IndexStore {
     DeltaTable.forPath(s, path).readWhere(filters: _*)
   }
 
-  /** The data rel (or, fallback, a plain cid-partitioned parquet dir —
-    * the ephemeral rehearsal layout). cid normalized to long either
-    * way (hive inference narrows it to int on the fallback path). */
+  /** The data rel (or, fallback, a plain cid-partitioned parquet
+    * dir). cid normalized to long either way (hive inference narrows
+    * it to int on the fallback path). */
   def data(s: SparkSession, path: String,
       pcids: Option[Seq[Long]] = None): DataFrame =
     if (isDeltaTable(path))
@@ -175,8 +176,8 @@ object IndexStore {
     }
 
   /** The centroid relation of an IVF table — or a plain `(cid, cv)`
-    * parquet dir (rehearsal fallback: an index dir with a `_centroids`
-    * sibling, or the centroid dir itself). */
+    * parquet dir (fallback: an index dir with a `_centroids` sibling,
+    * or the centroid dir itself). */
   def centroidsAt(s: SparkSession, path: String): DataFrame =
     if (isDeltaTable(path))
       rel(s, path, CentroidRel).select(col("cid").cast(LongType).as("cid"),
@@ -201,7 +202,7 @@ object IndexStore {
       col("cv"), col("scid").cast(LongType).as("scid"))
 
   /** The codebook relation of a PQ table — or a plain `(m, code, cv)`
-    * parquet dir (rehearsal fallback). */
+    * parquet dir (fallback). */
   def codebookAt(s: SparkSession, path: String): DataFrame =
     if (isDeltaTable(path))
       rel(s, path, CodebookRel).select("m", "code", "cv")

@@ -510,9 +510,12 @@ object CommitWriter {
   def appendIfAbsent(spark: SparkSession, df: DataFrame, tablePath: String,
       appId: String, txnVersion: Long, maxRetries: Int = 10,
       mergeSchema: Boolean = false): Option[Long] = {
-    if (latestTxnVersion(spark, tablePath, appId).exists(_ >= txnVersion))
-      return None
+    // the idempotence check reads the SAME segment the commit builds on:
+    // checked against an older listing, a replay could land on top of
+    // the commit that already carries its txn
     val segment = LogSegment.forTable(spark, new Path(tablePath))
+    if (txnVersionIn(spark, segment, appId).exists(_ >= txnVersion))
+      return None
     val (meta0, proto) = Replay.metadataAndProtocol(spark, segment)
     ProtocolSupport.assertWritable(tablePath, meta0, proto)
     val evolvedMeta =
@@ -556,10 +559,11 @@ object CommitWriter {
           if (attempts > maxRetries) throw e
           // a concurrent writer won this version — like blind appends,
           // retry at the new tip, but FIRST re-check idempotence against
-          // the log that beat us: if it already carries this (appId,
-          // txnVersion), this batch is a replay and must become a no-op
-          // (the orphaned data files are invisible and vacuumable)
-          if (latestTxnVersion(spark, tablePath, appId).exists(_ >= txnVersion))
+          // that tip: if it already carries this (appId, txnVersion),
+          // this batch is a replay and must become a no-op (the orphaned
+          // data files are invisible and vacuumable)
+          val tip = LogSegment.forTable(spark, new Path(tablePath))
+          if (txnVersionIn(spark, tip, appId).exists(_ >= txnVersion))
             return None
           // identity allocation is not blind-retryable (see append);
           // schema evolution alone is (same metadata re-commits)
@@ -568,7 +572,6 @@ object CommitWriter {
               s"concurrent commit while allocating identity values for " +
                 s"$tablePath — re-run the batch (values must be " +
                 "re-allocated from the advanced high-water mark)", e)
-          val tip = LogSegment.forTable(spark, new Path(tablePath))
           if (tip.version < v) throw e
           // winner changed the table contract → typed conflict; a blind
           // append profile is otherwise rebase-safe (the txn-collision
@@ -737,8 +740,11 @@ object CommitWriter {
     * restarts with a fresh sink checkpoint records a lower version later
     * and that action wins (mirrors the checkpoint retention rule). */
   def latestTxnVersion(spark: SparkSession, tablePath: String,
+      appId: String): Option[Long] =
+    txnVersionIn(spark, LogSegment.forTable(spark, new Path(tablePath)), appId)
+
+  private def txnVersionIn(spark: SparkSession, segment: LogSegment,
       appId: String): Option[Long] = {
-    val segment = LogSegment.forTable(spark, new Path(tablePath))
     val rows = Replay.actionsDF(spark, segment)
       .where(col("txn.appId") === appId)
       .orderBy(col("commit_version").desc, col("txn.version").desc)

@@ -83,6 +83,11 @@ object LogSegment {
     (singles ++ v2s ++ multi).toSet
   }
 
+  /** `_delta_log` exists but holds no commit or complete checkpoint yet
+    * (a table mid-create). */
+  final class EmptyLogException(tablePath: Path)
+      extends IllegalArgumentException(s"Empty _delta_log at $tablePath")
+
   def fs(spark: SparkSession, path: Path): FileSystem =
     path.getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -127,7 +132,7 @@ object LogSegment {
     val v2Versions = v2Cps.map(_._1).toSet
 
     if (commits.isEmpty && checkpoints.isEmpty)
-      throw new IllegalArgumentException(s"Empty _delta_log at $tablePath")
+      throw new EmptyLogException(tablePath)
 
     val maxAvailable =
       (commits.map(_._1) ++ checkpoints.keys).max

@@ -101,9 +101,6 @@ object CommitRangeScan {
         size() > DiffCacheMaxCommits
     }
 
-  private[graft] def resetDiffCacheForTest(): Unit =
-    diffCache.synchronized(diffCache.clear())
-
   private def cacheLookup(spark: SparkSession,
       key: DiffKey): Option[DataFrame] =
     diffCache.synchronized(Option(diffCache.get(key))).map { df =>

@@ -248,12 +248,10 @@ object DeltaScan {
     // does ZERO filesystem listing/stat calls (spark.read.parquet would
     // re-stat every path per scan, and past 32 paths launch a
     // distributed listing job per read — the k-NN join family's driver
-    // floor, r17). Files lacking a recorded status (foreign writers)
-    // fall back to the listing read.
-    // measurement escape hatch (tools only): force the old listing
-    // path so the A/B is reproducible — not a tuning knob
-    val forceListing = sys.env.contains("GRAFT_SCAN_FORCE_LISTING")
-    val statusesKnown = !forceListing &&
+    // floor, r17). Files without a log-recorded size and mtime (the
+    // remove-side CDF pre-images: removes carry neither) are read
+    // through spark.read.parquet instead, until removes record them.
+    val statusesKnown =
       normalScanFiles.forall(f => f.size >= 0 && f.modTime >= 0)
     var df =
       if (statusesKnown && normalScanFiles.nonEmpty)

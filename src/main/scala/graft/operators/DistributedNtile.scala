@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -76,15 +76,5 @@ object DistributedNtile {
     df.join(broadcast(offsets), Seq(key))
       .withColumn(out, bin.cast("int"))
       .drop("__start")
-  }
-
-  /** Column-expression variant for callers that already computed the
-    * global rank. */
-  def binForRank(rank: Column, n: Long, buckets: Int): Column = {
-    val q = n / buckets
-    val rem = n % buckets
-    if (q == 0) rank.cast("int")
-    else when(rank <= rem * (q + 1), (rank - 1) / (q + 1) + 1)
-      .otherwise((rank - rem * (q + 1) - 1) / q + 1 + rem).cast("int")
   }
 }

@@ -387,8 +387,8 @@ object IvfMaintenance {
     * holding recall, because ADC ranking error is absorbed only by the
     * exact rerank and the rerank sees `cand` rows per probe: once one
     * cell holds more near-neighbors than cand, the pool truncates
-    * before the rerank (the PqResidualProbe finding: recall dies
-    * exactly when occupancy >> cand). That makes occupancy-vs-budget
+    * before the rerank (SCALE.md, "Round-15: residual IVFADC": recall
+    * dies exactly when occupancy >> cand). That makes occupancy-vs-budget
     * the principled auto-split trigger — the bare max/avg skew ratio
     * alerts (it is shape information) but a uniformly-grown index with
     * every cell past the budget has skew 1.0 and still needs splits.
@@ -430,8 +430,8 @@ object IvfMaintenance {
     * remedy the skewAlert feeds: each fat cell costs one bounded job,
     * probes keep pruning throughout (any concurrent probe reads the
     * pre-split or post-split snapshot — never a row under two cids),
-    * and occupancy returns under the rerank-budget rule (the
-    * PqResidualProbe finding: recall dies exactly when occupancy
+    * and occupancy returns under the rerank-budget rule (SCALE.md,
+    * "Round-15: residual IVFADC": recall dies exactly when occupancy
     * dwarfs cand). A crash at any point leaves the pre-split snapshot
     * — re-run the call; there is no partial state.
     *

@@ -141,7 +141,7 @@ object PqMaintenance {
     * inventory's partitionValues — zero data files opened (cid is also
     * a data column, but the pcid partition value mirrors it; a
     * column-scan + distinct here would be a full-table read at the
-    * 100 TB target). Plain-parquet rehearsal layouts fall back to the
+    * 100 TB target). Plain-parquet layouts fall back to the
     * column scan. */
   private def dataPcids(s: SparkSession, pqPath: String): Seq[Long] = {
     import graft.delta.IndexStore

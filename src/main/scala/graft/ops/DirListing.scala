@@ -64,9 +64,10 @@ object DirListing {
       // rows stay distributed — the candidate set is never collected.
       // Recursion is a manual listStatus walk, NOT fs.listFiles(_,
       // recursive=true): listFiles materializes LocatedFileStatus —
-      // per-file block locations — which the 1M-file VacuumRehearsal
-      // measured at ~3 ms/file on LocalFileSystem (250x the plain
-      // status listing); this operator never needs block locations.
+      // per-file block locations — which the 1M-file VACUUM rehearsal
+      // (SCALE.md, round 16) measured at ~3 ms/file on LocalFileSystem
+      // (250x the plain status listing); this operator never needs
+      // block locations.
       val rdd = spark.sparkContext
         .parallelize(subDirs, math.min(subDirs.size, 64))
         .flatMap { d =>

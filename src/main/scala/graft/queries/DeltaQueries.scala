@@ -1113,9 +1113,6 @@ object DeltaQueries {
 
   // ---- declared queries ---------------------------------------------
 
-  private def orderCols(df: DataFrame, keys: String*): DataFrame =
-    df.orderBy(keys.map(asc_nulls_last): _*)
-
   val all: Seq[Q] = Seq(
     // A1/A2: full snapshot scan through log replay
     Q("delta_scan",

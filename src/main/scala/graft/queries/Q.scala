@@ -23,8 +23,6 @@ object Q {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =
     Q(name, fn, Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
 }
 
 /** Table loading helpers shared by all query groups. */

@@ -88,7 +88,8 @@ object SimilarityQueries {
     * point: exact pair cost at dim 512 is 8× the fixture's while codes
     * stay one byte per subspace). Train/encode/distortion all take a
     * shape so the SAME plan shapes serve any embedding width
-    * (rehearsed at dim 512 by [[graft.tools.PqHighDim]]). */
+    * (rehearsed at dim 512 — SCALE.md, "Round-14 dim-512 PQ
+    * rehearsal"). */
   final case class PqShape(dim: Int, m: Int, subDim: Int, k: Int) {
     require(m * subDim == dim, s"m*subDim must equal dim: $this")
   }
@@ -139,22 +140,8 @@ object SimilarityQueries {
         explode(expr("slice(vs, i + 2, size(vs) - i - 1)")).as("vec_b"))
       .distinct()
 
-  /** The pre-r16 nested-transform-lambda pair explode — kept as the
-    * value-identity + timing reference for the two-Generate form
-    * (tools.AmbigProbe adjudicates them through the full
-    * q_embed_near_dup body). */
-  private[graft] def embedCandidatesLambda(emb: DataFrame): DataFrame =
-    embedBuckets(emb)
-      .where(size(col("vs")).between(2, EmbedBucketMax))
-      .select(explode(expr(
-        """flatten(transform(vs, (x, i) ->
-          |  transform(slice(vs, i + 2, size(vs) - i - 1), y ->
-          |    struct(x AS vec_a, y AS vec_b))))""".stripMargin)).as("p"))
-      .select("p.vec_a", "p.vec_b")
-      .distinct()
-
   /** q_embed_near_dup's exact-cosine verify over an explicit candidate
-    * relation (probe access). */
+    * relation. */
   private[graft] def embedNearDupVerify(emb: DataFrame,
       cand: DataFrame): DataFrame = {
     val ea = emb.select(col("vec_id").as("vec_a"),
@@ -1423,9 +1410,10 @@ object SimilarityQueries {
   // Two-level (hierarchical) coarse quantizer — the ARITHMETIC remedy
   // at production nlist. The size gate fixed the memory shape of flat
   // assignment, but the dot-product count stays O(n × nlist): at
-  // nlist 10^5-10^6 that is the real wall (the CentroidGateProbe
-  // finding — both flat shapes are arithmetic-bound at 10^5). Routing
-  // through k1 ≈ √nlist super-cells cuts it to
+  // nlist 10^5-10^6 that is the real wall (SCALE.md, "Round-16:
+  // centroid-broadcast size gate" — both flat shapes are
+  // arithmetic-bound at 10^5). Routing through k1 ≈ √nlist
+  // super-cells cuts it to
   // O(n × (k1 + w·nlist/k1)) ≈ O(n × 2√nlist) — ~150× less at 10^5 —
   // which is how production coarse quantizers (FAISS IMI / two-level
   // IVF) scale the cell count past what exhaustive scoring affords.
@@ -1489,8 +1477,8 @@ object SimilarityQueries {
     * the runner-up super). Two-level assignment is the standard
     * approximation: it equals flat assignment unless the true cell's
     * super-cell falls outside the top-w routes — agreement is pinned
-    * in SimilaritySpec and measured at production shape in
-    * tools/TwoLevelRouteProbe. */
+    * in SimilaritySpec and measured at production shape in SCALE.md,
+    * "Round-16: the two-level coarse quantizer". */
   private[graft] def assignTwoLevel(df: DataFrame, superCents: DataFrame,
       routedCents: DataFrame, w: Int = 2): DataFrame = {
     require(w >= 1, s"w = $w")
@@ -1755,12 +1743,6 @@ object SimilarityQueries {
     }
     path
   }
-
-  /** Legacy naming helper for the plain-parquet rehearsal layout
-    * (tools/ probes build codebooks in a `_codebooks` sibling dir;
-    * Delta-backed PQ tables carry them as a `rel=codebook` relation —
-    * IndexStore.codebookAt accepts both). */
-  def pqCodebooksPath(indexPath: String): String = indexPath + "_codebooks"
 
   /** The training-time distortion baseline and the index's CODE
     * CONSTRUCTION ("raw" | "residual") ride IN the PQ table as one
@@ -2146,12 +2128,11 @@ object SimilarityQueries {
     residualsAgainst(emb, pqCids(s, ivfPath),
       IndexStore.centroidsAt(s, ivfPath), Dim)
 
-  /** Same, against explicit (vec_id, cid) and (cid, cv) relations —
-    * shared with the PqResidualProbe rehearsal. `dim` is REQUIRED
-    * (ADVICE r16): the unrolled element_at form, unlike the zip_with
-    * lambda it replaced, silently truncates (or under ANSI mode throws
-    * on) vectors whose width differs from the assumed one — every
-    * caller must state the shape it is encoding. */
+  /** Same, against explicit (vec_id, cid) and (cid, cv) relations.
+    * `dim` is REQUIRED (ADVICE r16): the unrolled element_at form,
+    * unlike the zip_with lambda it replaced, silently truncates (or
+    * under ANSI mode throws on) vectors whose width differs from the
+    * assumed one — every caller must state the shape it is encoding. */
   /** Widest vector the UNROLLED residual projection may codegen: the
     * 2·dim element_at terms land in ONE generated method (whole-stage
     * codegen cannot split expressions bound to join-output variables),
@@ -2193,8 +2174,7 @@ object SimilarityQueries {
   }
 
   /** The residual search against explicit relations, shape-parametrized
-    * (the annPqSearch pattern) — shared with the PqResidualProbe
-    * rehearsal at production widths. */
+    * (the annPqSearch pattern). */
   private[graft] def annPqResidualSearch(s: SparkSession, emb: DataFrame,
       path: String, centroidsPath: String, probeId: Long, k: Int,
       nprobe: Int, cand: Int,
@@ -2438,7 +2418,7 @@ object SimilarityQueries {
     * so the SAME code path serves the fixture (dim 64, M=8, K=16) and
     * the production regimes (dim 512, M=64, K up to 256 — the one-byte
     * ceiling, unsigned reads in PqAdc). Shared with SimilaritySpec's
-    * K=256 pin and the PqHighDim rehearsal. */
+    * K=256 pin. */
   private[graft] def annPqSearch(s: SparkSession, emb: DataFrame,
       path: String, centroidsPath: String,
       probeId: Long, k: Int, nprobe: Int, cand: Int,
@@ -2574,7 +2554,7 @@ object SimilarityQueries {
     * like [[annPqSearch]], so the SAME two-join + native-ADC pipeline
     * serves the fixture (dim 64, M=8) and the production widths (dim
     * 512, M=64 — where the per-(m, code) equi-join shape this replaced
-    * would be 64 joins). Shared with the PqHighDim join rehearsal. */
+    * would be 64 joins). */
   private[graft] def knnJoinPqOver(s: SparkSession, emb: DataFrame,
       path: String, centroidsPath: String, k: Int, nprobe: Int,
       cand: Int, probeModulus: Int = 100, packed: Boolean = false,
@@ -2944,8 +2924,8 @@ object SimilarityQueries {
         .foreach(_.unpersist(false))
       gSup = null; gRouted = null
       // persist only when the layout is VERSIONED: an unversioned
-      // (plain-parquet rehearsal) layout refreshes every trigger, so
-      // caching would be a pure persist/unpersist cycle per batch the
+      // (plain-parquet) layout refreshes every trigger, so caching
+      // would be a pure persist/unpersist cycle per batch the
       // pre-r16 uncached path never paid (ADVICE r16)
       def cached(df: DataFrame): DataFrame =
         if (v.nonEmpty) df.persist() else df
@@ -3080,7 +3060,7 @@ object SimilarityQueries {
     // derived scalars (nlist, construction tag) re-run only when a
     // commit actually MOVED a table — exactly when a re-read can see
     // anything new (the heal retrain and appendToIndex commits bump the
-    // version, so they re-read as before). Plain-parquet rehearsal
+    // version, so they re-read as before). Plain-parquet
     // layouts have no version: versionOf answers None and every batch
     // re-reads — the pre-r16 behavior. Steady-state triggers skip the
     // redundant Delta metadata scans, the dominant per-batch cost on a

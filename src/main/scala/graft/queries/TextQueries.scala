@@ -83,44 +83,23 @@ object TextQueries {
     * now do map-side partial aggregation before their exchange
     * (8 partial mins per doc per map partition for the MinHash
     * signatures), instead of shuffling every token row. Measured r16
-    * (tools.ShingleProbe, sf0.1): signature stage 0.26 s vs 0.51 s
-    * lead-window, multiset-identical output (diff=0 pinned there and
-    * in TextSpec). q_ngram_jaccard deliberately stays on the
-    * lead-window shape (ngramShingleSetsLead): its stop-shingle window
-    * cap and sz window REUSE that one exchange, and the zip form
-    * measured slower there (1.82 s vs 1.52 s). */
+    * (OPTIMIZATION_r16.md §1, sf0.1): signature stage 0.26 s vs 0.51 s
+    * lead-window, multiset-identical output. q_ngram_jaccard
+    * deliberately stays on the lead-window shape (ngramShingleSetsLead):
+    * its stop-shingle window cap and sz window REUSE that one exchange,
+    * and the zip form measured slower there (1.82 s vs 1.52 s). */
   private def shingleHashes(docs: DataFrame): DataFrame =
     shingleHashesZip(docs)
-
-  /** The round-15 lead-window shingler (posexplode + lead over a
-    * doc_id window) — kept for the probe's value-identity pin and as
-    * the measured record of why the zip form ships. */
-  private[graft] def shingleHashesLead(docs: DataFrame): DataFrame = {
-    val byDoc = Window.partitionBy("doc_id").orderBy("pos")
-    docs
-      .select(col("doc_id"),
-        posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-      .withColumn("nxt", lead("tok", 1).over(byDoc))
-      .where(col("nxt").isNotNull)
-      .select(col("doc_id"),
-        hashCol(concat(col("tok"), lit(" "), col("nxt"))).as("h"))
-  }
-
-  /** The lead-window shingler over the documents table (probe access:
-    * the value-identity + timing reference for the shipped zip form). */
-  private[graft] def shingleHashesForAudit(s: SparkSession,
-      dir: String): DataFrame = shingleHashesLead(load(s, dir, "documents"))
 
   /** (doc_id, shingle-hash) stream, row-local and lambda-free:
     * bigrams via arrays_zip of two slices of the token array —
     * Slice/ArraysZip/Concat are all ordinary codegen expressions, so
     * this formulation keeps whole-stage codegen like the lead-window
     * one but needs NO shuffle at all (the window variant sorts the
-    * full token stream by doc_id first). Value-identical to
-    * shingleHashes: zip pairs ts[i] with ts[i+1] for i = 1..size-1,
-    * exactly the lead-over-posexplode pairs, empty split tokens
-    * included. Single-token docs drop at the size guard (the lead
-    * variant drops them at nxt IS NULL). */
+    * full token stream by doc_id first). Zip pairs ts[i] with ts[i+1]
+    * for i = 1..size-1, exactly the lead-over-posexplode pairs, empty
+    * split tokens included. Single-token docs drop at the size
+    * guard. */
   private[graft] def shingleHashesZip(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("ts"))
@@ -130,134 +109,6 @@ object TextQueries {
         expr("slice(ts, 2, size(ts) - 1)").as("w2"))).as("z"))
       .select(col("doc_id"),
         hashCol(concat(col("z.w1"), lit(" "), col("z.w2"))).as("h"))
-
-  /** ngramShingleSetsLead with the zip shingler: per-doc distinct
-    * shingle hashes + full set size, no token-stream window. */
-  private[graft] def ngramShingleSetsZip(s: SparkSession,
-      dir: String): DataFrame = {
-    val docs = load(s, dir, "documents")
-    docs.select(col("doc_id"), col("source"), split(col("text"), " ").as("ts"))
-      .where(size(col("ts")) >= 2)
-      .select(col("doc_id"), col("source"), explode(arrays_zip(
-        expr("slice(ts, 1, size(ts) - 1)").as("w1"),
-        expr("slice(ts, 2, size(ts) - 1)").as("w2"))).as("z"))
-      .select(col("doc_id"), col("source"),
-        hashCol(concat(col("z.w1"), lit(" "), col("z.w2"))).as("h"))
-      .distinct()
-      .withColumn("sz", count(lit(1)).over(Window.partitionBy("doc_id")))
-  }
-
-  /** ngramJaccardStreamedLead over the zip shingler (candidate for the
-    * shipped q_ngram_jaccard body — see tools.ShingleProbe). */
-  private[graft] def ngramJaccardStreamedZip(s: SparkSession,
-      dir: String): DataFrame = {
-    val capped = ngramShingleSetsZip(s, dir)
-      .withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy("source", "h")))
-      .where(col("cnt") <= StopShingleMax)
-    val a = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_a"), col("sz").as("sza"))
-    val b = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_b"), col("sz").as("szb"))
-    val pairs = a.join(b, Seq("source", "h"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "sza", "szb")
-    ngramJaccardFinish(pairs)
-  }
-
-  /** Per-doc DISTINCT shingle set + size in ONE exchange (r17): zip
-    * shingles (row-local, codegen), then groupBy(doc_id, source) with a
-    * map-side-partial collect_set — the dedup AND the set size ride the
-    * same aggregation, where the lead-window form paid a token-stream
-    * window sort, a distinct exchange and a second doc_id window for
-    * the same three facts. Output: (doc_id, source, sz, h) with sz the
-    * FULL distinct-set size (pre-cap, as the oracle's sh CTE defines). */
-  private[graft] def ngramShingleSetsGrouped(s: SparkSession,
-      dir: String): DataFrame =
-    load(s, dir, "documents")
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("ts"))
-      .where(size(col("ts")) >= 2)
-      .select(col("doc_id"), col("source"), explode(arrays_zip(
-        expr("slice(ts, 1, size(ts) - 1)").as("w1"),
-        expr("slice(ts, 2, size(ts) - 1)").as("w2"))).as("z"))
-      .select(col("doc_id"), col("source"),
-        hashCol(concat(col("z.w1"), lit(" "), col("z.w2"))).as("h"))
-      .groupBy("doc_id", "source")
-      .agg(collect_set(col("h")).as("hs"))
-      .select(col("doc_id"), col("source"), size(col("hs")).as("sz"),
-        explode(col("hs")).as("h"))
-
-  /** Postings-list jaccard over the grouped zip shingler with CODEGEN
-    * pair explode (r17): groupBy (source, h) builds the bounded posting
-    * list, the stop-shingle cap is the same size() predicate (lists of
-    * 1 generate no pairs, so between(2, cap) ≡ the oracle's ≤ cap), and
-    * pairs come out as two chained Generates (posexplode + runtime-
-    * start slice explode — the minhashBandPairs pattern), never an
-    * interpreted transform lambda. No windows, no self-join: 4
-    * exchanges end to end (sets, postings, pair agg, final sort). */
-  private[graft] def ngramJaccardPostingsZip(s: SparkSession,
-      dir: String): DataFrame = {
-    val postings = ngramShingleSetsGrouped(s, dir)
-      .groupBy("source", "h")
-      .agg(array_sort(collect_list(struct(col("doc_id"), col("sz"))))
-        .as("ds"))
-      .where(size(col("ds")).between(2, StopShingleMax))
-    val pairs = postings
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(expr("slice(ds, i + 2, size(ds) - i - 1)")).as("b"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.sz").as("sza"), col("b.sz").as("szb"))
-    ngramJaccardFinish(pairs)
-  }
-
-  /** Streamed self-join jaccard over the grouped zip sets, keeping the
-    * WINDOW stop-shingle cap (r17): the (source, h) window materializes
-    * the one exchange BOTH self-join sides then reuse — the cap is an
-    * exchange-sharing device, not just a filter (the broadcast-anti-
-    * join cap variant measured 2x slower for exactly this reason: its
-    * join sides each rebuilt the stream). vs the shipped lead form this
-    * drops the token-stream window sort, the distinct exchange and the
-    * per-doc sz window — the grouped sets deliver dedup + sz in one
-    * aggregation. */
-  private[graft] def ngramJaccardStreamedGrouped(s: SparkSession,
-      dir: String): DataFrame = {
-    val capped = ngramShingleSetsGrouped(s, dir)
-      .withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy("source", "h")))
-      .where(col("cnt") <= StopShingleMax)
-    val a = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_a"), col("sz").as("sza"))
-    val b = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_b"), col("sz").as("szb"))
-    val pairs = a.join(b, Seq("source", "h"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "sza", "szb")
-    ngramJaccardFinish(pairs)
-  }
-
-  /** Streamed self-join jaccard with the window-free cap (r17): the
-    * stop-shingle filter is a groupBy(source, h) count of the grouped
-    * zip stream, kept only where it EXCEEDS the cap (a tiny hot list —
-    * boilerplate shingles are rare by definition), broadcast anti-joined
-    * back. The grouped-sets exchange is shared by the hot-list branch
-    * and both join sides, so nothing sorts the full shingle stream. */
-  private[graft] def ngramJaccardGroupedZip(s: SparkSession,
-      dir: String): DataFrame = {
-    val sets = ngramShingleSetsGrouped(s, dir)
-    val hot = sets.groupBy("source", "h").agg(count(lit(1)).as("cnt"))
-      .where(col("cnt") > StopShingleMax)
-      .select("source", "h")
-    val capped = sets.join(broadcast(hot), Seq("source", "h"), "left_anti")
-    val a = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_a"), col("sz").as("sza"))
-    val b = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_b"), col("sz").as("szb"))
-    val pairs = a.join(b, Seq("source", "h"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "sza", "szb")
-    ngramJaccardFinish(pairs)
-  }
 
   private val shingleHashesSql: String =
     s"""SELECT doc_id, ${hashSql("shingle")} AS h FROM (
@@ -282,15 +133,6 @@ object TextQueries {
     * the two engines bit-identical. */
   private val SimhashSubBits = 30
   private val SimhashBandMask = (1 << 15) - 1 // 4 bands x 15 bits
-
-  private def simhashVoteAggs(h: String, pfx: String): Seq[Column] =
-    (0 until SimhashSubBits).map(i =>
-      sum(when(expr(s"($h >> $i) & 1") === 1, 1).otherwise(-1))
-        .as(s"$pfx$i"))
-  private def simhashSigCol(pfx: String): Column =
-    (0 until SimhashSubBits).map(i =>
-      when(col(s"$pfx$i") > 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce(_ + _)
 
   /** PACKED vote aggregation (r16): 3 per-bit ones-counts ride each
     * 64-bit sum in 21-bit lanes, so the signature aggregation runs
@@ -339,21 +181,6 @@ object TextQueries {
     (0 until SimhashSubBits).map(i =>
       s"(CASE WHEN $pfx$i > 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
 
-  /** The r15 ±1-vote signature aggregation (one sum per bit) — kept as
-    * the value-identity + timing reference for the packed form
-    * (tools.SimhashProbe pins them equal). */
-  private[graft] def simhashSignaturesVotes(s: SparkSession,
-      dir: String): DataFrame = {
-    val toks = load(s, dir, "documents")
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      .select(col("doc_id"), hashCol(col("tok")).as("h1"),
-        hashCol(concat(col("tok"), lit("#"))).as("h2"))
-    val aggs = simhashVoteAggs("h1", "a") ++ simhashVoteAggs("h2", "b")
-    toks.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
-      .select(col("doc_id"), simhashSigCol("a").as("sig1"),
-        simhashSigCol("b").as("sig2"))
-  }
-
   /** 60-bit SimHash signature per document (doc_id, sig1, sig2) — the
     * candidate-free half of q_simhash_near_dup, exposed so TextSpec can
     * brute-force the pigeonhole completeness guarantee against it. */
@@ -395,16 +222,13 @@ object TextQueries {
        |  QUALIFY count(*) OVER (PARTITION BY band, k1, k2) <= $BandBucketMax
        |)""".stripMargin
 
-  /** The uncapped per-doc band-key relation (doc_id, band, k1, k2) —
-    * shared by the bucket builder and the scale-rehearsal audit, which
-    * measures the bucket-size distribution the cap has to absorb. */
+  /** The uncapped per-doc band-key relation (doc_id, band, k1, k2)
+    * that the bucket builder caps. */
   private[graft] def minhashBandsForAudit(s: SparkSession,
       dir: String): DataFrame =
     minhashBandsFrom(shingleHashes(load(s, dir, "documents")))
 
-  /** Bands from an EXPLICIT (doc_id, h) shingle stream — probe access
-    * (tools.AmbigProbe A/Bs the zip vs lead shingler through the full
-    * q_dup_clusters body). */
+  /** Bands from an EXPLICIT (doc_id, h) shingle stream. */
   private[graft] def minhashBandsFrom(sh: DataFrame): DataFrame = {
     val sigs = sh
       .groupBy("doc_id")
@@ -472,14 +296,10 @@ object TextQueries {
     else batch.where(Shims.bloomMightContain(lit(bf), col("h"))).count()
   }
 
-  /** Probe access to the capped bucket relation (tools.PairGenProbe). */
-  private[graft] def minhashBucketsForAudit(s: SparkSession,
-      dir: String): DataFrame = minhashBuckets(s, dir)
-
   private def minhashBuckets(s: SparkSession, dir: String): DataFrame =
     minhashBucketsFrom(s, minhashBandsForAudit(s, dir))
 
-  /** Capped buckets from an EXPLICIT band relation (probe access). */
+  /** Capped buckets from an EXPLICIT band relation. */
   private[graft] def minhashBucketsFrom(s: SparkSession,
       bands: DataFrame): DataFrame = {
     // cap WHILE collecting: one shuffle clusters each bucket into a
@@ -508,8 +328,8 @@ object TextQueries {
     * labeling the spanning star (di -> bucket min) carries the same
     * connectivity with k-1 edges instead of k(k-1)/2 — and hands the
     * CC loop pre-contracted stars, so it converges in fewer rounds.
-    * Probe access (tools.AmbigProbe) so the r16 shingler change can be
-    * adjudicated through the full query. */
+    * The r16 shingler change was adjudicated through it
+    * (OPTIMIZATION_r17.md §2). */
   private[graft] def dupClustersFromBuckets(s: SparkSession,
       buckets: DataFrame): DataFrame = {
     val stars = buckets
@@ -612,7 +432,8 @@ object TextQueries {
     * posexplode (codegen), bigrams via lead over a doc_id window, hash
     * after (codegen), distinct by agg, sz via a second doc_id window.
     * More shuffles than the row-local formulation but every operator is
-    * whole-stage-codegen — profiled against it in tools.ProfileNgram. */
+    * whole-stage-codegen — profiled against it in OPTIMIZATION_r17.md
+    * §9. */
   private[graft] def ngramShingleSetsLead(s: SparkSession, dir: String): DataFrame = {
     val byDoc = Window.partitionBy("doc_id").orderBy("pos")
     load(s, dir, "documents")
@@ -628,24 +449,6 @@ object TextQueries {
 
   private[graft] def ngramJaccardStreamedLead(s: SparkSession, dir: String): DataFrame = {
     val capped = ngramShingleSetsLead(s, dir)
-      .withColumn("cnt",
-        count(lit(1)).over(Window.partitionBy("source", "h")))
-      .where(col("cnt") <= StopShingleMax)
-    val a = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_a"), col("sz").as("sza"))
-    val b = capped.select(col("source"), col("h"),
-      col("doc_id").as("doc_b"), col("sz").as("szb"))
-    val pairs = a.join(b, Seq("source", "h"))
-      .where(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b", "sza", "szb")
-    ngramJaccardFinish(pairs)
-  }
-
-  /** Streamed self-equi-join pair generation: the window cap rides the
-    * same (source, h) partitioning the join needs. Shuffles: window +
-    * join (exchange-reusable) + pair agg. */
-  private[graft] def ngramJaccardStreamed(s: SparkSession, dir: String): DataFrame = {
-    val capped = ngramShingleSets(s, dir)
       .withColumn("cnt",
         count(lit(1)).over(Window.partitionBy("source", "h")))
       .where(col("cnt") <= StopShingleMax)
@@ -865,8 +668,8 @@ object TextQueries {
       // (r17, measured): the one-token-pass rewrite (pre-aggregate to
       // (doc_id, tok, tf), df = grouped rows per tok, sum(df·tf)
       // reconstruction — value-identical, diff=0) measured SLOWER in an
-      // interleaved in-JVM A/B (tools.DocRarityProbe: old 0.42 s vs new
-      // 0.47 s median of 7 at sf0.1): token frequencies here are ≈1, so
+      // interleaved in-JVM A/B (OPTIMIZATION_r17.md §4: old 0.42 s vs
+      // new 0.47 s median of 7 at sf0.1): token frequencies here are ≈1, so
       // the (doc_id, tok) pre-aggregation barely shrinks the stream and
       // its extra aggregation costs more than the second explode pass
       // it saves. The rarity side is already a BroadcastHashJoin chosen
@@ -1305,7 +1108,7 @@ object TextQueries {
       // Spark plan: lead-window shingling + streamed capped self-equi-join
       // (ngramJaccardStreamedLead) — measured fastest at sf0.1 (1.19s vs
       // 3.49s row-local-sets streamed vs 4.19s postings-list; see
-      // tools.ProfileNgram). Spark evaluates higher-order lambdas
+      // OPTIMIZATION_r17.md §9). Spark evaluates higher-order lambdas
       // INTERPRETED, so the row-local transform/filter/array_distinct set
       // builder alone cost 2.3s; the lead formulation keeps every operator
       // in whole-stage codegen and dedups by hash exactly as the oracle's
@@ -1699,7 +1502,7 @@ object TextQueries {
       // bigrams via arrays_zip of two slices — ordinary codegen
       // expressions; the former transform(sequence(...)) lambda is
       // evaluated INTERPRETED by Spark (the round-15 shingle finding,
-      // re-measured r16 in tools.ShingleProbe)
+      // re-measured r16, OPTIMIZATION_r16.md §1)
       val bigr = docs
         .select(col("doc_id"), split(col("text"), " ").as("ts"))
         .where(size(col("ts")) >= 2)

@@ -13,7 +13,7 @@ import graft.queries.SimilarityQueries.PqShape
   * generated method that could trip the JVM's 64 KB method limit and
   * silently fall back to interpreted execution in production. This
   * probe runs the residual + PQ-encode plan shapes at dim 512 (the
-  * PqHighDim rehearsal shape: m=64, subDim=8, k=128) with
+  * dim-512 rehearsal shape in SCALE.md: m=64, subDim=8, k=128) with
   * `spark.sql.codegen.fallback=false`, so a failed compile THROWS
   * instead of degrading; on success it reports the WholeStageCodegen
   * span count per plan as the committed stamp.

@@ -379,7 +379,7 @@ class StreamingSpec extends AnyFunSuite {
     val path = s"$tmp/pq_heal_index"
     val ivfPath = s"$tmp/ivf"
     // single coarse cell — the coarse prune is not under test here
-    // plain `(cid, cv)` sibling dir — the rehearsal-layout fallback
+    // plain `(cid, cv)` sibling dir — the plain-parquet fallback
     // IndexStore.centroidsAt accepts beside Delta-backed tables
     Seq((0L, Seq.fill(vdim)(0.0))).toDF("cid", "cv")
       .coalesce(1).write.parquet(ivfPath + "_centroids")

@@ -90,22 +90,12 @@ class TextSpec extends AnyFunSuite {
     assert(TextQueries.simhashSignaturesOf(ok).count() == 1L)
   }
 
-  test("jaccard plan variants agree (postings vs streamed vs lead)") {
-    val p = TextQueries.ngramJaccardPostings(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val st = TextQueries.ngramJaccardStreamed(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val ld = TextQueries.ngramJaccardStreamedLead(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val pz = TextQueries.ngramJaccardPostingsZip(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val gz = TextQueries.ngramJaccardGroupedZip(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    assert(p.toSeq == st.toSeq)
-    assert(p.toSeq == ld.toSeq)
-    assert(p.toSeq == pz.toSeq)
-    assert(p.toSeq == gz.toSeq)
-    assert(p.nonEmpty)
+  test("shipped jaccard plan equals the postings-list reference") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val shipped = rows(TextQueries.ngramJaccardStreamedLead(spark, sf))
+    assert(shipped == rows(TextQueries.ngramJaccardPostings(spark, sf)))
+    assert(shipped.nonEmpty)
   }
 
   test("oversized LSH buckets are discarded end-to-end (cap overflow)") {
