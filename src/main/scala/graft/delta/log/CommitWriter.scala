@@ -1310,23 +1310,24 @@ object CommitWriter {
   private[delta] def autoCheckpointParts(nFiles: Long): Int =
     math.min(64L, nFiles / AutoCheckpointRowsPerPart + 1).toInt
 
-  /** Write a classic single-file checkpoint at the current version and
-    * update `_last_checkpoint`.
+  /** Write a classic checkpoint at the current version and update
+    * `_last_checkpoint`.
     *
     * Per the Delta protocol a checkpoint is a complete replay state, not
     * just the live files: it also carries the latest SetTransaction per
     * appId (so idempotent writers stay exactly-once across checkpoints)
     * and remove tombstones newer than the retention window (so VACUUM /
-    * incremental readers over the checkpoint keep tombstone visibility). */
-  /** @param numParts write a multi-part checkpoint with this many parts
-    *   (default 1 = classic single file). At 100 TB a checkpoint holds
-    *   millions of add rows — parts let it write AND later replay fully
-    *   distributed instead of through one task. Part renames are not
-    *   atomic as a set, but readers ignore a version whose part count
-    *   does not match the filename-declared total, so a crash mid-
-    *   publish leaves the previous checkpoint + commit tail in effect. */
-  /** @param numParts part count; -1 = auto-size from the live-file
-    *   count ([[autoCheckpointParts]] — ~100k add rows per part). */
+    * incremental readers over the checkpoint keep tombstone visibility).
+    *
+    * @param numParts write a multi-part checkpoint with this many parts
+    *   (default 1 = classic single file; -1 = auto-size from the
+    *   live-file count, [[autoCheckpointParts]] — ~100k add rows per
+    *   part). At 100 TB a checkpoint holds millions of add rows — parts
+    *   let it write AND later replay fully distributed instead of
+    *   through one task. Part renames are not atomic as a set, but
+    *   readers ignore a version whose part count does not match the
+    *   filename-declared total, so a crash mid-publish leaves the
+    *   previous checkpoint + commit tail in effect. */
   def checkpoint(spark: SparkSession, tablePath: String,
       numParts: Int = 1): Long = {
     import org.apache.spark.sql.expressions.Window

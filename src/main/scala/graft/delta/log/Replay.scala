@@ -20,82 +20,120 @@ import scala.jdk.CollectionConverters._
 object Replay {
   private val mapper = new ObjectMapper()
 
-  /** All actions in the segment, stamped with their commit version.
-    * Checkpoint rows get the checkpoint version; commit rows parse their
-    * version out of the file name. */
-  /** The segment's checkpoint as logSchema-shaped action rows. Classic
-    * and multipart checkpoints read directly; a V2 (UUID-named)
-    * checkpoint reads its top-level file for the non-file actions and
-    * the `sidecar` references, then the sidecar parquet files under
-    * `_delta_log/_sidecars/` for the add/remove actions. */
-  /** Resolved sidecar paths per MANIFEST file set — safe to memoize
-    * process-wide because v2 manifests are immutable by construction
-    * (UUID-named, never rewritten). Saves the two driver collect jobs
-    * (version check + sidecar listing) on every re-resolution of a
-    * v2-checkpointed table. */
-  private val v2SidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-
   /** The resolved sidecar parquet paths of a v2-checkpointed segment
     * (empty for classic checkpoints) — the authoritative count/layout
     * for callers auditing the checkpoint artifact. */
   def sidecarPaths(spark: SparkSession, segment: LogSegment): Seq[String] =
     if (!segment.checkpointIsV2) Seq.empty
-    else resolveSidecars(spark, segment,
-      segment.checkpointFiles.map(_.getPath.toString))
+    else checkpointInfo(spark, segment).sidecars
 
+  /** A checkpoint's files read with the v2 top-level schema: the
+    * classic actions plus `sidecar` and `checkpointMetadata` (null on a
+    * classic checkpoint, whose parquet lacks those columns). */
+  private def manifestDF(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val reader = spark.read.schema(Actions.v2CheckpointSchema)
+    if (paths.head.endsWith(".json")) reader.json(paths: _*)
+    else reader.parquet(paths: _*)
+  }
+
+  /** The segment's checkpoint as logSchema-shaped action rows. Classic
+    * and multipart checkpoints read directly; a V2 (UUID-named)
+    * checkpoint reads its top-level file for the non-file actions and
+    * the `sidecar` references, then the sidecar parquet files under
+    * `_delta_log/_sidecars/` for the add/remove actions. */
   private def checkpointDF(spark: SparkSession,
       segment: LogSegment): DataFrame = {
     val paths = segment.checkpointFiles.map(_.getPath.toString)
     if (!segment.checkpointIsV2)
       return spark.read.schema(Actions.logSchema).parquet(paths: _*)
 
-    def top =
-      if (paths.head.endsWith(".json"))
-        spark.read.schema(Actions.v2CheckpointSchema).json(paths: _*)
-      else
-        spark.read.schema(Actions.v2CheckpointSchema).parquet(paths: _*)
-    val sidecars = resolveSidecars(spark, segment, paths)
+    val sidecars = checkpointInfo(spark, segment).sidecars
     val logCols = Actions.logSchema.fieldNames.toIndexedSeq.map(col)
-    val nonFile = top
+    val nonFile = manifestDF(spark, paths)
       .where(col("sidecar").isNull && col("checkpointMetadata").isNull)
       .select(logCols: _*)
     if (sidecars.isEmpty) nonFile
     else nonFile.unionByName(
-      spark.read.schema(Actions.logSchema).parquet(sidecars.toIndexedSeq: _*))
+      spark.read.schema(Actions.logSchema).parquet(sidecars: _*))
   }
 
-  private def resolveSidecars(spark: SparkSession, segment: LogSegment,
-      paths: Seq[String]): Seq[String] = {
-    def top =
-      if (paths.head.endsWith(".json"))
-        spark.read.schema(Actions.v2CheckpointSchema).json(paths: _*)
-      else
-        spark.read.schema(Actions.v2CheckpointSchema).parquet(paths: _*)
-    v2SidecarCache.computeIfAbsent(
-      paths.sorted.mkString(";"), _ => {
-        // fail closed on a mislabeled manifest: the embedded version
-        // must match the file-name version when present (checked once —
-        // the manifest never changes)
-        val cpMeta = top.where(col("checkpointMetadata").isNotNull)
-          .select("checkpointMetadata.version").collect()
-        cpMeta.foreach { r =>
-          require(r.isNullAt(0) ||
-            segment.checkpointVersion.contains(r.getLong(0)),
-            s"v2 checkpoint manifest declares version ${r.getLong(0)} but " +
-              s"is named for version ${segment.checkpointVersion.orNull}")
-        }
-        val sidecarDir = new Path(segment.logPath, "_sidecars")
-        top.where(col("sidecar.path").isNotNull)
-          .select("sidecar.path").collect().map(_.getString(0))
-          .map { p =>
-            // spec: a file name relative to _delta_log/_sidecars/, or
-            // an absolute path/URI
-            if (p.contains("/")) p else new Path(sidecarDir, p).toString
-          }.toSeq
-      })
+  /** What one checkpoint says about the table beyond its file actions:
+    * its metaData, its protocol and, for a v2 checkpoint, its resolved
+    * sidecar paths. */
+  private case class CheckpointInfo(
+      meta: Option[Actions.Metadata],
+      proto: Option[Actions.Protocol],
+      sidecars: Seq[String])
+
+  /** Process-wide memo of [[CheckpointInfo]], keyed by the path, length
+    * and mtime of every checkpoint part. A checkpoint is immutable once
+    * published (parts and v2 manifests are written under a temporary
+    * name and renamed into place, never rewritten), so its P&M and
+    * sidecar list are a pure function of its files; a table re-created
+    * at the same path writes new files, which change the key. Bounded
+    * LRU over [[CacheMaxTables]] checkpoints. */
+  private val checkpointMemo = new java.util.LinkedHashMap[
+      Seq[(String, Long, Long)], CheckpointInfo](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[
+        Seq[(String, Long, Long)], CheckpointInfo]): Boolean =
+      size() > CacheMaxTables
   }
 
+  /** The segment's [[CheckpointInfo]], from the memo when caching is on
+    * (`spark.lakehouse.delta.enable_caching`, as for [[liveFiles]]);
+    * off bypasses reads and stores alike. */
+  private def checkpointInfo(spark: SparkSession,
+      segment: LogSegment): CheckpointInfo = {
+    if (!cachingEnabled(spark)) return loadCheckpointInfo(spark, segment)
+    val key = segment.checkpointFiles.map(st =>
+      (st.getPath.toString, st.getLen, st.getModificationTime))
+    checkpointMemo.synchronized(Option(checkpointMemo.get(key))) match {
+      case Some(info) =>
+        ReplayCounters.checkpointHit.incrementAndGet()
+        info
+      case None =>
+        val info = loadCheckpointInfo(spark, segment)
+        checkpointMemo.synchronized(checkpointMemo.put(key, info))
+        info
+    }
+  }
+
+  /** One query over the checkpoint's files (the top-level manifest, for
+    * a v2 checkpoint — its sidecars hold only add and remove actions). */
+  private def loadCheckpointInfo(spark: SparkSession,
+      segment: LogSegment): CheckpointInfo = {
+    ReplayCounters.checkpointLoad.incrementAndGet()
+    val rows = manifestDF(spark, segment.checkpointFiles.map(_.getPath.toString))
+      .where(col("metaData").isNotNull || col("protocol").isNotNull ||
+        col("checkpointMetadata").isNotNull || col("sidecar.path").isNotNull)
+      .select(col("checkpointMetadata.version"), col("sidecar.path"),
+        to_json(col("metaData")), to_json(col("protocol")))
+      .collect()
+    // fail closed on a mislabeled v2 manifest: the embedded version
+    // must match the file-name version when present
+    rows.foreach { r =>
+      require(r.isNullAt(0) ||
+        segment.checkpointVersion.contains(r.getLong(0)),
+        s"v2 checkpoint manifest declares version ${r.getLong(0)} but " +
+          s"is named for version ${segment.checkpointVersion.orNull}")
+    }
+    def json(i: Int) =
+      rows.find(!_.isNullAt(i)).map(r => mapper.readTree(r.getString(i)))
+    val sidecarDir = new Path(segment.logPath, "_sidecars")
+    CheckpointInfo(
+      meta = json(2).map(parseMetadata),
+      proto = json(3).map(parseProtocol),
+      sidecars = rows.filterNot(_.isNullAt(1)).map(_.getString(1))
+        .map { p =>
+          // spec: a file name relative to _delta_log/_sidecars/, or
+          // an absolute path/URI
+          if (p.contains("/")) p else new Path(sidecarDir, p).toString
+        }.toSeq)
+  }
+
+  /** All actions in the segment, stamped with their commit version.
+    * Checkpoint rows get the checkpoint version; commit rows parse their
+    * version out of the file name. */
   def actionsDF(spark: SparkSession, segment: LogSegment): DataFrame = {
     val cp = segment.checkpointFiles match {
       case Seq() => None
@@ -162,12 +200,26 @@ object Replay {
         size() > CacheMaxTables
     }
 
-  /** Test observability: how snapshots were served. */
+  /** `spark.lakehouse.delta.enable_caching` (the reference's
+    * lakehouse.delta.enable_caching knob, config.rs:28): our caches are
+    * content-guarded so it defaults ON (documented divergence from the
+    * reference's false default — its cache has no invalidation story);
+    * false bypasses reads AND stores, the reference's off semantics. */
+  private def cachingEnabled(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.lakehouse.delta.enable_caching")
+      .forall(_.toBoolean)
+
+  /** Test observability: how snapshots were served, and how checkpoint
+    * P&M/sidecar lookups were (memo hit, or one query over the
+    * checkpoint). */
   private[graft] object ReplayCounters {
     val hit = new java.util.concurrent.atomic.AtomicLong
     val incremental = new java.util.concurrent.atomic.AtomicLong
     val full = new java.util.concurrent.atomic.AtomicLong
-    def reset(): Unit = { hit.set(0); incremental.set(0); full.set(0) }
+    val checkpointHit = new java.util.concurrent.atomic.AtomicLong
+    val checkpointLoad = new java.util.concurrent.atomic.AtomicLong
+    def reset(): Unit = Seq(hit, incremental, full, checkpointHit,
+      checkpointLoad).foreach(_.set(0))
   }
 
   private def sigOf(st: org.apache.hadoop.fs.FileStatus): (String, Long, Long) =
@@ -219,14 +271,7 @@ object Replay {
     val tableKey = segment.tablePath.toString
     val allFilesNow = segment.checkpointFiles ++ segment.commitFiles
     val sigsNow = allFilesNow.map(sigOf)
-    // `spark.lakehouse.delta.enable_caching` (the reference's
-    // lakehouse.delta.enable_caching knob, config.rs:28): our cache is
-    // content-guarded so it defaults ON (documented divergence from the
-    // reference's false default — its cache has no invalidation story);
-    // false bypasses reads AND stores, the reference's off semantics.
-    val cachingOn = spark.conf
-      .getOption("spark.lakehouse.delta.enable_caching")
-      .forall(_.toBoolean)
+    val cachingOn = cachingEnabled(spark)
     val cached =
       if (!cachingOn) None
       else stateCache.synchronized { Option(stateCache.get(tableKey)) }
@@ -444,7 +489,12 @@ object Replay {
 
   /** Latest metadata + protocol. Commit tails are scanned driver-side
     * newest-first (they are small and P&M almost always live there);
-    * falls back to a Spark query over the checkpoint. */
+    * whatever the tail lacks comes from the checkpoint's P&M, held in the
+    * process-wide checkpoint memo (keyed by the path, length and mtime of
+    * every checkpoint part). A checkpoint never changes once published,
+    * so its P&M can be memoized: after the first resolve, a checkpointed
+    * log resolves with driver-side work only. A memo miss, and every call
+    * with caching off, costs one query over the checkpoint. */
   def metadataAndProtocol(spark: SparkSession,
       segment: LogSegment): (Actions.Metadata, Actions.Protocol) = {
     var meta: Option[Actions.Metadata] = None
@@ -465,17 +515,9 @@ object Replay {
       }
     }
     if ((meta.isEmpty || proto.isEmpty) && segment.checkpointFiles.nonEmpty) {
-      val cp = checkpointDF(spark, segment)
-      if (meta.isEmpty) {
-        val rows = cp.where(col("metaData").isNotNull)
-          .select(to_json(col("metaData")).as("j")).limit(1).collect()
-        meta = rows.headOption.map(r => parseMetadata(mapper.readTree(r.getString(0))))
-      }
-      if (proto.isEmpty) {
-        val rows = cp.where(col("protocol").isNotNull)
-          .select(to_json(col("protocol")).as("j")).limit(1).collect()
-        proto = rows.headOption.map(r => parseProtocol(mapper.readTree(r.getString(0))))
-      }
+      val cp = checkpointInfo(spark, segment)
+      meta = meta.orElse(cp.meta)
+      proto = proto.orElse(cp.proto)
     }
     (meta.getOrElse(throw new IllegalStateException(
         s"No metaData action found in log of ${segment.tablePath}")),

@@ -1,10 +1,14 @@
 package graft.delta
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.delta.log.{CommitWriter, Replay}
+import graft.delta.log.{CommitWriter, LogSegment, Replay}
 
 /** Incremental snapshot refresh (`Snapshot::try_new_from` semantics):
   * re-resolving a hot table replays only the new commit tail on top of
@@ -20,6 +24,43 @@ class IncrementalReplaySpec extends AnyFunSuite {
   }
 
   private lazy val region = spark.read.parquet(s"$sf/region.parquet")
+
+  /** A table whose checkpoint (at v1) is followed by a commit that
+    * carries neither metaData nor protocol, so resolving it needs the
+    * checkpoint's P&M. */
+  private def checkpointedTable(p: String, df: DataFrame = region): String = {
+    CommitWriter.createTable(spark, df.limit(2), p)
+    CommitWriter.append(spark, df.limit(3), p)
+    CommitWriter.checkpoint(spark, p)
+    CommitWriter.append(spark, df.limit(1), p)
+    p
+  }
+
+  /** Spark jobs `body` launches from this thread, counted by a listener.
+    * A marker job after `body` shares the listener queue, so once the
+    * marker is seen every earlier job event has been delivered. */
+  private def jobsRunBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"probe-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(
+          Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "probe")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(s"$group-end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(s"$group-end"), "listener never saw the marker job")
+      seen.asScala.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("refresh after append/delete replays only the tail (and matches full)") {
     val p = tmp("a")
@@ -70,8 +111,7 @@ class IncrementalReplaySpec extends AnyFunSuite {
   }
 
   test("spark.lakehouse.delta.enable_caching=false bypasses the cache") {
-    val p = tmp("nc")
-    CommitWriter.createTable(spark, region, p)
+    val p = checkpointedTable(tmp("nc"))
     val want = DeltaTable.forPath(spark, p).read.count()
     spark.conf.set("spark.lakehouse.delta.enable_caching", "false")
     try {
@@ -79,16 +119,88 @@ class IncrementalReplaySpec extends AnyFunSuite {
       assert(DeltaTable.forPath(spark, p).read.count() == want)
       DeltaTable.forPath(spark, p).allFiles.count()
       // every read re-replays; nothing is served from or stored to the
-      // cache (the reference's lakehouse.delta.enable_caching=false)
+      // caches (the reference's lakehouse.delta.enable_caching=false)
       assert(Replay.ReplayCounters.hit.get() == 0)
       assert(Replay.ReplayCounters.incremental.get() == 0)
       assert(Replay.ReplayCounters.full.get() >= 2)
+      // the checkpoint memo is bypassed too: each resolve re-reads the
+      // checkpoint's P&M, in one query
+      assert(Replay.ReplayCounters.checkpointHit.get() == 0)
+      assert(Replay.ReplayCounters.checkpointLoad.get() >= 2)
+      val seg = LogSegment.forTable(spark, new Path(p))
+      assert(jobsRunBy(Replay.metadataAndProtocol(spark, seg)) == 1)
     } finally spark.conf.unset("spark.lakehouse.delta.enable_caching")
     // cache resumes (and repopulates) once re-enabled
     DeltaTable.forPath(spark, p).allFiles.count()
     Replay.ReplayCounters.reset()
     DeltaTable.forPath(spark, p).allFiles.count()
     assert(Replay.ReplayCounters.hit.get() >= 1)
+    assert(Replay.ReplayCounters.checkpointHit.get() >= 1)
+    assert(Replay.ReplayCounters.checkpointLoad.get() == 0)
+  }
+
+  test("checkpoint P&M is memoized: repeated latest reads run no Spark job") {
+    val p = checkpointedTable(tmp("pm"))
+    val seg = DeltaTable.forPath(spark, p).segment // the first read
+    assert(seg.checkpointFiles.nonEmpty && seg.commitFiles.nonEmpty)
+    val segs = Seq.fill(3)(LogSegment.forTable(spark, new Path(p)))
+    Replay.ReplayCounters.reset()
+    val jobs = jobsRunBy(segs.foreach(Replay.metadataAndProtocol(spark, _)))
+    assert(jobs == 0, s"metadataAndProtocol ran $jobs Spark jobs")
+    assert(Replay.ReplayCounters.checkpointLoad.get() == 0)
+    assert(Replay.ReplayCounters.checkpointHit.get() == 3)
+  }
+
+  test("a metadata commit after the checkpoint wins over the memo") {
+    val p = checkpointedTable(tmp("pmw"))
+    DeltaTable.forPath(spark, p) // memoizes the checkpoint's P&M
+    graft.GraftSession(spark).sql(
+      s"ALTER TABLE '$p' SET TBLPROPERTIES ('team' = 'ml')")
+    assert(DeltaTable.forPath(spark, p).metadata.configuration
+      .get("team").contains("ml"))
+    CommitWriter.append(spark, region.limit(1).withColumn("extra", lit(1)),
+      p, mergeSchema = true)
+    val snap = DeltaTable.forPath(spark, p)
+    assert(snap.schema.fieldNames.toSeq ==
+      region.schema.fieldNames.toSeq :+ "extra")
+    assert(snap.metadata.configuration.get("team").contains("ml"))
+  }
+
+  test("time travel between checkpoints of different schemas") {
+    val p = tmp("pmtt")
+    val narrow = region.schema.fieldNames.toSeq
+    CommitWriter.createTable(spark, region.limit(2), p) // v0
+    CommitWriter.checkpoint(spark, p)
+    CommitWriter.append(spark, region.limit(1), p) // v1
+    CommitWriter.append(spark, region.limit(1).withColumn("extra", lit(1)),
+      p, mergeSchema = true) // v2
+    CommitWriter.checkpoint(spark, p)
+    CommitWriter.append(spark, region.limit(1).withColumn("extra", lit(2)),
+      p) // v3
+    for (pass <- 1 to 2) { // the second pass is served by the memo
+      Replay.ReplayCounters.reset()
+      val v1 = DeltaTable.forPath(spark, p, Some(1))
+      val v3 = DeltaTable.forPath(spark, p, Some(3))
+      assert(v1.segment.checkpointVersion.contains(0L) &&
+        v3.segment.checkpointVersion.contains(2L))
+      assert(v1.schema.fieldNames.toSeq == narrow, s"pass $pass")
+      assert(v3.schema.fieldNames.toSeq == narrow :+ "extra", s"pass $pass")
+      if (pass == 2) assert(Replay.ReplayCounters.checkpointLoad.get() == 0)
+    }
+  }
+
+  test("a table re-created at the same path gets its new schema") {
+    val p = checkpointedTable(tmp("pmre"))
+    val before = DeltaTable.forPath(spark, p) // memoizes the checkpoint
+    val fs = LogSegment.fs(spark, new Path(p))
+    assert(fs.delete(new Path(p), true))
+    checkpointedTable(p,
+      region.select(col("r_regionkey").as("k"), lit("x").as("v")))
+    val after = DeltaTable.forPath(spark, p)
+    assert(after.segment.checkpointFiles.map(_.getPath.getName) ==
+      before.segment.checkpointFiles.map(_.getPath.getName))
+    assert(after.schema.fieldNames.toSeq == Seq("k", "v"))
+    assert(after.read.count() == 6)
   }
 
   test("incremental result equals a cold full replay after many mutations") {
