@@ -131,8 +131,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
         t.references()(0).fieldNames().mkString(".")
       }
       CommitWriter.createTable(spark,
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          schema), path, partitionColumns = partCols)
+        graft.commands.CommandResult.result(spark, schema), path,
+        partitionColumns = partCols)
     }
     GraftCatalog.tables.put(key(ident), path)
     GraftCatalog.namespaces.putIfAbsent(GraftCatalog.nsKey(ident.namespace()),

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import graft.commands.CommandResult.result
 
 /** Local in-memory catalog registry backing CREATE/DROP CATALOG.
   *
@@ -100,19 +101,77 @@ object LocalCatalog {
     StructField("status", StringType, nullable = false)))
 
   def get(name: String): Option[CatalogDef] = Option(catalogs.get(name))
-  def list(): Seq[CatalogDef] = catalogs.values.asScala.toSeq.sortBy(_.name)
   def clear(): Unit = {
     catalogs.clear(); shares.clear(); locations.clear(); connections.clear()
     sharePublications.clear()
   }
 
   def getShare(name: String): Option[ShareDef] = Option(shares.get(name))
-  def listShares(): Seq[ShareDef] =
-    shares.values.asScala.toSeq.sortBy(_.name)
-  def listLocations(): Seq[LocationDef] =
-    locations.values.asScala.toSeq.sortBy(_.name)
-  def listConnections(): Seq[ConnectionDef] =
-    connections.values.asScala.toSeq.sortBy(_.name)
+
+  // ---- SHOW listings: one row per securable, in name order ----------
+
+  val showCatalogsSchema: StructType = StructType(Seq(
+    StructField("catalog_name", StringType, nullable = false),
+    StructField("comment", StringType, nullable = true),
+    StructField("managed_location", StringType, nullable = true)))
+
+  def showCatalogs(spark: SparkSession): DataFrame =
+    result(spark, showCatalogsSchema, catalogs.values.asScala.toSeq
+      .sortBy(_.name).map(c =>
+        Row(c.name, c.comment.orNull, c.managedLocation.orNull)): _*)
+
+  val showSchemasSchema: StructType = StructType(Seq(
+    StructField("schema_name", StringType, nullable = false),
+    StructField("catalog_name", StringType, nullable = false),
+    StructField("comment", StringType, nullable = true)))
+
+  def showSchemas(spark: SparkSession, catalog: String): DataFrame =
+    result(spark, showSchemasSchema, listSchemas(catalog).map(d =>
+      Row(d.name, catalog, d.comment.orNull)): _*)
+
+  val showSharesSchema: StructType = StructType(Seq(
+    StructField("share_name", StringType, nullable = false),
+    StructField("comment", StringType, nullable = true)))
+
+  def showShares(spark: SparkSession): DataFrame =
+    result(spark, showSharesSchema, shares.values.asScala.toSeq
+      .sortBy(_.name).map(d => Row(d.name, d.comment.orNull)): _*)
+
+  val showLocationsSchema: StructType = StructType(Seq(
+    StructField("location_name", StringType, nullable = false),
+    StructField("url", StringType, nullable = false),
+    StructField("credential_name", StringType, nullable = true),
+    StructField("comment", StringType, nullable = true)))
+
+  def showLocations(spark: SparkSession): DataFrame =
+    result(spark, showLocationsSchema, locations.values.asScala.toSeq
+      .sortBy(_.name).map(d =>
+        Row(d.name, d.url, d.credential.orNull, d.comment.orNull)): _*)
+
+  val showConnectionsSchema: StructType = StructType(Seq(
+    StructField("connection_name", StringType, nullable = false),
+    StructField("connection_type", StringType, nullable = false),
+    StructField("url", StringType, nullable = true),
+    StructField("comment", StringType, nullable = true)))
+
+  def showConnections(spark: SparkSession): DataFrame =
+    result(spark, showConnectionsSchema, connections.values.asScala.toSeq
+      .sortBy(_.name).map(d =>
+        Row(d.name, d.connectionType, d.url.orNull, d.comment.orNull)): _*)
+
+  val showShareObjectsSchema: StructType = StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("type", StringType, nullable = false),
+    StructField("shared_object", StringType, nullable = false)))
+
+  /** SHOW ALL IN SHARE: the share's published tables. */
+  def showShareObjects(spark: SparkSession, share: String): DataFrame = {
+    val d = getShare(share).getOrElse(
+      throw new IllegalArgumentException(s"Share '$share' not found"))
+    result(spark, showShareObjectsSchema,
+      d.objects.toSeq.sortBy(t => t._1).map { case ((sch, tbl), path) =>
+        Row(s"$sch.$tbl", "TABLE", path) }: _*)
+  }
 
   /** Marker conf recording that graft (not the user) created the
     * session's plugin binding for a name — flows into the plugin's
@@ -597,12 +656,5 @@ object LocalCatalog {
         .map { case (k, v) => s"${js(k)}:${js(v)}" }.mkString(",")}}""")
     else Seq.empty)
     fields.mkString("{", ",", "}")
-  }
-
-  private def result(spark: SparkSession, schema: StructType,
-      rows: Row*): DataFrame = {
-    val l = new java.util.ArrayList[Row](rows.size)
-    rows.foreach(l.add)
-    spark.createDataFrame(l, schema)
   }
 }

@@ -1,7 +1,7 @@
 package graft.commands
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.delta.DeltaTable
@@ -115,9 +115,8 @@ object AnalyzeCommand {
 
   private def metrics(spark: SparkSession, analyzed: Int,
       alreadyCovered: Int): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("files_analyzed", analyzed.toString))
-    rows.add(Row("files_already_covered", alreadyCovered.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "files_analyzed" -> analyzed.toString,
+      "files_already_covered" -> alreadyCovered.toString)
   }
 }

@@ -1,7 +1,7 @@
 package graft.commands
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.delta.DeltaTable
 import graft.delta.log.{Actions, CommitWriter, LogSegment}
 
@@ -70,9 +70,8 @@ object CloneCommand {
         addLines.result(),
       operation = s"CLONE $sourcePath")
 
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("source_version", source.version.toString))
-    rows.add(Row("files_referenced", fileCount.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "source_version" -> source.version.toString,
+      "files_referenced" -> fileCount.toString)
   }
 }

@@ -87,8 +87,7 @@ object ConvertCommand {
     StructField("metric", StringType), StructField("value", StringType)))
 
   def metrics(spark: SparkSession, filesConverted: Long): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("files_converted", filesConverted.toString))
-    spark.createDataFrame(rows, metricsSchema)
+    CommandResult.result(spark, metricsSchema,
+      Row("files_converted", filesConverted.toString))
   }
 }

@@ -1,7 +1,7 @@
 package graft.commands
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.delta.DeltaTable
 import graft.delta.log.{Actions, CommitWriter, ConflictChecker, LogSegment,
@@ -111,10 +111,8 @@ object CopyIntoCommand {
 
   private def metrics(spark: SparkSession, files: Int,
       rows: Long): DataFrame = {
-    val out = new java.util.ArrayList[Row]()
-    out.add(Row("operation", "COPY INTO"))
-    out.add(Row("files_loaded", files.toString))
-    out.add(Row("rows_loaded", rows.toString))
-    spark.createDataFrame(out, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "operation" -> "COPY INTO", "files_loaded" -> files.toString,
+      "rows_loaded" -> rows.toString)
   }
 }

@@ -217,11 +217,9 @@ object DmlCommands {
 
   private def metrics(spark: SparkSession, rewritten: Int, added: Int,
       operation: String): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("operation", operation))
-    rows.add(Row("files_rewritten", rewritten.toString))
-    rows.add(Row("files_added", added.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "operation" -> operation, "files_rewritten" -> rewritten.toString,
+      "files_added" -> added.toString)
   }
 
   // ---- merge-on-read (deletion-vector) path --------------------------
@@ -535,13 +533,10 @@ object DmlCommands {
 
   private def dvMetrics(spark: SparkSession, operation: String,
       masked: Int, fullyRemoved: Int, rows: Long, added: Int): DataFrame = {
-    val out = new java.util.ArrayList[Row]()
-    out.add(Row("operation", operation))
-    out.add(Row("files_rewritten", "0"))
-    out.add(Row("files_added", added.toString))
-    out.add(Row("files_dv_masked", masked.toString))
-    out.add(Row("files_fully_removed", fullyRemoved.toString))
-    out.add(Row("rows_affected", rows.toString))
-    spark.createDataFrame(out, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "operation" -> operation, "files_rewritten" -> "0",
+      "files_added" -> added.toString, "files_dv_masked" -> masked.toString,
+      "files_fully_removed" -> fullyRemoved.toString,
+      "rows_affected" -> rows.toString)
   }
 }

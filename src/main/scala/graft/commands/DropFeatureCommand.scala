@@ -1,6 +1,6 @@
 package graft.commands
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import graft.delta.DeltaTable
@@ -173,9 +173,7 @@ object DropFeatureCommand {
       operation = "DROP FEATURE",
       operationParameters = Map("featureName" -> feature))
 
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("dropped_feature", feature))
-    rows.add(Row("version", (snap.version + 1).toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "dropped_feature" -> feature, "version" -> (snap.version + 1).toString)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.delta.DeltaTable
 import graft.delta.log.{CommitWriter, ConflictChecker, LogSegment}
 import graft.delta.log.Actions.RemoveFile
@@ -79,11 +80,9 @@ object FsckCommand {
       }
     }.collect().toSeq
 
-    if (dryRun) {
-      val rows = new java.util.ArrayList[Row]()
-      missing.foreach { case (p, why) => rows.add(Row(p, why)) }
-      return spark.createDataFrame(rows, dryRunSchema)
-    }
+    if (dryRun)
+      return CommandResult.result(spark, dryRunSchema,
+        missing.map { case (p, why) => Row(p, why) }: _*)
     if (missing.isEmpty) return metrics(spark, 0)
 
     val now = System.currentTimeMillis()
@@ -98,16 +97,11 @@ object FsckCommand {
     metrics(spark, missing.size)
   }
 
-  val dryRunSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("path",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("reason",
-      org.apache.spark.sql.types.StringType)))
+  val dryRunSchema: StructType = StructType(Seq(
+    StructField("path", StringType), StructField("reason", StringType)))
 
   private def metrics(spark: SparkSession, removed: Int): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("operation", "FSCK"))
-    rows.add(Row("entries_removed", removed.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "operation" -> "FSCK", "entries_removed" -> removed.toString)
   }
 }

@@ -2,7 +2,7 @@ package graft.commands
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.delta.DeltaTable
 import graft.delta.log.LogSegment
@@ -127,9 +127,8 @@ object GenerateCommand {
       if (!live.contains(dir)) fs.delete(mf.getParent, true)
     }
 
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("operation", "GENERATE symlink_format_manifest"))
-    rows.add(Row("manifests_written", written.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "operation" -> "GENERATE symlink_format_manifest",
+      "manifests_written" -> written.toString)
   }
 }

@@ -9,7 +9,9 @@ import graft.delta.log.{Actions, CommitWriter, LogSegment}
 
 /** DESCRIBE HISTORY + RESTORE: table history from commitInfo lines and
   * version rollback as a new commit (standard lakehouse maintenance
-  * surface; the reference is read-only so both are beyond-parity). */
+  * surface; the reference is read-only so both are beyond-parity).
+  * DESCRIBE DETAIL, SHOW TBLPROPERTIES and SHOW PARTITIONS read the
+  * same snapshot metadata. */
 object HistoryCommand {
   private val mapper = new ObjectMapper()
 
@@ -74,7 +76,46 @@ object HistoryCommand {
       snap.metadata.configuration,
       snap.protocol.minReaderVersion,
       snap.protocol.minWriterVersion)
-    spark.createDataFrame(java.util.Arrays.asList(row), detailSchema)
+    CommandResult.result(spark, detailSchema, row)
+  }
+
+  val tblPropertiesSchema: StructType = StructType(Seq(
+    StructField("key", StringType, nullable = false),
+    StructField("value", StringType, nullable = false)))
+
+  /** SHOW TBLPROPERTIES: the table configuration, sorted by key. */
+  def tblProperties(spark: SparkSession, tablePath: String): DataFrame =
+    CommandResult.result(spark, tblPropertiesSchema,
+      DeltaTable.forPath(spark, tablePath).metadata.configuration.toSeq
+        .sortBy(_._1).map { case (k, v) => Row(k, v) }: _*)
+
+  val partitionsSchema: StructType = StructType(Seq(
+    StructField("partition", StringType, nullable = false)))
+
+  /** SHOW PARTITIONS: distinct live partitions straight off the log
+    * inventory — O(files) metadata, zero data read; on a 100 TB table
+    * this is the replay cache, not a scan. Spark's display convention:
+    * one `partition` string column, `k1=v1/k2=v2`, nulls shown as the
+    * Hive default-partition sentinel. partitionValues keys follow the
+    * protocol: PHYSICAL names under column mapping, with a logical-key
+    * fallback for pre-convention writers. */
+  def partitions(spark: SparkSession, tablePath: String): DataFrame = {
+    import org.apache.spark.sql.functions.{coalesce, col, concat, concat_ws, element_at, lit}
+    val snap = DeltaTable.forPath(spark, tablePath)
+    val partCols = snap.partitionColumns
+    require(partCols.nonEmpty,
+      s"SHOW PARTITIONS: $tablePath is not a partitioned table")
+    val pieces = partCols.map { c =>
+      val phys = graft.delta.scan.ColumnMapping
+        .physicalPartitionName(snap.metadata, c)
+      concat(lit(s"$c="), coalesce(
+        element_at(col("partitionValues"), phys),
+        element_at(col("partitionValues"), c),
+        lit("__HIVE_DEFAULT_PARTITION__")))
+    }
+    snap.allFiles
+      .select(concat_ws("/", pieces: _*).as("partition"))
+      .distinct().orderBy("partition")
   }
 
   /** One row per commit, newest first (driver-side: the commit list is
@@ -85,14 +126,13 @@ object HistoryCommand {
     val commits = fs.listStatus(logPath).toSeq
       .flatMap(st => LogSegment.commitVersion(st.getPath.getName).map(_ -> st))
       .sortBy(-_._1)
-    val rows = new java.util.ArrayList[Row](commits.size)
-    for ((version, st) <- commits) {
+    val rows = for ((version, st) <- commits) yield {
       val in = fs.open(st.getPath)
       val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
         .getLines().toVector finally in.close()
       val ci = lines.filter(_.nonEmpty).map(mapper.readTree)
         .find(_.has("commitInfo")).map(_.get("commitInfo"))
-      rows.add(Row(version,
+      Row(version,
         ci.flatMap(c => Option(c.get("timestamp")).map(_.asLong()))
           .map(Long.box).orNull,
         ci.flatMap(c => Option(c.get("operation")).map(_.asText())).orNull,
@@ -102,9 +142,9 @@ object HistoryCommand {
         // keys) — null for commits that recorded none
         ci.flatMap(c => Option(c.get("operationParameters"))
           .map(_.toString)).orNull,
-        lines.count(_.nonEmpty).toLong - ci.size))
+        lines.count(_.nonEmpty).toLong - ci.size)
     }
-    spark.createDataFrame(rows, historySchema)
+    CommandResult.result(spark, historySchema, rows: _*)
   }
 
   /** Restore the table to `version`: one commit removing files not in
@@ -198,10 +238,9 @@ object HistoryCommand {
         removePaths = removedPaths.toSet,
         dependsOnNewData = true, readsWholeTable = true))
 
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("restored_to_version", version.toString))
-    rows.add(Row("files_removed", removes.size.toString))
-    rows.add(Row("files_added", adds.size.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "restored_to_version" -> version.toString,
+      "files_removed" -> removes.size.toString,
+      "files_added" -> adds.size.toString)
   }
 }

@@ -1,6 +1,6 @@
 package graft.commands
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.delta.DeltaTable
 import graft.delta.log.{Actions, CommitWriter}
@@ -136,13 +136,11 @@ object MergeCommand {
           readPaths = touchedPaths, removePaths = touchedPaths,
           dependsOnNewData = true),
         operationParameters = params)
-      val rows = new java.util.ArrayList[Row]()
-      rows.add(Row("files_rewritten", "0"))
-      rows.add(Row("files_added", adds.size.toString))
-      rows.add(Row("files_dv_masked", masked.toString))
-      rows.add(Row("files_fully_removed", fullyRemoved.toString))
-      rows.add(Row("source_rows", src.count().toString))
-      return spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+      return CommandResult.metrics(spark,
+        "files_rewritten" -> "0", "files_added" -> adds.size.toString,
+        "files_dv_masked" -> masked.toString,
+        "files_fully_removed" -> fullyRemoved.toString,
+        "source_rows" -> src.count().toString)
     }
 
     require(!graft.delta.log.RowTracking.enabled(snap.metadata),
@@ -200,11 +198,10 @@ object MergeCommand {
         dependsOnNewData = true),
       operationParameters = params)
 
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("files_rewritten", affectedRel.length.toString))
-    rows.add(Row("files_added", adds.size.toString))
-    rows.add(Row("source_rows", src.count().toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "files_rewritten" -> affectedRel.length.toString,
+      "files_added" -> adds.size.toString,
+      "source_rows" -> src.count().toString)
   }
 
   /** MERGE ... WHEN MATCHED THEN DELETE (no insert clause): remove
@@ -245,10 +242,8 @@ object MergeCommand {
         _.join(srcKeys, keys, "left_semi"))
       if (written.isEmpty) {
         // nothing matched: no commit (see the CoW branch note)
-        val rows = new java.util.ArrayList[Row]()
-        rows.add(Row("files_rewritten", "0"))
-        rows.add(Row("files_dv_masked", "0"))
-        return spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+        return CommandResult.metrics(spark,
+          "files_rewritten" -> "0", "files_dv_masked" -> "0")
       }
       val (actions, masked, fullyRemoved, _) =
         DmlCommands.maskActions(written, info)
@@ -264,11 +259,9 @@ object MergeCommand {
           dependsOnNewData = true),
         operationParameters = mergeParams(keys) +
           ("matchedDelete" -> "true"))
-      val rows = new java.util.ArrayList[Row]()
-      rows.add(Row("files_rewritten", "0"))
-      rows.add(Row("files_dv_masked", masked.toString))
-      rows.add(Row("files_fully_removed", fullyRemoved.toString))
-      return spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+      return CommandResult.metrics(spark,
+        "files_rewritten" -> "0", "files_dv_masked" -> masked.toString,
+        "files_fully_removed" -> fullyRemoved.toString)
     }
 
     require(!graft.delta.log.RowTracking.enabled(snap.metadata),
@@ -283,10 +276,8 @@ object MergeCommand {
       // nothing matched: no commit at all (a scheduled retention job
       // re-running the same key set must not churn versions, fire
       // auto-checkpoints, or emit empty CDC commits)
-      val rows = new java.util.ArrayList[Row]()
-      rows.add(Row("files_rewritten", "0"))
-      rows.add(Row("files_added", "0"))
-      return spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+      return CommandResult.metrics(spark,
+        "files_rewritten" -> "0", "files_added" -> "0")
     }
     val affectedRel = DmlCommands.affectedRelPaths(spark, snap, affected)
     // survivors of affected files (unchanged rows — no constraint or
@@ -312,10 +303,9 @@ object MergeCommand {
         dependsOnNewData = true),
       operationParameters = mergeParams(keys) +
         ("matchedDelete" -> "true"))
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("files_rewritten", affectedRel.length.toString))
-    rows.add(Row("files_added", adds.size.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "files_rewritten" -> affectedRel.length.toString,
+      "files_added" -> adds.size.toString)
   }
 
   /** commitInfo.operationParameters for a MERGE: the human-readable

@@ -311,10 +311,8 @@ object OptimizeCommand {
 
   private def metrics(spark: SparkSession, partitions: Int,
       removed: Int, added: Int): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("partitions_optimized", partitions.toString))
-    rows.add(Row("files_removed", removed.toString))
-    rows.add(Row("files_added", added.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark,
+      "partitions_optimized" -> partitions.toString,
+      "files_removed" -> removed.toString, "files_added" -> added.toString)
   }
 }

@@ -187,15 +187,8 @@ object ReplaceWhereCommand {
           schema = snap.schema, partitionColumns = snap.partitionColumns),
         operationParameters = opParams)
     }
-    metrics(spark, removedRel.size, newAdds.size + survivorAdds.size)
-  }
-
-  private def metrics(spark: SparkSession, removed: Int,
-      added: Int): DataFrame = {
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("operation", "REPLACE WHERE"))
-    rows.add(Row("files_removed", removed.toString))
-    rows.add(Row("files_added", added.toString))
-    spark.createDataFrame(rows, VacuumCommand.metricsSchema)
+    CommandResult.metrics(spark, "operation" -> "REPLACE WHERE",
+      "files_removed" -> removedRel.size.toString,
+      "files_added" -> (newAdds.size + survivorAdds.size).toString)
   }
 }

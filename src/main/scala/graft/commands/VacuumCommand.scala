@@ -2,9 +2,8 @@ package graft.commands
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.delta.DeltaTable
 import graft.delta.scan.DvBitmap
 import graft.ops.DirListing
@@ -54,10 +53,6 @@ object VacuumCommand {
   final val RetentionCheckKey =
     "spark.lakehouse.delta.retention_duration_check.enabled"
   final val RetentionPropKey = "delta.deletedFileRetentionDuration"
-
-  val metricsSchema: StructType = StructType(Seq(
-    StructField("metric_name", StringType, nullable = false),
-    StructField("metric_value", StringType, nullable = false)))
 
   def vacuum(spark: SparkSession, tablePath: String,
       retentionHours: Option[Double], dryRun: Boolean,
@@ -244,10 +239,8 @@ object VacuumCommand {
     val (files, bytes) = counts.foldLeft((0L, 0L)) {
       case ((f, b), (fi, bi)) => (f + fi, b + bi)
     }
-    val rows = new java.util.ArrayList[Row]()
-    rows.add(Row("files_deleted", files.toString))
-    rows.add(Row("bytes_deleted", bytes.toString))
-    spark.createDataFrame(rows, metricsSchema)
+    CommandResult.metrics(spark,
+      "files_deleted" -> files.toString, "bytes_deleted" -> bytes.toString)
   }
 
   /** Parse `delta.deletedFileRetentionDuration` ("interval N unit[s]"). */

@@ -4,6 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
+import graft.commands.CommandResult
 
 /** Directory listing as a DataFrame.
   *
@@ -37,9 +38,7 @@ object DirListing {
         st.isDirectory,
         if (st.isDirectory) null else ts(st.getModificationTime))
     }
-    val l = new java.util.ArrayList[Row](rows.size)
-    rows.foreach(l.add)
-    spark.createDataFrame(l, schema)
+    CommandResult.result(spark, schema, rows: _*)
   }
 
   /** Recursive file listing, parallelized: the driver lists the first
@@ -55,9 +54,7 @@ object DirListing {
     }
     val subDirs = top.filter(_.isDirectory).map(_.getPath.toString)
 
-    val l = new java.util.ArrayList[Row](topFiles.size)
-    topFiles.foreach(l.add)
-    val topDF = spark.createDataFrame(l, schema)
+    val topDF = CommandResult.result(spark, schema, topFiles: _*)
 
     if (subDirs.isEmpty) topDF
     else {

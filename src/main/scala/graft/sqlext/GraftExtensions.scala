@@ -8,10 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.StructType
-import graft.catalog.LocalCatalog
-import graft.commands.VacuumCommand
-import graft.ops.DirListing
-import graft.sqlext.GraftParser._
+import graft.sqlext.GraftParser.Statement
 
 /** `SparkSessionExtensions` registration: injects the lakehouse parser
   * so plain `spark.sql("VACUUM …")` / `CREATE CATALOG …` work on any
@@ -106,24 +103,12 @@ final class GraftParserInterface(delegate: ParserInterface)
 
   override def parsePlan(sqlText: String): LogicalPlan =
     try GraftParser.parse(sqlText) match {
-      // schema DDL on a NON-graft catalog delegates at execution time
-      // through GraftSession.sql (re-rendered spark.sql, different
-      // result shape); through the extension the output schema is fixed
-      // at parse time, so the wrap decision must be made HERE
-      case Some(s: CreateSchemaStatement)
-          if LocalCatalog.get(s.catalog).isEmpty =>
-        // re-render before delegating: our OPTIONS clause is not
-        // vanilla Spark syntax (Spark spells it WITH DBPROPERTIES), and
-        // the GraftSession.sql path already re-renders — the same
-        // statement must behave identically through both entry points
-        delegate.parsePlan(graft.GraftSession.renderVanillaCreateSchema(s))
-      case Some(s: DropSchemaStatement)
-          if LocalCatalog.get(s.catalog).isEmpty =>
-        delegate.parsePlan(sqlText)
-      case Some(ShowSchemasStatement(cat))
-          if LocalCatalog.get(cat).isEmpty =>
-        delegate.parsePlan(sqlText)
-      case Some(stmt) => GraftCommand(stmt)
+      // the output schema is fixed at parse time, so a statement that
+      // runs as vanilla Spark SQL (schema DDL on a non-graft catalog)
+      // is handed to the delegate HERE, as the text GraftSession.sql runs
+      case Some(stmt) =>
+        stmt.vanillaSql.fold[LogicalPlan](GraftCommand(stmt))(
+          delegate.parsePlan)
       case None => delegate.parsePlan(sqlText)
     } catch {
       case pe: GraftParser.ParseException =>
@@ -155,75 +140,15 @@ final class GraftParserInterface(delegate: ParserInterface)
 }
 
 /** Runnable command wrapping a parsed lakehouse statement (the UDLN +
-  * extension-planner pair collapses to one node in Spark). */
+  * extension-planner pair collapses to one node in Spark). The
+  * statement declares its own columns and runs itself: this node adds
+  * no per-statement knowledge, so every parsed statement plans and
+  * runs here exactly as through `GraftSession.sql`. */
 final case class GraftCommand(stmt: Statement) extends LeafRunnableCommand {
 
-  override val output: Seq[Attribute] = {
-    val schema: StructType = stmt match {
-      case v: VacuumStatement =>
-        if (v.dryRun) DirListing.schema else VacuumCommand.metricsSchema
-      case _: CreateCatalogStatement => LocalCatalog.createSchema
-      case _: DropCatalogStatement => LocalCatalog.dropSchema
-      case _: OptimizeStatement => VacuumCommand.metricsSchema
-      case _: DescribeHistoryStatement =>
-        graft.commands.HistoryCommand.historySchema
-      case _: RestoreStatement => VacuumCommand.metricsSchema
-      case _: ConvertStatement => graft.commands.ConvertCommand.metricsSchema
-      case _: CloneStatement => VacuumCommand.metricsSchema
-      case _: DescribeDetailStatement =>
-        graft.commands.HistoryCommand.detailSchema
-      case _: RenameColumnStatement => VacuumCommand.metricsSchema
-      case _: AddColumnStatement => VacuumCommand.metricsSchema
-      case _: DropColumnStatement => VacuumCommand.metricsSchema
-      case _: AddConstraintStatement => VacuumCommand.metricsSchema
-      case _: DropConstraintStatement => VacuumCommand.metricsSchema
-      case _: SetTblPropertiesStatement => VacuumCommand.metricsSchema
-      case _: UnsetTblPropertiesStatement => VacuumCommand.metricsSchema
-      case _: DeleteStatement => VacuumCommand.metricsSchema
-      case _: UpdateStatement => VacuumCommand.metricsSchema
-      case _: MergeStatement => VacuumCommand.metricsSchema
-      case _: ReplaceWhereStatement => VacuumCommand.metricsSchema
-      case f: FsckStatement =>
-        if (f.dryRun) graft.commands.FsckCommand.dryRunSchema
-        else VacuumCommand.metricsSchema
-      case _: DropFeatureStatement => VacuumCommand.metricsSchema
-      case _: CopyIntoStatement => VacuumCommand.metricsSchema
-      case _: GenerateManifestStatement => VacuumCommand.metricsSchema
-      case _: MergeDeleteStatement => VacuumCommand.metricsSchema
-      case _: MergeSyncStatement => VacuumCommand.metricsSchema
-      case _: CtasStatement => VacuumCommand.metricsSchema
-      case _: ClusterByStatement => VacuumCommand.metricsSchema
-      case _: AlterColumnTypeStatement => VacuumCommand.metricsSchema
-      case _: AlterColumnDefaultStatement => VacuumCommand.metricsSchema
-      case _: RestoreTimestampStatement => VacuumCommand.metricsSchema
-      case ShowCatalogsStatement => graft.GraftSession.showCatalogsSchema
-      case _: ShowTblPropertiesStatement =>
-        graft.GraftSession.tblPropertiesSchema
-      case _: ShowPartitionsStatement =>
-        graft.GraftSession.showPartitionsSchema
-      case _: AnalyzeTableStatement => VacuumCommand.metricsSchema
-      case _: CreateSchemaStatement => LocalCatalog.createSchema
-      case _: DropSchemaStatement => LocalCatalog.dropSchema
-      case _: ShowSchemasStatement => graft.GraftSession.showSchemasSchema
-      case _: CreateShareStatement => LocalCatalog.createSchema
-      case _: DropShareStatement => LocalCatalog.dropSchema
-      case ShowSharesStatement => graft.GraftSession.showSharesSchema
-      case _: CreateLocationStatement => LocalCatalog.createSchema
-      case _: DropLocationStatement => LocalCatalog.dropSchema
-      case ShowLocationsStatement => graft.GraftSession.showLocationsSchema
-      case _: CreateConnectionStatement => LocalCatalog.createSchema
-      case _: DropConnectionStatement => LocalCatalog.dropSchema
-      case ShowConnectionsStatement =>
-        graft.GraftSession.showConnectionsSchema
-      case _: CreateForeignCatalogStatement => LocalCatalog.createSchema
-      case _: AlterShareAddStatement => LocalCatalog.createSchema
-      case _: AlterShareRemoveStatement => LocalCatalog.dropSchema
-      case _: ShowShareObjectsStatement =>
-        graft.GraftSession.showShareObjectsSchema
-    }
-    DataTypeUtils.toAttributes(schema)
-  }
+  override val output: Seq[Attribute] =
+    DataTypeUtils.toAttributes(stmt.outputSchema)
 
   override def run(session: SparkSession): Seq[Row] =
-    new graft.GraftSession(session).execute(stmt).collect().toSeq
+    stmt.run(new graft.GraftSession(session)).collect().toSeq
 }

@@ -1,25 +1,53 @@
 package graft.sqlext
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{expr, lit}
+import org.apache.spark.sql.types.StructType
+import graft.GraftSession
+import graft.catalog.LocalCatalog
+import graft.commands._
+import graft.delta.DeltaTable
+import graft.delta.sources.GraftDeltaSource
+import graft.ops.DirListing
+
 /** SQL front-end for the lakehouse statement extensions.
   *
-  * Mirrors the reference's HFParser: intercept VACUUM and CREATE/DROP
-  * CATALOG (plus explicit not-implemented stubs for CREATE CONNECTION /
-  * LOCATION / SHARE / FOREIGN CATALOG), delegate everything
-  * else to the host engine (reference: crates/datafusion/src/sql/
-  * parser.rs:30-491 — vacuum :158-219, create catalog :246-340, stubs
-  * :342-360, drop :362-392). CREATE/DROP/SHOW SCHEMA — the reference's
-  * own `todo!` (parser.rs:355) — are implemented against the local
-  * catalog model for QUALIFIED (cat.schema) names; unqualified forms
-  * stay vanilla Spark DDL.
+  * Mirrors the reference's HFParser: intercept the extension statements,
+  * delegate everything else to the host engine (reference:
+  * crates/datafusion/src/sql/parser.rs:30-491 — vacuum :158-219, create
+  * catalog :246-340, drop :362-392). The securables the reference stubs
+  * (CONNECTION / LOCATION / SHARE / FOREIGN CATALOG, :342-360) and its
+  * SCHEMA `todo!` (:355) run against the local catalog model, SCHEMA for
+  * QUALIFIED (cat.schema) names only; unqualified forms stay vanilla
+  * Spark DDL.
   */
 object GraftParser {
 
-  sealed trait Statement
+  /** A parsed extension statement. Each one declares the columns of its
+    * result and runs itself, so both entry points — [[GraftSession.sql]]
+    * and the injected parser's [[GraftCommand]] — share one definition:
+    * a statement is its case class here plus its grammar rule below. */
+  sealed trait Statement {
+    /** The result's columns: the `(metric_name, metric_value)` metrics
+      * frame unless the statement says otherwise. */
+    def outputSchema: StructType = CommandResult.metricsSchema
+    def run(g: GraftSession): DataFrame
+    /** The vanilla Spark SQL that runs in this statement's place, or
+      * None when graft runs it. Schema DDL on a catalog that is not a
+      * graft securable delegates; both entry points ask this first. */
+    def vanillaSql: Option[String] = None
+  }
   final case class VacuumStatement(
       table: String,
       mode: Option[String], // FULL | LITE
       dryRun: Boolean,
-      retentionHours: Option[Double]) extends Statement
+      retentionHours: Option[Double]) extends Statement {
+    override def outputSchema: StructType =
+      if (dryRun) DirListing.schema else CommandResult.metricsSchema
+    def run(g: GraftSession): DataFrame =
+      VacuumCommand.vacuum(g.spark, g.resolveTablePath(table),
+        retentionHours, dryRun, mode.getOrElse("FULL"))
+  }
   final case class CreateCatalogStatement(
       name: String,
       ifNotExists: Boolean,
@@ -27,23 +55,60 @@ object GraftParser {
       managedLocation: Option[String],
       comment: Option[String],
       defaultCollation: Option[String],
-      options: Map[String, String]) extends Statement
+      options: Map[String, String]) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.create(g.spark, LocalCatalog.CatalogDef(name, usingShare,
+        managedLocation, comment, defaultCollation, options), ifNotExists)
+  }
   final case class DropCatalogStatement(
       name: String,
       ifExists: Boolean,
-      cascade: Boolean) extends Statement
+      cascade: Boolean) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.dropSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.drop(g.spark, name, ifExists, cascade)
+  }
   final case class OptimizeStatement(table: String,
       zorderBy: Seq[String] = Seq.empty,
-      where: Option[String] = None) extends Statement
-  final case class DescribeHistoryStatement(table: String) extends Statement
-  final case class DescribeDetailStatement(table: String) extends Statement
-  final case class RestoreStatement(table: String, version: Long) extends Statement
+      where: Option[String] = None) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      OptimizeCommand.optimize(g.spark, g.resolveTablePath(table),
+        zorderBy = zorderBy, where = where.map(expr))
+  }
+  final case class DescribeHistoryStatement(table: String) extends Statement {
+    override def outputSchema: StructType = HistoryCommand.historySchema
+    def run(g: GraftSession): DataFrame =
+      HistoryCommand.history(g.spark, g.resolveTablePath(table))
+  }
+  final case class DescribeDetailStatement(table: String) extends Statement {
+    override def outputSchema: StructType = HistoryCommand.detailSchema
+    def run(g: GraftSession): DataFrame =
+      HistoryCommand.detail(g.spark, g.resolveTablePath(table))
+  }
+  final case class RestoreStatement(table: String, version: Long)
+      extends Statement {
+    def run(g: GraftSession): DataFrame =
+      HistoryCommand.restore(g.spark, g.resolveTablePath(table), version)
+  }
   /** RESTORE t TO TIMESTAMP AS OF '<ts>' (ISO local-datetime, UTC, or
     * epoch millis — the read path's timestampAsOf resolution). */
   final case class RestoreTimestampStatement(table: String,
-      timestamp: String) extends Statement
+      timestamp: String) extends Statement {
+    def run(g: GraftSession): DataFrame = {
+      val path = g.resolveTablePath(table)
+      val target = DeltaTable.forPathAtTimestamp(g.spark, path,
+        GraftDeltaSource.parseUtcMillis(timestamp))
+      HistoryCommand.restore(g.spark, path, target.version)
+    }
+  }
   final case class ConvertStatement(table: String,
-      partitionColumns: Seq[String] = Seq.empty) extends Statement
+      partitionColumns: Seq[String] = Seq.empty) extends Statement {
+    override def outputSchema: StructType = ConvertCommand.metricsSchema
+    def run(g: GraftSession): DataFrame =
+      ConvertCommand.metrics(g.spark, ConvertCommand.convert(g.spark,
+        g.resolveTablePath(table), partitionColumns))
+  }
   /** CREATE TABLE [IF NOT EXISTS] '<path>' [PARTITIONED BY (cols)]
     * [CLUSTER BY (cols)] [TBLPROPERTIES ('k'='v', ...)] AS SELECT ... —
     * path-addressed CTAS through the graft write path (catalog-table
@@ -51,133 +116,325 @@ object GraftParser {
   final case class CtasStatement(table: String,
       partitionColumns: Seq[String], clusterColumns: Seq[String],
       properties: Map[String, String], selectSql: String,
-      ifNotExists: Boolean, orReplace: Boolean = false) extends Statement
+      ifNotExists: Boolean, orReplace: Boolean = false) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.createTableAsSelect(g.spark,
+        g.resolveTablePath(table), partitionColumns, clusterColumns,
+        properties, selectSql, ifNotExists, orReplace)
+  }
 
   /** CREATE TABLE <target> SHALLOW CLONE <source> [VERSION AS OF n]:
     * metadata-only copy referencing the source's files absolutely. */
   final case class CloneStatement(target: String, source: String,
-      version: Option[Long] = None) extends Statement
+      version: Option[Long] = None) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      CloneCommand.shallowClone(g.spark, g.resolveTablePath(source),
+        g.resolveTablePath(target), version)
+  }
   final case class RenameColumnStatement(table: String,
-      from: String, to: String) extends Statement
+      from: String, to: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.renameColumn(g.spark, g.resolveTablePath(table),
+        from, to)
+  }
   final case class AddColumnStatement(table: String,
-      name: String, typeDdl: String) extends Statement
+      name: String, typeDdl: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.addColumn(g.spark, g.resolveTablePath(table),
+        name, typeDdl)
+  }
   final case class DropColumnStatement(table: String,
-      name: String) extends Statement
+      name: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.dropColumn(g.spark, g.resolveTablePath(table), name)
+  }
   /** ALTER TABLE t ALTER COLUMN c TYPE <type> — widening only. */
   final case class AlterColumnTypeStatement(table: String,
-      name: String, typeDdl: String) extends Statement
+      name: String, typeDdl: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.alterColumnType(g.spark, g.resolveTablePath(table),
+        name, typeDdl)
+  }
   /** ALTER TABLE t ALTER COLUMN c SET DEFAULT <expr> | DROP DEFAULT. */
   final case class AlterColumnDefaultStatement(table: String,
-      name: String, defaultSql: Option[String]) extends Statement
+      name: String, defaultSql: Option[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.alterColumnDefault(g.spark,
+        g.resolveTablePath(table), name, defaultSql)
+  }
   final case class AddConstraintStatement(table: String,
-      name: String, exprSql: String) extends Statement
+      name: String, exprSql: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.addConstraint(g.spark, g.resolveTablePath(table),
+        name, exprSql)
+  }
   final case class DropConstraintStatement(table: String,
-      name: String) extends Statement
+      name: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.dropConstraint(g.spark, g.resolveTablePath(table),
+        name)
+  }
   /** ALTER TABLE t CLUSTER BY (c1, ...) | CLUSTER BY NONE (empty cols). */
   final case class ClusterByStatement(table: String,
-      cols: Seq[String]) extends Statement
+      cols: Seq[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.clusterBy(g.spark, g.resolveTablePath(table), cols)
+  }
   final case class SetTblPropertiesStatement(table: String,
-      props: Seq[(String, String)]) extends Statement
+      props: Seq[(String, String)]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.setTblProperties(g.spark,
+        g.resolveTablePath(table), props)
+  }
   final case class UnsetTblPropertiesStatement(table: String,
-      keys: Seq[String]) extends Statement
-  case object ShowCatalogsStatement extends Statement
+      keys: Seq[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AlterTableCommand.unsetTblProperties(g.spark,
+        g.resolveTablePath(table), keys)
+  }
+  case object ShowCatalogsStatement extends Statement {
+    override def outputSchema: StructType = LocalCatalog.showCatalogsSchema
+    def run(g: GraftSession): DataFrame = LocalCatalog.showCatalogs(g.spark)
+  }
+  // schema (namespace) securables: ours only when the catalog is a
+  // graft securable/plugin — `spark_catalog.db` etc. run as vanilla
+  // Spark DDL with the statement re-rendered (`vanillaSql`)
   final case class CreateSchemaStatement(catalog: String, name: String,
       ifNotExists: Boolean, comment: Option[String],
-      options: Map[String, String]) extends Statement
+      options: Map[String, String]) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.createSchemaIn(g.spark, catalog, name, comment, options,
+        ifNotExists)
+    // OPTIONS (our grammar) becomes WITH DBPROPERTIES (Spark's)
+    override def vanillaSql: Option[String] =
+      Option.when(LocalCatalog.get(catalog).isEmpty)(
+        s"CREATE SCHEMA ${if (ifNotExists) "IF NOT EXISTS " else ""}" +
+          s"${quoteIdent(catalog)}.${quoteIdent(name)}" +
+          comment.map(c => s" COMMENT ${quoteLiteral(c)}").getOrElse("") +
+          // OPTIONS carry over as namespace properties — silently
+          // dropping them would create a different schema than asked
+          (if (options.isEmpty) ""
+          else options.toSeq.sortBy(_._1)
+            .map { case (k, v) => s"${quoteLiteral(k)} = ${quoteLiteral(v)}" }
+            .mkString(" WITH DBPROPERTIES (", ", ", ")")))
+  }
   final case class DropSchemaStatement(catalog: String, name: String,
-      ifExists: Boolean, cascade: Boolean) extends Statement
-  final case class ShowSchemasStatement(catalog: String) extends Statement
+      ifExists: Boolean, cascade: Boolean) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.dropSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.dropSchemaIn(g.spark, catalog, name, ifExists, cascade)
+    override def vanillaSql: Option[String] =
+      Option.when(LocalCatalog.get(catalog).isEmpty)(
+        s"DROP SCHEMA ${if (ifExists) "IF EXISTS " else ""}" +
+          s"${quoteIdent(catalog)}.${quoteIdent(name)}" +
+          (if (cascade) " CASCADE" else ""))
+  }
+  final case class ShowSchemasStatement(catalog: String) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.showSchemasSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.showSchemas(g.spark, catalog)
+    override def vanillaSql: Option[String] =
+      Option.when(LocalCatalog.get(catalog).isEmpty)(
+        s"SHOW SCHEMAS IN ${quoteIdent(catalog)}")
+  }
   /** SHARE securable (the reference stubs parse_create_share at
     * sql/parser.rs:358; same local securable model as CATALOG/SCHEMA). */
   final case class CreateShareStatement(name: String, ifNotExists: Boolean,
-      comment: Option[String]) extends Statement
+      comment: Option[String]) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.createShare(g.spark, LocalCatalog.ShareDef(name, comment),
+        ifNotExists)
+  }
   final case class DropShareStatement(name: String, ifExists: Boolean)
-      extends Statement
-  case object ShowSharesStatement extends Statement
+      extends Statement {
+    override def outputSchema: StructType = LocalCatalog.dropSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.dropShare(g.spark, name, ifExists)
+  }
+  case object ShowSharesStatement extends Statement {
+    override def outputSchema: StructType = LocalCatalog.showSharesSchema
+    def run(g: GraftSession): DataFrame = LocalCatalog.showShares(g.spark)
+  }
   /** ALTER SHARE <share> ADD TABLE '<path>' AS <schema>.<table> /
     * REMOVE TABLE <schema>.<table> — share content management. Adding
     * publishes the table under the shared (schema, table) name so a
     * catalog created USING SHARE serves reads through it. */
   final case class AlterShareAddStatement(share: String, path: String,
-      schema: String, table: String) extends Statement
+      schema: String, table: String) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.addShareTable(g.spark, share, g.resolveTablePath(path),
+        schema, table)
+  }
   final case class AlterShareRemoveStatement(share: String,
-      schema: String, table: String) extends Statement
+      schema: String, table: String) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.dropSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.removeShareTable(g.spark, share, schema, table)
+  }
   /** SHOW ALL IN SHARE <share>: the share's published objects. */
-  final case class ShowShareObjectsStatement(share: String)
-      extends Statement
+  final case class ShowShareObjectsStatement(share: String) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.showShareObjectsSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.showShareObjects(g.spark, share)
+  }
   /** EXTERNAL LOCATION securable (the reference stubs
     * parse_create_location at sql/parser.rs:350). Both the reference's
     * bare `CREATE LOCATION` and the ecosystem's `CREATE EXTERNAL
     * LOCATION` spellings parse to this. */
   final case class CreateLocationStatement(name: String, url: String,
       ifNotExists: Boolean, credential: Option[String],
-      comment: Option[String], options: Map[String, String])
-      extends Statement
+      comment: Option[String], options: Map[String, String]) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.createLocation(g.spark, LocalCatalog.LocationDef(name,
+        url, credential, comment, options), ifNotExists)
+  }
   final case class DropLocationStatement(name: String, ifExists: Boolean)
-      extends Statement
-  case object ShowLocationsStatement extends Statement
+      extends Statement {
+    override def outputSchema: StructType = LocalCatalog.dropSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.dropLocation(g.spark, name, ifExists)
+  }
+  case object ShowLocationsStatement extends Statement {
+    override def outputSchema: StructType = LocalCatalog.showLocationsSchema
+    def run(g: GraftSession): DataFrame = LocalCatalog.showLocations(g.spark)
+  }
   /** CONNECTION securable (the reference stubs parse_create_connection
     * at sql/parser.rs:346): a named credential-bearing endpoint a
     * FOREIGN CATALOG mounts through. */
   final case class CreateConnectionStatement(name: String,
       connectionType: String, url: Option[String], ifNotExists: Boolean,
-      comment: Option[String], options: Map[String, String])
-      extends Statement
+      comment: Option[String], options: Map[String, String]) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.createConnection(g.spark, LocalCatalog.ConnectionDef(
+        name, connectionType, url, comment, options), ifNotExists)
+  }
   final case class DropConnectionStatement(name: String, ifExists: Boolean)
-      extends Statement
-  case object ShowConnectionsStatement extends Statement
+      extends Statement {
+    override def outputSchema: StructType = LocalCatalog.dropSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.dropConnection(g.spark, name, ifExists)
+  }
+  case object ShowConnectionsStatement extends Statement {
+    override def outputSchema: StructType = LocalCatalog.showConnectionsSchema
+    def run(g: GraftSession): DataFrame = LocalCatalog.showConnections(g.spark)
+  }
   /** FOREIGN CATALOG (the reference stubs parse_create_foreign_catalog
     * at sql/parser.rs:342): a catalog mirroring an external system
     * through a CONNECTION. */
   final case class CreateForeignCatalogStatement(name: String,
       connection: String, ifNotExists: Boolean, comment: Option[String],
-      options: Map[String, String]) extends Statement
+      options: Map[String, String]) extends Statement {
+    override def outputSchema: StructType = LocalCatalog.createSchema
+    def run(g: GraftSession): DataFrame =
+      LocalCatalog.createForeignCatalog(g.spark, name, connection, comment,
+        options, ifNotExists)
+  }
   /** SHOW TBLPROPERTIES <ref>: (key, value) rows, sorted. */
-  final case class ShowTblPropertiesStatement(table: String)
-    extends Statement
+  final case class ShowTblPropertiesStatement(table: String) extends Statement {
+    override def outputSchema: StructType = HistoryCommand.tblPropertiesSchema
+    def run(g: GraftSession): DataFrame =
+      HistoryCommand.tblProperties(g.spark, g.resolveTablePath(table))
+  }
   /** SHOW PARTITIONS <ref>: the distinct live partitions straight off
     * the log's file inventory — one `partition` string column in
     * Spark's `k1=v1/k2=v2` display convention, zero data files read. */
-  final case class ShowPartitionsStatement(table: String)
-    extends Statement
+  final case class ShowPartitionsStatement(table: String) extends Statement {
+    override def outputSchema: StructType = HistoryCommand.partitionsSchema
+    def run(g: GraftSession): DataFrame =
+      HistoryCommand.partitions(g.spark, g.resolveTablePath(table))
+  }
   /** ANALYZE TABLE <ref> COMPUTE [DELTA] STATISTICS
     * ([[graft.commands.AnalyzeCommand]]). */
-  final case class AnalyzeTableStatement(table: String)
-    extends Statement
+  final case class AnalyzeTableStatement(table: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      AnalyzeCommand.run(g.spark, g.resolveTablePath(table))
+  }
   final case class DeleteStatement(table: String,
-      whereSql: Option[String]) extends Statement
+      whereSql: Option[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      DmlCommands.delete(g.spark, g.resolveTablePath(table),
+        whereSql.map(expr).getOrElse(lit(true)))
+  }
   final case class UpdateStatement(table: String,
       sets: Seq[(String, String)], // column -> expression SQL
-      whereSql: Option[String]) extends Statement
+      whereSql: Option[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      DmlCommands.update(g.spark, g.resolveTablePath(table),
+        whereSql.map(expr).getOrElse(lit(true)),
+        sets.map { case (c, e) => c -> expr(e) }.toMap)
+  }
   /** Upsert-shaped MERGE: UPDATE SET * / INSERT * on key equality. */
   final case class MergeStatement(table: String, source: String,
-      keys: Seq[String]) extends Statement
+      keys: Seq[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      MergeCommand.upsert(g.spark, g.resolveTablePath(table),
+        g.resolveMergeSource(source), keys)
+  }
   /** MERGE ... WHEN MATCHED THEN DELETE (delete-by-key-set). */
   final case class MergeDeleteStatement(table: String, source: String,
-      keys: Seq[String]) extends Statement
+      keys: Seq[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      MergeCommand.deleteMatched(g.spark, g.resolveTablePath(table),
+        g.resolveMergeSource(source), keys)
+  }
   /** MERGE full-sync: upsert + WHEN NOT MATCHED BY SOURCE [AND pred]
     * THEN DELETE. */
   final case class MergeSyncStatement(table: String, source: String,
-      keys: Seq[String], deletePredicate: Option[String]) extends Statement
+      keys: Seq[String], deletePredicate: Option[String]) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      MergeCommand.sync(g.spark, g.resolveTablePath(table),
+        g.resolveMergeSource(source), keys, deletePredicate.map(expr))
+  }
   /** INSERT INTO <t> REPLACE WHERE <pred> SELECT ... — the selective
     * overwrite SQL shape ([[graft.commands.ReplaceWhereCommand]]). */
   final case class ReplaceWhereStatement(table: String, predicate: String,
-      selectSql: String) extends Statement
+      selectSql: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      ReplaceWhereCommand.replaceWhere(g.spark, g.spark.sql(selectSql),
+        g.resolveTablePath(table), expr(predicate))
+  }
   /** FSCK REPAIR TABLE <t> [DRY RUN] ([[graft.commands.FsckCommand]]). */
   final case class FsckStatement(table: String,
-      dryRun: Boolean) extends Statement
+      dryRun: Boolean) extends Statement {
+    override def outputSchema: StructType =
+      if (dryRun) FsckCommand.dryRunSchema else CommandResult.metricsSchema
+    def run(g: GraftSession): DataFrame =
+      FsckCommand.repair(g.spark, g.resolveTablePath(table), dryRun)
+  }
   /** ALTER TABLE t DROP FEATURE <name> [TRUNCATE HISTORY]
     * ([[graft.commands.DropFeatureCommand]]). */
   final case class DropFeatureStatement(table: String, feature: String,
-      truncateHistory: Boolean) extends Statement
+      truncateHistory: Boolean) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      DropFeatureCommand.dropFeature(g.spark, g.resolveTablePath(table),
+        feature, truncateHistory)
+  }
   /** COPY INTO <t> FROM <'dir'> [FILEFORMAT = PARQUET] [FORCE]
     * ([[graft.commands.CopyIntoCommand]]). */
   final case class CopyIntoStatement(table: String, source: String,
-      force: Boolean) extends Statement
+      force: Boolean) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      CopyIntoCommand.copyInto(g.spark, g.resolveTablePath(table), source,
+        force)
+  }
   /** GENERATE symlink_format_manifest FOR TABLE <t>
     * ([[graft.commands.GenerateCommand]]). */
-  final case class GenerateManifestStatement(table: String)
-    extends Statement
+  final case class GenerateManifestStatement(table: String) extends Statement {
+    def run(g: GraftSession): DataFrame =
+      GenerateCommand.symlinkManifest(g.spark, g.resolveTablePath(table))
+  }
+
+  private def quoteIdent(name: String): String =
+    if (name.matches("[A-Za-z_][A-Za-z0-9_]*")) name
+    else "`" + name.replace("`", "``") + "`"
+
+  private def quoteLiteral(s: String): String =
+    "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
   final class ParseException(msg: String) extends IllegalArgumentException(msg)
 

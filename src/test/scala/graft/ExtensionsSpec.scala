@@ -108,9 +108,8 @@ class ExtensionsSpec extends AnyFunSuite {
     val p = new java.io.File(d, "tbl").getAbsolutePath
     val region = TestSpark.spark.read.parquet(s"${TestSpark.sf}/region.parquet")
     CommitWriter.createTable(extSpark, region, p)
-    // DESCRIBE DETAIL previously hit a MatchError on this path: the
-    // statement was parseable but missing from GraftCommand's output
-    // schema mapping
+    // every parseable statement plans through the injected parser:
+    // GraftCommand's columns are the statement's own outputSchema
     val detail = extSpark.sql(s"DESCRIBE DETAIL '$p'").collect().head
     assert(detail.getAs[Long]("numFiles") >= 1L)
     extSpark.sql(
@@ -185,11 +184,10 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("every extension statement resolves through spark.sql (no MatchError)") {
-    // regression: GraftCommand.output is a type match over the sealed
-    // Statement family — a statement added to the parser but not to
-    // that match crashes at PLAN time through the injected-extension
-    // path while the GraftSession.sql path (which specs usually
-    // exercise) keeps working
+    // invariant: every statement the parser produces plans and runs
+    // through the injected-extension path exactly as through
+    // GraftSession.sql (which specs usually exercise) — its columns
+    // and its executor are declared on the statement itself
     val d = Files.createTempDirectory("graft_ext_all").toFile
     d.deleteOnExit()
     val p = new java.io.File(d, "tbl").getAbsolutePath
@@ -211,7 +209,7 @@ class ExtensionsSpec extends AnyFunSuite {
       org.apache.spark.sql.types.LongType)
     extSpark.sql(s"ALTER TABLE '$p' CLUSTER BY NONE")
     // SHOW TBLPROPERTIES + SET DEFAULT also resolve through the
-    // injected wiring (the GraftCommand.output match must know them)
+    // injected wiring
     extSpark.sql(s"ALTER TABLE '$p' ALTER COLUMN o_custkey SET DEFAULT 1")
     assert(extSpark.sql(s"SHOW TBLPROPERTIES '$p'").collect() != null)
     // ANALYZE on a PATH is ours (idempotent here: stats were written)
@@ -225,6 +223,58 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("TABLE_OR_VIEW_NOT_FOUND") ||
       e.getMessage.contains("cannot be found"))
+  }
+
+  test("a statement's columns agree across both entry points and its " +
+    "declared outputSchema") {
+    // the injected parser plans with the statement's declared schema;
+    // GraftSession.sql returns the frame the statement's run builds —
+    // all three must be the same StructType, nullability included
+    val d = Files.createTempDirectory("graft_ext_parity").toFile
+    d.deleteOnExit()
+    val p = new java.io.File(d, "tbl").getAbsolutePath
+    val nation = TestSpark.spark.read.parquet(s"${TestSpark.sf}/nation.parquet")
+    CommitWriter.createTable(extSpark, nation, p,
+      partitionColumns = Seq("n_regionkey"))
+    def parquetDir(name: String): String = {
+      val dir = new java.io.File(d, name).getAbsolutePath
+      nation.write.parquet(dir)
+      dir
+    }
+    val session = GraftSession(extSpark)
+    session.sql("CREATE CATALOG IF NOT EXISTS parity_cat")
+    session.sql("CREATE SHARE IF NOT EXISTS parity_share")
+    try {
+      // (extension text, session text): the same statement, except
+      // CONVERT, which needs a fresh directory per run
+      val cases = Seq(
+        s"VACUUM '$p' DRY RUN",
+        s"FSCK REPAIR TABLE '$p' DRY RUN",
+        s"DESCRIBE HISTORY '$p'",
+        s"DESCRIBE DETAIL '$p'",
+        "SHOW CATALOGS",
+        "SHOW SCHEMAS IN parity_cat",
+        "SHOW SHARES",
+        "SHOW EXTERNAL LOCATIONS",
+        "SHOW CONNECTIONS",
+        s"SHOW TBLPROPERTIES '$p'",
+        s"SHOW PARTITIONS '$p'",
+        "SHOW ALL IN SHARE parity_share",
+        "CREATE CATALOG IF NOT EXISTS parity_cat",
+        "DROP CATALOG IF EXISTS parity_no_such_cat",
+        s"OPTIMIZE '$p'" // a metrics-schema statement
+      ).map(sql => sql -> sql) :+
+        (s"CONVERT TO DELTA '${parquetDir("cv_ext")}'" ->
+          s"CONVERT TO DELTA '${parquetDir("cv_session")}'")
+      for ((extSql, sessionSql) <- cases) {
+        val declared = graft.sqlext.GraftParser.parse(extSql).get.outputSchema
+        assert(extSpark.sql(extSql).schema == declared, extSql)
+        assert(session.sql(sessionSql).schema == declared, sessionSql)
+      }
+    } finally {
+      session.sql("DROP SHARE IF EXISTS parity_share")
+      session.sql("DROP CATALOG IF EXISTS parity_cat")
+    }
   }
 
   test("INSERT INTO ... REPLACE WHERE runs through the injected parser; " +
@@ -265,7 +315,7 @@ class ExtensionsSpec extends AnyFunSuite {
       .select("o_orderkey", "o_totalprice")
     CommitWriter.createTable(extSpark, orders.limit(20).repartition(1), p,
       configuration = Map("delta.enableChangeDataFeed" -> "true"))
-    // FSCK both output schemas (the dryRun branch in GraftCommand.output)
+    // FSCK both output schemas (FsckStatement.outputSchema follows dryRun)
     assert(extSpark.sql(s"FSCK REPAIR TABLE '$p' DRY RUN").collect()
       .isEmpty)
     assert(extSpark.sql(s"FSCK REPAIR TABLE '$p'").collect()
@@ -325,8 +375,7 @@ class ExtensionsSpec extends AnyFunSuite {
     extSpark.sql("CREATE TABLE graft_ext_ctas_plain AS SELECT 1 AS a")
     try assert(extSpark.table("graft_ext_ctas_plain").count() == 1)
     finally extSpark.sql("DROP TABLE graft_ext_ctas_plain")
-    // full-sync MERGE through the injected path (GraftCommand.output
-    // must know MergeSyncStatement)
+    // full-sync MERGE through the injected path
     extSpark.read.format("graftdelta").option("path", p).load()
       .where(col("o_orderkey") <= 40)
       .createOrReplaceTempView("graft_ext_sync_src")
