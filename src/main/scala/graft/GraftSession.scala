@@ -15,8 +15,7 @@ import graft.sqlext.GraftParser
   */
 final class GraftSession(val spark: SparkSession) {
 
-  val tables = new TableRegistry(spark)
-  GraftSession.registerFunctions(spark)
+  val tables = new TableRegistry(spark, GraftSession.namesOf(spark))
 
   /** Route a SQL statement: extension grammar first, Spark otherwise. */
   def sql(sqlText: String): DataFrame =
@@ -69,4 +68,18 @@ object GraftSession {
     spark.udf.register("sign_storage_url",
       (url: String) => graft.functions.UrlSigning.signUrl(url))
   }
+
+  /** Each SparkSession's table names, shared like the temp views they
+    * publish; making them registers the session's functions. Weak keys
+    * (the names hold no reference back), so they go with the session. */
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, TableRegistry.Names]()
+
+  private def namesOf(spark: SparkSession): TableRegistry.Names =
+    sessions.synchronized {
+      sessions.computeIfAbsent(spark, { s =>
+        registerFunctions(s)
+        new TableRegistry.Names()
+      })
+    }
 }

@@ -10,16 +10,16 @@ import graft.delta.{DeltaTable, Snapshot}
   * re-resolves the snapshot on every lookup and swaps the provider when
   * a newer version exists (reference: crates/datafusion/src/
   * schema_provider.rs:83-118).
+  *
+  * `tables` belongs to the SparkSession, as the temp views it publishes.
   */
-final class TableRegistry(spark: SparkSession) {
-
-  private case class Entry(path: String, snapshot: Snapshot)
-  private val tables = new ConcurrentHashMap[String, Entry]()
+final class TableRegistry(spark: SparkSession, tables: TableRegistry.Names) {
+  import TableRegistry.Entry
 
   /** Register a Delta table under `name` and expose it as a temp view. */
   def register(name: String, path: String): Snapshot = {
     val snap = DeltaTable.forPath(spark, path)
-    tables.put(name, Entry(path, snap))
+    tables.put(name, Entry(path, snap.version))
     snap.read.createOrReplaceTempView(name)
     snap
   }
@@ -32,11 +32,11 @@ final class TableRegistry(spark: SparkSession) {
     val entry = Option(tables.get(name)).getOrElse(
       throw new IllegalArgumentException(s"Unknown delta table: $name"))
     val latest = DeltaTable.forPath(spark, entry.path)
-    if (latest.version > entry.snapshot.version) {
-      tables.put(name, Entry(entry.path, latest))
+    if (latest.version > entry.version) {
+      tables.put(name, Entry(entry.path, latest.version))
       latest.read.createOrReplaceTempView(name)
-      latest
-    } else entry.snapshot
+    }
+    latest
   }
 
   def names: Seq[String] = {
@@ -48,4 +48,9 @@ final class TableRegistry(spark: SparkSession) {
     tables.remove(name)
     spark.catalog.dropTempView(name)
   }
+}
+
+object TableRegistry {
+  private[graft] final case class Entry(path: String, version: Long)
+  private[graft] type Names = ConcurrentHashMap[String, Entry]
 }

@@ -1,5 +1,6 @@
 package graft.delta.scan
 
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.delta.Snapshot
@@ -34,39 +35,67 @@ object CommitRangeScan {
     val files = scala.collection.mutable.LinkedHashMap.empty[
       String, DeltaScan.ScanFile]
     val fs = LogSegment.fs(spark, new Path(path))
-    val logDir = new Path(new Path(path), "_delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    for (v <- (fromExclusive + 1) to endV) {
-      val commit = new Path(logDir, f"$v%020d.json")
-      if (!fs.exists(commit))
-        throw new IllegalStateException(
-          s"$contextLabel cannot read commit $v of $path (cleaned up?)")
-      val in = fs.open(commit)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
-      for (line <- lines if line.nonEmpty) {
-        val n = mapper.readTree(line)
-        if (!ignoreChanges && n.has("remove") &&
-            Option(n.get("remove").get("dataChange")).forall(_.asBoolean()))
-          throw new UnsupportedOperationException(
-            s"$contextLabel found a data-changing remove in commit $v of " +
-              s"$path (DELETE/UPDATE/MERGE). Incremental reads require an " +
-              "append-only span; set ignoreChanges=true to skip such commits.")
-        if (n.has("add") &&
-            Option(n.get("add").get("dataChange")).forall(_.asBoolean())) {
-          val a = n.get("add")
-          val rel = a.get("path").asText()
-          files.remove(rel) // last add for a path wins
-          files.put(rel, DeltaScan.ScanFile(rel,
-            Replay.partitionValuesOf(a), Replay.dvDescriptorOf(a),
-            if (a.has("size")) a.get("size").asLong(-1L) else -1L,
-            if (a.has("modificationTime"))
-              a.get("modificationTime").asLong(-1L) else -1L))
-        }
+    for (v <- (fromExclusive + 1) to endV;
+         n <- commitActions(fs, path, v,
+           s"$contextLabel cannot read commit $v of $path (cleaned up?)")) {
+      if (!ignoreChanges && dataChanging(n, "remove").isDefined)
+        throw new UnsupportedOperationException(
+          s"$contextLabel found a data-changing remove in commit $v of " +
+            s"$path (DELETE/UPDATE/MERGE). Incremental reads require an " +
+            "append-only span; set ignoreChanges=true to skip such commits.")
+      dataChanging(n, "add").map(scanFileOf).foreach { f =>
+        files.remove(f.relPath) // last add for a path wins
+        files.put(f.relPath, f)
       }
     }
     DeltaScan.buildForFiles(snap, files.values.toSeq)
   }
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def feedMissing(path: String, v: Long): String =
+    s"Change feed cannot read commit $v of $path (cleaned up?)"
+
+  private def commitPath(path: String, v: Long): Path =
+    new Path(new Path(new Path(path), "_delta_log"), f"$v%020d.json")
+
+  /** The parsed action lines of commit `v`; `missing` is the message of
+    * the IllegalStateException thrown when the log no longer holds it. */
+  private def commitActions(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, v: Long, missing: => String): Vector[JsonNode] = {
+    val in = try fs.open(commitPath(path, v)) catch {
+      case _: java.io.FileNotFoundException =>
+        throw new IllegalStateException(missing)
+    }
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().toVector finally in.close()
+    lines.filter(_.nonEmpty).map(mapper.readTree)
+  }
+
+  /** The `kind` ("add" or "remove") action of a line when it changes
+    * data (dataChange defaults to true). */
+  private def dataChanging(n: JsonNode, kind: String): Option[JsonNode] =
+    Option(n.get(kind))
+      .filter(a => Option(a.get("dataChange")).forall(_.asBoolean()))
+
+  private def scanFileOf(add: JsonNode): DeltaScan.ScanFile =
+    DeltaScan.ScanFile(add.get("path").asText(),
+      Replay.partitionValuesOf(add), Replay.dvDescriptorOf(add),
+      if (add.has("size")) add.get("size").asLong(-1L) else -1L,
+      if (add.has("modificationTime"))
+        add.get("modificationTime").asLong(-1L) else -1L)
+
+  /** Millis timestamp of commit `v` from its `actions`: the commitInfo
+    * line's inCommitTimestamp (when the table writes them, it IS the
+    * commit timestamp per spec), else its timestamp, else the commit
+    * file's mtime (engines that omit commitInfo). */
+  private def commitMillis(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, v: Long, actions: Seq[JsonNode]): Long =
+    actions.iterator.flatMap(n => Option(n.get("commitInfo"))).collectFirst {
+      case ci if ci.has("inCommitTimestamp") =>
+        ci.get("inCommitTimestamp").asLong()
+      case ci if ci.has("timestamp") => ci.get("timestamp").asLong()
+    }.getOrElse(fs.getFileStatus(commitPath(path, v)).getModificationTime)
 
   /** Per-commit derived-diff cache, shared by EVERY change-feed
     * consumer (batch `q_change_feed`, the `table_changes` TVF, and the
@@ -123,29 +152,11 @@ object CommitRangeScan {
   def commitTimestampMillis(spark: SparkSession, path: String,
       v: Long): Long = {
     val fs = LogSegment.fs(spark, new Path(path))
-    val commit = new Path(new Path(new Path(path), "_delta_log"),
-      f"$v%020d.json")
     // a checkpointed log may have expired this commit's JSON: fail with
     // the same actionable message as the range scans, not a raw FNF
-    if (!fs.exists(commit))
-      throw new IllegalStateException(
-        s"Commit $v of $path is no longer in the log (cleaned up after " +
-          "checkpointing) — its timestamp and changes cannot be derived")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val in = fs.open(commit)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toVector finally in.close()
-    lines.iterator.filter(_.nonEmpty).map(mapper.readTree)
-      .collectFirst {
-        // inCommitTimestamp (when the table writes them) IS the commit
-        // timestamp per spec; commitInfo.timestamp otherwise
-        case n if n.has("commitInfo") &&
-            n.get("commitInfo").has("inCommitTimestamp") =>
-          n.get("commitInfo").get("inCommitTimestamp").asLong()
-        case n if n.has("commitInfo") &&
-            n.get("commitInfo").has("timestamp") =>
-          n.get("commitInfo").get("timestamp").asLong()
-      }.getOrElse(fs.getFileStatus(commit).getModificationTime)
+    commitMillis(fs, path, v, commitActions(fs, path, v,
+      s"Commit $v of $path is no longer in the log (cleaned up after " +
+        "checkpointing) — its timestamp and changes cannot be derived"))
   }
 
   /** True when a MapType occurs ANYWHERE in the type — Spark set
@@ -202,25 +213,21 @@ object CommitRangeScan {
         .withColumn("_commit_version", lit(null: String).cast("long"))
         .withColumn("_commit_timestamp", lit(null: String).cast("timestamp"))
     val fs = LogSegment.fs(spark, new Path(path))
-    val logDir = new Path(new Path(path), "_delta_log")
     val qualified = fs.makeQualified(new Path(path)).toString
     val schemaHash = snap.schema.catalogString.hashCode
     val slots = for (v <- (fromExclusive + 1) to endV) yield {
-      val commit = new Path(logDir, f"$v%020d.json")
-      if (!fs.exists(commit))
-        throw new IllegalStateException(
-          s"Change feed cannot read commit $v of $path (cleaned up?)")
-      val st = fs.getFileStatus(commit)
-      (v, commit,
-        DiffKey(qualified, v, st.getLen, st.getModificationTime, schemaHash))
+      val st = try fs.getFileStatus(commitPath(path, v)) catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalStateException(feedMissing(path, v))
+      }
+      (v, DiffKey(qualified, v, st.getLen, st.getModificationTime, schemaHash))
     }
-    val looked = slots.map { case (v, commit, key) =>
-      (v, commit, key, cacheLookup(spark, key)) }
-    val hits = looked.flatMap(_._4)
-    val missed = looked.collect { case (v, commit, key, None) =>
-      (v, commit, key) }
-    val derived = missed.map { case (v, commit, key) =>
-      val (df, diffed) = deriveCommitDiff(spark, path, snap, fs, v, commit)
+    val looked = slots.map { case (v, key) =>
+      (v, key, cacheLookup(spark, key)) }
+    val hits = looked.flatMap(_._3)
+    val missed = looked.collect { case (v, key, None) => (v, key) }
+    val derived = missed.map { case (v, key) =>
+      val (df, diffed) = deriveCommitDiff(spark, path, snap, fs, v)
       (v, key, df, diffed)
     }
     // only DIFFED commits are worth materializing + caching: a pure
@@ -269,31 +276,18 @@ object CommitRangeScan {
     * commits return false. */
   private def deriveCommitDiff(spark: SparkSession, path: String,
       snap: Snapshot, fs: org.apache.hadoop.fs.FileSystem,
-      v: Long, commit: Path): (DataFrame, Boolean) = {
+      v: Long): (DataFrame, Boolean) = {
     import org.apache.spark.sql.functions.{abs, array_repeat, col, explode,
       lit, sum, timestamp_millis}
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val adds = scala.collection.mutable.LinkedHashMap.empty[
         String, DeltaScan.ScanFile]
       val removes = scala.collection.mutable.LinkedHashMap.empty[
         String, DeltaScan.ScanFile]
       val cdcFiles = scala.collection.mutable.ArrayBuffer.empty[String]
-      var commitMillis: Option[Long] = None
       var operation: Option[String] = None
       var mergeKeys: Seq[String] = Seq.empty
-      val in = fs.open(commit)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
-      for (line <- lines if line.nonEmpty) {
-        val n = mapper.readTree(line)
-        // inCommitTimestamp (when the table writes them) IS the commit
-        // timestamp per spec; commitInfo.timestamp otherwise — same
-        // preference as commitTimestampMillis
-        if (n.has("commitInfo") && n.get("commitInfo").has("inCommitTimestamp"))
-          commitMillis =
-            Some(n.get("commitInfo").get("inCommitTimestamp").asLong())
-        else if (n.has("commitInfo") && n.get("commitInfo").has("timestamp"))
-          commitMillis = Some(n.get("commitInfo").get("timestamp").asLong())
+      val actions = commitActions(fs, path, v, feedMissing(path, v))
+      for (n <- actions) {
         if (n.has("commitInfo") && n.get("commitInfo").has("operation"))
           operation = Some(n.get("commitInfo").get("operation").asText())
         if (n.has("commitInfo"))
@@ -303,19 +297,9 @@ object CommitRangeScan {
             .getOrElse(Seq.empty)
         if (n.has("cdc"))
           cdcFiles += n.get("cdc").get("path").asText()
-        if (n.has("add") &&
-            Option(n.get("add").get("dataChange")).forall(_.asBoolean())) {
-          val a = n.get("add")
-          adds.put(a.get("path").asText(), DeltaScan.ScanFile(
-            a.get("path").asText(),
-            Replay.partitionValuesOf(a), Replay.dvDescriptorOf(a),
-            if (a.has("size")) a.get("size").asLong(-1L) else -1L,
-            if (a.has("modificationTime"))
-              a.get("modificationTime").asLong(-1L) else -1L))
-        }
-        if (n.has("remove") &&
-            Option(n.get("remove").get("dataChange")).forall(_.asBoolean())) {
-          val r = n.get("remove")
+        dataChanging(n, "add").map(scanFileOf)
+          .foreach(f => adds.put(f.relPath, f))
+        dataChanging(n, "remove").foreach { r =>
           val rel = r.get("path").asText()
           // remove actions often omit partitionValues (the Delta spec
           // makes them optional); recover them from the hive-style path
@@ -337,8 +321,7 @@ object CommitRangeScan {
             Replay.dvDescriptorOf(r)))
         }
       }
-      val ts0 = commitMillis.getOrElse(
-        fs.getFileStatus(commit).getModificationTime)
+      val ts0 = commitMillis(fs, path, v, actions)
       // write-time CDC: when the commit carries cdc actions they are
       // the AUTHORITATIVE change set (per spec a CDF reader must use
       // them EXCLUSIVELY for that commit — the writer already labeled

@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.delta.Snapshot
 import graft.delta.log.Actions.DeletionVectorDescriptor
 import graft.delta.log.LogSegment
+import graft.delta.sources.GraftDeltaFileIndex
 
 /** Assembles the user-facing DataFrame for a snapshot:
   *
@@ -29,8 +30,8 @@ import graft.delta.log.LogSegment
 object DeltaScan {
 
   /** `size`/`modTime` are the log-recorded FileStatus halves (AddFile
-    * carries both per the protocol); -1 = unknown, which drops that
-    * scan back to the listing path. */
+    * carries both per the protocol); -1 = unknown (a remove records
+    * neither), which the file index reads with one `getFileStatus`. */
   final case class ScanFile(
       relPath: String,
       partitionValues: Map[String, String],
@@ -129,8 +130,14 @@ object DeltaScan {
   def build(snapshot: Snapshot, filters: Seq[Column],
       withFileColumn: Boolean = false,
       withRowIndex: Boolean = false): DataFrame = {
-    val scanFiles: Seq[ScanFile] = prunedFiles(snapshot, filters)
-      .select("path", "partitionValues", "deletionVector", "size",
+    assemble(snapshot, scanFilesOf(prunedFiles(snapshot, filters)), filters,
+      withFileColumn, withRowIndex)
+  }
+
+  /** The log entries of a file-list frame (`allFiles` or a pruned part
+    * of it), collected to the driver. */
+  private[graft] def scanFilesOf(files: DataFrame): Seq[ScanFile] =
+    files.select("path", "partitionValues", "deletionVector", "size",
         "modificationTime")
       .collect().toSeq.map { r =>
         ScanFile(
@@ -141,8 +148,6 @@ object DeltaScan {
           if (r.isNullAt(3)) -1L else r.getLong(3),
           if (r.isNullAt(4)) -1L else r.getLong(4))
       }
-    assemble(snapshot, scanFiles, filters, withFileColumn, withRowIndex)
-  }
 
   /** Scan an EXPLICIT file list through the snapshot's schema machinery
     * (column mapping, partition values, DVs) — the files need not be
@@ -152,32 +157,22 @@ object DeltaScan {
   def buildForFiles(snapshot: Snapshot, scanFiles: Seq[ScanFile]): DataFrame =
     assemble(snapshot, scanFiles, Seq.empty, withFileColumn = false)
 
-  private def assemble(snapshot: Snapshot, scanFiles: Seq[ScanFile],
+  private def assemble(snapshot: Snapshot, logFiles: Seq[ScanFile],
       filters: Seq[Column], withFileColumn: Boolean,
       withRowIndex: Boolean = false): DataFrame = {
     val spark = snapshot.spark
     val logical = snapshot.schema
     val partCols = snapshot.partitionColumns
 
-    if (scanFiles.isEmpty) {
-      // an empty table still needs the provenance columns the caller
-      // asked for (DML on an empty table groups by them)
-      val extra =
-        (if (withFileColumn) Seq(StructField(FileKeyColumn, StringType))
-         else Nil) ++
-        (if (withRowIndex) Seq(StructField(RowIndexColumn, LongType))
-         else Nil)
-      val empty = spark.createDataFrame(
-        new java.util.ArrayList[Row](), StructType(logical.fields ++ extra))
-      return applyResidual(empty, filters)
-    }
-
+    // every file's status, known before the surgical split: the normal
+    // scan's index and the surgical splits both take theirs from here.
+    // An empty list is an empty index, which still yields the provenance
+    // columns the caller asked for (DML on an empty table groups by them)
+    val scanFiles = GraftDeltaFileIndex.withLogStatus(snapshot, logFiles)
     val fs = LogSegment.fs(spark, snapshot.tablePath)
     val qualifiedTable = fs.makeQualified(snapshot.tablePath)
-    def abs(rel: String): Path = {
-      val p = new Path(rel)
-      if (p.isAbsolute) p else new Path(qualifiedTable, rel)
-    }
+    def abs(rel: String): Path =
+      GraftDeltaFileIndex.absolute(qualifiedTable, rel)
 
     val dataFields = logical.fields.filterNot(f => partCols.contains(f.name))
     val mappingMode = ColumnMapping.mode(snapshot.metadata)
@@ -242,25 +237,15 @@ object DeltaScan {
     val normalScanFiles =
       scanFiles.filterNot(f => surgical.contains(normalize(abs(f.relPath))))
 
-    // the log IS the file inventory: when every surviving file carries
-    // its log-recorded (size, mtime) — the protocol requires both — the
-    // scan relation is built directly over those statuses, so planning
-    // does ZERO filesystem listing/stat calls (spark.read.parquet would
-    // re-stat every path per scan, and past 32 paths launch a
-    // distributed listing job per read — the k-NN join family's driver
-    // floor, r17). Files without a log-recorded size and mtime (the
-    // remove-side CDF pre-images: removes carry neither) are read
-    // through spark.read.parquet instead, until removes record them.
-    val statusesKnown =
-      normalScanFiles.forall(f => f.size >= 0 && f.modTime >= 0)
-    var df =
-      if (statusesKnown && normalScanFiles.nonEmpty)
-        org.apache.spark.sql.graftshim.Shims.parquetScanFromStatuses(
-          spark, physicalDataSchema,
-          normalScanFiles.map(f => (abs(f.relPath), f.size, f.modTime)))
-      else spark.read
-        .schema(physicalDataSchema)
-        .parquet(normalScanFiles.map(f => abs(f.relPath).toString): _*)
+    // the log IS the file inventory: the relation scans the log-backed
+    // index over the surviving files, so planning lists nothing
+    // (spark.read.parquet would re-stat every path per scan, and past 32
+    // paths launch a distributed listing job per read). Partition values
+    // join in below, so the index carries none.
+    var df = org.apache.spark.sql.graftshim.Shims.parquetRelation(spark,
+      new GraftDeltaFileIndex(snapshot, normalScanFiles, StructType(Nil),
+        statsSkipping = None),
+      physicalDataSchema)
 
     val helperCols = Seq.newBuilder[Column]
     if (needPart || needDv || withFileColumn)
@@ -283,8 +268,7 @@ object DeltaScan {
         .map { f =>
           val absPath = abs(f.relPath)
           val key = normalize(absPath)
-          val st = fs.getFileStatus(absPath)
-          (absPath, key, surgical(key)._1, st.getModificationTime, st.getLen)
+          (absPath, key, surgical(key)._1, f.modTime, f.size)
         }
       val sdf = DvRowGroupSkip.scan(spark, physicalDataSchema, surgicalFiles)
       val sSel = sdf.select(

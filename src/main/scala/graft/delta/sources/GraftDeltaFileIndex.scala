@@ -1,128 +1,151 @@
 package graft.delta.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
-import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionDirectory, PartitionPath, PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.delta.Snapshot
 import graft.delta.log.LogSegment
-import graft.delta.scan.StatsSkipping
+import graft.delta.scan.DeltaScan.ScanFile
 
-/** Delta-log-backed `FileIndex` — the DSv2 scan's source of file splits.
+/** The Delta log's file inventory as a Spark `FileIndex`, and the one
+  * index every graftdelta read scans: the native DSv2 `ParquetScan` lists
+  * it, and [[graft.delta.scan.DeltaScan]] builds its parquet relation on
+  * it. It answers from the given log entries alone:
   *
-  * Spark's planner calls `listFiles(partitionFilters, dataFilters)` at
-  * plan time; this index serves it entirely from log metadata:
+  *  - `FileStatus`es are built from each entry's size and mtime, so
+  *    planning lists nothing (at 100 TB, listing millions of objects is
+  *    the scan-planning bottleneck). An entry without them (a remove's
+  *    change-feed pre-image) costs one driver `getFileStatus`;
+  *  - each file keeps its own partition values (the protocol ties them
+  *    to the add, not to a directory); partition filters, DPP re-lists
+  *    included, are evaluated once per distinct partition row;
+  *  - `statsSkipping` maps pushed data filters to the paths worth
+  *    reading. The DSv2 caller passes the unpruned live list with it,
+  *    `DeltaScan` a list it already pruned without it.
   *
-  *  - `FileStatus`es are BUILT from add-action fields (path, size,
-  *    modificationTime) — zero filesystem RPCs regardless of file count
-  *    (at 100 TB a listing of millions of objects is the scan-planning
-  *    bottleneck this avoids);
-  *  - partition pruning uses the log's partitionValues (hive-style dirs
-  *    grouped into `PartitionSpec`), evaluated by Spark's own pruner;
-  *  - data filters additionally run through the SAME stats-skipping
-  *    engine as the v1 path (min/max/nullCount per file), so a pushed
-  *    predicate prunes whole files before any parquet footer is read.
-  *
-  * The reference's analogue is the scan-unit stream handed to its exec
-  * node (crates/datafusion/src/table_provider/delta/mod.rs:90-149); the
-  * driver-resident live-file list mirrors production Delta readers'
-  * driver index and is metadata-only (~100 bytes/file).
+  * `files` is evaluated on first use, so a DSv2 aggregate answered from
+  * log stats never collects it. The class extends
+  * `PartitioningAwareFileIndex` only because `ParquetScanBuilder` takes
+  * that type; it overrides every `FileIndex` member, so none of that
+  * class's directory-based listing runs. Reference analogue: the
+  * scan-unit stream of crates/datafusion/src/table_provider/delta/
+  * mod.rs:90-149.
   */
-final class GraftDeltaFileIndex(spark: SparkSession, snapshot: Snapshot)
+final class GraftDeltaFileIndex(snapshot: Snapshot, files: => Seq[ScanFile],
+    partSchema: StructType,
+    statsSkipping: Option[Seq[Column] => Set[String]])
     extends PartitioningAwareFileIndex(
-      spark, Map.empty, Some(snapshot.schema), NoopCache) {
+      snapshot.spark, Map.empty, None, NoopCache) {
 
-  private val qualifiedTable: Path =
-    LogSegment.fs(spark, snapshot.tablePath).makeQualified(snapshot.tablePath)
-
-  private def absPath(rel: String): Path = {
-    val p = new Path(rel)
-    if (p.isAbsolute) p else new Path(qualifiedTable, rel)
-  }
-
-  private val partCols: Seq[String] = snapshot.partitionColumns
-
-  /** (absolute path, synthesized status, partition values) per live file. */
-  private lazy val live: Array[(Path, FileStatus, Map[String, String])] =
-    snapshot.allFiles
-      .select("path", "size", "modificationTime", "partitionValues")
-      .collect().map { r =>
-        val p = absPath(r.getString(0))
-        val st = new FileStatus(r.getLong(1), false, 1, 128L * 1024 * 1024,
-          r.getLong(2), p)
-        (p, st,
-          Option(r.getAs[Map[String, String]](3)).getOrElse(Map.empty))
+  /** (partition row, files as (log path, status)) per distinct row. */
+  private lazy val partitions
+      : Seq[(InternalRow, Array[(String, FileStatus)])] = {
+    val table = LogSegment.fs(snapshot.spark, snapshot.tablePath)
+      .makeQualified(snapshot.tablePath)
+    val names = partSchema.fieldNames.toSeq
+    GraftDeltaFileIndex.withLogStatus(snapshot, files)
+      .groupBy(f =>
+        names.map(n => f.partitionValues.get(n).flatMap(Option(_))))
+      .toSeq.map { case (raw, group) =>
+        (partitionRow(raw), group.map { f =>
+          f.relPath -> new FileStatus(f.size, false, 1, 0L, f.modTime,
+            GraftDeltaFileIndex.absolute(table, f.relPath))
+        }.toArray)
       }
-
-  override def rootPaths: Seq[Path] = Seq(qualifiedTable)
-
-  override def refresh(): Unit = () // a snapshot is immutable
-
-  override lazy val leafFiles
-      : scala.collection.mutable.LinkedHashMap[Path, FileStatus] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[Path, FileStatus]
-    live.foreach { case (p, st, _) => m.put(p, st) }
-    m
   }
 
-  override lazy val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
-    live.groupBy(_._1.getParent).map { case (dir, fs) =>
-      dir -> fs.map(_._2)
-    }
+  private lazy val statuses: Seq[FileStatus] =
+    partitions.flatMap(_._2.map(_._2))
 
-  override lazy val partitionSpec: PartitionSpec = {
-    if (partCols.isEmpty) PartitionSpec.emptySpec
-    else {
-      val partSchema = StructType(partCols.map(c => snapshot.schema(c)))
-      val tz = Option(spark.conf.get("spark.sql.session.timeZone"))
-      val dirs = live.groupBy(_._1.getParent).toSeq.map { case (dir, fs) =>
-        val pv = fs.head._3
-        val values = InternalRow.fromSeq(partCols.map { c =>
-          pv.get(c).filterNot(_ == "__HIVE_DEFAULT_PARTITION__") match {
-            case None => null
-            case Some(raw) => Cast(
-              Literal(UTF8String.fromString(raw), StringType),
-              partSchema(c).dataType, tz).eval(InternalRow.empty)
-          }
-        })
-        PartitionPath(values, dir)
-      }
-      PartitionSpec(partSchema, dirs)
-    }
+  private def partitionRow(raw: Seq[Option[String]]): InternalRow = {
+    val tz = Option(snapshot.spark.conf.get("spark.sql.session.timeZone"))
+    InternalRow.fromSeq(partSchema.fields.toSeq.zip(raw).map {
+      case (_, None | Some(GraftDeltaFileIndex.HiveDefaultPartition)) => null
+      case (field, Some(v)) => Cast(Literal(UTF8String.fromString(v),
+        StringType), field.dataType, tz).eval(InternalRow.empty)
+    })
   }
 
-  /** Partition pruning via Spark's evaluator (super), then stats-based
-    * file skipping with the pushed data filters — the v1 path's pruning
-    * engine, reached through the public Filter → Column translation so
-    * both paths share one skipping implementation. */
+  /** The partition filters as one predicate over a partition row. */
+  private def partitionMatch(
+      filters: Seq[Expression]): InternalRow => Boolean =
+    if (filters.isEmpty) _ => true
+    else Predicate.createInterpreted(filters.reduce(And).transform {
+      case a: AttributeReference =>
+        val i = partSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
+        BoundReference(i, partSchema(i).dataType, nullable = true)
+    }).eval
+
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val base = super.listFiles(partitionFilters, dataFilters)
-    val cols = dataFilters
-      .flatMap(e => org.apache.spark.sql.graftshim.Shims.translateFilter(e))
-      .flatMap(f => FilterColumns.toColumn(f))
-    val out =
-      if (cols.isEmpty) base
-      else {
-        val kept = StatsSkipping
-          .prune(snapshot, snapshot.allFiles, cols)
-          .select("path").collect().map(r => absPath(r.getString(0)).toString)
-          .toSet
-        base.map { pd =>
-          PartitionDirectory(pd.values,
-            pd.files.filter(f => kept.contains(f.getPath.toString)))
-        }.filter(_.files.nonEmpty)
-      }
+    val kept: Option[Set[String]] = statsSkipping.flatMap { skip =>
+      val cols = dataFilters
+        .flatMap(e => org.apache.spark.sql.graftshim.Shims.translateFilter(e))
+        .flatMap(f => FilterColumns.toColumn(f))
+      if (cols.isEmpty) None else Some(skip(cols))
+    }
+    val matches = partitionMatch(partitionFilters)
+    val out = partitions.collect { case (values, group) if matches(values) =>
+      PartitionDirectory(values,
+        kept.fold(group)(k => group.filter(f => k(f._1))).map(_._2))
+    }.filter(_.files.nonEmpty)
     GraftDeltaFileIndex.recordList(partitionFilters.size,
       dataFilters.size, out.map(_.files.length).sum)
     out
   }
+
+  override def partitionSchema: StructType = partSchema
+  override lazy val rootPaths: Seq[Path] = statuses.map(_.getPath)
+  override def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
+  override def sizeInBytes: Long = statuses.map(_.getLen).sum
+  override def allFiles(): Seq[FileStatus] = statuses
+  override def refresh(): Unit = () // a snapshot is immutable
+
+  // PartitioningAwareFileIndex's directory view: unread, since every
+  // member that reads it is overridden above
+  override def partitionSpec(): PartitionSpec = PartitionSpec(partSchema, Nil)
+  override protected def leafFiles =
+    scala.collection.mutable.LinkedHashMap.empty[Path, FileStatus]
+  override protected def leafDirToChildrenFiles =
+    Map.empty[Path, Array[FileStatus]]
 }
 
 object GraftDeltaFileIndex {
+  private final val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  private[graft] def absolute(table: Path, rel: String): Path = {
+    val p = new Path(rel)
+    if (p.isAbsolute) p else new Path(table, rel)
+  }
+
+  /** `files` with every size and mtime the log leaves unknown (-1) read
+    * from storage: one driver `getFileStatus` per such file, none for the
+    * rest. A file the log names but storage lacks fails here, at plan
+    * time, naming the file and the table. */
+  private[graft] def withLogStatus(snapshot: Snapshot,
+      files: Seq[ScanFile]): Seq[ScanFile] = {
+    lazy val fs = LogSegment.fs(snapshot.spark, snapshot.tablePath)
+    files.map { f =>
+      if (f.size >= 0 && f.modTime >= 0) f
+      else {
+        val st = try fs.getFileStatus(
+          absolute(fs.makeQualified(snapshot.tablePath), f.relPath))
+        catch {
+          case e: java.io.FileNotFoundException =>
+            throw new IllegalStateException(
+              s"Delta table ${snapshot.tablePath}: the log names data file " +
+                s"'${f.relPath}', which is missing from storage (deleted " +
+                "outside the log, or reclaimed by VACUUM)", e)
+        }
+        f.copy(size = st.getLen, modTime = st.getModificationTime)
+      }
+    }
+  }
+
   /** Test observability: the last 32 `listFiles` calls in this JVM as
     * (partitionFilterCount, dataFilterCount, filesReturned) — a
     * runtime-filtered (DPP) execution shows up as a call with an extra

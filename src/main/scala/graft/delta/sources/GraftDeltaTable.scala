@@ -13,22 +13,24 @@ import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import graft.delta.{DeltaTable, Snapshot}
-import graft.delta.scan.ColumnMapping
+import graft.delta.scan.{ColumnMapping, DeltaScan, StatsSkipping}
 
 /** DSv2 `Table` for graftdelta (the Spark analogue of the reference's
   * `TableProvider::scan`, crates/datafusion/src/table_provider/delta/
-  * mod.rs:90-149). Two scan strategies behind one table:
+  * mod.rs:90-149). Both scan strategies behind it read the table's files
+  * through the one log-backed [[GraftDeltaFileIndex]]:
   *
   *  - NATIVE (no deletion vectors, identity column mapping — the common
-  *    case): Spark's own `ParquetScanBuilder` over a
-  *    [[GraftDeltaFileIndex]]. File splits stream from the log-backed
-  *    index at plan time (partition pruning + stats skipping both
-  *    applied there), the scan is Spark's vectorized parquet batch read
-  *    inside whole-stage codegen, and pushed filters are visible on the
-  *    BatchScan node.
+  *    case): Spark's own `ParquetScanBuilder` over the index, built on
+  *    the unpruned live list with the snapshot's stats skipping. File
+  *    splits stream from it at plan time (partition pruning + stats
+  *    skipping both applied there), the scan is Spark's vectorized
+  *    parquet batch read inside whole-stage codegen, and pushed filters
+  *    are visible on the BatchScan node.
   *  - COMPOSED (DV or column-mapping tables): a `V1Scan` wrapping the
-  *    assembled DataFrame ([[DeltaScan]]), which carries the DV
-  *    anti-join and physical→logical rename. Pushed filters still
+  *    assembled DataFrame ([[DeltaScan]]), whose parquet relation scans
+  *    the index over the files it already pruned, and which carries the
+  *    DV anti-join and physical→logical rename. Pushed filters still
   *    reach stats skipping and still print on the scan node.
   *
   * Schema order follows Spark's file-source convention: data columns
@@ -112,7 +114,11 @@ final class GraftDeltaTable(spark: SparkSession, path: String,
         if (identityMapping && !hasDvs)
           new org.apache.spark.sql.graftshim.StatsAggScanBuilder(
             ParquetScanBuilder(spark,
-              new GraftDeltaFileIndex(spark, snapshot),
+              new GraftDeltaFileIndex(snapshot,
+                DeltaScan.scanFilesOf(snapshot.allFiles),
+                StructType(partFields.toIndexedSeq),
+                Some(cols => StatsSkipping.prune(snapshot, snapshot.allFiles,
+                  cols).select("path").collect().map(_.getString(0)).toSet)),
               schema(), StructType(dataFields.toIndexedSeq), options),
             statsAnswer,
             partitionSchema = StructType(partFields.toIndexedSeq))

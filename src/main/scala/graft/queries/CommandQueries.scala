@@ -460,7 +460,7 @@ object CommandQueries {
          |       'file:' || filename AS signed
          |FROM ${DeltaQueries.logJsonSrc}
          |ORDER BY path""".stripMargin) { (s, dir) =>
-      GraftSession.registerFunctions(s)
+      GraftSession(s) // registers the session's functions once
       DirListing.list(s, DeltaQueries.logDemoTable(s, dir) + "/_delta_log")
         .where(!col("is_dir"))
         .selectExpr("path", "sign_storage_url(path) AS signed")

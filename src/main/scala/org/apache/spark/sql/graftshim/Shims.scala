@@ -95,45 +95,19 @@ object Shims {
       .BloomFilterMightContain(expression(serializedBloom),
         expression(value)))
 
-  /** Parquet scan over an EXPLICIT file list whose statuses (size,
-    * modification time) are already known — i.e. from a Delta log.
-    * `spark.read.parquet(paths: _*)` builds an InMemoryFileIndex that
-    * re-LISTS every path on the driver (one filesystem stat per file,
-    * and past `parallelPartitionDiscovery.threshold` paths a whole
-    * distributed listing job) on every scan — pure waste when the log
-    * already holds each file's exact size and mtime (guide §6: manifest
-    * metadata exists precisely so readers never re-list storage). This
-    * builds the HadoopFsRelation directly over a constant FileIndex:
-    * zero filesystem calls at planning time, same FileSourceScanExec
-    * (pushdown, column pruning, `_metadata` columns all unchanged). */
-  def parquetScanFromStatuses(spark: org.apache.spark.sql.SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      files: Seq[(org.apache.hadoop.fs.Path, Long, Long)])
+  /** Parquet DataFrame over a `HadoopFsRelation` on `index` (the Delta
+    * scan's log-backed [[graft.delta.sources.GraftDeltaFileIndex]]): the
+    * same FileSourceScanExec as `spark.read.parquet` (pushdown, column
+    * pruning, `_metadata` columns), without its listing of the paths.
+    * `baseRelationToDataFrame` lives on the classic session. */
+  def parquetRelation(spark: org.apache.spark.sql.SparkSession,
+      index: org.apache.spark.sql.execution.datasources.FileIndex,
+      dataSchema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.execution.datasources._
-    val paths = files.map(_._1)
-    val statuses = files.map { case (p, size, mtime) =>
-      new org.apache.hadoop.fs.FileStatus(size, false, 1, 0, mtime, p)
-    }.toArray
-    val totalBytes = files.map(_._2).sum
-    val index = new FileIndex {
-      override def rootPaths: Seq[org.apache.hadoop.fs.Path] = paths
-      override def listFiles(
-          partitionFilters: Seq[Expression],
-          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-        Seq(PartitionDirectory(
-          org.apache.spark.sql.catalyst.InternalRow.empty, statuses))
-      override def inputFiles: Array[String] =
-        paths.map(_.toString).toArray
-      override def refresh(): Unit = ()
-      override def sizeInBytes: Long = totalBytes
-      override def partitionSchema: org.apache.spark.sql.types.StructType =
-        org.apache.spark.sql.types.StructType(Nil)
-    }
-    val relation = HadoopFsRelation(
+    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       location = index,
-      partitionSchema = org.apache.spark.sql.types.StructType(Nil),
-      dataSchema = schema,
+      partitionSchema = index.partitionSchema,
+      dataSchema = dataSchema,
       bucketSpec = None,
       fileFormat =
         new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),

@@ -177,6 +177,24 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(metrics("files_deleted") == "1")
   }
 
+  test("spark.sql resolves a name registered with registerDelta on the " +
+      "same session") {
+    val d = Files.createTempDirectory("graft_ext_reg").toFile
+    d.deleteOnExit()
+    val p = new java.io.File(d, "tbl").getAbsolutePath
+    val region = TestSpark.spark.read.parquet(s"${TestSpark.sf}/region.parquet")
+    CommitWriter.createTable(extSpark, region.repartition(2), p)
+    val f = DeltaTable.forPath(extSpark, p).allFiles
+      .select("path").collect().head.getString(0)
+    CommitWriter.commitRemoves(extSpark, p, Seq(f))
+    new GraftSession(extSpark).registerDelta("ext_reg_vac", p)
+    val dry = extSpark.sql("VACUUM ext_reg_vac RETAIN 0 HOURS DRY RUN")
+      .collect()
+    assert(dry.length == 1 && dry.head.getString(0).endsWith(f),
+      dry.mkString("; "))
+    assert(dry.head.getString(0).contains(p), dry.head.getString(0))
+  }
+
   test("non-extension SQL still parses normally") {
     assert(extSpark.sql("SELECT 1 + 1 AS two").head().getInt(0) == 2)
     // VACUUM with bad grammar falls back to Spark's parser error

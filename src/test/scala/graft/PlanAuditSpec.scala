@@ -114,6 +114,14 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(p.contains("GraftDeltaFileIndex"), p.take(3000))
     assert(p.contains("LessThanOrEqual(o_orderkey,1000)"), p.take(3000))
     assert(p.contains("ColumnarToRow"), "vectorized parquet read expected")
+    // the composed read of an unpartitioned table scans the same index
+    val snap = graft.delta.DeltaTable.forPath(spark,
+      graft.queries.DeltaQueries.rangedTable(spark, sf))
+    val composed = snap.readWhere(
+      org.apache.spark.sql.functions.col("o_orderkey") <= 1000)
+      .queryExecution.explainString(ExplainMode.fromString("formatted"))
+    assert(composed.contains("Location: GraftDeltaFileIndex"),
+      composed.take(3000))
   }
 
   test("DSv2 scan: stats skipping prunes file splits at plan time") {

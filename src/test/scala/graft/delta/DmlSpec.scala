@@ -454,4 +454,79 @@ class DmlSpec extends AnyFunSuite {
     assert(after.where(col("o_orderkey") < 50)
       .select("o_totalprice").distinct().head.getDouble(0) == 4.5)
   }
+
+  /** A copy-on-write DELETE over `files` single-row-pair files that
+    * rewrites every one of them: commit 1 removes `files` files whose
+    * log entries carry no size or mtime. */
+  private def cowDeleteEveryFile(name: String, files: Int): String = {
+    val p = tmp(name)
+    CommitWriter.createTable(spark,
+      spark.range(0, 2L * files, 1, files).toDF(), p)
+    assert(DeltaTable.forPath(spark, p).allFiles.count() == files)
+    DmlCommands.delete(spark, p, col("id") % 2 === 0)
+    p
+  }
+
+  test("the change feed reads a DELETE's removed files without a " +
+      "listing job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // above spark.sql.sources.parallelPartitionDiscovery.threshold (32),
+    // where a listing of the removed paths becomes a distributed job
+    val p = cowDeleteEveryFile("cdf_no_listing", 34)
+    val snap = DeltaTable.forPath(spark, p)
+    val sc = spark.sparkContext
+    val group = s"cdf-listing-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach(pr => seen.add((
+          String.valueOf(pr.getProperty("spark.jobGroup.id")),
+          String.valueOf(pr.getProperty("spark.job.description")))))
+    }
+    sc.addSparkListener(listener)
+    val rows = try {
+      sc.setJobGroup(group, "change feed")
+      val r = try graft.delta.scan.CommitRangeScan
+        .changesBetween(spark, p, snap, 0L, 1L)
+        .select("id", "_change_type").collect()
+      finally sc.clearJobGroup()
+      // a marker job shares the listener queue: once it is seen, every
+      // earlier job event has been delivered
+      sc.setJobGroup(s"$group-end", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.toArray.exists(_ == ((s"$group-end", "marker"))) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      r
+    } finally sc.removeSparkListener(listener)
+    val listings = seen.toArray.collect {
+      case (g: String, d: String)
+          if g == group && d.startsWith("Listing leaf files") => d
+    }
+    assert(listings.isEmpty, s"listing jobs: ${listings.mkString("; ")}")
+    assert(rows.map(r => (r.getLong(0), r.getString(1))).sorted.toSeq ==
+      (0L until 68L by 2L).map(_ -> "delete"))
+  }
+
+  test("a removed file deleted out of band fails the change feed with " +
+      "an error naming the file and the table") {
+    val p = cowDeleteEveryFile("cdf_missing_file", 3)
+    val snap = DeltaTable.forPath(spark, p)
+    val logDir = new java.io.File(p, "_delta_log")
+    val commit1 = scala.io.Source.fromFile(
+      new java.io.File(logDir, f"${1}%020d.json"))
+    val removed = try commit1.getLines()
+      .filter(_.contains("\"remove\"")).map { l =>
+        new com.fasterxml.jackson.databind.ObjectMapper().readTree(l)
+          .get("remove").get("path").asText()
+      }.toVector finally commit1.close()
+    assert(removed.length == 3)
+    assert(new java.io.File(p, removed.head).delete())
+    val e = intercept[IllegalStateException] {
+      graft.delta.scan.CommitRangeScan
+        .changesBetween(spark, p, snap, 0L, 1L).collect()
+    }
+    assert(e.getMessage.contains(removed.head), e.getMessage)
+    assert(e.getMessage.contains(p), e.getMessage)
+  }
 }

@@ -1,10 +1,11 @@
 package graft.delta
 
 import java.nio.file.Files
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.delta.log.CommitWriter
+import graft.delta.log.{Actions, CommitWriter, LogSegment}
 import graft.delta.sources.GraftDeltaFileIndex
 
 /** Dynamic partition pruning on the native DSv2 path: Spark's own
@@ -20,6 +21,22 @@ class RuntimeFilteringSpec extends AnyFunSuite {
     val d = Files.createTempDirectory(s"graft_dpp_$name").toFile
     d.deleteOnExit()
     new java.io.File(d, "tbl").getAbsolutePath
+  }
+
+  /** Copy the table's first live file to `rel` and commit it as a new
+    * add with `partitionValues`: a layout the protocol allows but no
+    * directory listing reproduces. */
+  private def addCopy(p: String, rel: String,
+      partitionValues: Map[String, String]): Unit = {
+    val fs = LogSegment.fs(spark, new Path(p))
+    val src = DeltaTable.forPath(spark, p).allFiles
+      .select("path").head.getString(0)
+    FileUtil.copy(fs, new Path(p, src), fs, new Path(p, rel), false,
+      spark.sparkContext.hadoopConfiguration)
+    val st = fs.getFileStatus(new Path(p, rel))
+    CommitWriter.commit(spark, p, 1L, Seq(CommitWriter.addJson(
+      Actions.AddFile(rel, partitionValues, st.getLen,
+        st.getModificationTime, dataChange = true, stats = None))), "WRITE")
   }
 
   test("broadcast join against a filtered dim prunes fact partitions") {
@@ -63,6 +80,30 @@ class RuntimeFilteringSpec extends AnyFunSuite {
         .select(sum("id")).head.getLong(0))
   }
 
+  test("each file keeps its own log partition values, even when two " +
+      "files share a directory") {
+    val p = tmp("shared_dir")
+    CommitWriter.createTable(spark,
+      spark.range(5).select(col("id"), lit(1).as("part")).repartition(1),
+      p, partitionColumns = Seq("part"))
+    // the protocol ties partition values to the add action, not to the
+    // directory: a copy of the part=1 file lands in the SAME directory
+    // with partitionValues part=2
+    addCopy(p, "part=1/copy-as-part-2.parquet", Map("part" -> "2"))
+
+    val snap = DeltaTable.forPath(spark, p)
+    def perPart(df: org.apache.spark.sql.DataFrame): Map[Int, Long] =
+      df.groupBy("part").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    // native DSv2 route and composed route agree, file by file
+    assert(perPart(snap.read) == Map(1 -> 5L, 2 -> 5L))
+    assert(perPart(snap.readWhere()) == Map(1 -> 5L, 2 -> 5L))
+    // partition pruning on the DSv2 route evaluates each file's values
+    val ds = spark.read.format("graftdelta").option("path", p).load()
+    assert(ds.where(col("part") === 2).count() == 5L)
+    assert(ds.where(col("part") === 1).count() == 5L)
+  }
+
   test("unpartitioned tables keep the bare ParquetScan (no wrapper)") {
     val p = tmp("flat")
     CommitWriter.createTable(spark,
@@ -74,5 +115,18 @@ class RuntimeFilteringSpec extends AnyFunSuite {
     }
     assert(scans == Seq("ParquetScan"), s"got $scans")
     assert(df.count() == 100L)
+  }
+
+  test("an unpartitioned table reads a file outside its root directory " +
+      "on the DSv2 route") {
+    val p = tmp("outside_root")
+    CommitWriter.createTable(spark, spark.range(3).repartition(1).toDF(), p)
+    // the protocol allows an add anywhere under the table (and absolute
+    // paths, as a shallow clone writes); the index lists the log, not
+    // the root directory
+    addCopy(p, "sub/copy.parquet", Map.empty)
+    val ds = spark.read.format("graftdelta").option("path", p).load()
+    assert(ds.count() == 6L)
+    assert(DeltaTable.forPath(spark, p).readWhere().count() == 6L)
   }
 }
