@@ -106,8 +106,9 @@ object AnalyzeCommand {
     // only if a winner removed/rewrote a file being re-stamped (our
     // re-add would otherwise resurrect it)
     val touched = stale.map(_.getAs[String]("path")).toSet
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      reAdds.map(CommitWriter.addJson).toSeq, operation = "ANALYZE",
+    val reAddActions = reAdds.map(CommitWriter.addJson).toSeq
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => reAddActions, operation = "ANALYZE",
       profile = ConflictChecker.TxnProfile(
         readPaths = touched, removePaths = touched))
     metrics(spark, stale.length, total.toInt - stale.length)

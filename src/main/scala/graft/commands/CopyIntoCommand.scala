@@ -60,34 +60,23 @@ object CopyIntoCommand {
       "COPY INTO into an identity-column table is not supported (a lost " +
         "commit race could not blindly re-land the allocated values); " +
         "use append")
-    val df = spark.read.parquet(fresh: _*)
-    val completed = graft.delta.log.GeneratedColumns.complete(
-      graft.delta.log.ColumnDefaults.complete(df, meta), meta)
-    CommitWriter.validateWriteSchema(completed, meta, "COPY INTO")
-    val adds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(
-        graft.delta.log.Constraints.enforce(completed, meta), meta),
-      tablePath, CommitWriter.physicalPartitionColumns(meta),
-      configuration = meta.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(meta))
+    val w = CommitWriter.stageWrite(spark, spark.read.parquet(fresh: _*),
+      tablePath, meta, mergeSchema = false, "COPY INTO")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows = adds.flatMap(_.stats).map(s =>
+    val rows = w.adds.flatMap(_.stats).map(s =>
       Option(mapper.readTree(s).get("numRecords"))
         .map(_.asLong()).getOrElse(0L)).sum
 
     val now = System.currentTimeMillis()
     val txns = fresh.map(p => CommitWriter.txnJson(
       Actions.SetTransaction(AppIdPrefix + p, now, Some(now))))
-    val addActionsFor =
-      DmlCommands.rowTrackedAddActions(spark, snap, adds)
-    def actionsFor(v: Long): Seq[String] = {
+    def actionsFor(parent: LogSegment): Seq[String] = {
       // a rebase means another writer landed meanwhile; if it was a
       // racing COPY INTO of any of the SAME files, re-landing ours
       // would double-ingest — fail loudly instead (a re-run diffs
       // against the now-recorded txns and becomes a clean no-op)
-      if (v != snap.version + 1) {
-        val tip = LogSegment.forTable(spark, snap.tablePath)
-        val nowLoaded = Replay.actionsDF(spark, tip)
+      if (parent ne snap.segment) {
+        val nowLoaded = Replay.actionsDF(spark, parent)
           .where(col("txn.appId").startsWith(AppIdPrefix))
           .select(col("txn.appId")).distinct()
           .collect().map(_.getString(0).stripPrefix(AppIdPrefix)).toSet
@@ -99,9 +88,9 @@ object CopyIntoCommand {
             s"these source files (e.g. ${clash.head}) — re-run COPY " +
             "INTO; it will skip them")
       }
-      txns ++ addActionsFor(v)
+      txns ++ w.actions(spark, parent)
     }
-    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.version,
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
       actionsFor, operation = "COPY INTO",
       profile = ConflictChecker.TxnProfile(),
       operationParameters = Map("source" -> sourceDir,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
 import graft.delta.{DeltaTable, Snapshot}
-import graft.delta.log.{Actions, CommitWriter}
+import graft.delta.log.{Actions, CommitWriter, RowTracking}
 import graft.delta.log.Actions.{AddFile, DeletionVectorDescriptor, RemoveFile}
 import graft.delta.scan.{DeltaScan, DvBitmap}
 
@@ -156,7 +156,7 @@ object DmlCommands {
     graft.delta.log.ProtocolSupport.assertWritable(
       tablePath, snap.metadata, snap.protocol, dataChangingRemoves = true,
       producesCdc = cdfOn)
-    require(!graft.delta.log.RowTracking.enabled(snap.metadata),
+    require(!RowTracking.enabled(snap.metadata),
       s"copy-on-write $operation on a row-tracked table would move " +
         "surviving rows and reassign their ids — set " +
         "delta.enableDeletionVectors=true (merge-on-read preserves row " +
@@ -181,14 +181,10 @@ object DmlCommands {
     // renames back to physical names at the write boundary — the same
     // funnel every append takes — so mapped parquet never receives
     // logical-name columns.
-    val adds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(
-        graft.delta.log.Constraints.enforce(
-          graft.delta.log.GeneratedColumns.recompute(rewritten, snap.metadata),
-          snap.metadata), snap.metadata),
-      tablePath, CommitWriter.physicalPartitionColumns(snap.metadata),
-      configuration = snap.metadata.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(snap.metadata))
+    val adds = CommitWriter.writeTableFiles(spark,
+      graft.delta.log.Constraints.enforce(
+        graft.delta.log.GeneratedColumns.recompute(rewritten, snap.metadata),
+        snap.metadata), tablePath, snap.metadata)
     val cdcActions = if (!cdfOn) Seq.empty[String] else {
       val matched = DeltaScan.whereFileKeyIn(target, affected)
         .where(coalesce(condition, lit(false)))
@@ -204,9 +200,10 @@ object DmlCommands {
     // appends/compactions of partitions this predicate rules out) and
     // surface as typed conflicts otherwise — the affected files are
     // both this txn's read set and its remove set
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      removes.toIndexedSeq ++ adds.map(CommitWriter.addJson) ++ cdcActions,
-      operation,
+    val rewriteActions =
+      removes.toIndexedSeq ++ adds.map(CommitWriter.addJson) ++ cdcActions
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => rewriteActions, operation,
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         readPaths = affectedRel.toSet, removePaths = affectedRel.toSet,
         dependsOnNewData = true, predicate = Some(condition),
@@ -287,8 +284,8 @@ object DmlCommands {
     // entries are replaced); a winner touching any of them — or adding
     // rows this predicate could match — is a typed conflict
     val touched = written.map(w => info(w.fkey).relPath).toSet
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      protoUpgrade ++ actions ++ cdcActions, "DELETE",
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => protoUpgrade ++ actions ++ cdcActions, "DELETE",
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         readPaths = touched, removePaths = touched,
         dependsOnNewData = true, predicate = Some(condition),
@@ -377,14 +374,10 @@ object DmlCommands {
         case (d, (name, value)) => d.withColumn(name, value)
       }
       .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
-    val adds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(
-        graft.delta.log.Constraints.enforce(
-          graft.delta.log.GeneratedColumns.recompute(updated, snap.metadata),
-          snap.metadata), snap.metadata),
-      tablePath, CommitWriter.physicalPartitionColumns(snap.metadata),
-      configuration = snap.metadata.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(snap.metadata))
+    val adds = CommitWriter.writeTableFiles(spark,
+      graft.delta.log.Constraints.enforce(
+        graft.delta.log.GeneratedColumns.recompute(updated, snap.metadata),
+        snap.metadata), tablePath, snap.metadata)
 
     // CDC pre-images are the live rows matching the condition; the
     // post-images are exactly the row images written above
@@ -406,9 +399,10 @@ object DmlCommands {
     val touched = written.map(w => info(w.fkey).relPath).toSet
     // row-tracked tables: the updated row images are NEW rows and get
     // fresh ids (the masked pre-images keep theirs via maskActions)
-    val newAddActions = rowTrackedAddActions(spark, snap, adds)
-    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.version,
-      v => protoUpgrade ++ actions ++ newAddActions(v) ++ cdcActions,
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      parent => protoUpgrade ++ actions ++
+        RowTracking.addActions(spark, snap.metadata, adds, parent) ++
+        cdcActions,
       "UPDATE",
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         readPaths = touched, removePaths = touched,
@@ -416,29 +410,6 @@ object DmlCommands {
         schema = snap.schema, partitionColumns = snap.partitionColumns),
       operationParameters = predicateParam(condition))
     dvMetrics(spark, "UPDATE", masked, fullyRemoved, rowsUpdated, adds.size)
-  }
-
-  /** Add-action builder honoring row tracking: on row-tracked tables
-    * the new files' rows get fresh ids stamped with the actual commit
-    * version per attempt — and the high-water mark is RE-read from the
-    * then-current tip on every attempt, because the conflict rules
-    * deliberately let a DML rebase over partition-disjoint data winners
-    * (which DO advance the mark): stamping from the snapshot-time mark
-    * would duplicate the winner's ids and roll the domain back. */
-  private[graft] def rowTrackedAddActions(spark: SparkSession,
-      snap: Snapshot, adds: Seq[Actions.AddFile]): Long => Seq[String] = {
-    import graft.delta.log.{LogSegment, RowTracking}
-    if (!RowTracking.enabled(snap.metadata) || adds.isEmpty)
-      _ => adds.map(CommitWriter.addJson)
-    else { v =>
-      val tip =
-        if (v == snap.version + 1) snap.segment
-        else LogSegment.forTable(spark, snap.tablePath,
-          versionAsOf = Some(v - 1))
-      val (stamped, domain) = RowTracking.stamp(adds,
-        RowTracking.highWaterMark(spark, tip), v)
-      domain +: stamped.map(CommitWriter.addJson)
-    }
   }
 
   /** Shared DV construction: scan with (file, row index) provenance,

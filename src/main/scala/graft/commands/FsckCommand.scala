@@ -90,8 +90,8 @@ object FsckCommand {
       CommitWriter.removeJson(RemoveFile(p, Some(now), dataChange = true))
     }
     val paths = missing.map(_._1).toSet
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      removes, "FSCK",
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => removes, "FSCK",
       profile = ConflictChecker.TxnProfile(
         readPaths = paths, removePaths = paths, dependsOnNewData = true))
     metrics(spark, missing.size)

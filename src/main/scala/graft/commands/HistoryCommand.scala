@@ -232,8 +232,9 @@ object HistoryCommand {
     // driver); removePaths is the restore's own remove set — already
     // collected as the diff — so a del/del race keeps its
     // ConcurrentDeleteDelete classification.
-    CommitWriter.commitWithRebase(spark, tablePath, current.version,
-      metaAction ++ removes ++ adds, operation = s"RESTORE VERSION $version",
+    val restoreActions = metaAction ++ removes ++ adds
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, current.segment,
+      _ => restoreActions, operation = s"RESTORE VERSION $version",
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         removePaths = removedPaths.toSet,
         dependsOnNewData = true, readsWholeTable = true))

@@ -104,16 +104,12 @@ object MergeCommand {
     if (DmlCommands.dvEnabled(snap)) {
       val (written, info) = DmlCommands.buildDvs(spark, tablePath, snap,
         touched)
-      val adds = CommitWriter.writeFiles(spark,
-        CommitWriter.toPhysicalNames(
-          graft.delta.log.Constraints.enforce(
-            graft.delta.log.GeneratedColumns.recompute(
-              src.select(snap.schema.fieldNames.map(col).toIndexedSeq: _*),
-              snap.metadata),
-            snap.metadata), snap.metadata),
-        tablePath, CommitWriter.physicalPartitionColumns(snap.metadata),
-        configuration = snap.metadata.configuration,
-        statsColumnOrder = CommitWriter.statsOrderOf(snap.metadata))
+      val adds = CommitWriter.writeTableFiles(spark,
+        graft.delta.log.Constraints.enforce(
+          graft.delta.log.GeneratedColumns.recompute(
+            src.select(snap.schema.fieldNames.map(col).toIndexedSeq: _*),
+            snap.metadata),
+          snap.metadata), tablePath, snap.metadata)
       val (actions, masked, fullyRemoved, _) =
         DmlCommands.maskActions(written, info)
       val protoUpgrade = graft.delta.log.ProtocolSupport
@@ -128,9 +124,9 @@ object MergeCommand {
         bySourceDelete, cdfOn)
       // source rows are new rows: row-tracked tables stamp fresh ids
       // (masked pre-images keep theirs through maskActions)
-      val newAddActions = DmlCommands.rowTrackedAddActions(spark, snap, adds)
-      CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.version,
-        v => protoUpgrade ++ actions ++ newAddActions(v) ++ cdc,
+      CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+        parent => protoUpgrade ++ actions ++ graft.delta.log.RowTracking
+          .addActions(spark, snap.metadata, adds, parent) ++ cdc,
         operation = "MERGE",
         profile = graft.delta.log.ConflictChecker.TxnProfile(
           readPaths = touchedPaths, removePaths = touchedPaths,
@@ -178,20 +174,18 @@ object MergeCommand {
 
     // merged-in source rows must honor the table's CHECK constraints;
     // generated columns are recomputed from the post-merge base columns
-    val adds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(
-        graft.delta.log.Constraints.enforce(
-          graft.delta.log.GeneratedColumns.recompute(rewritten, snap.metadata),
-          snap.metadata), snap.metadata),
-      tablePath, CommitWriter.physicalPartitionColumns(snap.metadata),
-      configuration = snap.metadata.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(snap.metadata))
+    val adds = CommitWriter.writeTableFiles(spark,
+      graft.delta.log.Constraints.enforce(
+        graft.delta.log.GeneratedColumns.recompute(rewritten, snap.metadata),
+        snap.metadata), tablePath, snap.metadata)
     val now = System.currentTimeMillis()
     val removes = affectedRel.map(p => CommitWriter.removeJson(
       Actions.RemoveFile(p, Some(now), dataChange = true)))
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      removes.toIndexedSeq ++ adds.map(CommitWriter.addJson) ++
-        cdcActions(spark, snap, tablePath, src, keys, bySourceDelete, cdfOn),
+    val rewriteActions = removes.toIndexedSeq ++
+      adds.map(CommitWriter.addJson) ++
+      cdcActions(spark, snap, tablePath, src, keys, bySourceDelete, cdfOn)
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => rewriteActions,
       operation = "MERGE",
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         readPaths = affectedRel.toSet, removePaths = affectedRel.toSet,
@@ -251,8 +245,9 @@ object MergeCommand {
         .withDeletionVectors(snap.protocol)
         .map(CommitWriter.protocolJson).toSeq
       val touched = written.map(w => info(w.fkey).relPath).toSet
-      CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-        protoUpgrade ++ actions ++ deleteCdc(),
+      val dvActions = protoUpgrade ++ actions ++ deleteCdc()
+      CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+        _ => dvActions,
         operation = "MERGE",
         profile = graft.delta.log.ConflictChecker.TxnProfile(
           readPaths = touched, removePaths = touched,
@@ -282,21 +277,18 @@ object MergeCommand {
     val affectedRel = DmlCommands.affectedRelPaths(spark, snap, affected)
     // survivors of affected files (unchanged rows — no constraint or
     // generated-column recomputation needed, nothing was modified)
-    val adds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(
-        DeltaScan.whereFileKeyIn(target, affected)
-          .join(srcKeys, keys, "left_anti")
-          .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*),
-        snap.metadata),
-      tablePath, CommitWriter.physicalPartitionColumns(snap.metadata),
-      configuration = snap.metadata.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(snap.metadata))
+    val adds = CommitWriter.writeTableFiles(spark,
+      DeltaScan.whereFileKeyIn(target, affected)
+        .join(srcKeys, keys, "left_anti")
+        .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*),
+      tablePath, snap.metadata)
     val now = System.currentTimeMillis()
     val removes = affectedRel.map(p => CommitWriter.removeJson(
       Actions.RemoveFile(p, Some(now), dataChange = true)))
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      removes.toIndexedSeq ++ adds.map(CommitWriter.addJson) ++
-        deleteCdc(),
+    val rewriteActions = removes.toIndexedSeq ++
+      adds.map(CommitWriter.addJson) ++ deleteCdc()
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => rewriteActions,
       operation = "MERGE",
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         readPaths = affectedRel.toSet, removePaths = affectedRel.toSet,

@@ -280,12 +280,8 @@ object OptimizeCommand {
           .sortWithinPartitions(keys: _*)
           .drop(zorderHelperCols(effZorder): _*)
       }
-    val adds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(rewritten, snap.metadata),
-      tablePath, CommitWriter.physicalPartitionColumns(snap.metadata),
-      dataChange = false,
-      configuration = snap.metadata.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(snap.metadata))
+    val adds = CommitWriter.writeTableFiles(spark, rewritten, tablePath,
+      snap.metadata, dataChange = false)
 
     val now = System.currentTimeMillis()
     val actions = Seq.newBuilder[String]
@@ -302,8 +298,9 @@ object OptimizeCommand {
     // compacted. Compaction never blocking ingest is what makes
     // continuous background OPTIMIZE viable on a table under load.
     val compacted = files.map(_._1).toSet
-    CommitWriter.commitWithRebase(spark, tablePath, snap.version,
-      actions.result(), operation = "OPTIMIZE",
+    val compaction = actions.result()
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      _ => compaction, operation = "OPTIMIZE",
       profile = graft.delta.log.ConflictChecker.TxnProfile(
         readPaths = compacted, removePaths = compacted))
     metrics(spark, partitions.length, files.length, adds.length)

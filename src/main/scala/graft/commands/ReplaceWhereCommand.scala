@@ -69,11 +69,8 @@ object ReplaceWhereCommand {
         raise_error(concat(
           lit("replaceWhere: incoming row does not satisfy the " +
             "predicate: "), rowJson)).cast("boolean"))
-    val newAdds = CommitWriter.writeFiles(spark,
-      CommitWriter.toPhysicalNames(Constraints.enforce(guarded, meta), meta),
-      tablePath, CommitWriter.physicalPartitionColumns(meta),
-      configuration = meta.configuration,
-      statsColumnOrder = CommitWriter.statsOrderOf(meta))
+    val newAdds = CommitWriter.writeTableFiles(spark,
+      Constraints.enforce(guarded, meta), tablePath, meta)
 
     // Remove set + survivor rewrites, by predicate kind.
     val partSet = snap.partitionColumns.map(_.toLowerCase).toSet
@@ -135,11 +132,8 @@ object ReplaceWhereCommand {
         val survivors = DeltaScan.whereFileKeyIn(target, affected)
           .where(!coalesce(condition.cast("boolean"), lit(false)))
           .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*)
-        val adds = CommitWriter.writeFiles(spark,
-          CommitWriter.toPhysicalNames(survivors, meta), tablePath,
-          CommitWriter.physicalPartitionColumns(meta),
-          configuration = meta.configuration,
-          statsColumnOrder = CommitWriter.statsOrderOf(meta))
+        val adds = CommitWriter.writeTableFiles(spark, survivors, tablePath,
+          meta)
         val removes = affectedRel.map(p => CommitWriter.removeJson(
           RemoveFile(p, Some(now), dataChange = true)))
         (removes, adds, affectedRel.toSet)
@@ -164,29 +158,22 @@ object ReplaceWhereCommand {
 
     // One commit. Row-tracked tables stamp fresh ids on the incoming
     // files per attempt (survivor rewrites only exist on the CoW path,
-    // which refuses row tracking — the concat is safe).
-    val addActionsFor =
-      DmlCommands.rowTrackedAddActions(spark, snap, newAdds ++ survivorAdds)
+    // which refuses row tracking — the concat is safe); an identity
+    // write makes a single attempt.
     val identityUpdate = IdentityColumns.advance(meta, newAdds)
-    def actionsFor(v: Long): Seq[String] =
-      protoUpgrade ++ identityUpdate.map(CommitWriter.metadataJson).toSeq ++
-        removeActions ++ addActionsFor(v) ++ cdcActions
-    val opParams = DmlCommands.predicateParam(condition)
-    if (identityUpdate.isDefined) {
-      // identity allocation is not blind-retryable (values must be
-      // re-allocated from the advanced high-water mark) — same rule as
-      // append/overwrite
-      CommitWriter.commit(spark, tablePath, snap.version + 1,
-        actionsFor(snap.version + 1), operation = "WRITE", opParams)
-    } else {
-      CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.version,
-        actionsFor, operation = "WRITE",
-        profile = ConflictChecker.TxnProfile(
-          readPaths = removedRel, removePaths = removedRel,
-          dependsOnNewData = true, predicate = Some(condition),
-          schema = snap.schema, partitionColumns = snap.partitionColumns),
-        operationParameters = opParams)
-    }
+    CommitWriter.commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      parent => protoUpgrade ++
+        identityUpdate.map(CommitWriter.metadataJson).toSeq ++
+        removeActions ++
+        RowTracking.addActions(spark, meta, newAdds ++ survivorAdds, parent) ++
+        cdcActions,
+      operation = "WRITE",
+      profile = ConflictChecker.TxnProfile(
+        readPaths = removedRel, removePaths = removedRel,
+        dependsOnNewData = true, predicate = Some(condition),
+        schema = snap.schema, partitionColumns = snap.partitionColumns),
+      operationParameters = DmlCommands.predicateParam(condition),
+      allocatesIdentity = identityUpdate.isDefined)
     CommandResult.metrics(spark, "operation" -> "REPLACE WHERE",
       "files_removed" -> removedRel.size.toString,
       "files_added" -> (newAdds.size + survivorAdds.size).toString)

@@ -57,9 +57,8 @@ object CommitWriter {
       .foreach(validateStatsColumns(_, df.schema, partCols))
     // founding rows must honor delta.constraints.* passed at creation
     // (CTAS TBLPROPERTIES) exactly like every later write path does
-    val rawAdds = writeFiles(spark, Constraints.enforce(df, meta),
-      tablePath, partCols, configuration = configuration,
-      statsColumnOrder = statsOrderOf(meta))
+    val rawAdds = writeTableFiles(spark, Constraints.enforce(df, meta),
+      tablePath, meta)
     // a table born with a feature-gated property must declare the
     // feature from version 0 (a legacy reader would otherwise silently
     // resurrect DV-deleted rows; a legacy writer would skip ICTs)
@@ -164,12 +163,6 @@ object CommitWriter {
         .putString("delta.columnMapping.physicalName", s"col-${i + 1}")
         .build())
     }
-    val physDf = df.toDF(mappedFields.indices.map(i => s"col-${i + 1}"): _*)
-    // the hive layout and AddFile.partitionValues key by PHYSICAL name
-    val physPartCols = partitionColumns.map { c =>
-      val i = df.schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
-      s"col-${i + 1}"
-    }
     val meta = Metadata(
       id = UUID.randomUUID().toString,
       name = None, description = None, format = Format(),
@@ -184,8 +177,8 @@ object CommitWriter {
         "delta.columnMapping.mode" -> "name",
         "delta.columnMapping.maxColumnId" -> mappedFields.length.toString),
       createdTime = Some(System.currentTimeMillis()))
-    val adds = writeFiles(spark, physDf, tablePath, physPartCols,
-      configuration = meta.configuration)
+    // data files and the hive layout use the PHYSICAL names
+    val adds = writeTableFiles(spark, df, tablePath, meta)
     commit(spark, tablePath, 0L,
       Seq(protocolJson(Protocol(2, 5)), metadataJson(meta)) ++
         adds.map(addJson),
@@ -351,157 +344,135 @@ object CommitWriter {
         "write (the read path would impute null into a NOT NULL column)")
   }
 
-  /** Commit `actionLines` at `readVersion + 1`, rebasing across lost
-    * races: on a ConcurrentCommitException the winner commits are read
-    * and classified ([[ConflictChecker]]), and when none of them
-    * logically conflicts with `profile` the SAME actions are re-attempted
-    * at the new tip (data files are written once; only the commit JSON
-    * retries). A real conflict surfaces as a typed
-    * ConcurrentCommitException subclass naming what clashed. */
+  /** [[commitWithRebaseVersioned]] for a caller that holds only the
+    * version it read and commits the same actions on every attempt:
+    * resolves that version's segment (one listing) as the first parent. */
   def commitWithRebase(spark: SparkSession, tablePath: String,
       readVersion: Long, actionLines: Seq[String], operation: String,
       profile: ConflictChecker.TxnProfile,
       operationParameters: Map[String, String] = Map.empty,
       maxRetries: Int = 10): Long =
-    commitWithRebaseVersioned(spark, tablePath, readVersion,
+    commitWithRebaseVersioned(spark, tablePath,
+      LogSegment.forTable(spark, new Path(tablePath), Some(readVersion)),
       _ => actionLines, operation, profile, operationParameters, maxRetries)
 
-  /** [[commitWithRebase]] for actions that embed the commit version
-    * (e.g. row tracking's defaultRowCommitVersion): `actionsFor` is
-    * re-invoked with the actual target version on every rebase. */
+  /** The one optimistic-concurrency loop every write commits through.
+    * Each attempt lands at `parent.version + 1`, with the actions
+    * `actionsFor(parent)` builds for that parent: `read` (the segment
+    * the caller read) on the first attempt, then the tip this loop
+    * resolves after a lost race. On a lost race the winner commits are
+    * read and classified ([[ConflictChecker]]); when none of them
+    * logically conflicts with `profile` the next attempt lands on the
+    * new tip (data files are written once; only the commit JSON
+    * retries), and a real conflict surfaces as a typed
+    * ConcurrentCommitException subclass naming what clashed. So
+    * whatever an attempt derives from its parent (row-id high-water
+    * mark, an idempotence re-check) is re-derived per attempt without
+    * another listing.
+    *
+    * @param allocatesIdentity the actions carry identity values baked
+    *   into the data files. A winner may have allocated from the same
+    *   high-water mark, so such a write makes exactly one attempt and a
+    *   lost race asks the caller to re-run it. */
   def commitWithRebaseVersioned(spark: SparkSession, tablePath: String,
-      readVersion: Long, actionsFor: Long => Seq[String], operation: String,
-      profile: ConflictChecker.TxnProfile,
+      read: LogSegment, actionsFor: LogSegment => Seq[String],
+      operation: String, profile: ConflictChecker.TxnProfile,
       operationParameters: Map[String, String] = Map.empty,
-      maxRetries: Int = 10): Long = {
-    var base = readVersion
+      maxRetries: Int = 10, allocatesIdentity: Boolean = false): Long = {
+    var parent = read
     var attempts = 0
     while (true) {
+      val v = parent.version + 1
       try {
-        commit(spark, tablePath, base + 1, actionsFor(base + 1), operation,
+        commit(spark, tablePath, v, actionsFor(parent), operation,
           operationParameters)
-        return base + 1
+        return v
       } catch {
         case e: ConcurrentCommitException =>
+          if (allocatesIdentity)
+            throw new ConcurrentCommitException(
+              s"concurrent commit while allocating identity values for " +
+                s"$tablePath — re-run the write (values must be " +
+                "re-allocated from the advanced high-water mark)", e)
           attempts += 1
           if (attempts > maxRetries) throw e
-          val tip = LogSegment.forTable(spark, new Path(tablePath)).version
+          val tip = LogSegment.forTable(spark, new Path(tablePath))
           // a lost race with no newer commit visible is unresolvable
           // (e.g. an eventually-consistent listing); surface it raw
-          if (tip <= base) throw e
+          if (tip.version <= parent.version) throw e
           // throws a typed subclass on a real conflict — thrown inside
           // this catch, so it propagates to the caller untouched
           ConflictChecker.check(spark, tablePath,
-            ConflictChecker.winners(spark, tablePath, base + 1, tip),
+            ConflictChecker.winners(spark, tablePath, v, tip.version),
             profile, e)
-          base = tip
+          parent = tip
       }
     }
     -1L // unreachable
+  }
+
+  /** A data write staged in a table's layout: the metadata it was
+    * validated against, its data files, the one metadata action its
+    * commit carries (identity advance and/or schema evolution), and
+    * whether it allocated identity values. */
+  private[graft] final case class StagedWrite(meta: Metadata,
+      adds: Seq[AddFile], metaUpdate: Option[Metadata],
+      allocatesIdentity: Boolean) {
+    /** The commit's actions on top of `parent`: the metadata action,
+      * `removes`, then the adds (row ids stamped from the parent). */
+    def actions(spark: SparkSession, parent: LogSegment,
+        removes: Seq[String] = Seq.empty): Seq[String] =
+      metaUpdate.map(metadataJson).toSeq ++ removes ++
+        RowTracking.addActions(spark, meta, adds, parent)
+  }
+
+  /** The completion step every append-shaped write shares: evolve the
+    * schema when asked, complete `df` (identity values, column
+    * defaults, generated columns), validate it against the table
+    * schema, enforce CHECK constraints and write it in the table's
+    * layout. Identity appends carry the advanced high-water mark in the
+    * same metadata action as the evolved schema (advance starts from
+    * the already-evolved metadata). */
+  private[graft] def stageWrite(spark: SparkSession, df: DataFrame,
+      tablePath: String, tableMeta: Metadata, mergeSchema: Boolean,
+      op: String): StagedWrite = {
+    val evolvedMeta =
+      if (mergeSchema) mergedWriteSchema(tableMeta, df.schema, op) else None
+    val meta = evolvedMeta.getOrElse(tableMeta)
+    val completed = GeneratedColumns.complete(
+      ColumnDefaults.complete(IdentityColumns.assign(df, meta), meta),
+      meta)
+    validateWriteSchema(completed, meta, op)
+    val adds = writeTableFiles(spark, Constraints.enforce(completed, meta),
+      tablePath, meta)
+    val identityUpdate = IdentityColumns.advance(meta, adds)
+    StagedWrite(meta, adds, identityUpdate.orElse(evolvedMeta),
+      identityUpdate.isDefined)
   }
 
   /** Append `df` to an existing table as the next commit. Blind appends
     * depend on no row content, so a lost race rebases at the next
     * version unless a winner changed the table contract itself
-    * (protocol/metadata — the conflict-checker rules). Data files are
-    * written once; only the commit retries. */
+    * (protocol/metadata — the conflict-checker rules); row-tracked
+    * appends re-stamp their ids from each attempt's parent. Schema
+    * evolution without identity stays rebase-safe: the SAME evolved
+    * metadata re-commits at the new tip. */
   def append(spark: SparkSession, df: DataFrame, tablePath: String,
       maxRetries: Int = 10, mergeSchema: Boolean = false): Long = {
-    val segment = LogSegment.forTable(spark, new Path(tablePath))
-    val (meta0, proto) = Replay.metadataAndProtocol(spark, segment)
-    ProtocolSupport.assertWritable(tablePath, meta0, proto)
-    val evolvedMeta =
-      if (mergeSchema) mergedWriteSchema(meta0, df.schema, "append")
-      else None
-    val meta = evolvedMeta.getOrElse(meta0)
-    val completed = GeneratedColumns.complete(
-      ColumnDefaults.complete(IdentityColumns.assign(df, meta), meta),
-      meta)
-    validateWriteSchema(completed, meta, "append")
-    val adds = writeFiles(spark,
-      toPhysicalNames(Constraints.enforce(completed, meta), meta), tablePath,
-      physicalPartitionColumns(meta), configuration = meta.configuration,
-      statsColumnOrder = statsOrderOf(meta))
-    // identity appends carry the advanced high-water mark in the SAME
-    // commit as the adds; schema evolution rides the same metadata
-    // action (advance starts from the already-evolved metadata, so one
-    // action carries both)
-    val identityUpdate = IdentityColumns.advance(meta, adds)
-    val metaUpdate = identityUpdate.orElse(evolvedMeta)
-    if (identityUpdate.isDefined) {
-      // a lost race is NOT retryable when this commit allocated identity
-      // values: the winner may have allocated from the same high-water
-      // mark, so these baked-in values could collide — the caller must
-      // re-run the append against the new snapshot. Row tracking (if
-      // also on) stamps in the same single attempt — an identity table
-      // is still a row-tracked table.
-      val v = segment.version + 1
-      val addActions =
-        if (RowTracking.enabled(meta) && adds.nonEmpty) {
-          val (stamped, domain) = RowTracking.stamp(adds,
-            RowTracking.highWaterMark(spark, segment), v)
-          domain +: stamped.map(addJson)
-        } else adds.map(addJson)
-      try {
-        commit(spark, tablePath, v,
-          metaUpdate.map(metadataJson).toSeq ++ addActions,
-          operation = "WRITE")
-        v
-      } catch {
-        case e: ConcurrentCommitException =>
-          throw new ConcurrentCommitException(
-            s"concurrent commit while allocating identity values for " +
-              s"$tablePath — re-run the append (values must be " +
-              "re-allocated from the advanced high-water mark)", e)
-      }
-    } else if (RowTracking.enabled(meta) && adds.nonEmpty)
-      appendRowTracked(spark, tablePath, segment, adds, maxRetries,
-        prefixActions = evolvedMeta.map(metadataJson).toSeq)
-    else
-      // schema evolution without identity stays rebase-safe: the SAME
-      // evolved metadata re-commits at the new tip, and a winner's own
-      // metadata/protocol change conflicts via the checker
-      commitWithRebase(spark, tablePath, segment.version,
-        evolvedMeta.map(metadataJson).toSeq ++ adds.map(addJson),
-        operation = "WRITE",
-        profile = ConflictChecker.TxnProfile(), maxRetries = maxRetries)
+    val read = LogSegment.forTable(spark, new Path(tablePath))
+    val (meta, proto) = Replay.metadataAndProtocol(spark, read)
+    ProtocolSupport.assertWritable(tablePath, meta, proto)
+    val w = stageWrite(spark, df, tablePath, meta, mergeSchema, "append")
+    commitWithRebaseVersioned(spark, tablePath, read,
+      w.actions(spark, _), operation = "WRITE",
+      profile = ConflictChecker.TxnProfile(), maxRetries = maxRetries,
+      allocatesIdentity = w.allocatesIdentity)
   }
 
-  /** Row-tracked append: base row ids come from the tip's high-water
-    * mark, so unlike identity values a lost race IS safely retryable —
-    * the ids live only in the commit JSON (never baked into data files),
-    * and every attempt RE-reads the mark and re-stamps from the new tip.
-    * Two racing row-tracked appends therefore both land with disjoint
-    * id ranges; only a contract change (protocol/metadata) conflicts. */
-  private def appendRowTracked(spark: SparkSession, tablePath: String,
-      startSegment: LogSegment, adds: Seq[AddFile], maxRetries: Int,
-      prefixActions: Seq[String] = Seq.empty): Long = {
-    var seg = startSegment
-    var attempts = 0
-    while (true) {
-      val v = seg.version + 1
-      val hwm = RowTracking.highWaterMark(spark, seg)
-      val (stamped, domain) = RowTracking.stamp(adds, hwm, v)
-      try {
-        commit(spark, tablePath, v,
-          prefixActions ++ (domain +: stamped.map(addJson)),
-          operation = "WRITE")
-        return v
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > maxRetries) throw e
-          val tip = LogSegment.forTable(spark, new Path(tablePath))
-          if (tip.version <= seg.version) throw e
-          ConflictChecker.check(spark, tablePath,
-            ConflictChecker.winners(spark, tablePath, seg.version + 1,
-              tip.version),
-            ConflictChecker.TxnProfile(), e)
-          seg = tip
-      }
-    }
-    -1L // unreachable
-  }
+  /** Thrown by an [[appendIfAbsent]] attempt whose parent already
+    * records its (appId, txnVersion). */
+  private final class TxnAlreadyApplied
+    extends scala.util.control.ControlThrowable
 
   /** Idempotent append keyed by (appId, txnVersion) — the Delta
     * SetTransaction contract for exactly-once writers (e.g. streaming
@@ -510,79 +481,38 @@ object CommitWriter {
   def appendIfAbsent(spark: SparkSession, df: DataFrame, tablePath: String,
       appId: String, txnVersion: Long, maxRetries: Int = 10,
       mergeSchema: Boolean = false): Option[Long] = {
+    def applied(segment: LogSegment): Boolean =
+      txnVersionIn(spark, segment, appId).exists(_ >= txnVersion)
     // the idempotence check reads the SAME segment the commit builds on:
     // checked against an older listing, a replay could land on top of
     // the commit that already carries its txn
-    val segment = LogSegment.forTable(spark, new Path(tablePath))
-    if (txnVersionIn(spark, segment, appId).exists(_ >= txnVersion))
-      return None
-    val (meta0, proto) = Replay.metadataAndProtocol(spark, segment)
-    ProtocolSupport.assertWritable(tablePath, meta0, proto)
-    val evolvedMeta =
-      if (mergeSchema) mergedWriteSchema(meta0, df.schema, "appendIfAbsent")
-      else None
-    val meta = evolvedMeta.getOrElse(meta0)
-    val completed = GeneratedColumns.complete(
-      ColumnDefaults.complete(IdentityColumns.assign(df, meta), meta),
-      meta)
-    validateWriteSchema(completed, meta, "appendIfAbsent")
-    val adds = writeFiles(spark,
-      toPhysicalNames(Constraints.enforce(completed, meta), meta), tablePath,
-      physicalPartitionColumns(meta), configuration = meta.configuration,
-      statsColumnOrder = statsOrderOf(meta))
-    // one metadata action carries identity advance AND schema evolution
-    val metaUpdate = IdentityColumns.advance(meta, adds)
-      .orElse(evolvedMeta)
+    val read = LogSegment.forTable(spark, new Path(tablePath))
+    if (applied(read)) return None
+    val (meta, proto) = Replay.metadataAndProtocol(spark, read)
+    ProtocolSupport.assertWritable(tablePath, meta, proto)
+    val w = stageWrite(spark, df, tablePath, meta, mergeSchema,
+      "appendIfAbsent")
     val txn = txnJson(SetTransaction(appId, txnVersion,
       Some(System.currentTimeMillis())))
-    var seg = segment
-    var attempts = 0
-    while (true) {
-      val v = seg.version + 1
-      // row-tracked sink batches re-stamp ids from the current tip on
-      // every attempt (see appendRowTracked — ids live in the commit
-      // JSON only, so re-allocation is always safe)
-      val addActions =
-        if (RowTracking.enabled(meta) && adds.nonEmpty) {
-          val (stamped, domain) = RowTracking.stamp(adds,
-            RowTracking.highWaterMark(spark, seg), v)
-          domain +: stamped.map(addJson)
-        } else adds.map(addJson)
-      try {
-        commit(spark, tablePath, v,
-          (txn +: metaUpdate.map(metadataJson).toSeq) ++ addActions,
-          operation = "WRITE")
-        return Some(v)
-      } catch {
-        case e: ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > maxRetries) throw e
-          // a concurrent writer won this version — like blind appends,
-          // retry at the new tip, but FIRST re-check idempotence against
-          // that tip: if it already carries this (appId, txnVersion),
-          // this batch is a replay and must become a no-op (the orphaned
-          // data files are invisible and vacuumable)
-          val tip = LogSegment.forTable(spark, new Path(tablePath))
-          if (txnVersionIn(spark, tip, appId).exists(_ >= txnVersion))
-            return None
-          // identity allocation is not blind-retryable (see append);
-          // schema evolution alone is (same metadata re-commits)
-          if (IdentityColumns.advance(meta, adds).isDefined)
-            throw new ConcurrentCommitException(
-              s"concurrent commit while allocating identity values for " +
-                s"$tablePath — re-run the batch (values must be " +
-                "re-allocated from the advanced high-water mark)", e)
-          if (tip.version < v) throw e
-          // winner changed the table contract → typed conflict; a blind
-          // append profile is otherwise rebase-safe (the txn-collision
-          // case was resolved by the idempotence re-check above)
-          ConflictChecker.check(spark, tablePath,
-            ConflictChecker.winners(spark, tablePath, v, tip.version),
-            ConflictChecker.TxnProfile(), e)
-          seg = tip
-      }
+    try Some(commitWithRebaseVersioned(spark, tablePath, read,
+      parent => {
+        // a rebase first re-checks idempotence against the new parent:
+        // if it already carries this (appId, txnVersion), this batch is
+        // a replay and becomes a no-op (the orphaned data files are
+        // invisible and vacuumable)
+        if ((parent ne read) && applied(parent)) throw new TxnAlreadyApplied
+        txn +: w.actions(spark, parent)
+      },
+      operation = "WRITE", profile = ConflictChecker.TxnProfile(),
+      maxRetries = maxRetries, allocatesIdentity = w.allocatesIdentity))
+    catch {
+      case _: TxnAlreadyApplied => None
+      // a race the loop does not rebase (an identity write's single
+      // attempt, a replay whose commit also evolved the metadata) is
+      // still a no-op when the winner was this very batch
+      case _: ConcurrentCommitException
+          if applied(LogSegment.forTable(spark, new Path(tablePath))) => None
     }
-    None
   }
 
   /** Logical overwrite: one commit removes every live file and adds the
@@ -591,7 +521,10 @@ object CommitWriter {
     * through the conflict checker with a read-everything profile —
     * overwrite-vs-any-data-change is a REAL semantic conflict surfaced
     * as a typed exception; only content-neutral winners (e.g. a pure
-    * SetTransaction heartbeat) permit a rebase. */
+    * SetTransaction heartbeat) permit a rebase. Identity high-water
+    * marks survive an overwrite (values stay monotonic across the
+    * table's whole history, per spec), and the new rows of a
+    * row-tracked table get fresh ids. */
   def overwrite(spark: SparkSession, df: DataFrame, tablePath: String,
       mergeSchema: Boolean = false): Long = {
     val snap = graft.delta.DeltaTable.forPath(spark, tablePath)
@@ -599,56 +532,17 @@ object CommitWriter {
       dataChangingRemoves = true)
     val oldPaths = snap.allFiles.select("path")
       .collect().map(_.getString(0)).toSeq
-    val evolvedMeta =
-      if (mergeSchema) mergedWriteSchema(snap.metadata, df.schema,
-        "overwrite")
-      else None
-    val effMeta = evolvedMeta.getOrElse(snap.metadata)
-    val completed = GeneratedColumns.complete(
-      ColumnDefaults.complete(IdentityColumns.assign(df, effMeta), effMeta),
-      effMeta)
-    validateWriteSchema(completed, effMeta, "overwrite")
-    val adds = writeFiles(spark,
-      toPhysicalNames(Constraints.enforce(completed, effMeta), effMeta),
-      tablePath, physicalPartitionColumns(effMeta),
-      configuration = effMeta.configuration,
-      statsColumnOrder = statsOrderOf(effMeta))
-    // identity high-water marks survive an overwrite (values stay
-    // monotonic across the table's whole history, per spec); schema
-    // evolution rides the same metadata action
-    val identityUpdate = IdentityColumns.advance(effMeta, adds)
-    val metaUpdate = identityUpdate.orElse(evolvedMeta)
+    val w = stageWrite(spark, df, tablePath, snap.metadata, mergeSchema,
+      "overwrite")
     val now = System.currentTimeMillis()
     val removes = oldPaths.map(p =>
       removeJson(RemoveFile(p, Some(now), dataChange = true)))
-    // overwrite rows are all-new: row-tracked tables stamp fresh ids
-    // (the high-water mark read here stays valid across rebases — the
-    // overwrite profile only rebases over data-neutral winners)
-    val rtHwm =
-      if (RowTracking.enabled(snap.metadata) && adds.nonEmpty)
-        Some(RowTracking.highWaterMark(spark, snap.segment))
-      else None
-    def actionsFor(v: Long): Seq[String] = {
-      val addActions = rtHwm match {
-        case Some(hwm) =>
-          val (stamped, domain) = RowTracking.stamp(adds, hwm, v)
-          domain +: stamped.map(addJson)
-        case None => adds.map(addJson)
-      }
-      metaUpdate.map(metadataJson).toSeq ++ removes ++ addActions
-    }
-    if (identityUpdate.isDefined) {
-      // identity allocation is not retryable (see append); schema
-      // evolution alone stays on the rebase path below
-      commit(spark, tablePath, snap.version + 1,
-        actionsFor(snap.version + 1), operation = "WRITE")
-      snap.version + 1
-    } else
-      commitWithRebaseVersioned(spark, tablePath, snap.version, actionsFor,
-        operation = "WRITE",
-        profile = ConflictChecker.TxnProfile(
-          readPaths = oldPaths.toSet, removePaths = oldPaths.toSet,
-          dependsOnNewData = true))
+    commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      w.actions(spark, _, removes), operation = "WRITE",
+      profile = ConflictChecker.TxnProfile(
+        readPaths = oldPaths.toSet, removePaths = oldPaths.toSet,
+        dependsOnNewData = true),
+      allocatesIdentity = w.allocatesIdentity)
   }
 
   /** CREATE OR REPLACE TABLE semantics: ONE commit removes every live
@@ -693,9 +587,8 @@ object CommitWriter {
       configuration = configuration)
     configuration.get(DataSkippingStatsColumnsKey)
       .foreach(validateStatsColumns(_, df.schema, partCols))
-    val adds = writeFiles(spark, Constraints.enforce(df, meta), tablePath,
-      partCols, configuration = configuration,
-      statsColumnOrder = statsOrderOf(meta))
+    val adds = writeTableFiles(spark, Constraints.enforce(df, meta),
+      tablePath, meta)
     var proto = featureGatedProtocol(snap.protocol, configuration)
     val clusterActions =
       if (clusterCols.nonEmpty) {
@@ -726,9 +619,9 @@ object CommitWriter {
       else meta.copy(configuration = configuration ++ Map(
         "delta.inCommitTimestampEnablementVersion" -> v.toString,
         "delta.inCommitTimestampEnablementTimestamp" -> ictTs.get.toString))
-    commitWithRebaseVersioned(spark, tablePath, snap.version,
-      v => protoAction ++ Seq(metadataJson(metaFor(v))) ++ clusterActions ++
-        removes ++ adds.map(addJson),
+    commitWithRebaseVersioned(spark, tablePath, snap.segment,
+      parent => protoAction ++ Seq(metadataJson(metaFor(parent.version + 1))) ++
+        clusterActions ++ removes ++ adds.map(addJson),
       operation = "REPLACE TABLE AS SELECT",
       profile = ConflictChecker.TxnProfile(
         readPaths = oldPaths.toSet, removePaths = oldPaths.toSet,
@@ -1265,10 +1158,22 @@ object CommitWriter {
             snapOpt = Some(snap)) // one resolve, not two, per commit
       } catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] auto-compact of $tablePath after " +
-            s"v$version failed (the commit itself is unaffected): $e")
+          maintenanceFailed("auto-compact", tablePath, version, e)
       } finally inAutoCompact.set(false)
     }
+
+  private val log = org.slf4j.LoggerFactory.getLogger(
+    getClass.getName.stripSuffix("$"))
+
+  /** Post-commit maintenance (auto-checkpoint, log compaction,
+    * auto-compaction) runs after its commit landed, so a failure is
+    * logged as a WARN naming the table, the version and the exception,
+    * and swallowed: the table stays correct, only the maintenance is
+    * deferred. */
+  private[log] def maintenanceFailed(task: String, tablePath: String,
+      version: Long, e: Throwable): Unit =
+    log.warn(s"$task of $tablePath at v$version failed (the commit " +
+      "itself is unaffected)", e)
 
   /** `delta.checkpointInterval` (default 10, the delta-spark default):
     * auto-checkpoint cadence in commits. */
@@ -1299,8 +1204,7 @@ object CommitWriter {
         else checkpoint(spark, tablePath, numParts = -1)
       } catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] auto-checkpoint of $tablePath at " +
-            s"v$version failed (the commit itself is unaffected): $e")
+          maintenanceFailed("auto-checkpoint", tablePath, version, e)
       }
     }
 
@@ -1774,8 +1678,6 @@ object CommitWriter {
     actions
   }
 
-  /** Write `df` as parquet files under `tablePath` (hive-style dirs for
-    * partition columns), returning the AddFile actions with stats. */
   /** `delta.dataSkippingNumIndexedCols` (default 32, delta-spark
     * parity): min/max/nullCount stats cover only the first N data
     * columns in schema order (-1 = all). At 100 TB this is the knob
@@ -1854,18 +1756,41 @@ object CommitWriter {
     * dataSkippingStatsColumns override, else the first-N positional
     * cap), resolved against the table metadata alone. ANALYZE uses it
     * as the target coverage set. */
-  private[graft] def selectedStatsColumns(meta: Metadata): Seq[String] = {
-    val numIndexed = meta.configuration.get(DataSkippingNumIndexedColsKey)
+  private[graft] def selectedStatsColumns(meta: Metadata): Seq[String] =
+    indexedStatsColumns(statsOrderOf(meta)
+      .filterNot(physicalPartitionColumns(meta).contains), meta.configuration)
+
+  /** The stats-column policy over `dataCols` (non-partition columns in
+    * stats order): an explicit dataSkippingStatsColumns list (already
+    * applied to the order by [[statsOrderOf]]) keeps them all — the
+    * user named the columns; capping by count on top would silently
+    * drop some of them — otherwise the first
+    * `dataSkippingNumIndexedCols` (-1 = all). */
+  private def indexedStatsColumns(dataCols: Seq[String],
+      configuration: Map[String, String]): Seq[String] = {
+    val numIndexed = configuration.get(DataSkippingNumIndexedColsKey)
       .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
       .getOrElse(DefaultDataSkippingNumIndexedCols)
-    val all = statsOrderOf(meta)
-      .filterNot(physicalPartitionColumns(meta).contains)
-    if (numIndexed < 0 ||
-        meta.configuration.contains(DataSkippingStatsColumnsKey)) all
-    else all.take(numIndexed)
+    if (numIndexed < 0 || configuration.contains(DataSkippingStatsColumnsKey))
+      dataCols
+    else dataCols.take(numIndexed)
   }
 
-  /** @param statsColumnOrder the TABLE schema's field order (the
+  /** Write a LOGICAL frame in `meta`'s table layout — physical column
+    * names, the physical partition directories, the table's write
+    * properties and its schema-order stats — the one way every write
+    * into a table stages data files. */
+  private[graft] def writeTableFiles(spark: SparkSession, df: DataFrame,
+      tablePath: String, meta: Metadata,
+      dataChange: Boolean = true): Seq[AddFile] =
+    writeFiles(spark, toPhysicalNames(df, meta), tablePath,
+      physicalPartitionColumns(meta), dataChange, meta.configuration,
+      statsOrderOf(meta))
+
+  /** Write `df` as parquet files under `tablePath` (hive-style dirs for
+    * partition columns), returning the AddFile actions with stats.
+    *
+    * @param statsColumnOrder the TABLE schema's field order (the
     *   dataSkippingNumIndexedCols contract counts "first N columns" in
     *   schema order, not in whatever order this writer's frame happens
     *   to carry); empty = use the frame's order (creation, where the
@@ -1922,31 +1847,35 @@ object CommitWriter {
     (if (partitionColumns.nonEmpty) writer.partitionBy(partitionColumns: _*)
      else writer).parquet(staging.toString)
 
-    // an empty DataFrame writes no part files: a valid empty commit —
-    // and computeStats' schema inference would fail on the bare dir
+    // an empty DataFrame writes no part files: a valid empty commit
     val stagingUri = staging.toUri.getPath
     val parts = listRecursive(fs, staging)
       .filter(_.getPath.getName.endsWith(".parquet"))
     if (parts.isEmpty) { fs.delete(staging, true); return Seq.empty }
 
-    val numIndexed = configuration.get(DataSkippingNumIndexedColsKey)
-      .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-      .getOrElse(DefaultDataSkippingNumIndexedCols)
     val dfCols = df.schema.fieldNames.map(n => n.toLowerCase -> n).toMap
-    val allDataCols =
+    val dataCols = indexedStatsColumns(
       (if (statsColumnOrder.nonEmpty)
          statsColumnOrder.flatMap(n => dfCols.get(n.toLowerCase))
        else df.schema.fieldNames.toSeq)
-        .filterNot(partitionColumns.contains)
-    // an explicit dataSkippingStatsColumns list (already applied by the
-    // caller's statsColumnOrder via statsOrderOf) overrides the
-    // positional first-N cap — the user named the columns; capping by
-    // count on top would silently drop some of them
-    val dataCols =
-      if (numIndexed < 0 ||
-          configuration.contains(DataSkippingStatsColumnsKey)) allDataCols
-      else allDataCols.take(numIndexed)
-    val statsByFile = computeStats(spark, staging.toString, dataCols.toIndexedSeq, df.schema)
+        .filterNot(partitionColumns.contains),
+      configuration)
+    // the stats pass reads exactly the part files just listed, through
+    // the log-backed index over their known statuses: no second listing
+    // of the staging dir (spark.read.parquet would list it again, and
+    // warn that its hidden name was ignored)
+    val fileSchema = StructType(df.schema.fields
+      .filterNot(f => partitionColumns.exists(_.equalsIgnoreCase(f.name)))
+      .map(_.copy(nullable = true)))
+    val staged = org.apache.spark.sql.graftshim.Shims.parquetRelation(spark,
+      new graft.delta.sources.GraftDeltaFileIndex(spark, staging,
+        parts.map(st => graft.delta.scan.DeltaScan.ScanFile(
+          st.getPath.toString, Map.empty, None, st.getLen,
+          st.getModificationTime)),
+        StructType(Nil), statsSkipping = None),
+      fileSchema)
+    val statsByFile =
+      computeStatsForRead(staged, dataCols.toIndexedSeq, df.schema)
 
     // a part file absent from the stats pass has ZERO rows (the group-by
     // is over the files' own rows) — skip it entirely: an empty part
@@ -2010,11 +1939,11 @@ object CommitWriter {
     sb.toString
   }
 
-  /** One distributed pass computing per-file numRecords / minValues /
-    * maxValues / nullCount for the eligible leaf columns. */
-  private[graft] def computeStats(spark: SparkSession, stagingDir: String,
+  /** Stats for every parquet file under `dir` — CONVERT TO DELTA's
+    * read of a directory it has not listed itself. */
+  private[graft] def computeStats(spark: SparkSession, dir: String,
       dataCols: Seq[String], schema: StructType): Map[String, String] =
-    computeStatsForRead(spark.read.parquet(stagingDir), dataCols, schema)
+    computeStatsForRead(spark.read.parquet(dir), dataCols, schema)
 
   /** Stats for an EXPLICIT file list read under a declared schema —
     * the ANALYZE path: files written before a schema evolution simply
@@ -2038,6 +1967,8 @@ object CommitWriter {
       }
     }
 
+  /** One distributed pass computing per-file numRecords / minValues /
+    * maxValues / nullCount for the eligible leaf columns of `read`. */
   private def computeStatsForRead(read: DataFrame,
       dataCols: Seq[String], schema: StructType): Map[String, String] = {
     val eligible = statsEligible(dataCols, schema)

@@ -153,8 +153,8 @@ object LogCompaction {
       try compactLog(spark, tablePath, version - interval + 1, version)
       catch {
         case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] log compaction of $tablePath at " +
-            s"v$version failed (the commit itself is unaffected): $e")
+          CommitWriter.maintenanceFailed("log compaction", tablePath,
+            version, e)
       }
     }
 

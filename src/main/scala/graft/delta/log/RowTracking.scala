@@ -71,4 +71,23 @@ object RowTracking {
       "row tracking: empty adds allocated no ids")
     (stamped, domainJson(math.max(firstId, next - 1)))
   }
+
+  /** The add actions for `adds` committed on top of `parent`: on a
+    * row-tracked table the new rows get fresh ids from the parent's
+    * high-water mark, stamped with the version the commit lands at
+    * (`parent.version + 1`), plus the domain action advancing the mark.
+    * The commit loop hands every attempt its own parent, so a rebase
+    * over a winner that allocated ids (the conflict rules let appends
+    * and partition-disjoint DML rebase over data winners) allocates
+    * past the winner instead of duplicating its ids. Ids live only in
+    * the commit JSON, never in the data files, so re-stamping is always
+    * safe. */
+  def addActions(spark: SparkSession, meta: Actions.Metadata,
+      adds: Seq[Actions.AddFile], parent: LogSegment): Seq[String] =
+    if (!enabled(meta) || adds.isEmpty) adds.map(CommitWriter.addJson)
+    else {
+      val (stamped, domain) =
+        stamp(adds, highWaterMark(spark, parent), parent.version + 1)
+      domain +: stamped.map(CommitWriter.addJson)
+    }
 }

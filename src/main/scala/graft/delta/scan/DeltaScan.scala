@@ -168,7 +168,8 @@ object DeltaScan {
     // scan's index and the surgical splits both take theirs from here.
     // An empty list is an empty index, which still yields the provenance
     // columns the caller asked for (DML on an empty table groups by them)
-    val scanFiles = GraftDeltaFileIndex.withLogStatus(snapshot, logFiles)
+    val scanFiles = GraftDeltaFileIndex.withLogStatus(spark,
+      snapshot.tablePath, logFiles)
     val fs = LogSegment.fs(spark, snapshot.tablePath)
     val qualifiedTable = fs.makeQualified(snapshot.tablePath)
     def abs(rel: String): Path =
@@ -243,8 +244,8 @@ object DeltaScan {
     // paths launch a distributed listing job per read). Partition values
     // join in below, so the index carries none.
     var df = org.apache.spark.sql.graftshim.Shims.parquetRelation(spark,
-      new GraftDeltaFileIndex(snapshot, normalScanFiles, StructType(Nil),
-        statsSkipping = None),
+      new GraftDeltaFileIndex(spark, snapshot.tablePath, normalScanFiles,
+        StructType(Nil), statsSkipping = None),
       physicalDataSchema)
 
     val helperCols = Seq.newBuilder[Column]

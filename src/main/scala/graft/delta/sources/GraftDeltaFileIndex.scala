@@ -1,20 +1,21 @@
 package graft.delta.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
-import graft.delta.Snapshot
 import graft.delta.log.LogSegment
 import graft.delta.scan.DeltaScan.ScanFile
 
 /** The Delta log's file inventory as a Spark `FileIndex`, and the one
   * index every graftdelta read scans: the native DSv2 `ParquetScan` lists
-  * it, and [[graft.delta.scan.DeltaScan]] builds its parquet relation on
-  * it. It answers from the given log entries alone:
+  * it, [[graft.delta.scan.DeltaScan]] builds its parquet relation on it,
+  * and a write's stats pass reads the part files it just staged through
+  * it. It answers from the given entries (paths relative to `tablePath`,
+  * or absolute) alone:
   *
   *  - `FileStatus`es are built from each entry's size and mtime, so
   *    planning lists nothing (at 100 TB, listing millions of objects is
@@ -35,19 +36,17 @@ import graft.delta.scan.DeltaScan.ScanFile
   * scan-unit stream of crates/datafusion/src/table_provider/delta/
   * mod.rs:90-149.
   */
-final class GraftDeltaFileIndex(snapshot: Snapshot, files: => Seq[ScanFile],
-    partSchema: StructType,
+final class GraftDeltaFileIndex(spark: SparkSession, tablePath: Path,
+    files: => Seq[ScanFile], partSchema: StructType,
     statsSkipping: Option[Seq[Column] => Set[String]])
-    extends PartitioningAwareFileIndex(
-      snapshot.spark, Map.empty, None, NoopCache) {
+    extends PartitioningAwareFileIndex(spark, Map.empty, None, NoopCache) {
 
   /** (partition row, files as (log path, status)) per distinct row. */
   private lazy val partitions
       : Seq[(InternalRow, Array[(String, FileStatus)])] = {
-    val table = LogSegment.fs(snapshot.spark, snapshot.tablePath)
-      .makeQualified(snapshot.tablePath)
+    val table = LogSegment.fs(spark, tablePath).makeQualified(tablePath)
     val names = partSchema.fieldNames.toSeq
-    GraftDeltaFileIndex.withLogStatus(snapshot, files)
+    GraftDeltaFileIndex.withLogStatus(spark, tablePath, files)
       .groupBy(f =>
         names.map(n => f.partitionValues.get(n).flatMap(Option(_))))
       .toSeq.map { case (raw, group) =>
@@ -62,7 +61,7 @@ final class GraftDeltaFileIndex(snapshot: Snapshot, files: => Seq[ScanFile],
     partitions.flatMap(_._2.map(_._2))
 
   private def partitionRow(raw: Seq[Option[String]]): InternalRow = {
-    val tz = Option(snapshot.spark.conf.get("spark.sql.session.timeZone"))
+    val tz = Option(spark.conf.get("spark.sql.session.timeZone"))
     InternalRow.fromSeq(partSchema.fields.toSeq.zip(raw).map {
       case (_, None | Some(GraftDeltaFileIndex.HiveDefaultPartition)) => null
       case (field, Some(v)) => Cast(Literal(UTF8String.fromString(v),
@@ -103,7 +102,7 @@ final class GraftDeltaFileIndex(snapshot: Snapshot, files: => Seq[ScanFile],
   override def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
   override def sizeInBytes: Long = statuses.map(_.getLen).sum
   override def allFiles(): Seq[FileStatus] = statuses
-  override def refresh(): Unit = () // a snapshot is immutable
+  override def refresh(): Unit = () // the file list is fixed
 
   // PartitioningAwareFileIndex's directory view: unread, since every
   // member that reads it is overridden above
@@ -126,18 +125,18 @@ object GraftDeltaFileIndex {
     * from storage: one driver `getFileStatus` per such file, none for the
     * rest. A file the log names but storage lacks fails here, at plan
     * time, naming the file and the table. */
-  private[graft] def withLogStatus(snapshot: Snapshot,
+  private[graft] def withLogStatus(spark: SparkSession, tablePath: Path,
       files: Seq[ScanFile]): Seq[ScanFile] = {
-    lazy val fs = LogSegment.fs(snapshot.spark, snapshot.tablePath)
+    lazy val fs = LogSegment.fs(spark, tablePath)
     files.map { f =>
       if (f.size >= 0 && f.modTime >= 0) f
       else {
         val st = try fs.getFileStatus(
-          absolute(fs.makeQualified(snapshot.tablePath), f.relPath))
+          absolute(fs.makeQualified(tablePath), f.relPath))
         catch {
           case e: java.io.FileNotFoundException =>
             throw new IllegalStateException(
-              s"Delta table ${snapshot.tablePath}: the log names data file " +
+              s"Delta table $tablePath: the log names data file " +
                 s"'${f.relPath}', which is missing from storage (deleted " +
                 "outside the log, or reclaimed by VACUUM)", e)
         }

@@ -114,7 +114,7 @@ final class GraftDeltaTable(spark: SparkSession, path: String,
         if (identityMapping && !hasDvs)
           new org.apache.spark.sql.graftshim.StatsAggScanBuilder(
             ParquetScanBuilder(spark,
-              new GraftDeltaFileIndex(snapshot,
+              new GraftDeltaFileIndex(spark, snapshot.tablePath,
                 DeltaScan.scanFilesOf(snapshot.allFiles),
                 StructType(partFields.toIndexedSeq),
                 Some(cols => StatsSkipping.prune(snapshot, snapshot.allFiles,

@@ -43,6 +43,28 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(DeltaTable.forPath(spark, p).version == 2)
   }
 
+  test("the rebase loop hands each attempt its parent segment: the read " +
+      "segment first, then the tip holding the winner") {
+    val p = tmp("parents")
+    CommitWriter.createTable(spark, df(1, 0 until 5), p)
+    val read = DeltaTable.forPath(spark, p).segment           // version 0
+    val winner = CommitWriter.append(spark, df(2, 0 until 3), p) // version 1
+    val parents = Seq.newBuilder[graft.delta.log.LogSegment]
+    val v = CommitWriter.commitWithRebaseVersioned(spark, p, read,
+      parent => { parents += parent; Seq(txnAction()) }, "WRITE",
+      TxnProfile())
+    val seen = parents.result()
+    assert(seen.length == 2)
+    assert(seen.head eq read,
+      "the first attempt must build on the read segment")
+    assert(seen(1).version == winner,
+      "the rebase attempt must build on the winner's segment")
+    assert(seen(1).commitFiles.map(_.getPath.getName).last ==
+      graft.delta.log.LogSegment.commitFileName(winner))
+    assert(v == winner + 1)
+    assert(DeltaTable.forPath(spark, p).version == winner + 1)
+  }
+
   test("a winner metadata change is a typed MetadataChangedException") {
     val p = tmp("metaconflict")
     CommitWriter.createTable(spark, df(1, 0 until 5), p)

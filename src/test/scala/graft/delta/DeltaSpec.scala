@@ -175,6 +175,54 @@ class DeltaSpec extends AnyFunSuite {
     assert(got.schema.fieldNames.toSeq == orders.schema.fieldNames.toSeq)
   }
 
+  test("a partitioned append stats its staged part files without " +
+      "re-reading the staging dir") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import spark.implicits._
+    val path = tmpTable("staged_stats")
+    CommitWriter.createTable(spark,
+      Seq((0L, "seed", "c")).toDF("n", "s", "part"), path,
+      partitionColumns = Seq("part"))
+    // Spark's DataSource warns when every path it is given is hidden
+    // (".staging_*"): a stats pass that re-reads the staging dir logs it
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.execution.datasources.DataSource")
+      .asInstanceOf[Logger]
+    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("staging-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val level = logger.getLevel
+    logger.addAppender(capture)
+    logger.setLevel(Level.WARN)
+    try CommitWriter.append(spark, Seq((1L, "x", "a b"), (2L, "y", "a b"),
+        (3L, null, "a b"), (10L, "z", "c")).toDF("n", "s", "part")
+        .repartition(1), path)
+    finally {
+      logger.removeAppender(capture)
+      logger.setLevel(level)
+      capture.stop()
+    }
+    assert(!warnings.toArray.exists(_.toString.contains("paths were ignored")),
+      warnings.toArray.mkString("; "))
+    val appended = DeltaTable.forPath(spark, path).allFiles
+      .where(col("commit_version") === 1)
+      .select(col("partitionValues")("part"), col("stats")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(appended == Map(
+      "a b" -> ("{\"numRecords\":3,\"minValues\":{\"n\":1,\"s\":\"x\"}," +
+        "\"maxValues\":{\"n\":3,\"s\":\"y\"},\"nullCount\":{\"n\":0,\"s\":1}}"),
+      "c" -> ("{\"numRecords\":1,\"minValues\":{\"n\":10,\"s\":\"z\"}," +
+        "\"maxValues\":{\"n\":10,\"s\":\"z\"}," +
+        "\"nullCount\":{\"n\":0,\"s\":0}}")))
+  }
+
   test("stats-based file skipping prunes files") {
     val path = tmpTable("skipping")
     // write 4 files with disjoint o_orderkey ranges

@@ -201,19 +201,21 @@ class RowTrackingSpec extends AnyFunSuite {
       path = "zz-fake.parquet", partitionValues = Map.empty, size = 1L,
       modificationTime = 0L, dataChange = true,
       stats = Some("""{"numRecords":7}"""))
-    val actionsFor = graft.commands.DmlCommands
-      .rowTrackedAddActions(spark, stale, Seq(fakeAdd))
+    // the commit loop hands each attempt its parent segment
+    def actionsFor(parent: LogSegment) =
+      RowTracking.addActions(spark, stale.metadata, Seq(fakeAdd), parent)
     def baseOf(actions: Seq[String]): Long = {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       actions.flatMap(a => Option(mapper.readTree(a).get("add")))
         .map(_.get("baseRowId").asLong()).head
     }
     // first attempt: allocate from the snapshot-time mark
-    assert(baseOf(actionsFor(stale.version + 1)) == 5L)
+    assert(baseOf(actionsFor(stale.segment)) == 5L)
     // a partition-disjoint winner advances the mark to 15
     CommitWriter.append(spark, df(100 until 110).repartition(1), p)
     // the rebase attempt MUST allocate past the winner, not duplicate it
-    assert(baseOf(actionsFor(stale.version + 2)) == 15L,
+    assert(baseOf(actionsFor(LogSegment.forTable(spark,
+      new org.apache.hadoop.fs.Path(p)))) == 15L,
       "rebased DML stamped from a stale high-water mark")
   }
 
