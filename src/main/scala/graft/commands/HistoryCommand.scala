@@ -2,6 +2,7 @@ package graft.commands
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.delta.DeltaTable
@@ -111,7 +112,7 @@ object HistoryCommand {
       concat(lit(s"$c="), coalesce(
         element_at(col("partitionValues"), phys),
         element_at(col("partitionValues"), c),
-        lit("__HIVE_DEFAULT_PARTITION__")))
+        lit(ExternalCatalogUtils.DEFAULT_PARTITION_NAME)))
     }
     snap.allFiles
       .select(concat_ws("/", pieces: _*).as("partition"))

@@ -208,12 +208,12 @@ object OptimizeCommand {
             else !ok.isNullAt(0) && ok.getLong(0) >= minFiles
           if (qualifies) inv.collect() else Array.empty[Row]
         } else {
-          val keyNames = partCols.indices.map(i => s"__pv_$i")
+          val keyNames = partCols.indices.map(i => s"__pk_$i")
           val keyed = inv.select(
             (Seq(col("path"), col("partitionValues"), col("size"),
               col("deletionVector")) ++
               partCols.zipWithIndex.map { case (c, i) =>
-                element_at(col("partitionValues"), physOf(c)).as(s"__pv_$i")
+                element_at(col("partitionValues"), physOf(c)).as(s"__pk_$i")
               }): _*)
           // re-alias the aggregated side so the semi-join is not an
           // ambiguous self-join (groupBy keys keep their expr ids)

@@ -2,9 +2,9 @@ package graft.delta
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, DoubleType, StructType}
 import graft.delta.log.{Actions, LogSegment, Replay}
-import graft.delta.scan.DeltaScan
+import graft.delta.scan.{DeltaScan, StatsSkipping}
 
 /** An immutable view of a Delta table at one version.
   *
@@ -29,41 +29,14 @@ final case class Snapshot(
   /** Reconciled live AddFile rows (distributed; nothing collected). */
   def allFiles: DataFrame = Replay.liveFiles(spark, segment)
 
-  /** Full-table read.
-    *
-    * PARTITIONED tables without deletion vectors or column mapping
-    * route through the native DSv2 path: its scan implements
-    * `SupportsRuntimeFiltering`, so when this table sits on the fact
-    * side of a star join, dynamic partition pruning drops the
-    * non-qualifying partitions at runtime — the composed V1 assembly
-    * resolves its file list at build time and can never receive the
-    * join's key set. Pinned to THIS version (Snapshot is an immutable
-    * view) and re-projected to logical schema order, so the two paths
-    * are interchangeable to callers. */
-  def read: DataFrame = {
-    val native = partitionColumns.nonEmpty &&
-      graft.delta.scan.ColumnMapping.mode(metadata) == "none" && !hasLiveDv
-    if (native) {
-      import org.apache.spark.sql.functions.col
-      // hand THIS snapshot to the table (one log resolution per read,
-      // not two) and the DV answer just probed (no duplicate job)
-      val table = new graft.delta.sources.GraftDeltaTable(
-        spark, tablePath.toString, Some(version),
-        preResolved = Some(this), hasDvsHint = Some(false))
-      org.apache.spark.sql.graftshim.Shims.dsv2DataFrame(spark, table)
-        // quote: a bare dotted name would parse as a nested reference
-        .select(schema.fieldNames
-          .map(n => col(s"`${n.replace("`", "``")}`")).toIndexedSeq: _*)
-    } else DeltaScan.build(this, Seq.empty)
-  }
-
-  /** One live file carrying a deletion vector forces the composed scan
-    * (memoized — a metadata-only probe). */
-  private lazy val hasLiveDv: Boolean = {
-    import org.apache.spark.sql.functions.col
-    allFiles.where(col("deletionVector").isNotNull)
-      .limit(1).collect().nonEmpty
-  }
+  /** Full-table read through the composed scan over the unpruned live
+    * list. Its file index appends each file's partition values, so
+    * partition filters and dynamic partition pruning (this table on the
+    * fact side of a star join) reach the file list, and it stats-skips
+    * the data filters Spark pushes into the scan at plan time
+    * ([[StatsSkipping.onScan]]). */
+  def read: DataFrame =
+    DeltaScan.build(this, Seq.empty, statsSkipping = StatsSkipping.onScan(this))
 
   /** Full-table read with the fresh row-tracking columns `_row_id` and
     * `_row_commit_version` appended (writer feature `rowTracking`). */
@@ -119,21 +92,28 @@ final case class Snapshot(
     * carries a deletion vector (a deleted row could have held the
     * extreme). Strings are deliberately not offered: long string stats
     * are truncated to conservative prefixes, exact only as bounds. */
-  def statsNumericRange(colName: String): Option[(Double, Double)] = {
+  def statsNumericRange(colName: String): Option[(Double, Double)] =
+    statsRange(colName, DoubleType).map {
+      case (lo, hi) => (lo.asInstanceOf[Double], hi.asInstanceOf[Double])
+    }
+
+  /** The log-stats (min, max) of `colName`, each cast to `dataType` —
+    * one metadata aggregation over the live files. `None` under the
+    * same gates as [[statsNumericRange]]; the null checks also catch
+    * stats that do not cast to `dataType` (a date/string min cast to a
+    * number is null), which answer None, not a crash. */
+  def statsRange(colName: String, dataType: DataType): Option[(Any, Any)] = {
     import org.apache.spark.sql.functions._
     val minJ = get_json_object(col("stats"), s"$$.minValues.$colName")
     val maxJ = get_json_object(col("stats"), s"$$.maxValues.$colName")
     val a = allFiles.agg(
       count(lit(1)), count(minJ), count(maxJ),
-      min(minJ.cast("double")), max(maxJ.cast("double")),
-      count(col("deletionVector"))).head
+      min(minJ.cast(dataType)), max(maxJ.cast(dataType)),
+      count(col("deletionVector"))).head()
     val files = a.getLong(0)
-    // the null checks also catch NON-numeric columns with complete
-    // stats (a date/string min casts to null double) — those answer
-    // None, not a crash
     if (files == 0 || a.getLong(1) != files || a.getLong(2) != files ||
       a.getLong(5) != 0 || a.isNullAt(3) || a.isNullAt(4)) None
-    else Some((a.getDouble(3), a.getDouble(4)))
+    else Some((a.get(3), a.get(4)))
   }
 }
 
@@ -159,17 +139,11 @@ object DeltaTable {
     val tablePath = new Path(path)
     val fs = LogSegment.fs(spark, tablePath)
     val logPath = new Path(tablePath, "_delta_log")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     // commit timestamp: the monotonic commitInfo.inCommitTimestamp when
     // the table writes them (clock-skew-proof, survives file copies),
     // else the commit file's mtime (the classic Delta behavior)
-    def ictOf(st: org.apache.hadoop.fs.FileStatus): Option[Long] = {
-      val in = fs.open(st.getPath)
-      val first = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().find(_.nonEmpty) finally in.close()
-      first.map(mapper.readTree).flatMap(n => Option(n.get("commitInfo")))
-        .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
-    }
+    def ictOf(st: org.apache.hadoop.fs.FileStatus) =
+      LogSegment.inCommitTimestamp(fs, st.getPath)
     val commits = fs.listStatus(logPath).toSeq
       .flatMap(st => LogSegment.commitVersion(st.getPath.getName)
         .map(v => (v, st)))

@@ -999,11 +999,7 @@ object CommitWriter {
     if (version == 0) return None
     val prev = new Path(logPath, LogSegment.commitFileName(version - 1))
     if (!fs.exists(prev)) return None // checkpointed-away parent
-    val in = fs.open(prev)
-    val first = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().find(_.nonEmpty) finally in.close()
-    first.map(mapper.readTree).flatMap(n => Option(n.get("commitInfo")))
-      .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
+    LogSegment.inCommitTimestamp(fs, prev)
   }
 
   /** Write the action lines of `version` atomically (create-no-overwrite,

@@ -213,4 +213,17 @@ object LogSegment {
       } finally in.close()
     }
   }
+
+  /** The `commitInfo.inCommitTimestamp` of the commit file at `commit`:
+    * read from its first non-empty line (the spec puts commitInfo first
+    * when in-commit timestamps are on); None when that line carries
+    * none. */
+  def inCommitTimestamp(fs: FileSystem, commit: Path): Option[Long] = {
+    val in = fs.open(commit)
+    val first = try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().find(_.nonEmpty) finally in.close()
+    first.map(new ObjectMapper().readTree)
+      .flatMap(n => Option(n.get("commitInfo")))
+      .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
+  }
 }

@@ -3,6 +3,7 @@ package graft.delta.scan
 import com.fasterxml.jackson.databind.JsonNode
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import graft.delta.Snapshot
 import graft.delta.log.{LogSegment, Replay}
 
@@ -314,7 +315,8 @@ object CommitRangeScan {
             case m if m.nonEmpty => m
             case _ => graft.delta.log.CommitWriter.parsePartitionValues(rel)
               .map { case (k, v) =>
-                k -> (if (v == "__HIVE_DEFAULT_PARTITION__") null else v)
+                k -> (if (v == ExternalCatalogUtils.DEFAULT_PARTITION_NAME)
+                  null else v)
               }
           }
           removes.put(rel, DeltaScan.ScanFile(rel, pv,

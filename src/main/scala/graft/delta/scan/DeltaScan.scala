@@ -13,9 +13,10 @@ import graft.delta.sources.GraftDeltaFileIndex
   *
   *   prune file list (stats + partition values, distributed)
   *     → collect surviving file paths (only the pruned list)
-  *     → ONE parquet scan over all files with the physical schema
+  *     → ONE parquet scan over the log-backed file index: physical data
+  *       schema, logical partition schema (the scan appends each file's
+  *       typed partition values)
   *     → physical→logical rename (column mapping, nested rebuild)
-  *     → partition-value injection via a broadcast join on file path
   *     → deletion-vector row filter on _metadata.row_index
   *     → residual predicate
   *
@@ -23,8 +24,10 @@ import graft.delta.sources.GraftDeltaFileIndex
   * per-file transform expression (reference: crates/datafusion/src/
   * table_provider/delta/exec.rs:25-237, mod.rs:90-149). In Spark the
   * per-file dispatch collapses: name-based parquet resolution imputes
-  * missing columns, and the per-file parts (partition values, DV) key off
-  * `_metadata.file_path` — a single scan, no N-way union, so the plan
+  * missing columns, partition values are the index's per-file partition
+  * rows (so Catalyst sees real partition columns: partition filters and
+  * dynamic partition pruning reach the file list), and the DV mask keys
+  * off `_metadata.file_path` — a single scan, no N-way union, so the plan
   * shape is independent of file count (100 TB-safe).
   */
 object DeltaScan {
@@ -38,8 +41,6 @@ object DeltaScan {
       dv: Option[DeletionVectorDescriptor],
       size: Long = -1L,
       modTime: Long = -1L)
-
-  private val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
 
   /** DV row filtering switches from the codegen-friendly broadcast
     * anti-join to the compressed-bitmap UDF above this many deleted
@@ -127,11 +128,15 @@ object DeltaScan {
     df.join(broadcast(keyDf), Seq(FileKeyColumn), "left_semi")
   }
 
+  /** `statsSkipping` is the index's plan-time skipping step for the data
+    * filters Spark pushes into the scan (`Snapshot.read` passes
+    * [[StatsSkipping.onScan]]); the pruned-list callers leave it None. */
   def build(snapshot: Snapshot, filters: Seq[Column],
       withFileColumn: Boolean = false,
-      withRowIndex: Boolean = false): DataFrame = {
+      withRowIndex: Boolean = false,
+      statsSkipping: Option[Seq[Column] => Set[String]] = None): DataFrame = {
     assemble(snapshot, scanFilesOf(prunedFiles(snapshot, filters)), filters,
-      withFileColumn, withRowIndex)
+      withFileColumn, withRowIndex, statsSkipping)
   }
 
   /** The log entries of a file-list frame (`allFiles` or a pruned part
@@ -159,17 +164,26 @@ object DeltaScan {
 
   private def assemble(snapshot: Snapshot, logFiles: Seq[ScanFile],
       filters: Seq[Column], withFileColumn: Boolean,
-      withRowIndex: Boolean = false): DataFrame = {
+      withRowIndex: Boolean = false,
+      statsSkipping: Option[Seq[Column] => Set[String]] = None): DataFrame = {
     val spark = snapshot.spark
     val logical = snapshot.schema
     val partCols = snapshot.partitionColumns
+    val partSchema = StructType(partCols.map(c => logical(c)))
 
     // every file's status, known before the surgical split: the normal
     // scan's index and the surgical splits both take theirs from here.
     // An empty list is an empty index, which still yields the provenance
-    // columns the caller asked for (DML on an empty table groups by them)
+    // columns the caller asked for (DML on an empty table groups by them).
+    // partitionValues keys follow the protocol: PHYSICAL names under
+    // column mapping (falling back to the logical key for tolerance of
+    // pre-convention writers); the index reads them by LOGICAL name
     val scanFiles = GraftDeltaFileIndex.withLogStatus(spark,
-      snapshot.tablePath, logFiles)
+      snapshot.tablePath, logFiles).map { f =>
+        f.copy(partitionValues = partCols.flatMap(c => f.partitionValues
+          .get(ColumnMapping.physicalPartitionName(snapshot.metadata, c))
+          .orElse(f.partitionValues.get(c)).map(c -> _)).toMap)
+      }
     val fs = LogSegment.fs(spark, snapshot.tablePath)
     val qualifiedTable = fs.makeQualified(snapshot.tablePath)
     def abs(rel: String): Path =
@@ -181,7 +195,6 @@ object DeltaScan {
       ColumnMapping.toPhysicalSchema(StructType(dataFields), mappingMode)
 
     val needDv = scanFiles.exists(_.dv.isDefined)
-    val needPart = partCols.nonEmpty
 
     // the driver holds DV DESCRIPTORS only (path/offset/size — bytes
     // per file), never an accumulated bitmap map: the surgical planner
@@ -241,15 +254,14 @@ object DeltaScan {
     // the log IS the file inventory: the relation scans the log-backed
     // index over the surviving files, so planning lists nothing
     // (spark.read.parquet would re-stat every path per scan, and past 32
-    // paths launch a distributed listing job per read). Partition values
-    // join in below, so the index carries none.
+    // paths launch a distributed listing job per read)
     var df = org.apache.spark.sql.graftshim.Shims.parquetRelation(spark,
       new GraftDeltaFileIndex(spark, snapshot.tablePath, normalScanFiles,
-        StructType(Nil), statsSkipping = None),
+        partSchema, statsSkipping),
       physicalDataSchema)
 
     val helperCols = Seq.newBuilder[Column]
-    if (needPart || needDv || withFileColumn)
+    if (needDv || withFileColumn)
       helperCols += normalizeExpr(col("_metadata.file_path")).as("__fkey")
     if (needDv || withRowIndex)
       helperCols += col("_metadata.row_index").as("__row_index")
@@ -257,7 +269,9 @@ object DeltaScan {
     val logicalDataCols = dataFields.zip(physicalDataSchema.fields).map {
       case (lf, pf) => ColumnMapping.toLogicalColumn(pf, lf)
     }
-    df = df.select((logicalDataCols ++ helperCols.result()).toIndexedSeq: _*)
+    val partitionCols = partCols.map(col)
+    df = df.select((logicalDataCols ++ partitionCols ++ helperCols.result())
+      .toIndexedSeq: _*)
 
     if (surgical.nonEmpty) {
       // surgical files union in AFTER the physical->logical projection:
@@ -269,41 +283,15 @@ object DeltaScan {
         .map { f =>
           val absPath = abs(f.relPath)
           val key = normalize(absPath)
-          (absPath, key, surgical(key)._1, f.modTime, f.size)
+          (absPath, key, surgical(key)._1, f.modTime, f.size,
+            GraftDeltaFileIndex.partitionRow(spark, partSchema,
+              f.partitionValues))
         }
-      val sdf = DvRowGroupSkip.scan(spark, physicalDataSchema, surgicalFiles)
-      val sSel = sdf.select(
-        (logicalDataCols :+ col("__fkey") :+ col("__row_index"))
-          .toIndexedSeq: _*)
+      val sdf = DvRowGroupSkip.scan(spark, physicalDataSchema, partSchema,
+        surgicalFiles)
+      val sSel = sdf.select((logicalDataCols ++ partitionCols :+
+        col("__fkey") :+ col("__row_index")).toIndexedSeq: _*)
       df = (if (normalScanFiles.isEmpty) sSel else df.unionByName(sSel))
-    }
-
-    if (needPart) {
-      // file -> partition values, broadcast-joined: one hash lookup per
-      // row, plan shape independent of partition count.
-      val partSchema = StructType(
-        StructField("__fkey", StringType) +:
-          partCols.map(c => StructField(s"__pv_$c", StringType)))
-      // partitionValues keys follow the protocol: PHYSICAL names under
-      // column mapping (fall back to the logical key for tolerance of
-      // pre-convention writers)
-      val rows = scanFiles.map { f =>
-        Row.fromSeq(normalize(abs(f.relPath)) +:
-          partCols.map(c => f.partitionValues
-            .get(ColumnMapping.physicalPartitionName(snapshot.metadata, c))
-            .orElse(f.partitionValues.get(c)).orNull))
-      }
-      val rowList = new java.util.ArrayList[Row](rows.size)
-      rows.foreach(rowList.add)
-      val partDF = spark.createDataFrame(rowList, partSchema)
-      df = df.join(broadcast(partDF), Seq("__fkey"), "left")
-      for (c <- partCols) {
-        val dt = logical(c).dataType
-        df = df.withColumn(c,
-          when(col(s"__pv_$c") === HiveDefaultPartition, lit(null))
-            .otherwise(col(s"__pv_$c")).cast(dt))
-      }
-      df = df.drop(partCols.map(c => s"__pv_$c"): _*)
     }
 
     if (needDv) {

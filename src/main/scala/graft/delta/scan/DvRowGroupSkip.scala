@@ -95,13 +95,16 @@ object DvRowGroupSkip {
     Some((ranges.result(), blocks.size - live.size, blocks.size))
   }
 
-  /** Scan `files` (absolute path -> (normalized key, byte ranges))
-    * through Spark's own parquet reader factory, returning a frame with
-    * the PHYSICAL data columns plus `__row_index` (global parquet row
-    * index) and `__fkey` (the normalized path) — the same provenance
-    * contract as the normal scan's `_metadata` helpers. */
+  /** Scan `files` (absolute path, normalized key, byte ranges, mtime,
+    * size, partition row) through Spark's own parquet reader factory,
+    * returning a frame with the PHYSICAL data columns plus `__row_index`
+    * (global parquet row index), the `partitionSchema` columns (each
+    * file's partition row) and `__fkey` (the normalized path) — the same
+    * columns and provenance contract as the normal scan. */
   def scan(spark: SparkSession, physicalDataSchema: StructType,
-      files: Seq[(Path, String, Seq[(Long, Long)], Long, Long)]): DataFrame = {
+      partitionSchema: StructType,
+      files: Seq[(Path, String, Seq[(Long, Long)], Long, Long, InternalRow)])
+      : DataFrame = {
     val fmt = new ParquetFileFormat()
     // the readers generate indexes for the column NAMED with the
     // temporary name (ParquetRowIndexUtil matches name + LongType); it
@@ -113,19 +116,21 @@ object DvRowGroupSkip {
     val readerFn = fmt.buildReaderWithPartitionValues(
       spark,
       dataSchema = physicalDataSchema,
-      partitionSchema = new StructType(),
+      partitionSchema = partitionSchema,
       requiredSchema = requiredSchema,
       filters = Nil,
       options = Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       hadoopConf = Shims.hadoopConfWithOptions(spark, Map.empty))
     val parts: Seq[(String, PartitionedFile)] = files.flatMap {
-      case (abs, key, ranges, modTime, fileSize) =>
+      case (abs, key, ranges, modTime, fileSize, partitionRow) =>
         ranges.map { case (start, len) =>
-          key -> PartitionedFile(InternalRow.empty, SparkPath.fromPath(abs),
+          key -> PartitionedFile(partitionRow, SparkPath.fromPath(abs),
             start, len, Array.empty, modTime, fileSize)
         }
     }
-    val outSchema = StructType(requiredSchema.fields :+
+    // the reader appends the partition row after the required columns
+    val outSchema = StructType(requiredSchema.fields ++
+      partitionSchema.fields :+
       StructField("__fkey", StringType, nullable = false))
     val rdd = spark.sparkContext
       .parallelize(parts, math.max(parts.size, 1))

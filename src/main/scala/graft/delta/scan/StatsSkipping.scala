@@ -1,6 +1,7 @@
 package graft.delta.scan
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graftshim.Shims
@@ -39,6 +40,16 @@ object StatsSkipping {
       StructField("nullCount", StructType(eligible.map(f =>
         StructField(f.name, LongType))))))
   }
+
+  /** The plan-time skipping step of a file index over `snapshot`'s
+    * unpruned live list: the data filters Spark pushes into the scan in,
+    * the paths of the live files that might match them out. None under
+    * column mapping, where a parquet scan's pushed filters name PHYSICAL
+    * columns while stats are read by logical name. */
+  def onScan(snapshot: Snapshot): Option[Seq[Column] => Set[String]] =
+    if (ColumnMapping.mode(snapshot.metadata) != "none") None
+    else Some(filters => prune(snapshot, snapshot.allFiles, filters)
+      .select("path").collect().map(_.getString(0)).toSet)
 
   /** Prune the live-files DataFrame with `filters`. Returns the kept
     * subset (same columns). */
@@ -144,7 +155,8 @@ object StatsSkipping {
     val raw = coalesce(
       element_at(col("partitionValues"), ctx.physOf(name)),
       element_at(col("partitionValues"), name))
-    val cleaned = when(raw === "__HIVE_DEFAULT_PARTITION__", lit(null))
+    val cleaned = when(
+      raw === ExternalCatalogUtils.DEFAULT_PARTITION_NAME, lit(null))
       .otherwise(raw)
     ctx.dataTypeOf(name).map(dt => cleaned.cast(dt)).getOrElse(cleaned)
   }

@@ -3,6 +3,7 @@ package graft.delta.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
 import org.apache.spark.sql.execution.datasources.{NoopCache, PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.{StringType, StructType}
@@ -25,8 +26,9 @@ import graft.delta.scan.DeltaScan.ScanFile
   *    to the add, not to a directory); partition filters, DPP re-lists
   *    included, are evaluated once per distinct partition row;
   *  - `statsSkipping` maps pushed data filters to the paths worth
-  *    reading. The DSv2 caller passes the unpruned live list with it,
-  *    `DeltaScan` a list it already pruned without it.
+  *    reading. A caller over the unpruned live list (the native DSv2
+  *    scan, `Snapshot.read`) passes it; one over a list it already
+  *    pruned passes None.
   *
   * `files` is evaluated on first use, so a DSv2 aggregate answered from
   * log stats never collects it. The class extends
@@ -49,8 +51,9 @@ final class GraftDeltaFileIndex(spark: SparkSession, tablePath: Path,
     GraftDeltaFileIndex.withLogStatus(spark, tablePath, files)
       .groupBy(f =>
         names.map(n => f.partitionValues.get(n).flatMap(Option(_))))
-      .toSeq.map { case (raw, group) =>
-        (partitionRow(raw), group.map { f =>
+      .toSeq.map { case (_, group) =>
+        (GraftDeltaFileIndex.partitionRow(spark, partSchema,
+          group.head.partitionValues), group.map { f =>
           f.relPath -> new FileStatus(f.size, false, 1, 0L, f.modTime,
             GraftDeltaFileIndex.absolute(table, f.relPath))
         }.toArray)
@@ -59,15 +62,6 @@ final class GraftDeltaFileIndex(spark: SparkSession, tablePath: Path,
 
   private lazy val statuses: Seq[FileStatus] =
     partitions.flatMap(_._2.map(_._2))
-
-  private def partitionRow(raw: Seq[Option[String]]): InternalRow = {
-    val tz = Option(spark.conf.get("spark.sql.session.timeZone"))
-    InternalRow.fromSeq(partSchema.fields.toSeq.zip(raw).map {
-      case (_, None | Some(GraftDeltaFileIndex.HiveDefaultPartition)) => null
-      case (field, Some(v)) => Cast(Literal(UTF8String.fromString(v),
-        StringType), field.dataType, tz).eval(InternalRow.empty)
-    })
-  }
 
   /** The partition filters as one predicate over a partition row. */
   private def partitionMatch(
@@ -114,7 +108,21 @@ final class GraftDeltaFileIndex(spark: SparkSession, tablePath: Path,
 }
 
 object GraftDeltaFileIndex {
-  private final val HiveDefaultPartition = "__HIVE_DEFAULT_PARTITION__"
+
+  /** A file's typed partition row: each `partSchema` field's value from
+    * `values` (keyed by field name) cast from its log string; absent,
+    * JSON-null and the null-partition marker read as null. */
+  private[graft] def partitionRow(spark: SparkSession, partSchema: StructType,
+      values: Map[String, String]): InternalRow = {
+    val tz = Option(spark.conf.get("spark.sql.session.timeZone"))
+    InternalRow.fromSeq(partSchema.fields.toSeq.map { field =>
+      values.get(field.name).flatMap(Option(_)) match {
+        case None | Some(ExternalCatalogUtils.DEFAULT_PARTITION_NAME) => null
+        case Some(v) => Cast(Literal(UTF8String.fromString(v), StringType),
+          field.dataType, tz).eval(InternalRow.empty)
+      }
+    })
+  }
 
   private[graft] def absolute(table: Path, rel: String): Path = {
     val p = new Path(rel)

@@ -22,14 +22,17 @@ import graft.delta.scan.{ColumnMapping, DeltaScan, StatsSkipping}
   *
   *  - NATIVE (no deletion vectors, identity column mapping — the common
   *    case): Spark's own `ParquetScanBuilder` over the index, built on
-  *    the unpruned live list with the snapshot's stats skipping. File
+  *    the unpruned live list with the plan-time stats skipping that
+  *    `Snapshot.read` also takes ([[StatsSkipping.onScan]]). File
   *    splits stream from it at plan time (partition pruning + stats
   *    skipping both applied there), the scan is Spark's vectorized
-  *    parquet batch read inside whole-stage codegen, and pushed filters
-  *    are visible on the BatchScan node.
+  *    parquet batch read inside whole-stage codegen, pushed filters
+  *    are visible on the BatchScan node, and a runtime filter (dynamic
+  *    partition pruning) re-lists the index.
   *  - COMPOSED (DV or column-mapping tables): a `V1Scan` wrapping the
-  *    assembled DataFrame ([[DeltaScan]]), whose parquet relation scans
-  *    the index over the files it already pruned, and which carries the
+  *    assembled DataFrame ([[DeltaScan]]: `Snapshot.read`, or
+  *    `readWhere` with the pushed filters), whose parquet relation scans
+  *    the index, appends each file's partition values, and carries the
   *    DV anti-join and physical→logical rename. Pushed filters still
   *    reach stats skipping and still print on the scan node.
   *
@@ -44,19 +47,13 @@ final class GraftDeltaTable(spark: SparkSession, path: String,
     ignoreChanges: Boolean = false,
     // with versionRange: emit the derived row-level change feed
     // (_change_type insert|delete, _commit_version) instead of adds-only
-    changeFeed: Boolean = false,
-    // a caller that ALREADY resolved the snapshot (Snapshot.read's DSv2
-    // route) passes it here — one log resolution per read, not two; the
-    // DV probe hint likewise spares a duplicate metadata job
-    preResolved: Option[Snapshot] = None,
-    hasDvsHint: Option[Boolean] = None) extends Table with SupportsRead {
+    changeFeed: Boolean = false) extends Table with SupportsRead {
 
-  private[sources] lazy val snapshot: Snapshot =
-    preResolved.getOrElse(versionRange match {
-      case Some((_, end)) if end >= 0 =>
-        DeltaTable.forPath(spark, path, Some(end))
-      case _ => DeltaTable.forPath(spark, path, versionAsOf)
-    })
+  private[sources] lazy val snapshot: Snapshot = versionRange match {
+    case Some((_, end)) if end >= 0 =>
+      DeltaTable.forPath(spark, path, Some(end))
+    case _ => DeltaTable.forPath(spark, path, versionAsOf)
+  }
   private lazy val partCols = snapshot.partitionColumns
   private lazy val dataFields =
     snapshot.schema.fields.filterNot(f => partCols.contains(f.name))
@@ -90,9 +87,8 @@ final class GraftDeltaTable(spark: SparkSession, path: String,
   // memoized: newScanBuilder runs once per scan of this table instance,
   // and the probe is a metadata job — re-running it per scan would pay
   // driver latency for an answer fixed by the (immutable) snapshot
-  private lazy val hasDvs: Boolean = hasDvsHint.getOrElse(
-    snapshot.allFiles
-      .where(col("deletionVector").isNotNull).limit(1).collect().nonEmpty)
+  private lazy val hasDvs: Boolean = snapshot.allFiles
+    .where(col("deletionVector").isNotNull).limit(1).collect().nonEmpty
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     versionRange match {
@@ -117,8 +113,7 @@ final class GraftDeltaTable(spark: SparkSession, path: String,
               new GraftDeltaFileIndex(spark, snapshot.tablePath,
                 DeltaScan.scanFilesOf(snapshot.allFiles),
                 StructType(partFields.toIndexedSeq),
-                Some(cols => StatsSkipping.prune(snapshot, snapshot.allFiles,
-                  cols).select("path").collect().map(_.getString(0)).toSet)),
+                StatsSkipping.onScan(snapshot)),
               schema(), StructType(dataFields.toIndexedSeq), options),
             statsAnswer,
             partitionSchema = StructType(partFields.toIndexedSeq))
@@ -165,19 +160,8 @@ final class GraftDeltaTable(spark: SparkSession, path: String,
     val rangeCache =
       scala.collection.mutable.Map.empty[String, Option[(Any, Any)]]
     def rangeOf(sf: StructField): Option[(Any, Any)] =
-      rangeCache.getOrElseUpdate(sf.name, {
-        import org.apache.spark.sql.functions._
-        val minJ = get_json_object(col("stats"), s"$$.minValues.${sf.name}")
-        val maxJ = get_json_object(col("stats"), s"$$.maxValues.${sf.name}")
-        val a = snapshot.allFiles.agg(
-          count(lit(1)), count(minJ), count(maxJ),
-          min(minJ.cast(sf.dataType)), max(maxJ.cast(sf.dataType)),
-          count(col("deletionVector"))).head()
-        val files = a.getLong(0)
-        if (files == 0 || a.getLong(1) != files || a.getLong(2) != files ||
-          a.getLong(5) != 0 || a.isNullAt(3) || a.isNullAt(4)) None
-        else Some((a.get(3), a.get(4)))
-      })
+      rangeCache.getOrElseUpdate(sf.name,
+        snapshot.statsRange(sf.name, sf.dataType))
 
     val resolved: Seq[Option[(StructField, Any)]] =
       agg.aggregateExpressions.toSeq.zipWithIndex.map {

@@ -44,21 +44,6 @@ object Shims {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.newHadoopConfWithOptions(options)
 
-  /** DataFrame over a DSv2 `Table` handle directly — skips the
-    * provider round-trip (`spark.read.format(...)`), which would
-    * re-resolve the table's snapshot from the log a second time.
-    * `DataSourceV2Relation.create` and `Dataset.ofRows` are
-    * private[sql]. */
-  def dsv2DataFrame(spark: org.apache.spark.sql.SparkSession,
-      table: org.apache.spark.sql.connector.catalog.Table)
-      : org.apache.spark.sql.DataFrame = {
-    val relation = org.apache.spark.sql.execution.datasources.v2
-      .DataSourceV2Relation.create(table, None, None,
-        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], relation)
-  }
-
   /** DataFrame over an RDD of InternalRow with a known schema (the
     * surgical DV scan produces rows straight from the parquet reader
     * factory); `internalCreateDataFrame` lives on the classic session. */

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape assertions: the properties that matter at 100 TB must be
@@ -17,6 +18,15 @@ class PlanAuditSpec extends AnyFunSuite {
     df.queryExecution.explainString(ExplainMode.fromString("formatted")) +
       "\n" + df.queryExecution.executedPlan.toString
   }
+
+  /** Every `FileSourceScanExec` in an executed plan. AQE wraps the final
+    * plan in adaptive/stage nodes whose physical subtree is not in
+    * `children` — unwrap explicitly. */
+  private def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
+    case s: FileSourceScanExec => Seq(s)
+    case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
+    case q: QueryStageExec => allScans(q.plan)
+  }.flatten
 
   test("q_range_join: banded rewrite is an equi-join, never nested-loop") {
     val p = plan("q_range_join")
@@ -100,11 +110,23 @@ class PlanAuditSpec extends AnyFunSuite {
     val pruned = graft.delta.scan.DeltaScan.prunedFiles(snap,
       Seq(org.apache.spark.sql.functions.col("o_orderstatus") === "F")).count()
     assert(pruned < all, s"pruned=$pruned all=$all")
-    // and the physical plan reads exactly the pruned file count
+    // and the physical plan reads exactly the pruned file count, with
+    // the partition column coming from the scan itself (a partition
+    // filter on it, no join attaching it)
     val df = snap.readWhere(org.apache.spark.sql.functions.col("o_orderstatus") === "F")
-    val scan = df.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString("\n")
-    assert(!scan.isEmpty)
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    assert(!p.contains("BroadcastHashJoin"), p.take(3000))
+    val scan = allScans(df.queryExecution.executedPlan) match {
+      case Seq(s) => s
+      case other => fail(s"expected one file scan, got ${other.size}:\n" +
+        p.take(3000))
+    }
+    assert(scan.partitionFilters.exists(
+      _.references.exists(_.name == "o_orderstatus")),
+      s"no PartitionFilters on o_orderstatus:\n${p.take(3000)}")
+    assert(scan.metrics("numFiles").value == pruned,
+      s"read ${scan.metrics("numFiles").value} files, pruned list $pruned")
   }
 
   test("format_read: DSv2 BatchScan over the log-backed file index, " +
@@ -337,14 +359,17 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("snap.read star join: runtime partition pruning engages through " +
     "the default read path") {
-    // Snapshot.read routes eligible partitioned tables through the
-    // DSv2 scan, so a star join over the DEFAULT read path (no explicit
-    // format("graftdelta")) must get dynamic partition pruning too
+    // Snapshot.read's file-source scan carries the table's partition
+    // columns from its file index, so a star join over the DEFAULT read
+    // path (no explicit format("graftdelta")) gets dynamic partition
+    // pruning too. The dim's selective predicate is on a non-key
+    // column: an equality on the key itself would be inferred onto the
+    // fact side as a static partition filter, which makes DPP redundant
     import org.apache.spark.sql.functions._
     val path = graft.queries.DeltaQueries.partitionedTable(spark, sf)
     val fact = graft.delta.DeltaTable.forPath(spark, path).read
     val dim = spark.read.parquet(s"$sf/orders.parquet")
-      .where(col("o_orderstatus") === "F")
+      .where(col("o_orderdate") < "1994-01-01")
       .select(col("o_orderstatus").as("status_key")).distinct()
     val q = fact.join(broadcast(dim),
         fact("o_orderstatus") === dim("status_key"))
@@ -389,18 +414,9 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q_sim_ann_pq: candidate scan reads codes only (no vector), " +
     "cid partitions pruned") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import graft.queries.SimilarityQueries
     val df = SparkEntry.queries("q_sim_ann_pq")(spark, sf)
     df.collect()
-    // AQE wraps the final plan in adaptive/stage nodes whose physical
-    // subtree is not in `children` — unwrap explicitly
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     val scans = allScans(df.queryExecution.executedPlan)
     val codeScan = scans.find(_.relation.location.rootPaths
       .exists(_.toString.contains("pq_index")))
@@ -450,15 +466,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q_sim_ann_pq_packed: the packed scan reads one codes array + " +
     "norm, cid partitions pruned") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = SparkEntry.queries("q_sim_ann_pq_packed")(spark, sf)
     df.collect()
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     val scan = allScans(df.queryExecution.executedPlan)
       .find(_.relation.location.rootPaths
         .exists(_.toString.contains("pq_index_packed")))
@@ -472,13 +481,6 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("packed PQ family: filtered + incremental scans read one codes " +
     "array + norm only, cid partitions pruned") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     for ((query, dirToken) <- Seq(
       ("q_sim_ann_pq_filtered_packed", "pq_index_packed"),
       ("q_sim_ann_pq_incr_packed", "pq_index_incr_packed"),
@@ -501,15 +503,8 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("q_knn_join_pq_packed: the pairwise stage scans the packed codes " +
     "array only, cid-pruned") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = SparkEntry.queries("q_knn_join_pq_packed")(spark, sf)
     df.collect()
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     val codeScans = allScans(df.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists { p =>
         p.toString.contains("pq_index_packed/rel=data/")
@@ -528,16 +523,9 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("q_knn_join_pq: the pairwise stage scans codes only, cid-pruned") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import graft.queries.SimilarityQueries
     val df = SparkEntry.queries("q_knn_join_pq")(spark, sf)
     df.collect()
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     // the CODES relation only: its sibling dirs (the M x K-row
     // codebooks feeding the relational LUT, the coarse centroids)
     // legitimately scan their own tiny files and share the path prefix
@@ -561,19 +549,11 @@ class PlanAuditSpec extends AnyFunSuite {
   test("Delta index scan: an explicit pcid list prunes the file " +
     "inventory to exactly those partitions") {
     import graft.delta.IndexStore
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val path = graft.queries.SimilarityQueries.ivfIndexPath(spark, sf)
     val cid = graft.delta.IndexStore.centroidsAt(spark, path)
       .select("cid").head.getLong(0)
     val df = IndexStore.data(spark, path, Some(Seq(cid)))
     df.collect()
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     val scan = allScans(df.queryExecution.executedPlan).headOption
       .getOrElse(fail("no FileSourceScan"))
     val files = scan.relation.location.inputFiles
@@ -633,13 +613,6 @@ class PlanAuditSpec extends AnyFunSuite {
     "prunes to the nprobe cid partitions of the data rel (compaction " +
     "changed layout only; the hierarchical route feeds the same " +
     "file-inventory prune)") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    def allScans(p: SparkPlan): Seq[FileSourceScanExec] = p.collect {
-      case s: FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => allScans(a.executedPlan)
-      case q: QueryStageExec => allScans(q.plan)
-    }.flatten
     for ((query, dirToken) <- Seq(
       ("q_sim_ann_compact", "ivf_index_compact"),
       ("q_sim_ann_two_level", "ivf_index_two_level"))) {

@@ -137,6 +137,45 @@ class DvRowGroupSkipSpec extends AnyFunSuite {
     }
   }
 
+  test("surgical skip on a PARTITIONED table keeps each file's " +
+      "partition value") {
+    val p = tmp("parted")
+    // one key-sorted, many-group file per partition: the sort on
+    // (bucket, key) already satisfies the partitioned writer's ordering
+    val df = orders.withColumn("bucket",
+        (col("o_orderkey") % 2).cast("int"))
+      .repartition(1).sortWithinPartitions("bucket", "o_orderkey")
+    val hc = spark.sparkContext.hadoopConfiguration
+    val prev = hc.get("parquet.block.size")
+    hc.set("parquet.block.size", (16 * 1024).toString)
+    try CommitWriter.createTable(spark, df, p,
+      partitionColumns = Seq("bucket"),
+      configuration = Map("delta.enableDeletionVectors" -> "true"))
+    finally {
+      if (prev == null) hc.unset("parquet.block.size")
+      else hc.set("parquet.block.size", prev)
+    }
+    val cut = orders.stat.approxQuantile("o_orderkey", Array(0.9), 0.0)(0)
+    DmlCommands.delete(spark, p, col("o_orderkey") < cut)
+
+    spark.conf.set("spark.lakehouse.dv.rowGroupSkip.minDeleted", "1")
+    try {
+      DvRowGroupSkip.lastSkipped.set(-1)
+      val t = DeltaTable.forPath(spark, p).read
+      val rows = t.select("o_orderkey", "bucket").collect()
+      assert(DvRowGroupSkip.lastSkipped.get() > 0,
+        "partitioned table never engaged the surgical path")
+      assert(rows.length == df.filter(col("o_orderkey") >= cut).count())
+      // every row carries its own file's partition value, typed
+      val wrong = rows.filterNot(r =>
+        r.get(1) == (r.get(0).asInstanceOf[Number].longValue % 2).toInt)
+      assert(wrong.isEmpty, s"rows with a foreign partition value: " +
+        wrong.take(5).mkString(", "))
+    } finally {
+      spark.conf.unset("spark.lakehouse.dv.rowGroupSkip.minDeleted")
+    }
+  }
+
   test("second DV DELETE merges correctly through the surgical scan") {
     // DML's provenance scan (buildWithRowIndex) also routes heavy-DV
     // files through the surgical path; the __row_index it carries must
