@@ -131,28 +131,18 @@ object DeltaTable {
     Snapshot(spark, tablePath, segment, meta, proto)
   }
 
-  /** Time travel by timestamp: the newest version whose commit file was
-    * modified at or before `timestampMillis` (standard Delta
-    * timestamp-as-of semantics over commit mtimes). */
+  /** Time travel by timestamp: the newest version whose commit
+    * timestamp ([[LogSegment.commitTimestamp]]: its inCommitTimestamp,
+    * else its file's mtime) is at or before `timestampMillis`. */
   def forPathAtTimestamp(spark: SparkSession, path: String,
       timestampMillis: Long): Snapshot = {
     val tablePath = new Path(path)
     val fs = LogSegment.fs(spark, tablePath)
     val logPath = new Path(tablePath, "_delta_log")
-    // commit timestamp: the monotonic commitInfo.inCommitTimestamp when
-    // the table writes them (clock-skew-proof, survives file copies),
-    // else the commit file's mtime (the classic Delta behavior)
-    def ictOf(st: org.apache.hadoop.fs.FileStatus) =
-      LogSegment.inCommitTimestamp(fs, st.getPath)
-    val commits = fs.listStatus(logPath).toSeq
+    val stamped = fs.listStatus(logPath).toSeq
       .flatMap(st => LogSegment.commitVersion(st.getPath.getName)
-        .map(v => (v, st)))
+        .map(v => (v, LogSegment.commitTimestamp(fs, st))))
       .sortBy(_._1)
-    val ictAnywhere = commits.lastOption.exists(c => ictOf(c._2).isDefined)
-    val stamped = commits.map { case (v, st) =>
-      (v, (if (ictAnywhere) ictOf(st) else None)
-        .getOrElse(st.getModificationTime))
-    }
     val eligible = stamped.filter(_._2 <= timestampMillis)
     if (eligible.isEmpty)
       throw new IllegalArgumentException(

@@ -886,35 +886,29 @@ object CommitWriter {
 
   /** The table state a landing commit needs from the log: whether
     * commits carry in-commit timestamps, how often to auto-checkpoint,
-    * whether checkpoints must be v2 (sidecar) format, and whether the
-    * table opted into post-commit auto-compaction. */
+    * and whether the table opted into post-commit auto-compaction. */
   private case class WriteConf(ict: Boolean, checkpointInterval: Int,
-      v2Checkpoints: Boolean, autoCompact: Boolean = false,
-      logCompactionInterval: Int = 0)
+      autoCompact: Boolean = false, logCompactionInterval: Int = 0)
 
   /** Resolve [[WriteConf]] for the commit landing at `version`: start
     * from the current log state (memo hit, else one resolve; creation
     * commits start from defaults), then overlay the commit's own
-    * inline metaData/protocol actions — a metaData action replaces
-    * `configuration` wholesale and a protocol action replaces the
-    * feature set, so the overlay IS the post-commit state. */
+    * inline metaData action — it replaces `configuration` wholesale,
+    * so the overlay IS the post-commit state. */
   private def resolveWriteConf(spark: SparkSession, tablePath: String,
       version: Long,
-      inlineMeta: Option[com.fasterxml.jackson.databind.JsonNode],
-      inlineProto: Option[com.fasterxml.jackson.databind.JsonNode])
+      inlineMeta: Option[com.fasterxml.jackson.databind.JsonNode])
       : WriteConf = {
     val base: WriteConf =
-      if (version == 0) WriteConf(ict = false, DefaultCheckpointInterval,
-        v2Checkpoints = false)
+      if (version == 0) WriteConf(ict = false, DefaultCheckpointInterval)
       else Option(ictFlagCache.get(tablePath)).collect {
         case m if m.nextVersion == version &&
             parentMatches(spark, tablePath, version, m) => m.conf
       }.getOrElse {
         val segment = LogSegment.forTable(spark, new Path(tablePath))
-        val (meta, proto) = Replay.metadataAndProtocol(spark, segment)
-        confOf(meta.configuration, proto.writerFeatures)
+        confOf(Replay.metadataAndProtocol(spark, segment)._1.configuration)
       }
-    val withMeta = inlineMeta.fold(base) { md =>
+    inlineMeta.fold(base) { md =>
       val cfg = Option(md.get("configuration")).map(c =>
         c.properties().asScala
           .map(e => e.getKey -> e.getValue.asText()).toMap)
@@ -923,18 +917,11 @@ object CommitWriter {
         autoCompact = autoCompactFrom(cfg),
         logCompactionInterval = LogCompaction.intervalFrom(cfg))
     }
-    inlineProto.fold(withMeta) { p =>
-      val feats = Option(p.get("writerFeatures")).map(_.asScala.toSeq
-        .map(_.asText())).getOrElse(Nil)
-      withMeta.copy(v2Checkpoints = feats.contains("v2Checkpoint"))
-    }
   }
 
-  private def confOf(cfg: Map[String, String],
-      writerFeatures: Option[Seq[String]]): WriteConf =
-    WriteConf(ictFrom(cfg), intervalFrom(cfg),
-      writerFeatures.getOrElse(Nil).contains("v2Checkpoint"),
-      autoCompactFrom(cfg), LogCompaction.intervalFrom(cfg))
+  private def confOf(cfg: Map[String, String]): WriteConf =
+    WriteConf(ictFrom(cfg), intervalFrom(cfg), autoCompactFrom(cfg),
+      LogCompaction.intervalFrom(cfg))
 
   /** `delta.autoOptimize.autoCompact` (the ecosystem-standard table
     * property): opt-in post-commit small-file compaction. */
@@ -1029,10 +1016,7 @@ object CommitWriter {
     }
     val inlineMeta = actionLines.filter(_.contains("\"metaData\""))
       .flatMap(l => Option(mapper.readTree(l).get("metaData"))).lastOption
-    val inlineProto = actionLines.filter(_.contains("\"protocol\""))
-      .flatMap(l => Option(mapper.readTree(l).get("protocol"))).lastOption
-    val conf = resolveWriteConf(spark, tablePath, version, inlineMeta,
-      inlineProto)
+    val conf = resolveWriteConf(spark, tablePath, version, inlineMeta)
     val ictOn = conf.ict
     if (ictOn) {
       // monotonic even under wall-clock skew: never at or below the
@@ -1056,38 +1040,9 @@ object CommitWriter {
     }
     val payload = (info.toString +: actionLines).mkString("", "\n", "\n")
     val payloadBytes = payload.getBytes("UTF-8")
-    val uri = fs.makeQualified(commitPath).toUri
-    if (uri.getScheme == "file") {
-      // Hadoop LocalFileSystem.create(path, overwrite=false) is
-      // check-then-create — two racing writers can BOTH pass the check
-      // and the second silently overwrites the first's commit (caught by
-      // the 8-thread stress test). Publish atomically instead: write a
-      // temp file fully, then hard-link it into place — link(2) fails
-      // with EEXIST atomically at the kernel, so exactly one writer wins
-      // and readers never observe a partially-written commit file.
-      import java.nio.file.{Files, Paths, FileAlreadyExistsException}
-      val target = Paths.get(uri.getPath)
-      val tmp = target.resolveSibling(
-        s".${target.getFileName}.${UUID.randomUUID().toString.take(8)}.tmp")
-      Files.write(tmp, payloadBytes)
-      try Files.createLink(target, tmp)
-      catch {
-        case e: FileAlreadyExistsException =>
-          ictFlagCache.remove(tablePath) // another writer owns the state
-          throw new ConcurrentCommitException(version, e)
-      } finally Files.deleteIfExists(tmp)
-    } else {
-      // non-local stores: the filesystem's create-no-overwrite is the
-      // atomicity contract (HDFS enforces it at the namenode)
-      val out = try fs.create(commitPath, false) catch {
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          ictFlagCache.remove(tablePath)
-          throw new ConcurrentCommitException(version, e)
-        case e: java.io.IOException if fs.exists(commitPath) =>
-          ictFlagCache.remove(tablePath)
-          throw new ConcurrentCommitException(version, e)
-      }
-      try out.write(payloadBytes) finally out.close()
+    if (!putIfAbsent(fs, commitPath, payloadBytes)) {
+      ictFlagCache.remove(tablePath) // another writer owns the state
+      throw new ConcurrentCommitException(version, null)
     }
     // this commit defines the table state the NEXT commit reads: seed
     // the memo so sequential writes skip the metadata re-resolution
@@ -1102,6 +1057,42 @@ object CommitWriter {
       LogCompaction.maybeCompact(spark, tablePath, version,
         conf.logCompactionInterval)
     maybeAutoCompact(spark, tablePath, version, conf, operation, actionLines)
+  }
+
+  /** Publish `bytes` at `path` only if nothing is there yet — the
+    * put-if-absent primitive behind every commit and log compaction.
+    * Returns false when the path already exists (another writer won);
+    * any other storage failure throws. Readers never observe a
+    * partially written file.
+    *
+    * Hadoop's LocalFileSystem.create(path, overwrite=false) is
+    * check-then-create: two racing writers can both pass the check and
+    * the second silently overwrites the first (caught by the 8-thread
+    * stress test). Local paths therefore write a temp file fully and
+    * hard-link it into place — link(2) fails with EEXIST atomically at
+    * the kernel, so exactly one writer wins. Other stores rely on the
+    * filesystem's create-no-overwrite, which HDFS enforces at the
+    * namenode. */
+  private[log] def putIfAbsent(fs: FileSystem, path: Path,
+      bytes: Array[Byte]): Boolean = {
+    val uri = fs.makeQualified(path).toUri
+    if (uri.getScheme == "file") {
+      import java.nio.file.{Files, Paths, FileAlreadyExistsException}
+      val target = Paths.get(uri.getPath)
+      val tmp = target.resolveSibling(
+        s".${target.getFileName}.${UUID.randomUUID().toString.take(8)}.tmp")
+      Files.write(tmp, bytes)
+      try { Files.createLink(target, tmp); true }
+      catch { case _: FileAlreadyExistsException => false }
+      finally Files.deleteIfExists(tmp)
+    } else {
+      val out = try fs.create(path, false) catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
+        case _: java.io.IOException if fs.exists(path) => return false
+      }
+      try out.write(bytes) finally out.close()
+      true
+    }
   }
 
   /** Session knobs for auto-compaction (delta-spark parity defaults:
@@ -1177,28 +1168,25 @@ object CommitWriter {
   final val DefaultCheckpointInterval = 10
 
   /** Ecosystem-parity auto-checkpointing: every `checkpointInterval`
-    * commits the committing writer checkpoints the table (v2 sidecar
-    * format when the table declares `v2Checkpoint`, classic
-    * otherwise), which also triggers the expired-log sweep — without
-    * it a streaming-ingest table accumulates one JSON per micro-batch
-    * forever and every reader's log listing degrades. The commit has
-    * already landed, so a checkpoint failure is logged and swallowed:
-    * the table stays correct (replay falls back to the previous
-    * checkpoint + commit tail), only the maintenance is deferred.
-    * Under racing writers the checkpoint targets the current tip —
-    * that is delta-spark's semantics too, and a concurrent-checkpoint
-    * rename collision just means the other writer already did it. */
+    * commits the committing writer checkpoints the table in the format
+    * its protocol declares, which also triggers the expired-log sweep —
+    * without it a streaming-ingest table accumulates one JSON per
+    * micro-batch forever and every reader's log listing degrades. The
+    * commit has already landed, so a checkpoint failure is logged and
+    * swallowed: the table stays correct (replay falls back to the
+    * previous checkpoint + commit tail), only the maintenance is
+    * deferred. Under racing writers the checkpoint targets the current
+    * tip — that is delta-spark's semantics too, and a
+    * concurrent-checkpoint rename collision just means the other writer
+    * already did it. */
   private def maybeAutoCheckpoint(spark: SparkSession, tablePath: String,
       version: Long, conf: WriteConf): Unit =
     if (version > 0 && version % conf.checkpointInterval == 0) {
-      try {
-        // numParts = -1: the checkpoint sizes its own artifact (one
-        // part per ~100k file actions) from the replay it performs
-        // anyway — no extra snapshot resolution on the commit path
-        if (conf.v2Checkpoints)
-          checkpointV2(spark, tablePath, numSidecars = -1)
-        else checkpoint(spark, tablePath, numParts = -1)
-      } catch {
+      // parts = -1: the checkpoint sizes its own artifact (one part per
+      // ~100k file actions) from the replay it performs anyway — no
+      // extra snapshot resolution on the commit path
+      try checkpoint(spark, tablePath, parts = -1)
+      catch {
         case scala.util.control.NonFatal(e) =>
           maintenanceFailed("auto-checkpoint", tablePath, version, e)
       }
@@ -1210,8 +1198,8 @@ object CommitWriter {
   private[delta] def autoCheckpointParts(nFiles: Long): Int =
     math.min(64L, nFiles / AutoCheckpointRowsPerPart + 1).toInt
 
-  /** Write a classic checkpoint at the current version and update
-    * `_last_checkpoint`.
+  /** Write a checkpoint at the current version and update
+    * `_last_checkpoint`, in the format the table's protocol declares.
     *
     * Per the Delta protocol a checkpoint is a complete replay state, not
     * just the live files: it also carries the latest SetTransaction per
@@ -1219,18 +1207,34 @@ object CommitWriter {
     * and remove tombstones newer than the retention window (so VACUUM /
     * incremental readers over the checkpoint keep tombstone visibility).
     *
-    * @param numParts write a multi-part checkpoint with this many parts
-    *   (default 1 = classic single file; -1 = auto-size from the
-    *   live-file count, [[autoCheckpointParts]] — ~100k add rows per
+    * Formats:
+    *  - classic (no `v2Checkpoint` feature): one
+    *    `<v>.checkpoint.parquet`, or a multi-part set
+    *    `<v>.checkpoint.<i>.<n>.parquet`. Part renames are not atomic as
+    *    a set, but readers ignore a version whose part count does not
+    *    match the filename-declared total.
+    *  - v2 (the table declares `v2Checkpoint`; Delta PROTOCOL "V2 spec
+    *    checkpoints"): file actions (adds + unexpired remove tombstones)
+    *    land in UUID-named parquet sidecars under `_delta_log/_sidecars/`;
+    *    the top-level `<v>.checkpoint.<uuid>.parquet` manifest carries
+    *    only checkpointMetadata, the sidecar references and the non-file
+    *    actions (protocol/metaData/txn/domainMetadata). A classic
+    *    checkpoint on such a table would be a non-compliant artifact
+    *    other readers could prefer over the real one, so it never gets
+    *    one.
+    * Parts or sidecars publish first, then the manifest, then
+    * `_last_checkpoint`, so a crash at any point leaves the previous
+    * checkpoint + commit tail authoritative (unreferenced sidecars and
+    * incomplete part sets are garbage, not corruption).
+    *
+    * @param parts parquet files for the checkpoint's rows (classic) or
+    *   file actions (v2 sidecars); default 1, -1 = auto-size from the
+    *   live-file count ([[autoCheckpointParts]] — ~100k add rows per
     *   part). At 100 TB a checkpoint holds millions of add rows — parts
     *   let it write AND later replay fully distributed instead of
-    *   through one task. Part renames are not atomic as a set, but
-    *   readers ignore a version whose part count does not match the
-    *   filename-declared total, so a crash mid-publish leaves the
-    *   previous checkpoint + commit tail in effect. */
+    *   through one task. */
   def checkpoint(spark: SparkSession, tablePath: String,
-      numParts: Int = 1): Long = {
-    import org.apache.spark.sql.expressions.Window
+      parts: Int = 1): Long = {
     val segment = LogSegment.forTable(spark, new Path(tablePath))
     val (meta, proto) = Replay.metadataAndProtocol(spark, segment)
     // a checkpoint REWRITES replay state: unknown protocol features may
@@ -1238,24 +1242,48 @@ object CommitWriter {
     // domainMetadata), and a checkpoint that drops them corrupts the
     // table — same fail-closed gate as data writes
     ProtocolSupport.assertWritable(tablePath, meta, proto)
-    // v2Checkpoint tables require UUID-named sidecar checkpoints; a
-    // classic checkpoint here would be a non-compliant artifact other
-    // readers could prefer over the real one. Commits stay allowed
-    // (checkpointing is optional); only this entry point refuses.
-    require(!proto.writerFeatures.getOrElse(Nil).contains("v2Checkpoint"),
-      s"Table $tablePath declares v2Checkpoint: writing a classic " +
-        "checkpoint would violate the table's checkpoint format contract " +
-        "— use checkpointV2()")
     val (fileRows, nonFileRows) = checkpointRows(spark, segment, meta, proto)
-    val all = fileRows.unionByName(nonFileRows)
-    val parts =
-      if (numParts == -1) autoCheckpointParts(
+    val n =
+      if (parts == -1) autoCheckpointParts(
         fileRows.where(col("add").isNotNull).count())
-      else numParts
+      else parts
+    val fs = LogSegment.fs(spark, segment.tablePath)
+    val logPath = segment.logPath
+    val v = segment.version
+    val v2 = proto.writerFeatures.getOrElse(Nil).contains("v2Checkpoint")
+    val published =
+      if (v2) {
+        val sidecarDir = new Path(logPath, "_sidecars")
+        fs.mkdirs(sidecarDir)
+        val sidecars = stageAndPublish(fs, logPath, fileRows, n)((_, _) =>
+          new Path(sidecarDir, s"${UUID.randomUUID()}.parquet"))
+        sidecars ++ stageAndPublish(fs, logPath,
+          v2Manifest(spark, fs, v, sidecars, nonFileRows), 1)((_, _) =>
+            new Path(logPath, f"$v%020d.checkpoint.${UUID.randomUUID()}.parquet"))
+      } else {
+        stageAndPublish(fs, logPath, fileRows.unionByName(nonFileRows), n) {
+          case (_, 1) => new Path(logPath, LogSegment.checkpointFileName(v))
+          // the total is the ACTUAL part count (parquet may merge small
+          // partitions), so the reader's completeness check matches
+          case (i, total) => new Path(logPath,
+            f"$v%020d.checkpoint.${i + 1}%010d.$total%010d.parquet")
+        }
+      }
 
-    writeClassicCheckpointFiles(spark, tablePath, segment, all, parts)
+    // size = every action row in the artifact (for v2: sidecar file
+    // actions + ALL manifest rows, checkpointMetadata and sidecar
+    // references included), read from the written parquet footers
+    // instead of re-running the replay that produced the rows
+    val lc = mapper.createObjectNode()
+    lc.put("version", v)
+    lc.put("size", published.map(parquetRowCount(fs, _)).sum)
+    if (!v2 && published.length > 1) lc.put("parts", published.length)
+    val out = fs.create(new Path(logPath, "_last_checkpoint"), true)
+    try out.write(lc.toString.getBytes("UTF-8")) finally out.close()
+
+    sweepStaleTemps(fs, logPath)
     maybeCleanupExpiredLogs(spark, tablePath, meta)
-    segment.version
+    v
   }
 
   /** `delta.logRetentionDuration` (default 30 days): how long superseded
@@ -1462,174 +1490,78 @@ object CommitWriter {
       txnRows.unionByName(domainRows).unionByName(pmRows))
   }
 
-  /** Classic checkpoint file publishing: staged parquet write, rename
-    * into place (single or multi-part), `_last_checkpoint`, stale-temp
-    * sweep. */
-  private def writeClassicCheckpointFiles(spark: SparkSession,
-      tablePath: String, segment: LogSegment, all: DataFrame,
-      numParts: Int): Unit = {
-    val logPath = new Path(new Path(tablePath), "_delta_log")
-    val fs = LogSegment.fs(spark, new Path(tablePath))
+  /** The one publish step of every checkpoint artifact: write `rows` as
+    * up to `n` parquet files into a hidden staging dir, then rename each
+    * into place at `target(index, total)`, where `total` is the number
+    * of files that actually landed. Returns the published paths. The
+    * staging dir is removed whether or not every rename succeeds. */
+  private def stageAndPublish(fs: FileSystem, logPath: Path, rows: DataFrame,
+      n: Int)(target: (Int, Int) => Path): Seq[Path] = {
     val staging = new Path(logPath,
       s".checkpoint_staging_${UUID.randomUUID().toString.take(8)}")
-    (if (numParts <= 1) all.coalesce(1) else all.repartition(numParts))
-      .write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    if (parts.isEmpty)
-      throw new IllegalStateException("checkpoint write produced no parquet")
-    if (numParts <= 1 || parts.length == 1) {
-      val target = new Path(logPath,
-        LogSegment.checkpointFileName(segment.version))
-      // single rename, never delete-then-rename: a concurrent
-      // checkpointer of the same version races benignly (contents are
-      // equivalent), and readers never observe a missing checkpoint file
-      if (!fs.rename(parts.head.getPath, target) && !fs.exists(target))
-        throw new IllegalStateException(s"checkpoint rename failed: $target")
-    } else {
-      // multi-part names declare (index, total); the total is the ACTUAL
-      // part count (parquet may merge small partitions), so the reader's
-      // completeness check matches what landed
-      val total = parts.length
-      parts.zipWithIndex.foreach { case (st, i) =>
-        val target = new Path(logPath,
-          f"${segment.version}%020d.checkpoint.${i + 1}%010d.$total%010d.parquet")
-        if (!fs.rename(st.getPath, target) && !fs.exists(target))
-          throw new IllegalStateException(s"checkpoint rename failed: $target")
+    try {
+      (if (n <= 1) rows.coalesce(1) else rows.repartition(n))
+        .write.mode("overwrite").parquet(staging.toString)
+      val files = fs.listStatus(staging).toSeq.map(_.getPath)
+        .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+      if (files.isEmpty)
+        throw new IllegalStateException(s"checkpoint write produced no parquet: $staging")
+      files.zipWithIndex.map { case (src, i) =>
+        val dst = target(i, files.length)
+        // never delete-then-rename: a concurrent checkpointer of the same
+        // version races benignly (contents are equivalent), and readers
+        // never observe a missing checkpoint file
+        if (!fs.rename(src, dst) && !fs.exists(dst))
+          throw new IllegalStateException(s"checkpoint rename failed: $dst")
+        dst
       }
-    }
-    fs.delete(staging, true)
-
-    val lc = mapper.createObjectNode()
-    lc.put("version", segment.version)
-    lc.put("size", all.count())
-    if (numParts > 1 && parts.length > 1) lc.put("parts", parts.length)
-    val lcPath = new Path(logPath, "_last_checkpoint")
-    val out = fs.create(lcPath, true)
-    try out.write(lc.toString.getBytes("UTF-8")) finally out.close()
-
-    // opportunistic maintenance: a writer that crashed between its temp
-    // write and the hard-link publish leaves a .<commit>.<uuid>.tmp
-    // behind; sweep stale ones (>1h) here rather than on the hot commit
-    // path — checkpointing is already the log's maintenance moment
-    val staleCutoff = System.currentTimeMillis() - 3600 * 1000
-    fs.listStatus(logPath).iterator
-      .filter(st => st.getPath.getName.startsWith(".") &&
-        st.getPath.getName.endsWith(".tmp") &&
-        st.getModificationTime < staleCutoff)
-      .foreach(st => scala.util.Try(fs.delete(st.getPath, false)))
+    } finally fs.delete(staging, true)
   }
 
-  /** Write a V2 (UUID-named, sidecar-bearing) checkpoint at the current
-    * version. The table must declare the `v2Checkpoint` feature — the
-    * mirror gate of [[checkpoint]], which refuses on such tables.
-    *
-    * Format (Delta PROTOCOL "V2 spec checkpoints"): file actions
-    * (adds + unexpired remove tombstones) land in UUID-named parquet
-    * sidecars under `_delta_log/_sidecars/`; the top-level
-    * `<v>.checkpoint.<uuid>.parquet` manifest carries only
-    * checkpointMetadata, the sidecar references, and the non-file
-    * actions (protocol/metaData/txn). Sidecars publish before the
-    * manifest, and the manifest before `_last_checkpoint`, so a crash
-    * at any point leaves the previous checkpoint + commit tail
-    * authoritative (unreferenced sidecars are garbage, not corruption).
-    *
-    * @param numSidecars sidecar file count — the 100 TB scale knob: a
-    *   checkpoint's millions of file actions write AND replay
-    *   distributed across sidecars while the manifest stays tiny. */
-  def checkpointV2(spark: SparkSession, tablePath: String,
-      numSidecars: Int = 1): Long = { // -1 = auto-size (~100k rows/part)
-    val segment = LogSegment.forTable(spark, new Path(tablePath))
-    val (meta, proto) = Replay.metadataAndProtocol(spark, segment)
-    ProtocolSupport.assertWritable(tablePath, meta, proto)
-    require(proto.writerFeatures.getOrElse(Nil).contains("v2Checkpoint"),
-      s"Table $tablePath does not declare the v2Checkpoint feature: " +
-        "readers would not know to look for sidecars — write a classic " +
-        "checkpoint (checkpoint()) or declare the feature first")
-    val (fileRows, nonFileRows) = checkpointRows(spark, segment, meta, proto)
-
-    val logPath = new Path(new Path(tablePath), "_delta_log")
-    val fs = LogSegment.fs(spark, new Path(tablePath))
-    val sidecarDir = new Path(logPath, "_sidecars")
-    fs.mkdirs(sidecarDir)
-    val staging = new Path(logPath,
-      s".checkpoint_v2_staging_${UUID.randomUUID().toString.take(8)}")
-    val sidecarCount =
-      if (numSidecars == -1) autoCheckpointParts(
-        fileRows.where(col("add").isNotNull).count())
-      else numSidecars
-    (if (sidecarCount <= 1) fileRows.coalesce(1)
-     else fileRows.repartition(sidecarCount))
-      .write.mode("overwrite").parquet(staging.toString)
-    val parts = fs.listStatus(staging).toSeq
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    if (parts.isEmpty)
-      throw new IllegalStateException("v2 checkpoint wrote no parquet")
-    val sidecars = parts.map { st =>
-      val name = s"${UUID.randomUUID()}.parquet"
-      val target = new Path(sidecarDir, name)
-      if (!fs.rename(st.getPath, target))
-        throw new IllegalStateException(s"sidecar rename failed: $target")
-      val fst = fs.getFileStatus(target)
-      (name, fst.getLen, fst.getModificationTime)
-    }
-    fs.delete(staging, true)
-
-    // manifest rows in v2CheckpointSchema order: logSchema columns,
-    // then sidecar, then checkpointMetadata
+  /** The rows of a v2 checkpoint manifest in v2CheckpointSchema order
+    * (logSchema columns, then sidecar, then checkpointMetadata): one
+    * checkpointMetadata row, one reference per published sidecar, and
+    * the non-file actions. */
+  private def v2Manifest(spark: SparkSession, fs: FileSystem, version: Long,
+      sidecars: Seq[Path], nonFileRows: DataFrame): DataFrame = {
+    import spark.implicits._
     val nullLogCols = Actions.logSchema.fields.toIndexedSeq
       .map(f => lit(null).cast(f.dataType).as(f.name))
     val nullSidecar = lit(null).cast(Actions.sidecarSchema).as("sidecar")
     val nullCpMeta = lit(null).cast(Actions.checkpointMetadataSchema)
       .as("checkpointMetadata")
     val cpMetaRow = spark.range(1).select(nullLogCols :+ nullSidecar :+
-      struct(lit(segment.version).as("version")).as("checkpointMetadata"): _*)
-    import spark.implicits._
-    val sidecarRows = sidecars.toDF("path", "sizeInBytes", "modificationTime")
+      struct(lit(version).as("version")).as("checkpointMetadata"): _*)
+    val sidecarRows = sidecars.map(fs.getFileStatus)
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime))
+      .toDF("path", "sizeInBytes", "modificationTime")
       .select(nullLogCols :+
         struct(col("path"), col("sizeInBytes"), col("modificationTime"))
           .as("sidecar") :+ nullCpMeta: _*)
     val nonFile = nonFileRows.select(
       Actions.logSchema.fieldNames.toIndexedSeq.map(col) :+
         nullSidecar :+ nullCpMeta: _*)
-    val manifest = cpMetaRow.unionByName(sidecarRows).unionByName(nonFile)
+    cpMetaRow.unionByName(sidecarRows).unionByName(nonFile)
+  }
 
-    val staging2 = new Path(logPath,
-      s".checkpoint_v2_manifest_${UUID.randomUUID().toString.take(8)}")
-    manifest.coalesce(1).write.mode("overwrite").parquet(staging2.toString)
-    val mPart = fs.listStatus(staging2).toSeq
-      .find(_.getPath.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(
-        "v2 checkpoint manifest wrote no parquet"))
-    val manifestTarget = new Path(logPath,
-      f"${segment.version}%020d.checkpoint.${UUID.randomUUID()}.parquet")
-    if (!fs.rename(mPart.getPath, manifestTarget))
-      throw new IllegalStateException(
-        s"v2 checkpoint manifest rename failed: $manifestTarget")
-    fs.delete(staging2, true)
+  /** Row count of a parquet file, from its footer (no row decode). */
+  private def parquetRowCount(fs: FileSystem, file: Path): Long = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, fs.getConf))
+    try reader.getRecordCount finally reader.close()
+  }
 
-    // size = every action row in the checkpoint artifact (sidecar file
-    // actions + ALL manifest rows, including checkpointMetadata and the
-    // sidecar references). Counted from the parquet just written —
-    // footer metadata only, no row decode — instead of re-running the
-    // full log replay that produced fileRows/nonFileRows.
-    val sidecarRowCount = spark.read
-      .schema(Actions.logSchema)
-      .parquet(sidecars.map(sc =>
-        new Path(sidecarDir, sc._1).toString): _*)
-      .count()
-    val manifestRowCount =
-      spark.read.parquet(manifestTarget.toString).count()
-    val lc = mapper.createObjectNode()
-    lc.put("version", segment.version)
-    lc.put("size", sidecarRowCount + manifestRowCount)
-    val lcPath = new Path(logPath, "_last_checkpoint")
-    val out = fs.create(lcPath, true)
-    try out.write(lc.toString.getBytes("UTF-8")) finally out.close()
-    maybeCleanupExpiredLogs(spark, tablePath, meta)
-    segment.version
+  /** Opportunistic maintenance at the log's maintenance moment: a writer
+    * that crashed between its temp write and the hard-link publish
+    * ([[putIfAbsent]]) leaves a `.<name>.<uuid>.tmp` behind; sweep the
+    * stale ones (>1h) here rather than on the hot commit path. */
+  private def sweepStaleTemps(fs: FileSystem, logPath: Path): Unit = {
+    val staleCutoff = System.currentTimeMillis() - 3600 * 1000
+    fs.listStatus(logPath).iterator
+      .filter(st => st.getPath.getName.startsWith(".") &&
+        st.getPath.getName.endsWith(".tmp") &&
+        st.getModificationTime < staleCutoff)
+      .foreach(st => scala.util.Try(fs.delete(st.getPath, false)))
   }
 
   // ---- data file writing --------------------------------------------

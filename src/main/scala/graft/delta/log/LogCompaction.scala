@@ -1,6 +1,5 @@
 package graft.delta.log
 
-import java.util.UUID
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import com.fasterxml.jackson.databind.ObjectMapper
@@ -117,27 +116,10 @@ object LogCompaction {
       files.values)
     val payload = out.mkString("", "\n", "\n").getBytes("UTF-8")
 
-    // atomic publish (same contract as commits): readers must never
-    // observe a partial compaction, and racing compactors of the same
-    // span both succeed logically (the artifact is content-identical)
-    val uri = fs.makeQualified(target).toUri
-    if (uri.getScheme == "file") {
-      import java.nio.file.{Files, Paths, FileAlreadyExistsException}
-      val t = Paths.get(uri.getPath)
-      val tmp = t.resolveSibling(
-        s".${t.getFileName}.${UUID.randomUUID().toString.take(8)}.tmp")
-      Files.write(tmp, payload)
-      try Files.createLink(t, tmp)
-      catch { case _: FileAlreadyExistsException => return false }
-      finally Files.deleteIfExists(tmp)
-    } else {
-      val os = try fs.create(target, false) catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => return false
-        case _: java.io.IOException if fs.exists(target) => return false
-      }
-      try os.write(payload) finally os.close()
-    }
-    true
+    // atomic publish (the commits' put-if-absent): readers never
+    // observe a partial compaction, and a racing compactor of the same
+    // span finds it already there (the artifact is content-identical)
+    CommitWriter.putIfAbsent(fs, target, payload)
   }
 
   /** Post-commit hook: when the table opts in via

@@ -226,4 +226,13 @@ object LogSegment {
       .flatMap(n => Option(n.get("commitInfo")))
       .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
   }
+
+  /** The timestamp of commit file `status` by the protocol rule: its own
+    * commitInfo.inCommitTimestamp when it carries one (monotonic and
+    * immune to file copies), else the file's modification time. The
+    * change feed's `_commit_timestamp` and every timestamp-addressed
+    * read (TIMESTAMP AS OF, startingTimestamp/endingTimestamp, RESTORE
+    * TO TIMESTAMP) resolve against this one clock. */
+  def commitTimestamp(fs: FileSystem, status: FileStatus): Long =
+    inCommitTimestamp(fs, status.getPath).getOrElse(status.getModificationTime)
 }

@@ -86,17 +86,17 @@ object CommitRangeScan {
       if (add.has("modificationTime"))
         add.get("modificationTime").asLong(-1L) else -1L)
 
-  /** Millis timestamp of commit `v` from its `actions`: the commitInfo
-    * line's inCommitTimestamp (when the table writes them, it IS the
-    * commit timestamp per spec), else its timestamp, else the commit
-    * file's mtime (engines that omit commitInfo). */
+  /** Millis timestamp of commit `v` by the protocol rule
+    * ([[LogSegment.commitTimestamp]]), the clock time travel by
+    * timestamp resolves against too; `missing` as in [[commitActions]]. */
   private def commitMillis(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, v: Long, actions: Seq[JsonNode]): Long =
-    actions.iterator.flatMap(n => Option(n.get("commitInfo"))).collectFirst {
-      case ci if ci.has("inCommitTimestamp") =>
-        ci.get("inCommitTimestamp").asLong()
-      case ci if ci.has("timestamp") => ci.get("timestamp").asLong()
-    }.getOrElse(fs.getFileStatus(commitPath(path, v)).getModificationTime)
+      path: String, v: Long, missing: => String): Long = {
+    val status = try fs.getFileStatus(commitPath(path, v)) catch {
+      case _: java.io.FileNotFoundException =>
+        throw new IllegalStateException(missing)
+    }
+    LogSegment.commitTimestamp(fs, status)
+  }
 
   /** Per-commit derived-diff cache, shared by EVERY change-feed
     * consumer (batch `q_change_feed`, the `table_changes` TVF, and the
@@ -147,17 +147,16 @@ object CommitRangeScan {
   private def cachePut(key: DiffKey, df: DataFrame): Unit =
     diffCache.synchronized { diffCache.put(key, df); () }
 
-  /** Millis timestamp of a commit: its commitInfo.timestamp line (every
-    * graft commit writes one), falling back to the commit file's mtime
-    * for logs written by engines that omit commitInfo. */
+  /** Millis timestamp of a commit: its inCommitTimestamp, else the
+    * commit file's mtime ([[LogSegment.commitTimestamp]]). */
   def commitTimestampMillis(spark: SparkSession, path: String,
       v: Long): Long = {
     val fs = LogSegment.fs(spark, new Path(path))
     // a checkpointed log may have expired this commit's JSON: fail with
     // the same actionable message as the range scans, not a raw FNF
-    commitMillis(fs, path, v, commitActions(fs, path, v,
+    commitMillis(fs, path, v,
       s"Commit $v of $path is no longer in the log (cleaned up after " +
-        "checkpointing) — its timestamp and changes cannot be derived"))
+        "checkpointing) — its timestamp and changes cannot be derived")
   }
 
   /** True when a MapType occurs ANYWHERE in the type — Spark set
@@ -323,7 +322,7 @@ object CommitRangeScan {
             Replay.dvDescriptorOf(r)))
         }
       }
-      val ts0 = commitMillis(fs, path, v, actions)
+      val ts0 = commitMillis(fs, path, v, feedMissing(path, v))
       // write-time CDC: when the commit carries cdc actions they are
       // the AUTHORITATIVE change set (per spec a CDF reader must use
       // them EXCLUSIVELY for that commit — the writer already labeled

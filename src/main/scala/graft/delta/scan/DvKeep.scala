@@ -11,22 +11,18 @@ import graft.delta.log.Actions.DeletionVectorDescriptor
   * when the row at (file key, row index) is NOT masked by its file's
   * deletion vector.
   *
-  * The previous shape — a Scala UDF over [[DvTaskFilter.keepFunc]] —
-  * fenced whole-stage codegen exactly where the most rows flow (the
-  * large-DV path exists BECAUSE the files are heavy), and paid a
-  * UTF8String→String conversion per row on top. This expression keeps
-  * the same executor-side placement (descriptors ship in the plan,
-  * bitmaps decode in the tasks that read each file through
-  * [[DvTaskFilter]]'s per-JVM bounded cache) but evaluates as one
-  * generated method call inside the fused stage, with a per-instance
-  * (file key → bitmap) memo so the per-row cost is one UTF8String
-  * equality check + one roaring probe — the string materializes only
-  * on a file boundary.
+  * Executor-side placement: descriptors ship in the plan, bitmaps
+  * decode in the tasks that read each file through [[DvTaskFilter]]'s
+  * per-JVM bounded cache. It evaluates as one generated method call
+  * inside the fused stage (a Scala UDF would fence whole-stage codegen
+  * exactly where the most rows flow, and pay a UTF8String→String
+  * conversion per row), with a per-instance (file key → bitmap) memo so
+  * the per-row cost is one UTF8String equality check + one roaring
+  * probe — the string materializes only on a file boundary.
   *
   * Thread-safety note: the memo is per-expression-instance state, and
   * each task deserializes its own instance (codegen reference arrays
-  * travel in the task closure), so tasks never share a memo — the same
-  * isolation the UDF closure's `var last` had.
+  * travel in the task closure), so tasks never share a memo.
   */
 case class DvKeep(fkey: Expression, rowIndex: Expression,
     tableUri: String,

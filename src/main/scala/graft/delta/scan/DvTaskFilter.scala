@@ -76,40 +76,10 @@ object DvTaskFilter {
     entry._1
   }
 
-  /** The per-row keep function for the scan's DV mask: true when the
-    * row at (normalized file key, row index) is NOT deleted. Built on
-    * the driver, evaluated in tasks; `descriptors` and `conf` arrive
-    * via the closure (shipped in the broadcast task binary — the map
-    * holds descriptors only, never bitmaps).
-    *
-    * Rows within a split arrive grouped by file, so a single-entry
-    * (key, bitmap) memo makes the per-row cost one string compare —
-    * no map lookup, no lock, no key-string allocation. The memo is a
-    * single immutable-pair reference: even if a deserialized closure
-    * were ever shared across threads, a stale or torn memo is
-    * impossible (one volatile-free reference read; worst case an
-    * extra cache lookup, never a wrong bitmap). */
-  def keepFunc(tableUri: String,
-      descriptors: Map[String, DeletionVectorDescriptor],
-      conf: SerHadoopConf): (String, Long) => Boolean = {
-    var last: (String, DvBitmap.Bitmap) = null
-    (fkey: String, rowIndex: Long) => {
-      val l = last
-      val bm =
-        if (l != null && l._1 == fkey) l._2
-        else {
-          val resolved = bitmapFor(tableUri, descriptors, conf, fkey).orNull
-          last = (fkey, resolved)
-          resolved
-        }
-      bm == null || !bm.contains(rowIndex)
-    }
-  }
-
   /** Resolve one file's decoded bitmap through the per-JVM cache —
-    * None when the file carries no DV. Shared by [[keepFunc]] and the
-    * codegen'd [[DvKeep]] expression (both memo the answer per file
-    * boundary, so this runs once per file per task, not per row). */
+    * None when the file carries no DV. The codegen'd [[DvKeep]]
+    * expression memos the answer per file boundary, so this runs once
+    * per file per task, not per row. */
   def bitmapFor(tableUri: String,
       descriptors: Map[String, DeletionVectorDescriptor],
       conf: SerHadoopConf, fkey: String): Option[DvBitmap.Bitmap] =

@@ -169,10 +169,9 @@ object DeltaQueries {
   /** SF-independent V2-CHECKPOINTED fixture: same recipe as
     * [[checkpointedTable]] (create partitioned nation -> idempotent
     * append under appId "writer-2" txn 7 -> remove first file) but the
-    * table declares the v2Checkpoint feature and the checkpoint is a
-    * native UUID-named manifest + 2 parquet sidecars
-    * ([[CommitWriter.checkpointV2]]). The oracle reads the sidecar /
-    * manifest parquet DIRECTLY, so the round gate verifies the v2
+    * table declares the v2Checkpoint feature, so [[CommitWriter.checkpoint]]
+    * writes a native UUID-named manifest + 2 parquet sidecars. The
+    * oracle reads the sidecar / manifest parquet DIRECTLY, so the round gate verifies the v2
     * artifact's layout, not just that graft can read its own work. */
   final val LogDemoV2CpPath =
     "/root/repo/target/delta_fixtures/shared/logdemo_v2cp"
@@ -198,7 +197,7 @@ object DeltaQueries {
         val first = DeltaTable.forPath(s, LogDemoV2CpPath).allFiles
           .select("path").orderBy("path").limit(1).collect()(0).getString(0)
         CommitWriter.commitRemoves(s, LogDemoV2CpPath, Seq(first))
-        CommitWriter.checkpointV2(s, LogDemoV2CpPath, numSidecars = 2)
+        CommitWriter.checkpoint(s, LogDemoV2CpPath, parts = 2)
         writeStamp(LogDemoV2CpPath, sfDir)
       }
     }

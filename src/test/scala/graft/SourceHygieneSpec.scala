@@ -7,7 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Engine code takes no behaviour from environment variables: every
   * knob is an option, a table property or a SQL conf. Only the
   * command-line entry points and the measurement instruments under
-  * `graft/tools/` read the environment. */
+  * `graft/tools/` read the environment. And the log has one atomic
+  * publisher: commits and log compactions share one put-if-absent. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val mainRoot = new File("src/main/scala")
@@ -22,6 +23,11 @@ class SourceHygieneSpec extends AnyFunSuite {
       else Nil
     }
 
+  private def numberedLines(f: File): List[(String, Int)] = {
+    val src = Source.fromFile(f, "UTF-8")
+    try src.getLines().toList.zipWithIndex finally src.close()
+  }
+
   test("main code reads no environment variable outside the entry points") {
     assert(mainRoot.isDirectory, s"no sources at ${mainRoot.getAbsolutePath}")
     val files = scalaFiles(mainRoot)
@@ -31,12 +37,18 @@ class SourceHygieneSpec extends AnyFunSuite {
       rel = mainRoot.toPath.relativize(f.toPath).toString
         .replace(File.separatorChar, '/')
       if !allowed.exists(rel.startsWith)
-      (line, n) <- {
-        val src = Source.fromFile(f, "UTF-8")
-        try src.getLines().toList.zipWithIndex finally src.close()
-      }
+      (line, n) <- numberedLines(f)
       if envRead.findFirstIn(line).nonEmpty
     } yield s"$rel:${n + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("main code hard-links a log file into place in exactly one routine") {
+    val links = for {
+      f <- scalaFiles(mainRoot)
+      (line, n) <- numberedLines(f)
+      if line.contains("Files.createLink")
+    } yield s"${f.getPath}:${n + 1}: ${line.trim}"
+    assert(links.length == 1, links.mkString("\n", "\n", ""))
   }
 }

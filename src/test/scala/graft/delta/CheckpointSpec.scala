@@ -183,24 +183,45 @@ class CheckpointSpec extends AnyFunSuite {
     assert(snap.read.orderBy("r_regionkey").collect().toSeq ==
       region.orderBy("r_regionkey").collect().toSeq)
 
-    // appends remain allowed on a v2 table; classic checkpoints refuse
+    // appends remain allowed on a v2 table, and its checkpoint follows
+    // the declared format: a v2 manifest, never a classic file
     CommitWriter.append(spark, region.limit(1), p) // v2
     assert(DeltaTable.forPath(spark, p).read.count() == region.count() + 1)
-    val err = intercept[IllegalArgumentException] {
-      CommitWriter.checkpoint(spark, p)
-    }
-    assert(err.getMessage.contains("v2Checkpoint"))
+    assert(CommitWriter.checkpoint(spark, p) == 2L)
+    assert(artifactsAt(p, 2L) == Set("v2"))
+    assert(DeltaTable.forPath(spark, p).segment.checkpointIsV2)
   }
 
-  test("native checkpointV2 writes manifest + sidecars that replay") {
+  /** The kinds of checkpoint artifact at `version` in the log: "v2"
+    * (UUID-named manifest), "single" or "multi" (classic). */
+  private def artifactsAt(p: String, version: Long): Set[String] = {
+    val fs = LogSegment.fs(spark, new Path(p))
+    fs.listStatus(new Path(p, "_delta_log")).map(_.getPath.getName)
+      .filter(n => LogSegment.checkpointArtifactVersion(n).contains(version))
+      .map { n =>
+        if (LogSegment.v2ManifestVersion(n).isDefined) "v2"
+        else if (n == LogSegment.checkpointFileName(version)) "single"
+        else "multi"
+      }.toSet
+  }
+
+  private def lastCheckpoint(p: String) = {
+    val fs = LogSegment.fs(spark, new Path(p))
+    val in = fs.open(new Path(new Path(p, "_delta_log"), "_last_checkpoint"))
+    try new com.fasterxml.jackson.databind.ObjectMapper().readTree(in)
+    finally in.close()
+  }
+
+  test("native v2 checkpoint writes manifest + sidecars that replay") {
     val p = tmp("v2cp_native")
     CommitWriter.createTable(spark,
       region.filter(col("r_regionkey") < 3), p) // v0
-    // refuses while the table does not declare the feature
-    val err0 = intercept[IllegalArgumentException] {
-      CommitWriter.checkpointV2(spark, p)
-    }
-    assert(err0.getMessage.contains("v2Checkpoint"))
+    // while the table does not declare the feature, readers would not
+    // know to look for sidecars: the checkpoint is classic
+    CommitWriter.checkpoint(spark, p)
+    assert(artifactsAt(p, 0L) == Set("single"))
+    assert(!LogSegment.fs(spark, new Path(p))
+      .exists(new Path(p, "_delta_log/_sidecars")))
 
     CommitWriter.append(spark,
       region.filter(col("r_regionkey") >= 3), p) // v1
@@ -212,8 +233,9 @@ class CheckpointSpec extends AnyFunSuite {
     CommitWriter.appendIfAbsent(spark, region.limit(1), p,
       appId = "writer-v2", txnVersion = 9L) // v3
 
-    val v = CommitWriter.checkpointV2(spark, p, numSidecars = 2)
+    val v = CommitWriter.checkpoint(spark, p, parts = 2)
     assert(v == 3L)
+    assert(artifactsAt(p, 3L) == Set("v2"))
     val fs = LogSegment.fs(spark, new Path(p))
     val logDir = new Path(p, "_delta_log")
     // drop every commit JSON: replay must come from the v2 checkpoint
@@ -237,11 +259,9 @@ class CheckpointSpec extends AnyFunSuite {
     assert(top.where(col("add").isNotNull).count() == 0)
     assert(top.where(col("sidecar").isNotNull).count() == 2)
     assert(top.where(col("checkpointMetadata.version") === 3L).count() == 1)
-    // classic checkpoint still refuses on this table
-    val err = intercept[IllegalArgumentException] {
-      CommitWriter.checkpoint(spark, p)
-    }
-    assert(err.getMessage.contains("v2Checkpoint"))
+    // a multi-part request on this table still writes no classic parts
+    CommitWriter.checkpoint(spark, p, parts = 2)
+    assert(artifactsAt(p, 3L) == Set("v2"))
   }
 
   test("tiny/skewed table writes fewer sidecars than asked, still exact") {
@@ -255,7 +275,7 @@ class CheckpointSpec extends AnyFunSuite {
       Some(Seq("v2Checkpoint")), Some(Seq("v2Checkpoint")))
     CommitWriter.commit(spark, p, 1L,
       Seq(CommitWriter.protocolJson(proto)), "UPGRADE PROTOCOL") // v1
-    CommitWriter.checkpointV2(spark, p, numSidecars = 4)
+    CommitWriter.checkpoint(spark, p, parts = 4)
 
     val fs = LogSegment.fs(spark, new Path(p))
     val logDir = new Path(p, "_delta_log")
@@ -271,13 +291,7 @@ class CheckpointSpec extends AnyFunSuite {
     assert(referenced == onDisk.toLong,
       "manifest references must match the sidecars actually written")
     // _last_checkpoint.size = every action row in the artifact
-    val lcText = {
-      val in = fs.open(new Path(logDir, "_last_checkpoint"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val declaredSize = mapper.readTree(lcText).get("size").asLong()
+    val declaredSize = lastCheckpoint(p).get("size").asLong()
     val sidecarRows = spark.read.schema(Actions.logSchema)
       .parquet(new Path(logDir, "_sidecars").toString + "/*.parquet")
       .count()
@@ -287,6 +301,68 @@ class CheckpointSpec extends AnyFunSuite {
     (0L to 1L).foreach(i =>
       fs.delete(new Path(logDir, f"$i%020d.json"), false))
     assert(DeltaTable.forPath(spark, p).read.count() == 1L)
+  }
+
+  test("_last_checkpoint.size counts the action rows of a classic checkpoint") {
+    val p = tmp("classic_size")
+    CommitWriter.createTable(spark, region.repartition(3), p) // v0
+    CommitWriter.appendIfAbsent(spark, region.limit(2), p,
+      appId = "writer-size", txnVersion = 1L) // v1
+    val logDir = new Path(p, "_delta_log")
+    def rows(files: Seq[Path]): Long = spark.read
+      .schema(Actions.logSchema).parquet(files.map(_.toString): _*).count()
+
+    CommitWriter.checkpoint(spark, p) // single part at v1
+    assert(artifactsAt(p, 1L) == Set("single"))
+    val single = lastCheckpoint(p)
+    assert(single.get("version").asLong() == 1L)
+    assert(!single.has("parts"))
+    assert(single.get("size").asLong() ==
+      rows(Seq(new Path(logDir, LogSegment.checkpointFileName(1L)))))
+
+    CommitWriter.append(spark, region.repartition(2), p) // v2
+    CommitWriter.checkpoint(spark, p, parts = 2)
+    assert(artifactsAt(p, 2L) == Set("multi"))
+    val fs = LogSegment.fs(spark, new Path(p))
+    val partFiles = fs.listStatus(logDir).map(_.getPath)
+      .filter(f => f.getName.startsWith(f"${2L}%020d.checkpoint."))
+      .toSeq
+    val multi = lastCheckpoint(p)
+    assert(multi.get("parts").asInt() == partFiles.length)
+    assert(partFiles.length == 2)
+    assert(multi.get("size").asLong() == rows(partFiles))
+    // and the multi-part checkpoint alone replays the table
+    (0L to 2L).foreach(i =>
+      fs.delete(new Path(logDir, LogSegment.commitFileName(i)), false))
+    assert(DeltaTable.forPath(spark, p).read.count() ==
+      2 * region.count() + 2)
+  }
+
+  test("checkpoint sweeps stale commit temp files on a v2Checkpoint table") {
+    val p = tmp("v2cp_sweep")
+    CommitWriter.createTable(spark, region.limit(1), p) // v0
+    val proto = Actions.Protocol(3, 7,
+      Some(Seq("v2Checkpoint")), Some(Seq("v2Checkpoint")))
+    CommitWriter.commit(spark, p, 1L,
+      Seq(CommitWriter.protocolJson(proto)), "UPGRADE PROTOCOL") // v1
+    // what a writer that crashed between its temp write and the
+    // hard-link publish leaves behind: one old, one in flight
+    val fs = LogSegment.fs(spark, new Path(p))
+    val logDir = new Path(p, "_delta_log")
+    def temp(name: String): Path = {
+      val t = new Path(logDir, name)
+      val out = fs.create(t, false)
+      try out.write("{}".getBytes("UTF-8")) finally out.close()
+      t
+    }
+    val stale = temp(".00000000000000000002.json.0badf00d.tmp")
+    fs.setTimes(stale, System.currentTimeMillis() - 2 * 3600 * 1000, -1)
+    val fresh = temp(".00000000000000000002.json.00c0ffee.tmp")
+
+    CommitWriter.checkpoint(spark, p)
+    assert(artifactsAt(p, 1L) == Set("v2"))
+    assert(!fs.exists(stale), "a stale temp file outlived the checkpoint")
+    assert(fs.exists(fresh), "an in-flight temp file was swept")
   }
 
   test("v2 checkpoint with a PARQUET manifest replays too") {

@@ -231,7 +231,7 @@ object DatHarness {
       CommitWriter.append(spark,
         wide.filter(col("n_nationkey") >= 8 && col("n_nationkey") < 16),
         c.tablePath) // v2
-      CommitWriter.checkpoint(spark, c.tablePath, numParts = 2) // cp @ v2
+      CommitWriter.checkpoint(spark, c.tablePath, parts = 2) // cp @ v2
       CommitWriter.append(spark,
         wide.filter(col("n_nationkey") >= 16), c.tablePath) // v3
       graft.commands.HistoryCommand.restore(spark, c.tablePath, 2L) // v4
@@ -376,7 +376,7 @@ object DatHarness {
       CommitWriter.append(spark,
         wide.filter(col("n_nationkey") >= 8 && col("n_nationkey") < 16),
         c.tablePath) // v3
-      CommitWriter.checkpoint(spark, c.tablePath, numParts = 2) // cp @ v3
+      CommitWriter.checkpoint(spark, c.tablePath, parts = 2) // cp @ v3
       CommitWriter.append(spark,
         wide.filter(col("n_nationkey") >= 16), c.tablePath) // v4
       graft.commands.HistoryCommand.restore(spark, c.tablePath, 3L) // v5
@@ -579,7 +579,7 @@ object DatHarness {
         col("r_name").as("region_name"),
         concat(lit("note-"), col("r_regionkey")).as("note"))
       CommitWriter.append(spark, extra, c.tablePath)
-      CommitWriter.checkpoint(spark, c.tablePath, numParts = 2) // cp @ v4
+      CommitWriter.checkpoint(spark, c.tablePath, parts = 2) // cp @ v4
       // v5: tail commit after the checkpoint — replay must stitch
       // multipart checkpoint + tail with mapping, DV and adapter intact
       val extra2 = region.select(

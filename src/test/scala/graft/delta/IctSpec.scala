@@ -82,6 +82,29 @@ class IctSpec extends AnyFunSuite {
     assert(ts == Set(ict1), s"feed timestamps $ts != ICT $ict1")
   }
 
+  test("without ICT the change feed and time travel share the mtime clock") {
+    val p = tmp("mtime_clock")
+    CommitWriter.createTable(spark, region.limit(1), p) // v0
+    CommitWriter.append(spark, region.limit(2), p)      // v1
+    CommitWriter.append(spark, region.limit(1), p)      // v2
+    assert(ictOf(p, 1).isEmpty)
+    // mtimes unrelated to commitInfo.timestamp, as a log copy leaves
+    val fs = LogSegment.fs(spark, new Path(p))
+    val logDir = new Path(p, "_delta_log")
+    Seq(0L -> 1000000L, 1L -> 2000000L, 2L -> 3000000L).foreach {
+      case (v, t) => fs.setTimes(
+        new Path(logDir, LogSegment.commitFileName(v)), t, -1)
+    }
+    val feedTs = spark.read.format("graftdelta")
+      .option("path", p).option("startingVersion", "1")
+      .option("endingVersion", "1")
+      .option("readChangeFeed", "true").load()
+      .select("_commit_timestamp").distinct().collect()
+      .map(_.getTimestamp(0).getTime).toSet
+    assert(feedTs == Set(2000000L), s"feed timestamps $feedTs")
+    assert(DeltaTable.forPathAtTimestamp(spark, p, feedTs.head).version == 1)
+  }
+
   test("mid-life enablement records matching enablement properties") {
     val p = tmp("enable")
     CommitWriter.createTable(spark, region.limit(2), p) // legacy table

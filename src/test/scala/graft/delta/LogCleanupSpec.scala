@@ -156,9 +156,9 @@ class LogCleanupSpec extends AnyFunSuite {
       Some(Seq("v2Checkpoint")), Some(Seq("v2Checkpoint")))
     CommitWriter.commit(spark, p, 1L,
       Seq(CommitWriter.protocolJson(proto)), "UPGRADE PROTOCOL") // v1
-    CommitWriter.checkpointV2(spark, p, numSidecars = 2) // cp @1
+    CommitWriter.checkpoint(spark, p, parts = 2) // cp @1
     CommitWriter.append(spark, region.limit(1), p)       // v2
-    CommitWriter.checkpointV2(spark, p, numSidecars = 2) // cp @2
+    CommitWriter.checkpoint(spark, p, parts = 2) // cp @2
     CommitWriter.append(spark, region.limit(1), p)       // v3
     val before = DeltaTable.forPath(spark, p).read.count()
 

@@ -235,7 +235,7 @@ class OptimizeSpec extends AnyFunSuite {
     val orders = spark.read.parquet(s"$sf/orders.parquet")
     CommitWriter.createTable(spark, orders.repartition(4), p)
     CommitWriter.append(spark, orders.limit(10), p)
-    CommitWriter.checkpoint(spark, p, numParts = 3)
+    CommitWriter.checkpoint(spark, p, parts = 3)
     val snap = DeltaTable.forPath(spark, p)
     assert(snap.segment.checkpointVersion.contains(1L))
     assert(snap.segment.checkpointFiles.size > 1)

@@ -304,7 +304,7 @@ class SourceSpec extends AnyFunSuite {
     assert(cdc.count() == 5)
   }
 
-  test("change feed rows carry _commit_timestamp from commitInfo") {
+  test("change feed rows carry _commit_timestamp from the commit timestamp rule") {
     val feed = spark.read.format("graftdelta")
       .option("path", table).option("startingVersion", "0")
       .option("readChangeFeed", "true").load()
@@ -316,7 +316,9 @@ class SourceSpec extends AnyFunSuite {
     assert(ts.values.forall(_ != null))
     // commit order implies timestamp order (same-millis ties allowed)
     assert(!ts(1L).before(ts(0L)))
-    // and the value is the commitInfo timestamp, not a file mtime guess
+    // and the value is the commit's timestamp by the protocol rule
+    // (inCommitTimestamp, else the commit file's mtime), the same clock
+    // TIMESTAMP AS OF resolves against
     val expected = graft.delta.scan.CommitRangeScan
       .commitTimestampMillis(spark, table, 1L)
     assert(ts(1L).getTime == expected)
