@@ -32,11 +32,6 @@ import graft.delta.scan.ColumnMapping
   * `ANALYZE TABLE ... COMPUTE DELTA STATISTICS` semantics instead. */
 object AnalyzeCommand {
 
-  // per-JVM (driver and each executor resolve the module independently);
-  // readTree is thread-safe
-  private lazy val statsMapper =
-    new com.fasterxml.jackson.databind.ObjectMapper()
-
   def run(spark: SparkSession, tablePath: String): DataFrame = {
     val snap = DeltaTable.forPath(spark, tablePath)
     val meta = snap.metadata
@@ -60,7 +55,8 @@ object AnalyzeCommand {
     val targetNames = target.toIndexedSeq
     val needsStats = org.apache.spark.sql.functions.udf { stats: String =>
       stats == null || {
-        val n = statsMapper.readTree(stats)
+        // readTree is thread-safe; each executor JVM has its own mapper
+        val n = Actions.mapper.readTree(stats)
         val nulls = n.get("nullCount")
         !(n.has("numRecords") && nulls != null &&
           targetNames.forall(nulls.has))

@@ -62,10 +62,7 @@ object CopyIntoCommand {
         "use append")
     val w = CommitWriter.stageWrite(spark, spark.read.parquet(fresh: _*),
       tablePath, meta, mergeSchema = false, "COPY INTO")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val rows = w.adds.flatMap(_.stats).map(s =>
-      Option(mapper.readTree(s).get("numRecords"))
-        .map(_.asLong()).getOrElse(0L)).sum
+    val rows = w.adds.map(a => Actions.numRecords(a.stats).getOrElse(0L)).sum
 
     val now = System.currentTimeMillis()
     val txns = fresh.map(p => CommitWriter.txnJson(

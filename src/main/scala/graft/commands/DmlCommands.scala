@@ -340,11 +340,10 @@ object DmlCommands {
     * physical count. Readers that trust tight bounds would otherwise
     * mis-prune. */
   private def loosenStats(stats: String): String = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    mapper.readTree(stats) match {
+    Actions.mapper.readTree(stats) match {
       case o: com.fasterxml.jackson.databind.node.ObjectNode =>
         o.put("tightBounds", false)
-        mapper.writeValueAsString(o)
+        Actions.mapper.writeValueAsString(o)
       case _ => stats
     }
   }
@@ -438,7 +437,6 @@ object DmlCommands {
     // the full inventory is millions of rows (with ~KB stats JSON each)
     // and must never land on the driver for a one-file DELETE (same
     // diff-not-inventory contract as affectedRelPaths)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val fsq = graft.delta.log.LogSegment.fs(spark, snap.tablePath)
       .makeQualified(snap.tablePath).toString
     val normUdf = udf((rel: String) => normalizeFileKey(fsq, rel))
@@ -461,8 +459,7 @@ object DmlCommands {
           r.getAs[Long]("modificationTime"),
           Option(r.getAs[String]("stats")),
           dvDescriptorOf(r),
-          Option(r.getAs[String]("stats")).flatMap(s =>
-            Option(mapper.readTree(s).get("numRecords")).map(_.asLong())),
+          Actions.numRecords(Option(r.getAs[String]("stats"))),
           Option(r.getAs[java.lang.Long]("baseRowId")).map(_.longValue()),
           Option(r.getAs[java.lang.Long]("defaultRowCommitVersion"))
             .map(_.longValue()))

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.types._
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.delta.DeltaTable
 import graft.delta.log.{Actions, CommitWriter, LogSegment}
 
@@ -14,8 +13,6 @@ import graft.delta.log.{Actions, CommitWriter, LogSegment}
   * DESCRIBE DETAIL, SHOW TBLPROPERTIES and SHOW PARTITIONS read the
   * same snapshot metadata. */
 object HistoryCommand {
-  private val mapper = new ObjectMapper()
-
   /** Rows the last restore() brought to the driver — pinned by
     * RestoreSpec to the DIFF size, guarding against a regression to
     * full-inventory collects. */
@@ -49,8 +46,8 @@ object HistoryCommand {
 
   /** DESCRIBE DETAIL: one metadata row for the current snapshot. File
     * count/bytes are a distributed aggregation over the live-file list;
-    * timestamps come from commit mtimes (same clock DESCRIBE HISTORY
-    * reports). */
+    * timestamps come from commit mtimes (DESCRIBE HISTORY's clock on a
+    * table without in-commit timestamps). */
   def detail(spark: SparkSession, tablePath: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val snap = DeltaTable.forPath(spark, tablePath)
@@ -120,7 +117,9 @@ object HistoryCommand {
   }
 
   /** One row per commit, newest first (driver-side: the commit list is
-    * the log tail, bounded). */
+    * the log tail, bounded). `timestamp` is the commit's timestamp by the
+    * protocol rule ([[LogSegment.commitTimestamp]]), so a value read off
+    * the history resolves to the same version under TIMESTAMP AS OF. */
   def history(spark: SparkSession, tablePath: String): DataFrame = {
     val fs = LogSegment.fs(spark, new Path(tablePath))
     val logPath = new Path(tablePath, "_delta_log")
@@ -128,14 +127,10 @@ object HistoryCommand {
       .flatMap(st => LogSegment.commitVersion(st.getPath.getName).map(_ -> st))
       .sortBy(-_._1)
     val rows = for ((version, st) <- commits) yield {
-      val in = fs.open(st.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
-      val ci = lines.filter(_.nonEmpty).map(mapper.readTree)
-        .find(_.has("commitInfo")).map(_.get("commitInfo"))
+      val actions = LogSegment.readLines(fs, st.getPath).map(_.node)
+      val ci = actions.find(_.has("commitInfo")).map(_.get("commitInfo"))
       Row(version,
-        ci.flatMap(c => Option(c.get("timestamp")).map(_.asLong()))
-          .map(Long.box).orNull,
+        LogSegment.commitTimestamp(st, actions),
         ci.flatMap(c => Option(c.get("operation")).map(_.asText())).orNull,
         ci.flatMap(c => Option(c.get("engineInfo")).map(_.asText())).orNull,
         // raw minified JSON of commitInfo.operationParameters (the
@@ -143,7 +138,7 @@ object HistoryCommand {
         // keys) — null for commits that recorded none
         ci.flatMap(c => Option(c.get("operationParameters"))
           .map(_.toString)).orNull,
-        lines.count(_.nonEmpty).toLong - ci.size)
+        actions.size.toLong - ci.size)
     }
     CommandResult.result(spark, historySchema, rows: _*)
   }

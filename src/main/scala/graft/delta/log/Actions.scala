@@ -1,6 +1,8 @@
 package graft.delta.log
 
 import org.apache.spark.sql.types._
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode,
+  ObjectMapper}
 
 /** Delta log action model (scala ADT + the canonical Spark schema used to
   * read commit JSON and checkpoint parquet).
@@ -12,6 +14,24 @@ import org.apache.spark.sql.types._
   * Delta protocol spec (PROTOCOL.md of delta-io/delta).
   */
 object Actions {
+
+  /** The one JSON mapper of the Delta layer: it decodes log lines
+    * ([[LogSegment.readLines]]), stats and domain configurations, and
+    * builds every action line. Thread-safe once configured; a value
+    * followed by more tokens is malformed, not a prefix to keep. */
+  val mapper: ObjectMapper = new ObjectMapper()
+    .enable(DeserializationFeature.FAIL_ON_TRAILING_TOKENS)
+
+  /** `numRecords` of an add's stats JSON; None without stats or without
+    * the field. */
+  def numRecords(stats: Option[String]): Option[Long] =
+    stats.flatMap(s => Option(mapper.readTree(s).get("numRecords")))
+      .map(_.asLong())
+
+  /** Whether an add or remove action node changes data: `dataChange`
+    * defaults to true when absent. */
+  def dataChange(action: JsonNode): Boolean =
+    Option(action.get("dataChange")).forall(_.asBoolean(true))
 
   /** Deletion vector descriptor (Delta protocol "deletionVector"). */
   case class DeletionVectorDescriptor(

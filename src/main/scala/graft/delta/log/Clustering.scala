@@ -24,7 +24,7 @@ object Clustering {
   final val Feature = "clustering"
   final val Domain = "delta.clustering"
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  import Actions.mapper
 
   /** The clustering-domain action: configuration is
     * `{"clusteringColumns":[["c1"],["c2"]]}` — each inner array a

@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import scala.jdk.CollectionConverters._
 
@@ -26,7 +25,6 @@ import scala.jdk.CollectionConverters._
   */
 object CommitWriter {
   import Actions._
-  private val mapper = new ObjectMapper()
 
   class ConcurrentCommitException(msg: String, cause: Throwable)
     extends RuntimeException(msg, cause) {
@@ -677,8 +675,7 @@ object CommitWriter {
       .orderBy("path").collect()
     val noStats = live.filter { r =>
       r.isNullAt(r.fieldIndex("baseRowId")) &&
-        Option(r.getAs[String]("stats")).flatMap(s =>
-          Option(mapper.readTree(s).get("numRecords"))).isEmpty
+        numRecords(Option(r.getAs[String]("stats"))).isEmpty
     }
     require(noStats.isEmpty,
       s"cannot enable row tracking: ${noStats.length} live file(s) lack " +
@@ -701,9 +698,7 @@ object CommitWriter {
     live.foreach { r =>
       val existing = Option(r.getAs[java.lang.Long]("baseRowId"))
       val base = existing.map(_.longValue()).getOrElse(next)
-      val rows = Option(r.getAs[String]("stats")).flatMap(s =>
-        Option(mapper.readTree(s).get("numRecords")).map(_.asLong()))
-        .getOrElse(0L)
+      val rows = numRecords(Option(r.getAs[String]("stats"))).getOrElse(0L)
       if (existing.isEmpty) {
         next = base + rows
         swaps += removeJson(RemoveFile(r.getAs[String]("path"), Some(now),
@@ -844,8 +839,7 @@ object CommitWriter {
     val hasDataRemove = actionLines.exists { l =>
       l.contains("\"remove\"") && {
         val n = mapper.readTree(l)
-        n.has("remove") &&
-          Option(n.get("remove").get("dataChange")).forall(_.asBoolean())
+        n.has("remove") && dataChange(n.get("remove"))
       }
     }
     if (hasDataRemove) {
@@ -1381,17 +1375,14 @@ object CommitWriter {
     val referenced: Set[String] =
       if (retainedManifests.isEmpty) Set.empty
       else {
+        // one read per manifest format; a torn JSON manifest fails the
+        // sweep rather than orphaning the sidecars it references
         val (pq, js) = retainedManifests.partition(_.endsWith(".parquet"))
-        def refs(df: DataFrame): Set[String] =
-          df.where(col("sidecar.path").isNotNull)
+        Seq(pq, js).filter(_.nonEmpty).flatMap(paths =>
+          Replay.manifestDF(spark, paths)
+            .where(col("sidecar.path").isNotNull)
             .select("sidecar.path").collect()
-            .map(_.getString(0).split('/').last).toSet
-        (if (pq.isEmpty) Set.empty[String]
-         else refs(spark.read.schema(Actions.v2CheckpointSchema)
-           .parquet(pq: _*))) ++
-        (if (js.isEmpty) Set.empty[String]
-         else refs(spark.read.schema(Actions.v2CheckpointSchema)
-           .json(js: _*)))
+            .map(_.getString(0).split('/').last)).toSet
       }
     val sidecarDir = new Path(logPath, "_sidecars")
     val orphanSidecars =
@@ -1455,12 +1446,7 @@ object CommitWriter {
     // latest domainMetadata per domain survives too (including removal
     // tombstones — replay over the checkpoint must agree with replay
     // over the full log about every domain's final state)
-    val domainRows = Replay.actionsDF(spark, segment)
-      .where(col("domainMetadata").isNotNull)
-      .withColumn("rn", row_number().over(Window
-        .partitionBy(col("domainMetadata.domain"))
-        .orderBy(col("commit_version").desc)))
-      .where(col("rn") === 1)
+    val domainRows = Replay.latestDomainActions(spark, segment)
       .select(nullAdd.as("add"), nullRemove.as("remove"),
         nullMeta.as("metaData"), nullProto.as("protocol"),
         nullTxn.as("txn"), col("domainMetadata"))

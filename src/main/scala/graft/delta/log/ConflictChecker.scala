@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Optimistic-concurrency conflict detection for lost commit races.
   *
@@ -116,28 +115,25 @@ object ConflictChecker {
     val table = new Path(tablePath)
     val fs = LogSegment.fs(spark, table)
     val logPath = new Path(table, "_delta_log")
-    val mapper = new ObjectMapper()
     var protocolChanged = false
     var metadataChanged = false
     val adds = Seq.newBuilder[WinnerAdd]
     val removed = Set.newBuilder[String]
     val ops = Seq.newBuilder[String]
     for (v <- fromVersion to toVersion) {
-      val p = new Path(logPath, LogSegment.commitFileName(v))
-      val lines =
-        try {
-          val in = fs.open(p)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toVector
-          finally in.close()
-        } catch {
+      // a line that does not parse is corruption (IllegalStateException),
+      // not a lost race to retry
+      val nodes =
+        try LogSegment.readLines(fs,
+          new Path(logPath, LogSegment.commitFileName(v))).map(_.node)
+        catch {
           case e: java.io.IOException =>
             throw new ConcurrentCommitException(
               s"lost the commit race for $tablePath to version $v but its " +
                 "commit file cannot be read to classify the conflict — " +
                 "re-run the transaction against the current snapshot", e)
         }
-      for (line <- lines if line.nonEmpty) {
-        val node = mapper.readTree(line)
+      for (node <- nodes) {
         if (node.has("protocol")) protocolChanged = true
         if (node.has("metaData")) metadataChanged = true
         Option(node.get("commitInfo")).flatMap(ci =>
@@ -147,7 +143,7 @@ object ConflictChecker {
           // pruning here can never disagree with the scan
           adds += WinnerAdd(a.get("path").asText(),
             Replay.partitionValuesOf(a),
-            Option(a.get("dataChange")).forall(_.asBoolean(true)))
+            Actions.dataChange(a))
         }
         Option(node.get("remove")).foreach(r => removed += r.get("path").asText())
       }

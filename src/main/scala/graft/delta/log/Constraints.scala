@@ -1,6 +1,5 @@
 package graft.delta.log
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -43,14 +42,13 @@ object Constraints {
       case (k, v) if k.startsWith("delta.constraints.") =>
         (k.stripPrefix("delta.constraints."), v)
     }
-    val mapper = new ObjectMapper()
     def invariants(fields: Seq[StructField],
         prefix: String): Seq[(String, String)] =
       fields.flatMap { f =>
         val here =
           if (!f.metadata.contains("delta.invariants")) Nil
           else {
-            val sql = mapper
+            val sql = Actions.mapper
               .readTree(f.metadata.getString("delta.invariants"))
               .path("expression").path("expression").asText("")
             if (sql.isEmpty) Nil
@@ -212,13 +210,12 @@ object IdentityColumns {
   def advance(meta: Metadata, adds: Seq[Actions.AddFile]): Option[Metadata] = {
     val ids = of(meta)
     if (ids.isEmpty || adds.isEmpty) return None
-    val mapper = new ObjectMapper()
     val maxima = ids.flatMap { s =>
       // the mark advances in the direction of the step: maxValues for
       // ascending identities, minValues for descending ones
       val statsKey = if (s.step > 0) "maxValues" else "minValues"
       val ms = adds.flatMap(_.stats).flatMap { st =>
-        val node = mapper.readTree(st).path(statsKey).path(s.name)
+        val node = Actions.mapper.readTree(st).path(statsKey).path(s.name)
         if (node.isMissingNode || node.isNull) None else Some(node.asLong())
       }
       val merged =

@@ -2,7 +2,6 @@ package graft.delta.log
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Minor log compaction: `<x>.<y>.compacted.json` files holding the
   * action reconciliation of commit versions x..y (Delta protocol "Log
@@ -27,8 +26,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * the write side here follows the spec's naming + reconciliation.
   */
 object LogCompaction {
-  private val mapper = new ObjectMapper()
-
   /** Opt-in table property: write a compaction every N commits — the
     * span [v-N+1, v] after committing version v when v is a multiple
     * of N. Spans thus START at multiples-of-N-plus-one, which is
@@ -85,13 +82,14 @@ object LogCompaction {
     val domains = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val files = scala.collection.mutable.LinkedHashMap.empty[String, String]
     for (v <- start to end) {
-      val p = new Path(logPath, LogSegment.commitFileName(v))
-      if (!fs.exists(p)) throw new IllegalStateException(
-        s"cannot compact [$start, $end] of $tablePath: commit $v is missing")
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
-      val parsed = lines.filter(_.nonEmpty).map(l => (l, mapper.readTree(l)))
+      val parsed = try LogSegment.readLines(fs,
+        new Path(logPath, LogSegment.commitFileName(v)))
+        .map(l => (l.text, l.node))
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalStateException(s"cannot compact [$start, $end] " +
+            s"of $tablePath: commit $v is missing")
+      }
       // removes first, adds second: a same-commit re-add supersedes the
       // remove (the replay rule reconciliation must preserve)
       for ((line, n) <- parsed if n.has("remove")) {

@@ -2,7 +2,7 @@ package graft.delta.log
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.JsonNode
 
 /** The set of log files that defines one table version: an optional
   * checkpoint plus the JSON commits after it.
@@ -199,40 +199,69 @@ object LogSegment {
       checkpointIsV2 = cpVersion.exists(v2Versions.contains))
   }
 
-  /** Read `_last_checkpoint`, if present (used as a listing shortcut by
-    * real implementations; we use it in VacuumCommand + tests). */
-  def lastCheckpoint(spark: SparkSession, tablePath: Path): Option[Long] = {
-    val p = new Path(new Path(tablePath, "_delta_log"), "_last_checkpoint")
-    val fileSystem = fs(spark, tablePath)
-    if (!fileSystem.exists(p)) None
-    else {
-      val in = fileSystem.open(p)
-      try {
-        val node = new ObjectMapper().readTree(in)
-        Option(node.get("version")).map(_.asLong())
-      } finally in.close()
-    }
+  /** One action line of a log JSON file: its text as written (log
+    * compaction re-emits it byte for byte) and its parsed node. */
+  final case class LogLine(text: String, node: JsonNode)
+
+  /** The action lines of a log JSON file in order, blank lines skipped:
+    * the one driver-side decoder of log JSON. A commit is an immutable
+    * object, so a line that is not a JSON object means a corrupt log: an
+    * IllegalStateException naming the file and line (never an
+    * IOException, which a caller could take for a retryable read). A
+    * missing file throws `fs.open`'s FileNotFoundException; each caller
+    * maps that by its own rule. */
+  def readLines(fs: FileSystem, file: Path): Vector[LogLine] =
+    decode(fs, file)(_.toVector)
+
+  private def decode[A](fs: FileSystem, file: Path)(
+      f: Iterator[LogLine] => A): A = {
+    val in = fs.open(file)
+    var lineNo = 0
+    def corrupt(line: Int, why: String, cause: Throwable) =
+      new IllegalStateException(
+        s"Corrupt Delta log file $file: line $line $why", cause)
+    try f(scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .map { l => lineNo += 1; l }
+      .filter(!_.isBlank)
+      .map { l =>
+        val node = try Actions.mapper.readTree(l) catch {
+          case e: com.fasterxml.jackson.core.JsonProcessingException =>
+            throw corrupt(lineNo,
+              s"is not valid JSON: ${e.getOriginalMessage}", e)
+        }
+        if (!node.isObject) throw corrupt(lineNo, "is not a JSON object", null)
+        LogLine(l, node)
+      })
+    catch {
+      case e: java.nio.charset.CharacterCodingException =>
+        throw corrupt(lineNo + 1, "is not valid UTF-8", e)
+    } finally in.close()
   }
 
-  /** The `commitInfo.inCommitTimestamp` of the commit file at `commit`:
-    * read from its first non-empty line (the spec puts commitInfo first
-    * when in-commit timestamps are on); None when that line carries
-    * none. */
-  def inCommitTimestamp(fs: FileSystem, commit: Path): Option[Long] = {
-    val in = fs.open(commit)
-    val first = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().find(_.nonEmpty) finally in.close()
-    first.map(new ObjectMapper().readTree)
-      .flatMap(n => Option(n.get("commitInfo")))
+  /** The `commitInfo.inCommitTimestamp` of a commit's first action line
+    * (the spec puts commitInfo first when in-commit timestamps are on);
+    * None when that line carries none. */
+  private def ictOf(first: Option[JsonNode]): Option[Long] =
+    first.flatMap(n => Option(n.get("commitInfo")))
       .flatMap(ci => Option(ci.get("inCommitTimestamp")).map(_.asLong()))
-  }
+
+  /** The inCommitTimestamp ([[ictOf]]) of the commit file at `commit`,
+    * decoding its first line only. */
+  def inCommitTimestamp(fs: FileSystem, commit: Path): Option[Long] =
+    decode(fs, commit)(lines => ictOf(lines.nextOption().map(_.node)))
 
   /** The timestamp of commit file `status` by the protocol rule: its own
     * commitInfo.inCommitTimestamp when it carries one (monotonic and
     * immune to file copies), else the file's modification time. The
-    * change feed's `_commit_timestamp` and every timestamp-addressed
-    * read (TIMESTAMP AS OF, startingTimestamp/endingTimestamp, RESTORE
-    * TO TIMESTAMP) resolve against this one clock. */
+    * change feed's `_commit_timestamp`, DESCRIBE HISTORY and every
+    * timestamp-addressed read (TIMESTAMP AS OF, startingTimestamp/
+    * endingTimestamp, RESTORE TO TIMESTAMP) resolve against this one
+    * clock. */
   def commitTimestamp(fs: FileSystem, status: FileStatus): Long =
     inCommitTimestamp(fs, status.getPath).getOrElse(status.getModificationTime)
+
+  /** [[commitTimestamp]] of a commit whose action lines are already
+    * read. */
+  def commitTimestamp(status: FileStatus, actions: Seq[JsonNode]): Long =
+    ictOf(actions.headOption).getOrElse(status.getModificationTime)
 }

@@ -3,7 +3,9 @@ package graft.delta.log
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.StructType
+import com.fasterxml.jackson.databind.JsonNode
 import scala.jdk.CollectionConverters._
 
 /** Log replay: reconcile checkpoint + commit actions into the live file
@@ -18,8 +20,6 @@ import scala.jdk.CollectionConverters._
   * pruning.
   */
 object Replay {
-  private val mapper = new ObjectMapper()
-
   /** The resolved sidecar parquet paths of a v2-checkpointed segment
     * (empty for classic checkpoints) — the authoritative count/layout
     * for callers auditing the checkpoint artifact. */
@@ -29,12 +29,21 @@ object Replay {
 
   /** A checkpoint's files read with the v2 top-level schema: the
     * classic actions plus `sidecar` and `checkpointMetadata` (null on a
-    * classic checkpoint, whose parquet lacks those columns). */
-  private def manifestDF(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val reader = spark.read.schema(Actions.v2CheckpointSchema)
-    if (paths.head.endsWith(".json")) reader.json(paths: _*)
-    else reader.parquet(paths: _*)
-  }
+    * classic checkpoint, whose parquet lacks those columns). A JSON
+    * manifest line that does not parse fails the read ([[logJson]]). */
+  private[log] def manifestDF(spark: SparkSession,
+      paths: Seq[String]): DataFrame =
+    if (paths.head.endsWith(".json"))
+      logJson(spark, Actions.v2CheckpointSchema, paths)
+    else spark.read.schema(Actions.v2CheckpointSchema).parquet(paths: _*)
+
+  /** The one distributed read of log JSON files. FAILFAST, as the
+    * driver decoder ([[LogSegment.readLines]]): Spark's PERMISSIVE
+    * default would turn a torn line into an all-null row that every
+    * action filter then drops without a word. */
+  private def logJson(spark: SparkSession, schema: StructType,
+      paths: Seq[String]): DataFrame =
+    spark.read.schema(schema).option("mode", "FAILFAST").json(paths: _*)
 
   /** The segment's checkpoint as logSchema-shaped action rows. Classic
     * and multipart checkpoints read directly; a V2 (UUID-named)
@@ -118,7 +127,8 @@ object Replay {
           s"is named for version ${segment.checkpointVersion.orNull}")
     }
     def json(i: Int) =
-      rows.find(!_.isNullAt(i)).map(r => mapper.readTree(r.getString(i)))
+      rows.find(!_.isNullAt(i))
+        .map(r => Actions.mapper.readTree(r.getString(i)))
     val sidecarDir = new Path(segment.logPath, "_sidecars")
     CheckpointInfo(
       meta = json(2).map(parseMetadata),
@@ -144,9 +154,7 @@ object Replay {
     val commits = segment.commitFiles match {
       case Seq() => None
       case files =>
-        Some(spark.read
-          .schema(Actions.logSchema)
-          .json(files.map(_.getPath.toString): _*)
+        Some(logJson(spark, Actions.logSchema, files.map(_.getPath.toString))
           // a compacted file's reconciled actions are attributed its END
           // version (the same loss of per-action provenance a checkpoint
           // has — ordering vs the checkpoint and vs later commits stays
@@ -254,7 +262,7 @@ object Replay {
     * distributed jobs — mirrors the kernel's driver-side replay); large
     * logs use the distributed window plan. */
   def liveFiles(spark: SparkSession, segment: LogSegment): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types.{LongType, StructField}
     val logBytes = segment.checkpointFiles.map(_.getLen).sum +
       segment.commitFiles.map(_.getLen).sum
     if (logBytes > DriverReplayMaxBytes)
@@ -358,13 +366,8 @@ object Replay {
     import org.apache.spark.sql.Row
     val fs = LogSegment.fs(spark, segment.tablePath)
     for (commit <- commits) {
-      val name = commit.getPath.getName
-      val version = LogSegment.commitVersion(name)
-        .orElse(LogSegment.compactedRange(name).map(_._2)).get
-      val in = fs.open(commit.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
-      val nodes = lines.filter(_.nonEmpty).map(mapper.readTree)
+      val version = fileVersion(segment, commit)
+      val nodes = LogSegment.readLines(fs, commit.getPath).map(_.node)
       for (n <- nodes if n.has("remove"))
         live.remove(n.get("remove").get("path").asText())
       for (n <- nodes if n.has("add")) {
@@ -378,7 +381,7 @@ object Replay {
         live.put(path, Row(
           path, partitionValuesOf(a), a.get("size").asLong(),
           a.get("modificationTime").asLong(),
-          Option(a.get("dataChange")).forall(_.asBoolean()),
+          Actions.dataChange(a),
           optStr(a, "stats").orNull, dv,
           Option(a.get("baseRowId")).filterNot(_.isNull)
             .map(n => Long.box(n.asLong())).orNull,
@@ -393,19 +396,25 @@ object Replay {
   /** Unreclaimed remove tombstones: one row per path whose latest action
     * in the segment is a remove (i.e. removed and not re-added), with the
     * winning remove struct. Used by checkpointing to retain tombstones. */
-  def tombstones(spark: SparkSession, segment: LogSegment): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val acts = actionsDF(spark, segment)
+  def tombstones(spark: SparkSession, segment: LogSegment): DataFrame =
+    latestFileActions(spark, segment).where(!col("is_add"))
+      .select(col("remove"), col("commit_version"))
+
+  /** The reconciliation window: each path's winning file action in the
+    * segment, as (path, is_add, commit_version, add, remove). The latest
+    * commit wins; within one commit a re-add supersedes a remove. */
+  private def latestFileActions(spark: SparkSession,
+      segment: LogSegment): DataFrame = {
+    val w = Window.partitionBy("path")
+      .orderBy(col("commit_version").desc, col("is_add").desc)
+    actionsDF(spark, segment)
       .where(col("add").isNotNull || col("remove").isNotNull)
       .select(
         coalesce(col("add.path"), col("remove.path")).as("path"),
         col("add").isNotNull.as("is_add"),
-        col("commit_version"), col("remove"))
-    val w = Window.partitionBy("path")
-      .orderBy(col("commit_version").desc, col("is_add").desc)
-    acts.withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1 && !col("is_add"))
-      .select(col("remove"), col("commit_version"))
+        col("commit_version"), col("add"), col("remove"))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
   }
 
   /** Latest state of ONE domain, resolved the way metadataAndProtocol
@@ -419,12 +428,9 @@ object Replay {
       domain: String): Option[Actions.DomainMetadata] = {
     val fs = LogSegment.fs(spark, segment.tablePath)
     for (commit <- segment.commitFiles.reverseIterator) {
-      val in = fs.open(commit.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
       var found: Option[Actions.DomainMetadata] = None
-      for (line <- lines if line.nonEmpty) {
-        val d = mapper.readTree(line).get("domainMetadata")
+      for (line <- LogSegment.readLines(fs, commit.getPath)) {
+        val d = line.node.get("domainMetadata")
         if (d != null && !d.isNull && d.get("domain").asText() == domain)
           found = Some(Actions.DomainMetadata(domain,
             Option(d.get("configuration")).filterNot(_.isNull)
@@ -449,20 +455,25 @@ object Replay {
     * construction (system domains like `delta.rowTracking` plus user
     * config), so this collects driver-side like metadataAndProtocol. */
   def domainMetadata(spark: SparkSession,
-      segment: LogSegment): Map[String, Actions.DomainMetadata] = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("domainMetadata.domain"))
-      .orderBy(col("commit_version").desc)
-    actionsDF(spark, segment)
-      .where(col("domainMetadata").isNotNull)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1 && !col("domainMetadata.removed"))
+      segment: LogSegment): Map[String, Actions.DomainMetadata] =
+    latestDomainActions(spark, segment)
+      .where(!col("domainMetadata.removed"))
       .select("domainMetadata.domain", "domainMetadata.configuration")
       .collect()
       .map(r => r.getString(0) -> Actions.DomainMetadata(
         r.getString(0), r.getString(1), removed = false))
       .toMap
-  }
+
+  /** The latest domainMetadata action per domain in log order, removal
+    * tombstones included. */
+  private[log] def latestDomainActions(spark: SparkSession,
+      segment: LogSegment): DataFrame =
+    actionsDF(spark, segment)
+      .where(col("domainMetadata").isNotNull)
+      .withColumn("rn", row_number().over(Window
+        .partitionBy(col("domainMetadata.domain"))
+        .orderBy(col("commit_version").desc)))
+      .where(col("rn") === 1)
 
   /** Test hook: the distributed replay plan regardless of log size (the
     * cold-truth reference the incremental path is asserted against). */
@@ -470,22 +481,9 @@ object Replay {
       segment: LogSegment): DataFrame = liveFilesDistributed(spark, segment)
 
   private def liveFilesDistributed(spark: SparkSession,
-      segment: LogSegment): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val acts = actionsDF(spark, segment)
-      .where(col("add").isNotNull || col("remove").isNotNull)
-      .select(
-        coalesce(col("add.path"), col("remove.path")).as("path"),
-        col("add").isNotNull.as("is_add"),
-        col("commit_version"),
-        col("add"))
-    val w = Window.partitionBy("path")
-      .orderBy(col("commit_version").desc, col("is_add").desc)
-    acts
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") === 1 && col("is_add"))
+      segment: LogSegment): DataFrame =
+    latestFileActions(spark, segment).where(col("is_add"))
       .select(col("add.*"), col("commit_version"))
-  }
 
   /** Latest metadata + protocol. Commit tails are scanned driver-side
     * newest-first (they are small and P&M almost always live there);
@@ -502,12 +500,9 @@ object Replay {
     val fs = LogSegment.fs(spark, segment.tablePath)
     for (commit <- segment.commitFiles.reverse
          if meta.isEmpty || proto.isEmpty) {
-      val in = fs.open(commit.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().toVector finally in.close()
       // within a commit the last occurrence wins; scan lines in reverse
-      for (line <- lines.reverse if line.nonEmpty) {
-        val node = mapper.readTree(line)
+      for (node <- LogSegment.readLines(fs, commit.getPath).reverseIterator
+             .map(_.node)) {
         if (meta.isEmpty && node.has("metaData"))
           meta = Some(parseMetadata(node.get("metaData")))
         if (proto.isEmpty && node.has("protocol"))

@@ -1,7 +1,6 @@
 package graft.delta.log
 
 import org.apache.spark.sql.SparkSession
-import com.fasterxml.jackson.databind.ObjectMapper
 
 /** Row tracking (Delta writer feature `rowTracking` + its
   * `delta.rowTracking` metadata domain): every row gets a stable id.
@@ -24,7 +23,7 @@ object RowTracking {
   final val PropKey = "delta.enableRowTracking"
   final val Domain = "delta.rowTracking"
 
-  private val mapper = new ObjectMapper()
+  import Actions.mapper
 
   def enabled(meta: Actions.Metadata): Boolean =
     meta.configuration.get(PropKey).exists(_.equalsIgnoreCase("true"))
@@ -47,12 +46,10 @@ object RowTracking {
   }
 
   private def numRecords(a: Actions.AddFile): Long =
-    a.stats.flatMap(s => Option(mapper.readTree(s).get("numRecords"))
-      .map(_.asLong()))
-      .getOrElse(throw new IllegalStateException(
-        s"row tracking requires numRecords stats on every add " +
-          s"('${a.path}' has none) — ids are allocated from file row " +
-          "counts"))
+    Actions.numRecords(a.stats).getOrElse(throw new IllegalStateException(
+      s"row tracking requires numRecords stats on every add " +
+        s"('${a.path}' has none) — ids are allocated from file row " +
+        "counts"))
 
   /** Assign fresh base row ids to `adds` starting at `firstId`, stamped
     * with `commitVersion`; returns the stamped adds and the domain

@@ -1,11 +1,11 @@
 package graft.delta.scan
 
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import graft.delta.Snapshot
-import graft.delta.log.{LogSegment, Replay}
+import graft.delta.log.{Actions, LogSegment, Replay}
 
 /** Incremental commit-range scan: the rows added by commits in
   * `(fromExclusive, endV]`, read from each commit's OWN add actions —
@@ -52,32 +52,26 @@ object CommitRangeScan {
     DeltaScan.buildForFiles(snap, files.values.toSeq)
   }
 
-  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-
   private def feedMissing(path: String, v: Long): String =
     s"Change feed cannot read commit $v of $path (cleaned up?)"
 
   private def commitPath(path: String, v: Long): Path =
-    new Path(new Path(new Path(path), "_delta_log"), f"$v%020d.json")
+    new Path(new Path(new Path(path), "_delta_log"),
+      LogSegment.commitFileName(v))
 
   /** The parsed action lines of commit `v`; `missing` is the message of
     * the IllegalStateException thrown when the log no longer holds it. */
   private def commitActions(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, v: Long, missing: => String): Vector[JsonNode] = {
-    val in = try fs.open(commitPath(path, v)) catch {
+      path: String, v: Long, missing: => String): Vector[JsonNode] =
+    try LogSegment.readLines(fs, commitPath(path, v)).map(_.node) catch {
       case _: java.io.FileNotFoundException =>
         throw new IllegalStateException(missing)
     }
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().toVector finally in.close()
-    lines.filter(_.nonEmpty).map(mapper.readTree)
-  }
 
   /** The `kind` ("add" or "remove") action of a line when it changes
-    * data (dataChange defaults to true). */
+    * data ([[Actions.dataChange]]). */
   private def dataChanging(n: JsonNode, kind: String): Option[JsonNode] =
-    Option(n.get(kind))
-      .filter(a => Option(a.get("dataChange")).forall(_.asBoolean()))
+    Option(n.get(kind)).filter(Actions.dataChange)
 
   private def scanFileOf(add: JsonNode): DeltaScan.ScanFile =
     DeltaScan.ScanFile(add.get("path").asText(),
@@ -86,17 +80,13 @@ object CommitRangeScan {
       if (add.has("modificationTime"))
         add.get("modificationTime").asLong(-1L) else -1L)
 
-  /** Millis timestamp of commit `v` by the protocol rule
-    * ([[LogSegment.commitTimestamp]]), the clock time travel by
-    * timestamp resolves against too; `missing` as in [[commitActions]]. */
-  private def commitMillis(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, v: Long, missing: => String): Long = {
-    val status = try fs.getFileStatus(commitPath(path, v)) catch {
+  /** The file status of commit `v`; `missing` as in [[commitActions]]. */
+  private def commitStatus(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, v: Long, missing: => String): FileStatus =
+    try fs.getFileStatus(commitPath(path, v)) catch {
       case _: java.io.FileNotFoundException =>
         throw new IllegalStateException(missing)
     }
-    LogSegment.commitTimestamp(fs, status)
-  }
 
   /** Per-commit derived-diff cache, shared by EVERY change-feed
     * consumer (batch `q_change_feed`, the `table_changes` TVF, and the
@@ -154,9 +144,9 @@ object CommitRangeScan {
     val fs = LogSegment.fs(spark, new Path(path))
     // a checkpointed log may have expired this commit's JSON: fail with
     // the same actionable message as the range scans, not a raw FNF
-    commitMillis(fs, path, v,
+    LogSegment.commitTimestamp(fs, commitStatus(fs, path, v,
       s"Commit $v of $path is no longer in the log (cleaned up after " +
-        "checkpointing) — its timestamp and changes cannot be derived")
+        "checkpointing) — its timestamp and changes cannot be derived"))
   }
 
   /** True when a MapType occurs ANYWHERE in the type — Spark set
@@ -216,18 +206,16 @@ object CommitRangeScan {
     val qualified = fs.makeQualified(new Path(path)).toString
     val schemaHash = snap.schema.catalogString.hashCode
     val slots = for (v <- (fromExclusive + 1) to endV) yield {
-      val st = try fs.getFileStatus(commitPath(path, v)) catch {
-        case _: java.io.FileNotFoundException =>
-          throw new IllegalStateException(feedMissing(path, v))
-      }
-      (v, DiffKey(qualified, v, st.getLen, st.getModificationTime, schemaHash))
+      val st = commitStatus(fs, path, v, feedMissing(path, v))
+      (v, st,
+        DiffKey(qualified, v, st.getLen, st.getModificationTime, schemaHash))
     }
-    val looked = slots.map { case (v, key) =>
-      (v, key, cacheLookup(spark, key)) }
-    val hits = looked.flatMap(_._3)
-    val missed = looked.collect { case (v, key, None) => (v, key) }
-    val derived = missed.map { case (v, key) =>
-      val (df, diffed) = deriveCommitDiff(spark, path, snap, fs, v)
+    val looked = slots.map { case (v, st, key) =>
+      (v, st, key, cacheLookup(spark, key)) }
+    val hits = looked.flatMap(_._4)
+    val missed = looked.collect { case (v, st, key, None) => (v, st, key) }
+    val derived = missed.map { case (v, st, key) =>
+      val (df, diffed) = deriveCommitDiff(spark, path, snap, fs, v, st)
       (v, key, df, diffed)
     }
     // only DIFFED commits are worth materializing + caching: a pure
@@ -276,7 +264,7 @@ object CommitRangeScan {
     * commits return false. */
   private def deriveCommitDiff(spark: SparkSession, path: String,
       snap: Snapshot, fs: org.apache.hadoop.fs.FileSystem,
-      v: Long): (DataFrame, Boolean) = {
+      v: Long, status: FileStatus): (DataFrame, Boolean) = {
     import org.apache.spark.sql.functions.{abs, array_repeat, col, explode,
       lit, sum, timestamp_millis}
       val adds = scala.collection.mutable.LinkedHashMap.empty[
@@ -322,7 +310,8 @@ object CommitRangeScan {
             Replay.dvDescriptorOf(r)))
         }
       }
-      val ts0 = commitMillis(fs, path, v, feedMissing(path, v))
+      // the timestamp rule over the lines already read: no second open
+      val ts0 = LogSegment.commitTimestamp(status, actions)
       // write-time CDC: when the commit carries cdc actions they are
       // the AUTHORITATIVE change set (per spec a CDF reader must use
       // them EXCLUSIVELY for that commit — the writer already labeled

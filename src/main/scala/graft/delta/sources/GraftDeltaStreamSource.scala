@@ -154,8 +154,8 @@ final class GraftDeltaStreamSource(
     case other => other.json().trim.toLong
   }
 
-  /** (add-file count, add bytes) of one commit — driver-side Jackson
-    * over one small immutable file, memoized for the stream's life.
+  /** (add-file count, add bytes) of one commit — driver-side decode of
+    * one small immutable file, memoized for the stream's life.
     * A commit swept by log retention reads as (0, 0): it can only sit
     * under the initial snapshot batch, which is one batch regardless. */
   private val commitLoadCache =
@@ -165,22 +165,13 @@ final class GraftDeltaStreamSource(
       val fs = LogSegment.fs(spark, new Path(path))
       val p = new Path(new Path(path, "_delta_log"),
         LogSegment.commitFileName(v))
-      if (!fs.exists(p)) (0L, 0L)
-      else {
-        val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val in = fs.open(p)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toVector finally in.close()
-        var files = 0L; var bytes = 0L
-        for (l <- lines if l.contains("\"add\"")) {
-          val a = mapper.readTree(l).get("add")
-          if (a != null && !a.isNull) {
-            files += 1
-            bytes += Option(a.get("size")).map(_.asLong()).getOrElse(0L)
-          }
-        }
-        (files, bytes)
-      }
+      try {
+        val adds = LogSegment.readLines(fs, p)
+          .flatMap(l => Option(l.node.get("add")).filterNot(_.isNull))
+        (adds.size.toLong,
+          adds.map(a => Option(a.get("size")).map(_.asLong()).getOrElse(0L))
+            .sum)
+      } catch { case _: java.io.FileNotFoundException => (0L, 0L) }
     })
 
   /** Highest version the rate limits admit for one batch starting after

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * knob is an option, a table property or a SQL conf. Only the
   * command-line entry points and the measurement instruments under
   * `graft/tools/` read the environment. And the log has one atomic
-  * publisher: commits and log compactions share one put-if-absent. */
+  * publisher: commits and log compactions share one put-if-absent; and
+  * one decoder of its JSON files. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private val mainRoot = new File("src/main/scala")
@@ -41,6 +42,24 @@ class SourceHygieneSpec extends AnyFunSuite {
       if envRead.findFirstIn(line).nonEmpty
     } yield s"$rel:${n + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the Delta layer decodes log JSON files in one place") {
+    // LogSegment.readLines is the one decoder of `_delta_log` JSON; the
+    // stream source's starting-version pin is a file of its own
+    val layer = Seq("graft/delta/", "graft/commands/")
+    val decodes = for {
+      f <- scalaFiles(mainRoot)
+      rel = mainRoot.toPath.relativize(f.toPath).toString
+        .replace(File.separatorChar, '/')
+      if layer.exists(rel.startsWith) &&
+        !rel.endsWith("graft/delta/log/LogSegment.scala")
+      lines = numberedLines(f).map(_._1).toIndexedSeq
+      (line, n) <- lines.zipWithIndex
+      if line.contains("Source.fromInputStream")
+      if !lines.slice(n - 5, n).exists(_.contains("graft_starting_version"))
+    } yield s"$rel:${n + 1}: ${line.trim}"
+    assert(decodes.isEmpty, decodes.mkString("\n", "\n", ""))
   }
 
   test("main code hard-links a log file into place in exactly one routine") {

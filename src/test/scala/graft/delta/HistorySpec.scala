@@ -4,7 +4,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.delta.log.CommitWriter
+import org.apache.hadoop.fs.Path
+import graft.delta.log.{CommitWriter, LogSegment}
 
 class HistorySpec extends AnyFunSuite {
   import TestSpark._
@@ -56,6 +57,26 @@ class HistorySpec extends AnyFunSuite {
     assert(h.map(_.getString(2)).toSeq ==
       Seq("DELETE", "WRITE", "CREATE TABLE AS SELECT"))
     assert(h.forall(_.getString(3) == "graft/0.1.0"))
+  }
+
+  test("DESCRIBE HISTORY's timestamp resolves to its own version under " +
+      "time travel by timestamp") {
+    val p = tmp("hist_ts")
+    CommitWriter.createTable(spark, region.limit(1), p) // v0
+    CommitWriter.append(spark, region.limit(2), p)      // v1
+    CommitWriter.append(spark, region.limit(1), p)      // v2
+    // no in-commit timestamps: commit mtimes are the clock; set them
+    // apart from commitInfo.timestamp, as a log copy leaves them
+    val fs = LogSegment.fs(spark, new Path(p))
+    val logDir = new Path(p, "_delta_log")
+    Seq(0L -> 1000000L, 1L -> 2000000L, 2L -> 3000000L).foreach {
+      case (v, t) =>
+        fs.setTimes(new Path(logDir, LogSegment.commitFileName(v)), t, -1)
+    }
+    val ts = g.sql(s"DESCRIBE HISTORY '$p'").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(ts(1L) == 2000000L, ts.toString)
+    assert(DeltaTable.forPathAtTimestamp(spark, p, ts(1L)).version == 1L)
   }
 
   test("DESCRIBE HISTORY surfaces recorded operation parameters") {
