@@ -295,6 +295,7 @@ object AlterTableCommand {
           "mark are fixed at table creation (changing them would " +
           "orphan or resurrect physical columns)")
     }
+    CommitWriter.validateIntegerProperties(props)
     // dataSkippingStatsColumns must name real, non-partition columns
     // NOW — a typo discovered at write time would silently stop
     // indexing stats instead of failing the ALTER

@@ -46,27 +46,38 @@ object HistoryCommand {
 
   /** DESCRIBE DETAIL: one metadata row for the current snapshot. File
     * count/bytes are a distributed aggregation over the live-file list;
-    * timestamps come from commit mtimes (DESCRIBE HISTORY's clock on a
-    * table without in-commit timestamps). */
+    * timestamps follow DESCRIBE HISTORY's clock
+    * ([[LogSegment.commitTimestamp]]: the commit's in-commit timestamp,
+    * else its file's mtime): `lastModified` is the latest commit's, and
+    * a table without a recorded `createdTime` falls back to its earliest
+    * retained commit's. */
   def detail(spark: SparkSession, tablePath: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val snap = DeltaTable.forPath(spark, tablePath)
     val agg = snap.allFiles
       .agg(count(lit(1)), coalesce(sum(col("size")), lit(0L))).head
     val fs = LogSegment.fs(spark, new Path(tablePath))
-    val mtimes = fs.listStatus(new Path(tablePath, "_delta_log")).toSeq
-      .flatMap(st => LogSegment.commitVersion(st.getPath.getName)
-        .map(_ => st.getModificationTime))
+    def stamp(commit: org.apache.hadoop.fs.FileStatus): java.lang.Long =
+      Long.box(LogSegment.commitTimestamp(fs, commit))
+    // a log whose latest version is only a checkpoint has no commit to
+    // stamp it
+    val lastModified =
+      try stamp(fs.getFileStatus(new Path(snap.segment.logPath,
+        LogSegment.commitFileName(snap.version))))
+      catch { case _: java.io.FileNotFoundException => null }
+    val createdAt = snap.metadata.createdTime.map(Long.box).getOrElse(
+      fs.listStatus(snap.segment.logPath).toSeq
+        .flatMap(st => LogSegment.commitVersion(st.getPath.getName)
+          .map(_ -> st))
+        .minByOption(_._1).map(c => stamp(c._2)).orNull)
     val row = Row(
       snap.metadata.format.provider,
       snap.metadata.id,
       snap.metadata.name.orNull,
       snap.metadata.description.orNull,
       tablePath,
-      snap.metadata.createdTime
-        .map(Long.box).getOrElse(
-          if (mtimes.isEmpty) null else Long.box(mtimes.min)),
-      if (mtimes.isEmpty) null else Long.box(mtimes.max),
+      createdAt,
+      lastModified,
       snap.partitionColumns,
       graft.delta.log.Clustering.columnsOf(spark, snap.segment),
       agg.getLong(0),

@@ -131,23 +131,59 @@ object DeltaTable {
     Snapshot(spark, tablePath, segment, meta, proto)
   }
 
-  /** Time travel by timestamp: the newest version whose commit
-    * timestamp ([[LogSegment.commitTimestamp]]: its inCommitTimestamp,
-    * else its file's mtime) is at or before `timestampMillis`. */
+  /** Time travel by timestamp: the snapshot at [[versionAtTimestamp]]. */
   def forPathAtTimestamp(spark: SparkSession, path: String,
-      timestampMillis: Long): Snapshot = {
-    val tablePath = new Path(path)
-    val fs = LogSegment.fs(spark, tablePath)
-    val logPath = new Path(tablePath, "_delta_log")
-    val stamped = fs.listStatus(logPath).toSeq
+      timestampMillis: Long): Snapshot =
+    forPath(spark, path, Some(versionAtTimestamp(spark, path, timestampMillis)))
+
+  /** The newest version whose commit timestamp is at or before
+    * `timestampMillis`, resolved against the latest snapshot's
+    * metadata. */
+  def versionAtTimestamp(spark: SparkSession, path: String,
+      timestampMillis: Long): Long =
+    versionAtTimestamp(forPath(spark, path), timestampMillis)
+
+  /** [[versionAtTimestamp]] by the protocol's in-commit-timestamp
+    * enablement rule, read from `latest`'s metadata, over one listing of
+    * `_delta_log`:
+    *  - versions below `delta.inCommitTimestampEnablementVersion` (every
+    *    version, when in-commit timestamps are off) are stamped with
+    *    their commit file's mtime, which the listing carries: no opens;
+    *  - versions at or above it carry monotonic in-commit timestamps
+    *    ([[LogSegment.commitTimestamp]]), so a binary search opens
+    *    O(log n) commits. */
+  private[delta] def versionAtTimestamp(latest: Snapshot,
+      timestampMillis: Long): Long = {
+    val fs = LogSegment.fs(latest.spark, latest.tablePath)
+    val commits = fs.listStatus(latest.segment.logPath).toSeq
       .flatMap(st => LogSegment.commitVersion(st.getPath.getName)
-        .map(v => (v, LogSegment.commitTimestamp(fs, st))))
+        .filter(_ <= latest.version).map(_ -> st))
       .sortBy(_._1)
-    val eligible = stamped.filter(_._2 <= timestampMillis)
-    if (eligible.isEmpty)
-      throw new IllegalArgumentException(
-        s"No table version at or before timestamp $timestampMillis " +
-          s"(earliest commit: ${stamped.headOption.map(_._2)})")
-    forPath(spark, path, Some(eligible.map(_._1).max))
+    val cfg = latest.metadata.configuration
+    val ictFrom =
+      if (!cfg.get("delta.enableInCommitTimestamps")
+          .exists(_.equalsIgnoreCase("true"))) Long.MaxValue
+      else cfg.get("delta.inCommitTimestampEnablementVersion")
+        .flatMap(_.trim.toLongOption).getOrElse(0L)
+    val (byMtime, byIct) = commits.partition(_._1 < ictFrom)
+    val opened = scala.collection.mutable.Map.empty[Int, Long]
+    def ict(i: Int): Long =
+      opened.getOrElseUpdate(i, LogSegment.commitTimestamp(fs, byIct(i)._2))
+    // the first ICT commit past the timestamp
+    var lo = 0
+    var hi = byIct.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (ict(mid) <= timestampMillis) lo = mid + 1 else hi = mid
+    }
+    if (lo > 0) byIct(lo - 1)._1
+    else byMtime.filter(_._2.getModificationTime <= timestampMillis)
+      .lastOption.map(_._1).getOrElse {
+        val earliest = byMtime.headOption.map(_._2.getModificationTime)
+          .orElse(byIct.headOption.map(_ => ict(0)))
+        throw new IllegalArgumentException(
+          s"No table version at or before timestamp $timestampMillis " +
+            s"(earliest commit: $earliest)")
+      }
   }
 }

@@ -51,6 +51,7 @@ object CommitWriter {
       partitionColumns = partCols,
       configuration = configuration,
       createdTime = Some(System.currentTimeMillis()))
+    validateIntegerProperties(configuration)
     configuration.get(DataSkippingStatsColumnsKey)
       .foreach(validateStatsColumns(_, df.schema, partCols))
     // founding rows must honor delta.constraints.* passed at creation
@@ -583,6 +584,7 @@ object CommitWriter {
       schemaString = df.schema.json,
       partitionColumns = partCols,
       configuration = configuration)
+    validateIntegerProperties(configuration)
     configuration.get(DataSkippingStatsColumnsKey)
       .foreach(validateStatsColumns(_, df.schema, partCols))
     val adds = writeTableFiles(spark, Constraints.enforce(df, meta),
@@ -1221,6 +1223,14 @@ object CommitWriter {
     * checkpoint + commit tail authoritative (unreferenced sidecars and
     * incomplete part sets are garbage, not corruption).
     *
+    * Source: a checkpoint is a materialized log replay (Delta Lake,
+    * VLDB 2020, §3.1). When [[Replay.cachedState]] holds the segment's
+    * replay state (caching on, a small log, a bounded file count), the
+    * rows come from it on the driver and the write is the only Spark
+    * job; otherwise [[checkpointRows]] replays distributed. Once every
+    * artifact is published, [[Replay.handOff]] keys the caches to the
+    * new checkpoint, so the next read is not a full replay.
+    *
     * @param parts parquet files for the checkpoint's rows (classic) or
     *   file actions (v2 sidecars); default 1, -1 = auto-size from the
     *   live-file count ([[autoCheckpointParts]] — ~100k add rows per
@@ -1236,32 +1246,41 @@ object CommitWriter {
     // domainMetadata), and a checkpoint that drops them corrupts the
     // table — same fail-closed gate as data writes
     ProtocolSupport.assertWritable(tablePath, meta, proto)
-    val (fileRows, nonFileRows) = checkpointRows(spark, segment, meta, proto)
+    // the replay state the cache holds at this version is the
+    // checkpoint's content: write it from the driver; without one,
+    // replay distributed
+    val state = Replay.cachedState(spark, segment)
+    val cutoff = tombstoneCutoff(meta)
+    val (fileRows, nonFileRows) = state match {
+      case Some(s) => stateRows(spark, s, cutoff, meta, proto)
+      case None => checkpointRows(spark, segment, cutoff, meta, proto)
+    }
     val n =
-      if (parts == -1) autoCheckpointParts(
-        fileRows.where(col("add").isNotNull).count())
-      else parts
+      if (parts != -1) parts
+      else autoCheckpointParts(state.fold(
+        fileRows.where(col("add").isNotNull).count())(_.adds.length.toLong))
     val fs = LogSegment.fs(spark, segment.tablePath)
     val logPath = segment.logPath
     val v = segment.version
     val v2 = proto.writerFeatures.getOrElse(Nil).contains("v2Checkpoint")
-    val published =
+    val (published, sidecars) =
       if (v2) {
         val sidecarDir = new Path(logPath, "_sidecars")
         fs.mkdirs(sidecarDir)
         val sidecars = stageAndPublish(fs, logPath, fileRows, n)((_, _) =>
           new Path(sidecarDir, s"${UUID.randomUUID()}.parquet"))
-        sidecars ++ stageAndPublish(fs, logPath,
+        (sidecars ++ stageAndPublish(fs, logPath,
           v2Manifest(spark, fs, v, sidecars, nonFileRows), 1)((_, _) =>
-            new Path(logPath, f"$v%020d.checkpoint.${UUID.randomUUID()}.parquet"))
+            new Path(logPath, f"$v%020d.checkpoint.${UUID.randomUUID()}.parquet")),
+          sidecars)
       } else {
-        stageAndPublish(fs, logPath, fileRows.unionByName(nonFileRows), n) {
+        (stageAndPublish(fs, logPath, fileRows.unionByName(nonFileRows), n) {
           case (_, 1) => new Path(logPath, LogSegment.checkpointFileName(v))
           // the total is the ACTUAL part count (parquet may merge small
           // partitions), so the reader's completeness check matches
           case (i, total) => new Path(logPath,
             f"$v%020d.checkpoint.${i + 1}%010d.$total%010d.parquet")
-        }
+        }, Seq.empty[Path])
       }
 
     // size = every action row in the artifact (for v2: sidecar file
@@ -1274,6 +1293,13 @@ object CommitWriter {
     if (!v2 && published.length > 1) lc.put("parts", published.length)
     val out = fs.create(new Path(logPath, "_last_checkpoint"), true)
     try out.write(lc.toString.getBytes("UTF-8")) finally out.close()
+
+    // published in full: the checkpoint files a listing resolves at v
+    // (the parts in name order, or the v2 manifest) take over the state
+    val cpFiles = (if (v2) published.takeRight(1) else published)
+      .map(fs.getFileStatus)
+    Replay.handOff(spark, segment, cpFiles, cutoff, meta, proto,
+      sidecars.map(_.toString))
 
     sweepStaleTemps(fs, logPath)
     maybeCleanupExpiredLogs(spark, tablePath, meta)
@@ -1398,12 +1424,14 @@ object CommitWriter {
 
   /** Complete replay-state rows for a checkpoint of `segment`, split as
     * (file actions [adds ∪ unexpired remove tombstones], non-file
-    * actions [latest SetTransaction per appId + metaData + protocol]) —
-    * both in logSchema column shape. The split is what the V2 format
+    * actions [latest SetTransaction per appId + latest domainMetadata
+    * per domain + metaData + protocol]) — both in logSchema column
+    * shape, replayed distributed (the path where the state cache holds
+    * no state; see [[stateRows]]). The split is what the V2 format
     * needs (file actions go to sidecars, the rest to the manifest);
     * classic checkpoints union the two. */
   private def checkpointRows(spark: SparkSession, segment: LogSegment,
-      meta: Actions.Metadata, proto: Actions.Protocol)
+      cutoff: Long, meta: Actions.Metadata, proto: Actions.Protocol)
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val live = Replay.liveFiles(spark, segment)
@@ -1453,11 +1481,6 @@ object CommitWriter {
 
     // unexpired remove tombstones (paths whose latest action is a remove
     // within the retention window) stay visible
-    val retentionMs = meta.configuration
-      .get(graft.commands.VacuumCommand.RetentionPropKey)
-      .map(graft.commands.VacuumCommand.parseInterval)
-      .getOrElse(7L * 24 * 3600 * 1000)
-    val cutoff = System.currentTimeMillis() - retentionMs
     val removeRows = Replay.tombstones(spark, segment)
       .where(coalesce(col("remove.deletionTimestamp"), lit(Long.MaxValue))
         >= cutoff)
@@ -1467,14 +1490,51 @@ object CommitWriter {
         nullProto.as("protocol"), nullTxn.as("txn"),
         nullDomain.as("domainMetadata"))
 
-    import spark.implicits._
-    val pmRows = spark.read.schema(Actions.logSchema)
-      .json(Seq(metadataJson(meta), protocolJson(proto)).toDS())
-      .select(Actions.logSchema.fieldNames.toIndexedSeq.map(col): _*)
-
     (addRows.unionByName(removeRows),
-      txnRows.unionByName(domainRows).unionByName(pmRows))
+      txnRows.unionByName(domainRows)
+        .unionByName(logRows(spark, pmRows(meta, proto))))
   }
+
+  /** [[checkpointRows]] from a driver-held [[Replay.ReplayState]]: the
+    * same rows under the same rules (adds with dataChange=false,
+    * tombstones inside the retention window, every txn and domain, P&M),
+    * as local relations that cost no Spark job to build. */
+  private def stateRows(spark: SparkSession, s: Replay.ReplayState,
+      cutoff: Long, meta: Actions.Metadata, proto: Actions.Protocol)
+      : (DataFrame, DataFrame) = {
+    val adds = s.adds.toSeq.map(a => logRow(0, Row(a(0), a(1), a(2), a(3),
+      false, a(5), a(6), a(7), a(8))))
+    val removes = s.tombstones.toSeq
+      .filter(t => t.isNullAt(1) || t.getLong(1) >= cutoff)
+      .map(t => logRow(1, Row(t(0), t(1), false, t(3))))
+    (logRows(spark, adds ++ removes), logRows(spark,
+      s.txns.toSeq.map(logRow(4, _)) ++ s.domains.toSeq.map(logRow(5, _)) ++
+        pmRows(meta, proto)))
+  }
+
+  /** A [[Actions.logSchema]] row carrying `action` in column `i`. */
+  private def logRow(i: Int, action: Row): Row =
+    Row.fromSeq(Seq.tabulate(Actions.logSchema.length)(j =>
+      if (j == i) action else null))
+
+  private def logRows(spark: SparkSession, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, Actions.logSchema)
+
+  /** The metaData and protocol action rows of a checkpoint. */
+  private def pmRows(m: Actions.Metadata, p: Actions.Protocol): Seq[Row] = Seq(
+    logRow(2, Row(m.id, m.name.orNull, m.description.orNull,
+      Row(m.format.provider, m.format.options), m.schemaString,
+      m.partitionColumns, m.configuration, m.createdTime.map(Long.box).orNull)),
+    logRow(3, Row(p.minReaderVersion, p.minWriterVersion,
+      p.readerFeatures.orNull, p.writerFeatures.orNull)))
+
+  /** Remove tombstones deleted at or after this instant stay in a
+    * checkpoint and in the state it hands on (`delta.deletedFileRetentionDuration`, default 7 days). */
+  private def tombstoneCutoff(meta: Actions.Metadata): Long =
+    System.currentTimeMillis() - meta.configuration
+      .get(graft.commands.VacuumCommand.RetentionPropKey)
+      .map(graft.commands.VacuumCommand.parseInterval)
+      .getOrElse(7L * 24 * 3600 * 1000)
 
   /** The one publish step of every checkpoint artifact: write `rows` as
     * up to `n` parquet files into a hidden staging dir, then rename each
@@ -1611,6 +1671,23 @@ object CommitWriter {
     * SET TBLPROPERTIES / CREATE; partition columns are rejected (their
     * pruning comes from partitionValues, never stats). */
   final val DataSkippingStatsColumnsKey = "delta.dataSkippingStatsColumns"
+
+  /** Integer table properties graft acts on, with the least value each
+    * accepts. */
+  private val integerProperties: Map[String, Int] = Map(
+    CheckpointIntervalPropKey -> 1,
+    LogCompaction.IntervalPropKey -> 1,
+    DataSkippingNumIndexedColsKey -> -1)
+
+  /** Reject an integer table property that does not parse or is below
+    * its least value, naming the key — where graft sets properties
+    * (CREATE, REPLACE, SET TBLPROPERTIES). The read-side parsers
+    * ([[intervalFrom]], [[indexedStatsColumns]],
+    * [[LogCompaction.intervalFrom]]) stay tolerant of foreign writers. */
+  def validateIntegerProperties(props: Iterable[(String, String)]): Unit =
+    for ((k, v) <- props; least <- integerProperties.get(k))
+      require(v.trim.toIntOption.exists(_ >= least),
+        s"table property $k must be an integer >= $least, got '$v'")
 
   /** Parse + validate a `delta.dataSkippingStatsColumns` spec against a
     * table schema; returns the declared logical names. */

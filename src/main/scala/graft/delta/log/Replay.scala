@@ -186,9 +186,66 @@ object Replay {
     * tail is replayed on top of the cached rows — a hot table's refresh
     * cost is O(new commits), not O(log). Entries are driver-side Row
     * arrays (file metadata only — ~100 bytes/file, never data), bounded
-    * LRU over tables, oversized file lists never cached. */
+    * LRU over tables, states of more than CacheMaxFilesPerTable files
+    * (live adds plus tombstones) never cached. Each table keeps its
+    * [[CacheStatesPerTable]] most recently used states, so a writer
+    * whose transaction reads a version the readers have moved past (a
+    * MERGE attempt racing appends) and a reader of a segment listed just
+    * before a checkpoint landed still find theirs. */
   private val CacheMaxTables = 64
   private val CacheMaxFilesPerTable = 100000
+  private val CacheStatesPerTable = 4
+
+  /** The complete reconciled replay state of one table version: all a
+    * checkpoint of that version holds besides metaData and protocol.
+    * Arrays are never mutated once built.
+    *
+    * @param adds live files: [[Actions.addSchema]] columns plus
+    *   commit_version
+    * @param tombstones paths whose latest action is a remove, as
+    *   [[Actions.removeSchema]] rows
+    * @param txns the latest SetTransaction per appId in log order, as
+    *   [[Actions.txnSchema]] rows
+    * @param domains the latest domainMetadata action per domain, removal
+    *   tombstones included, as [[Actions.domainMetadataSchema]] rows */
+  private[log] final case class ReplayState(
+      adds: Array[org.apache.spark.sql.Row],
+      tombstones: Array[org.apache.spark.sql.Row],
+      txns: Array[org.apache.spark.sql.Row],
+      domains: Array[org.apache.spark.sql.Row]) {
+    def files: Int = adds.length + tombstones.length
+  }
+
+  /** Applies file, txn and domain actions in log order on top of an
+    * earlier state: the latest action per path, appId and domain wins. */
+  private final class StateBuilder(from: Option[ReplayState]) {
+    import org.apache.spark.sql.Row
+    private def keyed(rows: Array[Row]) = {
+      val m = scala.collection.mutable.LinkedHashMap.empty[String, Row]
+      rows.foreach(r => m.put(r.getString(0), r))
+      m
+    }
+    private val live = keyed(from.fold(Array.empty[Row])(_.adds))
+    private val removed = keyed(from.fold(Array.empty[Row])(_.tombstones))
+    private val txns = keyed(from.fold(Array.empty[Row])(_.txns))
+    private val domains = keyed(from.fold(Array.empty[Row])(_.domains))
+
+    def remove(r: Row): Unit = {
+      live.remove(r.getString(0))
+      removed.put(r.getString(0), r)
+    }
+    // a re-added path moves to the end, as a fresh add would
+    def add(r: Row): Unit = {
+      removed.remove(r.getString(0))
+      live.remove(r.getString(0))
+      live.put(r.getString(0), r)
+    }
+    def txn(r: Row): Unit = txns.put(r.getString(0), r)
+    def domain(r: Row): Unit = domains.put(r.getString(0), r)
+
+    def result: ReplayState = ReplayState(live.values.toArray,
+      removed.values.toArray, txns.values.toArray, domains.values.toArray)
+  }
 
   private case class CachedState(
       version: Long,
@@ -199,13 +256,29 @@ object Replay {
       // ms commitInfo timestamps); byte-identical recreations would
       // serve an identical list, which is harmless
       contentMark: Long,
-      rows: Array[org.apache.spark.sql.Row])
+      state: ReplayState)
 
+  /** Per table, its cached states, most recently used first. */
   private val stateCache =
-    new java.util.LinkedHashMap[String, CachedState](16, 0.75f, true) {
+    new java.util.LinkedHashMap[String, List[CachedState]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, CachedState]): Boolean =
+          e: java.util.Map.Entry[String, List[CachedState]]): Boolean =
         size() > CacheMaxTables
+    }
+
+  private def cachedStates(tableKey: String): List[CachedState] =
+    stateCache.synchronized {
+      Option(stateCache.get(tableKey)).getOrElse(Nil)
+    }
+
+  /** Put `fresh` first in the table's states, in place of any state of
+    * the same version and files; the least recently used fall off. */
+  private def remember(tableKey: String, fresh: Seq[CachedState]): Unit =
+    stateCache.synchronized {
+      val keep = cachedStates(tableKey).filterNot(c =>
+        fresh.exists(f => f.version == c.version && f.sigs == c.sigs))
+      stateCache.put(tableKey,
+        (fresh.toList ++ keep).take(CacheStatesPerTable))
     }
 
   /** `spark.lakehouse.delta.enable_caching` (the reference's
@@ -235,103 +308,191 @@ object Replay {
 
   /** Head-bytes hash of a log file; None when unreadable (e.g. cleaned
     * up since caching) — callers treat that as a cache mismatch. */
-  private def headHash(spark: SparkSession, segment: LogSegment,
+  private def headHash(spark: SparkSession, tablePath: Path,
       name: String): Option[Long] = scala.util.Try {
-    val fs = LogSegment.fs(spark, segment.tablePath)
-    val p = new Path(new Path(segment.tablePath, "_delta_log"), name)
+    val fs = LogSegment.fs(spark, tablePath)
+    val p = new Path(new Path(tablePath, "_delta_log"), name)
     val buf = new Array[Byte](64 * 1024)
     val in = fs.open(p)
     val n = try in.read(buf, 0, buf.length) finally in.close()
     (0 until math.max(n, 0)).foldLeft(17L)((h, i) => h * 31 + buf(i))
   }.toOption
 
-  /** Version a log file contributes state up to. */
-  private def fileVersion(segment: LogSegment,
-      st: org.apache.hadoop.fs.FileStatus): Long =
-    LogSegment.commitVersion(st.getPath.getName)
-      .orElse(LogSegment.compactedRange(st.getPath.getName).map(_._2))
-      .getOrElse(segment.checkpointVersion.getOrElse(-1L))
+  /** Version a log file (commit, compaction or checkpoint artifact)
+    * contributes state up to. */
+  private def fileVersion(name: String): Long =
+    LogSegment.commitVersion(name)
+      .orElse(LogSegment.compactedRange(name).map(_._2))
+      .orElse(LogSegment.checkpointArtifactVersion(name))
+      .getOrElse(-1L)
+
+  private def logBytes(segment: LogSegment): Long =
+    segment.checkpointFiles.map(_.getLen).sum +
+      segment.commitFiles.map(_.getLen).sum
 
   /** The reconciled live file set: one row per live AddFile (columns of
     * Actions.addSchema plus commit_version). Reconciliation rule: the
     * latest action for a path wins; within one commit a re-add supersedes
     * a remove of the same path.
     *
-    * Small checkpoint-less logs replay driver-side (the common
-    * interactive case: a handful of JSON commits does not warrant
-    * distributed jobs — mirrors the kernel's driver-side replay); large
-    * logs use the distributed window plan. */
+    * Small logs (at most [[DriverReplayMaxBytes]]) resolve through the
+    * driver state cache ([[resolveState]]; the common interactive case:
+    * a handful of JSON commits does not warrant distributed jobs —
+    * mirrors the kernel's driver-side replay); large logs use the
+    * distributed window plan. */
   def liveFiles(spark: SparkSession, segment: LogSegment): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField}
-    val logBytes = segment.checkpointFiles.map(_.getLen).sum +
-      segment.commitFiles.map(_.getLen).sum
-    if (logBytes > DriverReplayMaxBytes)
+    if (logBytes(segment) > DriverReplayMaxBytes)
       // large-log path stays fully lazy — the file list is never
       // materialized before pruning
       return liveFilesDistributed(spark, segment)
-
-    // small-log path: the reconciled list is tiny, so it lives in the
-    // per-table driver cache. Resolution order: exact hit (same version,
-    // unchanged files) -> incremental (cached version is an unchanged
-    // prefix: replay only the new commit tail onto the cached rows) ->
-    // full replay. Checkpoint-less logs replay with plain Jackson (zero
-    // Spark jobs); small checkpoints pay one distributed read.
-    val tableKey = segment.tablePath.toString
-    val allFilesNow = segment.checkpointFiles ++ segment.commitFiles
-    val sigsNow = allFilesNow.map(sigOf)
-    val cachingOn = cachingEnabled(spark)
-    val cached =
-      if (!cachingOn) None
-      else stateCache.synchronized { Option(stateCache.get(tableKey)) }
-
-    // never let a TIME-TRAVEL read of an older version clobber the hot
-    // latest state (the next latest read would then full-replay)
-    def store(rows: Array[org.apache.spark.sql.Row]): Unit =
-      for (mark <- headHash(spark, segment, sigsNow.last._1)
-           if cachingOn && rows.length <= CacheMaxFilesPerTable &&
-             cached.forall(_.version <= segment.version))
-        stateCache.synchronized {
-          stateCache.put(tableKey,
-            CachedState(segment.version, sigsNow, mark, rows))
-        }
-
-    val rows = cached match {
-      // exact hit: same version, identical file stats + tip content
-      case Some(c) if c.version == segment.version && c.sigs == sigsNow &&
-          headHash(spark, segment, sigsNow.last._1).contains(c.contentMark) =>
-        ReplayCounters.hit.incrementAndGet()
-        c.rows
-      // incremental: the cached state's files are an unchanged prefix of
-      // the current segment (no new checkpoint swallowed them) — apply
-      // only the commits past the cached version
-      case Some(c) if c.version < segment.version &&
-          allFilesNow.filter(fileVersion(segment, _) <= c.version)
-            .map(sigOf) == c.sigs &&
-          headHash(spark, segment, c.sigs.last._1).contains(c.contentMark) =>
-        ReplayCounters.incremental.incrementAndGet()
-        val live = scala.collection.mutable.LinkedHashMap.empty[
-          String, org.apache.spark.sql.Row]
-        c.rows.foreach(r => live.put(r.getString(0), r))
-        val tail = segment.commitFiles
-          .filter(st => fileVersion(segment, st) > c.version)
-        val computed = replayCommits(spark, segment, tail, live)
-        store(computed)
-        computed
-      case _ =>
-        ReplayCounters.full.incrementAndGet()
-        val computed =
-          if (segment.checkpointFiles.isEmpty)
-            replayCommits(spark, segment, segment.commitFiles,
-              scala.collection.mutable.LinkedHashMap.empty)
-          else liveFilesDistributed(spark, segment).collect()
-        store(computed)
-        computed
-    }
+    val rows = resolveState(spark, segment).adds
     val schema = StructType(Actions.addSchema.fields :+
       StructField("commit_version", LongType))
     val l = new java.util.ArrayList[org.apache.spark.sql.Row](rows.length)
     rows.foreach(l.add)
     spark.createDataFrame(l, schema)
+  }
+
+  /** The replay state of `segment` as the state cache holds it, resolved
+    * the way [[liveFiles]] resolves it (hit, incremental or full). None
+    * where the cache holds no state: caching off, a log above
+    * [[DriverReplayMaxBytes]], or a state of more than
+    * [[CacheMaxFilesPerTable]] files. */
+  private[log] def cachedState(spark: SparkSession,
+      segment: LogSegment): Option[ReplayState] =
+    if (!cachingEnabled(spark) || logBytes(segment) > DriverReplayMaxBytes)
+      None
+    else Some(resolveState(spark, segment))
+      .filter(_.files <= CacheMaxFilesPerTable)
+
+  /** The small-log replay state, which lives in the per-table driver
+    * cache. Resolution order: exact hit (same version, unchanged files)
+    * -> incremental (cached version is an unchanged prefix: replay only
+    * the new commit tail onto the cached state) -> full replay.
+    * Checkpoint-less logs replay with plain Jackson (zero Spark jobs);
+    * small checkpoints pay one distributed read. */
+  private def resolveState(spark: SparkSession,
+      segment: LogSegment): ReplayState = {
+    val tableKey = segment.tablePath.toString
+    val allFilesNow = segment.checkpointFiles ++ segment.commitFiles
+    val sigsNow = allFilesNow.map(sigOf)
+    val cachingOn = cachingEnabled(spark)
+    val cached = if (cachingOn) cachedStates(tableKey) else Nil
+    def unchanged(c: CachedState) =
+      headHash(spark, segment.tablePath, c.sigs.last._1).contains(c.contentMark)
+
+    def store(state: ReplayState): Unit =
+      for (mark <- headHash(spark, segment.tablePath, sigsNow.last._1)
+           if cachingOn && state.files <= CacheMaxFilesPerTable)
+        remember(tableKey, Seq(CachedState(segment.version, sigsNow, mark, state)))
+
+    // exact hit: same version, identical file stats + tip content
+    cached.find(c => c.version == segment.version && c.sigs == sigsNow &&
+        unchanged(c)) match {
+      case Some(c) =>
+        ReplayCounters.hit.incrementAndGet()
+        remember(tableKey, Seq(c))
+        c.state
+      case None =>
+        // incremental: the newest cached state whose files are an
+        // unchanged prefix of the current segment (a checkpoint handed
+        // the state on, or none swallowed them) — apply only the commits
+        // past its version
+        cached.filter(_.version < segment.version).sortBy(-_.version)
+          .find(c => allFilesNow
+            .filter(st => fileVersion(st.getPath.getName) <= c.version)
+            .map(sigOf) == c.sigs && unchanged(c)) match {
+          case Some(c) =>
+            ReplayCounters.incremental.incrementAndGet()
+            val tail = segment.commitFiles
+              .filter(st => fileVersion(st.getPath.getName) > c.version)
+            val computed = replayCommits(spark, segment, tail, Some(c.state))
+            store(computed)
+            computed
+          case None =>
+            ReplayCounters.full.incrementAndGet()
+            val computed =
+              if (segment.checkpointFiles.isEmpty)
+                replayCommits(spark, segment, segment.commitFiles, None)
+              else replayCollected(spark, segment)
+            store(computed)
+            computed
+        }
+    }
+  }
+
+  /** Hand a just-published checkpoint of `segment` on to the caches, so
+    * the next resolve at or past its version is a hit or an incremental
+    * replay rather than a full one. Call only once the checkpoint's
+    * parts, its manifest and `_last_checkpoint` are all published.
+    *  - The checkpoint memo learns the checkpoint's P&M and sidecars,
+    *    keyed by `parts` (path, length, mtime), in the order a listing
+    *    resolves them.
+    *  - Each cached state at or past the checkpoint version whose files
+    *    at or below that version are exactly the segment's gains a twin
+    *    keyed by the checkpoint's files in their place (a state past the
+    *    checkpoint keeps its commit tail). As in a replay of the
+    *    checkpoint, the twin's live files at or below the checkpoint
+    *    version take its version as their commit_version, and its
+    *    tombstones are those deleted at or after `tombstoneCutoff` (the
+    *    ones the checkpoint keeps), so a long-lived hot state does not
+    *    accumulate expired tombstones.
+    * With caching off this does nothing. */
+  private[log] def handOff(spark: SparkSession, segment: LogSegment,
+      parts: Seq[org.apache.hadoop.fs.FileStatus], tombstoneCutoff: Long,
+      meta: Actions.Metadata, proto: Actions.Protocol,
+      sidecars: Seq[String]): Unit = {
+    if (!cachingEnabled(spark)) return
+    val v = segment.version
+    checkpointMemo.synchronized(checkpointMemo.put(
+      parts.map(st => (st.getPath.toString, st.getLen, st.getModificationTime)),
+      CheckpointInfo(Some(meta), Some(proto), sidecars)))
+    val cpSigs = parts.map(sigOf)
+    val segmentSigs = (segment.checkpointFiles ++ segment.commitFiles).map(sigOf)
+    def replayed(s: ReplayState) = s.copy(
+      adds = s.adds.map(r =>
+        if (r.getLong(r.length - 1) >= v) r
+        else org.apache.spark.sql.Row.fromSeq(r.toSeq.init :+ v)),
+      tombstones = s.tombstones.filter(t =>
+        t.isNullAt(1) || t.getLong(1) >= tombstoneCutoff))
+    val tableKey = segment.tablePath.toString
+    for (cpMark <- headHash(spark, segment.tablePath, cpSigs.last._1))
+      stateCache.synchronized {
+        remember(tableKey, cachedStates(tableKey).filter(c => c.version >= v &&
+            c.sigs.filter(s => fileVersion(s._1) <= v) == segmentSigs)
+          .map { c =>
+            val tail = c.sigs.filter(s => fileVersion(s._1) > v)
+            CachedState(c.version, cpSigs ++ tail,
+              if (tail.isEmpty) cpMark else c.contentMark, replayed(c.state))
+          })
+      }
+  }
+
+  /** Full replay of a checkpointed segment: ONE distributed read of the
+    * segment's add, remove, txn and domainMetadata actions, reconciled
+    * on the driver in commit order (removes before adds within a
+    * commit, so a re-add supersedes a remove; within a commit the
+    * highest txn version wins, as in the distributed checkpoint). */
+  private def replayCollected(spark: SparkSession,
+      segment: LogSegment): ReplayState = {
+    import org.apache.spark.sql.Row
+    val rows = actionsDF(spark, segment)
+      .where(col("add").isNotNull || col("remove").isNotNull ||
+        col("txn").isNotNull || col("domainMetadata").isNotNull)
+      .select("add", "remove", "txn", "domainMetadata", "commit_version")
+      .collect()
+    val b = new StateBuilder(None)
+    for ((v, rs) <- rows.groupBy(_.getLong(4)).toSeq.sortBy(_._1)) {
+      rs.filterNot(_.isNullAt(1)).foreach(r => b.remove(r.getStruct(1)))
+      rs.filterNot(_.isNullAt(0))
+        .foreach(r => b.add(Row.fromSeq(r.getStruct(0).toSeq :+ v)))
+      rs.filterNot(_.isNullAt(2)).map(_.getStruct(2))
+        .sortBy(t => if (t.isNullAt(1)) Long.MinValue else t.getLong(1))
+        .foreach(b.txn)
+      rs.filterNot(_.isNullAt(3)).foreach(r => b.domain(r.getStruct(3)))
+    }
+    b.result
   }
 
   /** partitionValues of an add node with JSON null PRESERVED as null —
@@ -356,41 +517,55 @@ object Replay {
         cardinality = d.get("cardinality").asLong())
     }
 
-  /** Apply `commits` (in order) on top of `live` (path -> add row);
-    * latest action wins, re-adds in the same commit supersede removes
-    * because removes apply first. */
+  private def dvRow(a: JsonNode): org.apache.spark.sql.Row =
+    dvDescriptorOf(a).map(d => org.apache.spark.sql.Row(d.storageType,
+      d.pathOrInlineDv, d.offset.map(Int.box).orNull, d.sizeInBytes,
+      d.cardinality)).orNull
+
+  private def optLongBox(n: JsonNode, f: String): java.lang.Long =
+    optLong(n, f).map(Long.box).orNull
+
+  /** Apply `commits` (in order) on top of `from`; latest action wins,
+    * re-adds in the same commit supersede removes because removes apply
+    * first, and a later txn or domain line of a commit wins over an
+    * earlier one. */
   private def replayCommits(spark: SparkSession, segment: LogSegment,
       commits: Seq[org.apache.hadoop.fs.FileStatus],
-      live: scala.collection.mutable.LinkedHashMap[String, org.apache.spark.sql.Row])
-      : Array[org.apache.spark.sql.Row] = {
+      from: Option[ReplayState]): ReplayState = {
     import org.apache.spark.sql.Row
     val fs = LogSegment.fs(spark, segment.tablePath)
+    val b = new StateBuilder(from)
     for (commit <- commits) {
-      val version = fileVersion(segment, commit)
+      val version = fileVersion(commit.getPath.getName)
       val nodes = LogSegment.readLines(fs, commit.getPath).map(_.node)
-      for (n <- nodes if n.has("remove"))
-        live.remove(n.get("remove").get("path").asText())
+      for (n <- nodes if n.has("remove")) {
+        val r = n.get("remove")
+        b.remove(Row(r.get("path").asText(),
+          optLongBox(r, "deletionTimestamp"), Actions.dataChange(r), dvRow(r)))
+      }
       for (n <- nodes if n.has("add")) {
         val a = n.get("add")
-        val dv = dvDescriptorOf(a).map(d =>
-          Row(d.storageType, d.pathOrInlineDv,
-            d.offset.map(Int.box).orNull, d.sizeInBytes, d.cardinality))
-          .orNull
-        val path = a.get("path").asText()
-        live.remove(path)
-        live.put(path, Row(
-          path, partitionValuesOf(a), a.get("size").asLong(),
+        b.add(Row(
+          a.get("path").asText(), partitionValuesOf(a), a.get("size").asLong(),
           a.get("modificationTime").asLong(),
           Actions.dataChange(a),
-          optStr(a, "stats").orNull, dv,
-          Option(a.get("baseRowId")).filterNot(_.isNull)
-            .map(n => Long.box(n.asLong())).orNull,
-          Option(a.get("defaultRowCommitVersion")).filterNot(_.isNull)
-            .map(n => Long.box(n.asLong())).orNull,
+          optStr(a, "stats").orNull, dvRow(a),
+          optLongBox(a, "baseRowId"), optLongBox(a, "defaultRowCommitVersion"),
           version))
       }
+      for (n <- nodes if n.has("txn")) {
+        val t = n.get("txn")
+        b.txn(Row(t.get("appId").asText(), t.get("version").asLong(),
+          optLongBox(t, "lastUpdated")))
+      }
+      for (n <- nodes if n.has("domainMetadata")) {
+        val d = n.get("domainMetadata")
+        b.domain(Row(d.get("domain").asText(),
+          optStr(d, "configuration").orNull,
+          Option(d.get("removed")).exists(_.asBoolean(false))))
+      }
     }
-    live.values.toArray
+    b.result
   }
 
   /** Unreclaimed remove tombstones: one row per path whose latest action

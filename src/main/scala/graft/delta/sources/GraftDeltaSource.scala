@@ -1,11 +1,13 @@
 package graft.delta.sources
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import graft.delta.DeltaTable
+import graft.delta.log.LogSegment
 
 /** `spark.read.format("graftdelta")` — data-source integration for the
   * graft Delta read path.
@@ -100,7 +102,7 @@ class GraftDeltaSource extends RelationProvider
       // must fail the read, not silently degrade it to a full-history
       // scan that re-emits the entire table downstream.
       val sv =
-        try DeltaTable.forPathAtTimestamp(spark, path, millis - 1).version + 1
+        try DeltaTable.versionAtTimestamp(spark, path, millis - 1) + 1
         catch { case _: IllegalArgumentException => 0L }
       // a bound past the last commit is a caller bug (a typo'd year
       // would otherwise read as "no new data" forever) — same
@@ -134,8 +136,8 @@ class GraftDeltaSource extends RelationProvider
           .orElse(endingTs.map(ts =>
             // errors when NO commit is at or before ts — an empty
             // range bounded by a pre-history timestamp is a caller bug
-            DeltaTable.forPathAtTimestamp(spark, path,
-              GraftDeltaSource.parseUtcMillis(ts)).version))
+            DeltaTable.versionAtTimestamp(spark, path,
+              GraftDeltaSource.parseUtcMillis(ts))))
           .getOrElse(-1L)
         new GraftDeltaTable(spark, path, None,
           versionRange = Some((sv, endV)),
@@ -185,7 +187,13 @@ class GraftDeltaSource extends RelationProvider
       throw new IllegalArgumentException("graftdelta requires a path"))
     val partitionCols = parameters.get("partitionBy")
       .map(_.split(",").map(_.trim).toSeq).getOrElse(Seq.empty)
-    val existing = scala.util.Try(DeltaTable.forPath(spark, path)).toOption
+    // no table yet: no `_delta_log`, or one that holds no commit; any
+    // other failure to resolve the target (a torn log) is the caller's
+    val existing =
+      if (!LogSegment.fs(spark, new Path(path))
+          .exists(new Path(path, "_delta_log"))) None
+      else try Some(DeltaTable.forPath(spark, path))
+      catch { case _: LogSegment.EmptyLogException => None }
 
     (mode, existing) match {
       case (SaveMode.ErrorIfExists, Some(_)) =>
@@ -245,7 +253,7 @@ object GraftDeltaSource {
     require(versionAsOf.isEmpty || timestampAsOf.isEmpty,
       "set either versionAsOf or timestampAsOf, not both")
     versionAsOf.map(_.toLong).orElse(timestampAsOf.map { ts =>
-      DeltaTable.forPathAtTimestamp(spark, path, parseUtcMillis(ts)).version
+      DeltaTable.versionAtTimestamp(spark, path, parseUtcMillis(ts))
     })
   }
 }

@@ -111,7 +111,7 @@ final class GraftDeltaStreamSource(
       // (all commits after ts) streams from version 0. ONLY the
       // empty-eligible-set error falls back — an IO failure must fail
       // the stream, not silently restart it from the full history
-      try DeltaTable.forPathAtTimestamp(spark, path, millis - 1).version + 1
+      try DeltaTable.versionAtTimestamp(spark, path, millis - 1) + 1
       catch { case _: IllegalArgumentException => 0L }
     })
     // `latest` and timestamps resolve DIFFERENTLY on every restart (the

@@ -97,9 +97,8 @@ object GraftParser {
       timestamp: String) extends Statement {
     def run(g: GraftSession): DataFrame = {
       val path = g.resolveTablePath(table)
-      val target = DeltaTable.forPathAtTimestamp(g.spark, path,
-        GraftDeltaSource.parseUtcMillis(timestamp))
-      HistoryCommand.restore(g.spark, path, target.version)
+      HistoryCommand.restore(g.spark, path, DeltaTable.versionAtTimestamp(
+        g.spark, path, GraftDeltaSource.parseUtcMillis(timestamp)))
     }
   }
   final case class ConvertStatement(table: String,

@@ -2,10 +2,12 @@ package graft.delta
 
 import java.io.IOException
 import java.net.URI
+import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicReference
+import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream,
+  FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.SparkSession
@@ -14,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   * able to fail one chosen call: arm it with the call name and a
   * predicate over the target path, and the next matching `create` or
   * `rename` throws an IOException instead of touching storage. A fault
-  * fires once, so a retry runs against healthy storage.
+  * fires once, so a retry runs against healthy storage. It also records
+  * the files it opens ([[FaultFileSystem.opened]]).
   *
   * Not being the `file` scheme, it also routes put-if-absent through
   * the filesystem's create-no-overwrite rather than a local hard link. */
@@ -49,6 +52,11 @@ class FaultFileSystem extends RawLocalFileSystem {
       blockSize, progress)
   }
 
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    FaultFileSystem.opens.add(f)
+    super.open(f, bufferSize)
+  }
+
   override def rename(src: Path, dst: Path): Boolean = {
     FaultFileSystem.check("rename", dst)
     super.rename(src, dst)
@@ -76,6 +84,15 @@ object FaultFileSystem {
   def pending: Boolean = armed.get() != null
 
   def disarm(): Unit = armed.set(null)
+
+  private val opens = new ConcurrentLinkedQueue[Path]
+
+  /** The files `body` opened through this filesystem, in order. */
+  def opened(body: => Any): Seq[Path] = {
+    opens.clear()
+    body
+    opens.asScala.toSeq
+  }
 
   private def check(call: String, target: Path): Unit = {
     val a = armed.get()

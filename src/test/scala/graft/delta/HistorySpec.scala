@@ -45,6 +45,23 @@ class HistorySpec extends AnyFunSuite {
       .toSeq == Seq("r_regionkey"))
   }
 
+  test("DESCRIBE DETAIL's lastModified is the newest HISTORY timestamp on " +
+      "a copied ICT log") {
+    val p = tmp("detail_ict")
+    CommitWriter.createTable(spark, region.limit(1), p,
+      configuration = Map("delta.enableInCommitTimestamps" -> "true"))
+    CommitWriter.append(spark, region.limit(2), p)
+    // a log copy resets the commit mtimes; the ICTs stay
+    val fs = LogSegment.fs(spark, new Path(p))
+    Seq(0L, 1L).foreach(v => fs.setTimes(new Path(p,
+      s"_delta_log/${LogSegment.commitFileName(v)}"), 1000000L + v, -1))
+    val newest = g.sql(s"DESCRIBE HISTORY '$p'").collect()
+      .map(_.getLong(1)).max
+    assert(newest > 1000001L, "HISTORY fell back to the mtimes")
+    val d = g.sql(s"DESCRIBE DETAIL '$p'").collect().head
+    assert(d.getAs[Long]("lastModified") == newest)
+  }
+
   test("DESCRIBE HISTORY lists commits newest-first with operations") {
     val p = tmp("hist")
     CommitWriter.createTable(spark, region.limit(2), p)

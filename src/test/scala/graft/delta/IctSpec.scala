@@ -213,4 +213,58 @@ class IctSpec extends AnyFunSuite {
     assert(ictOf(p, 2).isEmpty,
       "stale ICT memo trusted a byte-length/mtime-identical rewrite")
   }
+
+  /** A 200-commit log (no checkpoint) on the fault filesystem whose
+    * commits below `ictFrom` carry mtimes 1000 s apart from 10^9 ms on,
+    * ICT enabled at `ictFrom` when it is below 200. */
+  private def longLog(name: String, ictFrom: Int): String = {
+    FaultFileSystem.install(spark)
+    val p = FaultFileSystem.pathOf(tmp(name))
+    CommitWriter.createTable(spark, region.limit(1), p,
+      configuration = Map(CommitWriter.CheckpointIntervalPropKey -> "1000"))
+    for (v <- 1 until 200)
+      if (v == ictFrom) graft.commands.AlterTableCommand.setTblProperties(
+        spark, p, Seq("delta.enableInCommitTimestamps" -> "true"))
+      else CommitWriter.commit(spark, p, v.toLong, Seq.empty, "WRITE")
+    val fs = LogSegment.fs(spark, new Path(p))
+    for (v <- 0 until math.min(ictFrom, 200))
+      fs.setTimes(new Path(p, s"_delta_log/${LogSegment.commitFileName(v)}"),
+        1000000000L + v * 1000L, -1)
+    p
+  }
+
+  private def commitOpens(paths: Seq[Path]): Int =
+    paths.count(f => LogSegment.commitVersion(f.getName).isDefined)
+
+  test("a timestamp resolves without opening a commit when ICT is off") {
+    val p = longLog("resolve_mtime", ictFrom = Int.MaxValue)
+    val latest = DeltaTable.forPath(spark, p)
+    var v = -1L
+    val opens = FaultFileSystem.opened {
+      v = DeltaTable.versionAtTimestamp(latest, 1000000000L + 50 * 1000L + 500)
+    }
+    assert(v == 50L)
+    assert(commitOpens(opens) == 0, opens.toString)
+  }
+
+  test("a timestamp resolves with O(log n) commit opens when ICT is " +
+      "enabled mid-history") {
+    val p = longLog("resolve_ict", ictFrom = 100)
+    val latest = DeltaTable.forPath(spark, p)
+    assert(latest.metadata.configuration(
+      "delta.inCommitTimestampEnablementVersion") == "100")
+    val bound = math.ceil(math.log(200) / math.log(2)).toInt + 2
+    val ict150 = ictOf(p, 150).get
+    for ((ts, want) <- Seq(ict150 -> 150L, (ict150 - 1) -> 149L,
+        (ictOf(p, 100).get - 1) -> 99L,
+        (1000000000L + 40 * 1000L + 1) -> 40L)) {
+      var v = -1L
+      val opens = FaultFileSystem.opened {
+        v = DeltaTable.versionAtTimestamp(latest, ts)
+      }
+      assert(v == want, s"timestamp $ts")
+      assert(commitOpens(opens) <= bound, s"timestamp $ts: $opens")
+    }
+    assert(DeltaTable.forPathAtTimestamp(spark, p, ict150).version == 150L)
+  }
 }

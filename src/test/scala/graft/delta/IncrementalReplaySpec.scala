@@ -4,11 +4,11 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.delta.log.{CommitWriter, LogSegment, Replay}
+import graft.delta.log.{Actions, CommitWriter, LogSegment, Replay}
 
 /** Incremental snapshot refresh (`Snapshot::try_new_from` semantics):
   * re-resolving a hot table replays only the new commit tail on top of
@@ -236,5 +236,150 @@ class IncrementalReplaySpec extends AnyFunSuite {
     DeltaTable.forPath(spark, p).allFiles.count() // latest again
     assert(Replay.ReplayCounters.hit.get() >= 1,
       "time travel evicted the latest state")
+  }
+
+  /** The action rows of the checkpoint at `v` (classic, single part),
+    * one sorted sequence per action kind, with every field compared. */
+  private def checkpointActions(p: String, v: Long): Map[String, Seq[String]] = {
+    val cp = new Path(new Path(p, "_delta_log"), LogSegment.checkpointFileName(v))
+    val rows = spark.read.schema(Actions.logSchema).parquet(cp.toString)
+    Actions.logSchema.fieldNames.map(f =>
+      f -> rows.where(col(f).isNotNull).select(to_json(col(f)))
+        .collect().map(_.getString(0)).toSeq.sorted).toMap
+  }
+
+  private def dropCheckpoint(p: String, v: Long): Unit = {
+    val fs = LogSegment.fs(spark, new Path(p))
+    val log = new Path(p, "_delta_log")
+    assert(fs.delete(new Path(log, LogSegment.checkpointFileName(v)), false))
+    fs.delete(new Path(log, "_last_checkpoint"), false)
+  }
+
+  private def withCachingOff[A](body: => A): A = {
+    spark.conf.set("spark.lakehouse.delta.enable_caching", "false")
+    try body finally spark.conf.unset("spark.lakehouse.delta.enable_caching")
+  }
+
+  test("a checkpoint written from the cached state equals the distributed one") {
+    val p = tmp("cpstate")
+    // row tracking puts a domainMetadata action in every data commit;
+    // DELETE and MERGE then write deletion vectors
+    CommitWriter.createTable(spark, region.repartition(3), p,
+      configuration = Map("delta.enableRowTracking" -> "true",
+        "delta.enableDeletionVectors" -> "true",
+        CommitWriter.CheckpointIntervalPropKey -> "1000"))
+    CommitWriter.append(spark, region.limit(2), p)
+    CommitWriter.commitRemoves(spark, p, Seq(DeltaTable.forPath(spark, p)
+      .allFiles.select("path").orderBy("path").head().getString(0)))
+    graft.commands.DmlCommands.delete(spark, p, col("r_regionkey") === 1)
+    graft.commands.MergeCommand.upsert(spark, p,
+      region.limit(2).withColumn("r_name", lit("X")), Seq("r_regionkey"))
+    assert(CommitWriter.appendIfAbsent(spark, region.limit(1), p,
+      appId = "sink-a", txnVersion = 3L).isDefined)
+    assert(CommitWriter.appendIfAbsent(spark, region.limit(1), p,
+      appId = "sink-b", txnVersion = 7L).isDefined)
+    assert(CommitWriter.appendIfAbsent(spark, region.limit(1), p,
+      appId = "sink-a", txnVersion = 4L).isDefined)
+    val seg = LogSegment.forTable(spark, new Path(p))
+    val v = seg.version
+    DeltaTable.forPath(spark, p).allFiles.count() // the cache holds v
+
+    Replay.ReplayCounters.reset()
+    assert(CommitWriter.checkpoint(spark, p) == v)
+    assert(Replay.ReplayCounters.full.get() == 0,
+      "the checkpoint replayed the log instead of using the cached state")
+    val fromState = checkpointActions(p, v)
+
+    // against the distributed replay of the same segment
+    val adds = Replay.liveFilesDistributedForTest(spark, seg)
+      .select(to_json(struct(col("path"), col("partitionValues"),
+        col("size"), col("modificationTime"), lit(false).as("dataChange"),
+        col("stats"), col("deletionVector"), col("baseRowId"),
+        col("defaultRowCommitVersion")))).collect().map(_.getString(0))
+    assert(fromState("add") == adds.toSeq.sorted)
+    val tombstones = Replay.tombstones(spark, seg)
+      .select(to_json(col("remove").withField("dataChange", lit(false))))
+      .collect().map(_.getString(0)).toSeq.sorted
+    assert(tombstones.nonEmpty && fromState("remove") == tombstones)
+    val domains = Replay.domainMetadata(spark, seg)
+    assert(domains.keySet == Set("delta.rowTracking"))
+    assert(fromState("domainMetadata").map(Actions.mapper.readTree)
+      .map(d => d.get("domain").asText() -> d.get("configuration").asText())
+      .toMap == domains.map { case (k, d) => k -> d.configuration })
+    assert(fromState("txn").map(Actions.mapper.readTree)
+      .map(t => t.get("appId").asText() -> t.get("version").asLong()).toMap ==
+      Map("sink-a" -> 4L, "sink-b" -> 7L))
+    val (meta, proto) = Replay.metadataAndProtocol(spark, seg)
+    assert(fromState("metaData").map(Actions.mapper.readTree)
+      .map(Replay.parseMetadata) == Seq(meta))
+    assert(fromState("protocol").map(Actions.mapper.readTree)
+      .map(Replay.parseProtocol) == Seq(proto))
+
+    // the distributed checkpoint writes the same rows
+    dropCheckpoint(p, v)
+    withCachingOff(assert(CommitWriter.checkpoint(spark, p) == v))
+    assert(checkpointActions(p, v) == fromState)
+
+    // and so does a state checkpoint re-created under the same name
+    dropCheckpoint(p, v)
+    DeltaTable.forPath(spark, p).allFiles.count()
+    assert(CommitWriter.checkpoint(spark, p) == v)
+    assert(checkpointActions(p, v) == fromState)
+    val now = LogSegment.forTable(spark, new Path(p))
+    assert(now.checkpointVersion.contains(v))
+    def files(df: DataFrame) = df.select("path", "size", "commit_version")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .sortBy(_._1).toSeq
+    assert(files(DeltaTable.forPath(spark, p).allFiles) ==
+      files(Replay.liveFilesDistributedForTest(spark, now)))
+    assert(CommitWriter.appendIfAbsent(spark, region.limit(1), p,
+      appId = "sink-a", txnVersion = 4L).isEmpty)
+  }
+
+  test("a checkpoint of a cached table is one Spark job, two on v2") {
+    val p = tmp("cpjobs")
+    CommitWriter.createTable(spark, region.limit(2), p)
+    CommitWriter.append(spark, region.limit(3), p)
+    DeltaTable.forPath(spark, p).allFiles.count()
+    assert(jobsRunBy(CommitWriter.checkpoint(spark, p, parts = -1)) == 1)
+
+    val p2 = tmp("cpjobs2")
+    CommitWriter.createTable(spark, region.limit(2), p2)
+    val v2 = Actions.Protocol(3, 7,
+      Some(Seq("v2Checkpoint")), Some(Seq("v2Checkpoint")))
+    CommitWriter.commit(spark, p2, 1L,
+      Seq(CommitWriter.protocolJson(v2)), "UPGRADE PROTOCOL")
+    DeltaTable.forPath(spark, p2).allFiles.count()
+    assert(jobsRunBy(CommitWriter.checkpoint(spark, p2, parts = -1)) == 2)
+    val seg = LogSegment.forTable(spark, new Path(p2))
+    assert(seg.checkpointIsV2 && seg.checkpointVersion.contains(1L))
+    assert(!LogSegment.fs(spark, new Path(p2)).exists(new Path(p2,
+      s"_delta_log/${LogSegment.checkpointFileName(1L)}")))
+  }
+
+  test("reads at and after a new checkpoint are neither full replays " +
+      "nor checkpoint loads") {
+    for (v2 <- Seq(false, true)) {
+      val p = tmp(s"handoff_$v2")
+      CommitWriter.createTable(spark, region.limit(2), p)
+      if (v2) CommitWriter.commit(spark, p, 1L,
+        Seq(CommitWriter.protocolJson(Actions.Protocol(3, 7,
+          Some(Seq("v2Checkpoint")), Some(Seq("v2Checkpoint"))))),
+        "UPGRADE PROTOCOL")
+      else CommitWriter.append(spark, region.limit(3), p)
+      DeltaTable.forPath(spark, p).allFiles.count()
+      CommitWriter.checkpoint(spark, p, parts = -1)
+      Replay.ReplayCounters.reset()
+      val atCheckpoint = DeltaTable.forPath(spark, p)
+      assert(atCheckpoint.segment.checkpointVersion.contains(1L) &&
+        atCheckpoint.segment.commitFiles.isEmpty)
+      val n = atCheckpoint.allFiles.count()
+      CommitWriter.append(spark, region.limit(1), p)
+      assert(DeltaTable.forPath(spark, p).allFiles.count() == n + 1)
+      assert(Replay.ReplayCounters.full.get() == 0, s"v2=$v2")
+      assert(Replay.ReplayCounters.checkpointLoad.get() == 0, s"v2=$v2")
+      assert(Replay.ReplayCounters.hit.get() >= 1 &&
+        Replay.ReplayCounters.incremental.get() >= 1, s"v2=$v2")
+    }
   }
 }

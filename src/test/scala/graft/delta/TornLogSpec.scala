@@ -83,10 +83,22 @@ class TornLogSpec extends AnyFunSuite {
         CommitWriter.protocolJson(snap.protocol)), "SET TBLPROPERTIES")
     })
     assert(DeltaTable.forPath(spark, p).version == 3L)
-    val e = intercept[Exception] {
+    // the checkpoint handed its replay state to the cache, so the
+    // driver replays the tail and names the torn file
+    val torn = LogSegment.commitFileName(2)
+    val e = intercept[IllegalStateException] {
       DeltaTable.forPath(spark, p).allFiles.collect()
     }
-    assert(messages(e).contains("FAILFAST"), messages(e))
+    assert(e.getMessage.contains(torn) && e.getMessage.contains("line"),
+      e.getMessage)
+    // without the cache the distributed replay fails
+    spark.conf.set("spark.lakehouse.delta.enable_caching", "false")
+    try {
+      val cold = intercept[Exception] {
+        DeltaTable.forPath(spark, p).allFiles.collect()
+      }
+      assert(messages(cold).contains("FAILFAST"), messages(cold))
+    } finally spark.conf.unset("spark.lakehouse.delta.enable_caching")
   }
 
   test("the driver replay fails with an error naming the torn file") {
@@ -103,6 +115,28 @@ class TornLogSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains(torn) && e.getMessage.contains("line"),
       e.getMessage)
+  }
+
+  test("a save onto a torn log fails with the torn-log error") {
+    val p = tmp("save")
+    CommitWriter.createTable(spark, region.limit(2), p,
+      configuration = noAutoCheckpoint)
+    CommitWriter.append(spark, region.limit(1), p)
+    val torn = LogSegment.commitFileName(1)
+    tear(logFile(p, torn), "add")
+    val e = intercept[Exception] {
+      region.limit(1).write.format("graftdelta").mode("append").save(p)
+    }
+    assert(messages(e).contains(s"$torn: line"), messages(e))
+    // the write entry point itself, which DataFrameWriter reaches after
+    // resolving the schema: a target it cannot resolve is not a new table
+    val direct = intercept[Exception] {
+      new graft.delta.sources.GraftDeltaSource().createRelation(
+        spark.sqlContext, org.apache.spark.sql.SaveMode.Append,
+        Map("path" -> p), region.limit(1))
+    }
+    assert(messages(direct).contains(s"$torn: line"), messages(direct))
+    assert(LogSegment.forTable(spark, new Path(p)).version == 1L)
   }
 
   test("the commit-range scan and the conflict checker fail rather than " +
