@@ -636,15 +636,21 @@ object CommitWriter {
       appId: String): Option[Long] =
     txnVersionIn(spark, LogSegment.forTable(spark, new Path(tablePath)), appId)
 
+  /** From the replay state the cache holds for `segment` (its latest
+    * txn per appId, no Spark job), else one query over the segment. */
   private def txnVersionIn(spark: SparkSession, segment: LogSegment,
-      appId: String): Option[Long] = {
-    val rows = Replay.actionsDF(spark, segment)
-      .where(col("txn.appId") === appId)
-      .orderBy(col("commit_version").desc, col("txn.version").desc)
-      .select(col("txn.version").as("v"))
-      .limit(1)
-      .collect()
-    rows.headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+      appId: String): Option[Long] = Replay.cachedState(spark, segment) match {
+    case Some(s) =>
+      s.txns.find(_.getString(0) == appId).filterNot(_.isNullAt(1))
+        .map(_.getLong(1))
+    case None =>
+      val rows = Replay.actionsDF(spark, segment)
+        .where(col("txn.appId") === appId)
+        .orderBy(col("commit_version").desc, col("txn.version").desc)
+        .select(col("txn.version").as("v"))
+        .limit(1)
+        .collect()
+      rows.headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
   }
 
   def txnJson(t: SetTransaction): String = {

@@ -597,8 +597,9 @@ object Replay {
     * domains like `delta.rowTracking` the action lives in the latest
     * commit, so the common case is one small file read and ZERO Spark
     * jobs — this sits on every row-tracked commit attempt), falling
-    * back to one query over the checkpoint. None when the domain is
-    * absent or its latest action is a removal tombstone. */
+    * back to the replay state the cache holds (a commit right after a
+    * checkpoint), else one query over the checkpoint. None when the
+    * domain is absent or its latest action is a removal tombstone. */
   def domainMetadataFor(spark: SparkSession, segment: LogSegment,
       domain: String): Option[Actions.DomainMetadata] = {
     val fs = LogSegment.fs(spark, segment.tablePath)
@@ -615,29 +616,47 @@ object Replay {
       if (found.isDefined) return found.filterNot(_.removed)
     }
     if (segment.checkpointFiles.isEmpty) return None
-    checkpointDF(spark, segment)
-      .where(col("domainMetadata.domain") === domain)
-      .select(col("domainMetadata.configuration"),
-        col("domainMetadata.removed"))
-      .collect().headOption
-      .filterNot(r => !r.isNullAt(1) && r.getBoolean(1))
-      .map(r => Actions.DomainMetadata(domain, r.getString(0),
-        removed = false))
+    cachedState(spark, segment) match {
+      case Some(s) =>
+        s.domains.find(_.getString(0) == domain).map(domainOf)
+          .filterNot(_.removed)
+      case None =>
+        checkpointDF(spark, segment)
+          .where(col("domainMetadata.domain") === domain)
+          .select(col("domainMetadata.configuration"),
+            col("domainMetadata.removed"))
+          .collect().headOption
+          .filterNot(r => !r.isNullAt(1) && r.getBoolean(1))
+          .map(r => Actions.DomainMetadata(domain, r.getString(0),
+            removed = false))
+    }
   }
 
   /** Reconciled domain metadata: the latest action per domain in log
-    * order, `removed=true` tombstones dropped. Domain count is tiny by
+    * order, `removed=true` tombstones dropped — from the replay state
+    * the cache holds, else one query. Domain count is tiny by
     * construction (system domains like `delta.rowTracking` plus user
     * config), so this collects driver-side like metadataAndProtocol. */
   def domainMetadata(spark: SparkSession,
       segment: LogSegment): Map[String, Actions.DomainMetadata] =
-    latestDomainActions(spark, segment)
-      .where(!col("domainMetadata.removed"))
-      .select("domainMetadata.domain", "domainMetadata.configuration")
-      .collect()
-      .map(r => r.getString(0) -> Actions.DomainMetadata(
-        r.getString(0), r.getString(1), removed = false))
-      .toMap
+    cachedState(spark, segment) match {
+      case Some(s) =>
+        s.domains.map(domainOf).filterNot(_.removed).map(d => d.domain -> d)
+          .toMap
+      case None =>
+        latestDomainActions(spark, segment)
+          .where(!col("domainMetadata.removed"))
+          .select("domainMetadata.domain", "domainMetadata.configuration")
+          .collect()
+          .map(r => r.getString(0) -> Actions.DomainMetadata(
+            r.getString(0), r.getString(1), removed = false))
+          .toMap
+    }
+
+  /** A [[ReplayState]] domain row as its action. */
+  private def domainOf(r: org.apache.spark.sql.Row): Actions.DomainMetadata =
+    Actions.DomainMetadata(r.getString(0), r.getString(1),
+      !r.isNullAt(2) && r.getBoolean(2))
 
   /** The latest domainMetadata action per domain in log order, removal
     * tombstones included. */

@@ -382,4 +382,30 @@ class IncrementalReplaySpec extends AnyFunSuite {
         Replay.ReplayCounters.incremental.get() >= 1, s"v2=$v2")
     }
   }
+
+  test("txn and domain lookups read the cached state, and match it off") {
+    val p = tmp("txnstate")
+    CommitWriter.createTable(spark, region.limit(2), p,
+      configuration = Map("delta.enableRowTracking" -> "true",
+        CommitWriter.CheckpointIntervalPropKey -> "1000"))
+    assert(CommitWriter.appendIfAbsent(spark, region.limit(1), p,
+      appId = "sink-a", txnVersion = 3L).isDefined)
+    CommitWriter.append(spark, region.limit(2), p)
+    DeltaTable.forPath(spark, p).allFiles.count()
+    CommitWriter.checkpoint(spark, p)
+    // the checkpoint holds the only rowTracking domain action in the
+    // segment: no commit tail to find it in
+    val seg = LogSegment.forTable(spark, new Path(p))
+    assert(seg.commitFiles.isEmpty)
+    def lookups = (CommitWriter.latestTxnVersion(spark, p, "sink-a"),
+      CommitWriter.latestTxnVersion(spark, p, "sink-b"),
+      Replay.domainMetadataFor(spark, seg, "delta.rowTracking"),
+      Replay.domainMetadata(spark, seg))
+    var hot: Any = null
+    assert(jobsRunBy { hot = lookups } == 0)
+    val cold = withCachingOff(lookups)
+    assert(hot == cold)
+    assert(cold._1.contains(3L) && cold._2.isEmpty && cold._3.isDefined &&
+      cold._4.keySet == Set("delta.rowTracking"))
+  }
 }
