@@ -1510,8 +1510,7 @@ object CommitWriter {
       : (DataFrame, DataFrame) = {
     val adds = s.adds.toSeq.map(a => logRow(0, Row(a(0), a(1), a(2), a(3),
       false, a(5), a(6), a(7), a(8))))
-    val removes = s.tombstones.toSeq
-      .filter(t => t.isNullAt(1) || t.getLong(1) >= cutoff)
+    val removes = s.tombstonesSince(cutoff).toSeq
       .map(t => logRow(1, Row(t(0), t(1), false, t(3))))
     (logRows(spark, adds ++ removes), logRows(spark,
       s.txns.toSeq.map(logRow(4, _)) ++ s.domains.toSeq.map(logRow(5, _)) ++

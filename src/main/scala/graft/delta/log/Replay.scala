@@ -214,6 +214,11 @@ object Replay {
       txns: Array[org.apache.spark.sql.Row],
       domains: Array[org.apache.spark.sql.Row]) {
     def files: Int = adds.length + tombstones.length
+
+    /** The tombstones a checkpoint keeps: deleted at or after `cutoff`,
+      * or with no deletion timestamp. */
+    def tombstonesSince(cutoff: Long): Array[org.apache.spark.sql.Row] =
+      tombstones.filter(t => t.isNullAt(1) || t.getLong(1) >= cutoff)
   }
 
   /** Applies file, txn and domain actions in log order on top of an
@@ -454,8 +459,7 @@ object Replay {
       adds = s.adds.map(r =>
         if (r.getLong(r.length - 1) >= v) r
         else org.apache.spark.sql.Row.fromSeq(r.toSeq.init :+ v)),
-      tombstones = s.tombstones.filter(t =>
-        t.isNullAt(1) || t.getLong(1) >= tombstoneCutoff))
+      tombstones = s.tombstonesSince(tombstoneCutoff))
     val tableKey = segment.tablePath.toString
     for (cpMark <- headHash(spark, segment.tablePath, cpSigs.last._1))
       stateCache.synchronized {
